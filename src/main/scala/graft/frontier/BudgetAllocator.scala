@@ -51,7 +51,8 @@ object BudgetAllocator {
     // documented contract) — a LONG-LIVED driver apportioning every
     // crawl cycle should wrap calls in
     // DedupOps.withMaterializeScope { ... } so each cycle's block is
-    // released, as the streaming sinks do.
+    // released, as the streaming sinks do. (The distributed winner
+    // path returns a self-contained frame and releases it itself.)
     val w = graft.ops.DedupOps.materialize(
       weights.select(col(keyCol).as("key"),
         col(weightCol).cast("long").as("weight")))
@@ -137,10 +138,22 @@ object BudgetAllocator {
         .filter($"grank" <= leftover)
         .select($"key")
         .withColumn("bonus", lit(1L))
-      based
+      val out = based
         .join(winners, Seq("key"), "left")
         .select($"key", $"weight",
           ($"base" + coalesce(col("bonus"), lit(0L))).as("alloc"))
+      // consume the winners join here, into a lineage-truncated frame
+      // (the connectedComponents round pattern), so `ranked` and `w`
+      // can be released before returning: left lazy, the result would
+      // need both pinned until the caller's last read, and in `cache`
+      // mode nothing would ever unpin them outside a materialize scope
+      val done =
+        if (spark.conf.get("spark.graft.dedup.materialize", "auto")
+            == "reliable") out.checkpoint(eager = true)
+        else out.localCheckpoint(eager = true)
+      graft.ops.DedupOps.releaseBlocks(ranked)
+      graft.ops.DedupOps.releaseBlocks(w)
+      done
     }
   }
 

@@ -35,11 +35,22 @@ import org.apache.spark.sql.functions._
   *      sees this one — append-only deltas with an atomically-swapped
   *      meta file, the [[graft.table.TableIO]] commit pattern.
   *
-  * Determinism: signatures derive from fixed splitmix64 seeds
-  * ([[DedupOps.bandKeys]]), so index contents are reproducible across
-  * runs, partitionings and cluster sizes, and probe results equal the
-  * batch recompute exactly (spec-pinned: probe ∪ within-batch pairs ==
+  * Determinism: signatures are one-permutation MinHash with optimal
+  * densification ([[DedupOps.minhash]]: one splitmix64 mix per
+  * shingle, empty bins filled along a data-independent probe
+  * sequence), banded by [[DedupOps.bandKeys]] — a fixed function of
+  * the document, so index contents are reproducible across runs,
+  * partitionings and cluster sizes, and probe results equal the batch
+  * recompute exactly (spec-pinned: probe ∪ within-batch pairs ==
   * full-recompute pairs touching a batch id, jaccard values included).
+  *
+  * Persisted band keys are only comparable with keys computed by the
+  * same signature scheme, so the meta carries a scheme stamp
+  * ([[SigScheme]]) that [[init]]/[[write]] set. An index without the
+  * current stamp — built by an earlier signature kernel — is refused
+  * by [[append]], [[probePairs]], [[probeCandidates]] and [[compact]]:
+  * its keys would silently never collide with new ones. Rebuild it
+  * with [[write]].
   *
   * Caller contract: batch ids are NEW (not already indexed) — a
   * re-appended id would pair with itself across deltas. Single-writer,
@@ -53,13 +64,15 @@ object DedupIndex {
   /** Index geometry + lineage. `kind`: "char" (k-shingles) or "word"
     * (k-grams). `deltas`: append-only list of signature dirs, oldest
     * first. `docs`: total indexed documents (advisory, for sizing).
+    * `scheme`: the signature scheme the band keys were computed with
+    * (null in metas written before the stamp existed).
     * `runIds`: ids of appended batches — the replay-idempotence guard
     * for streaming micro-batches (a replayed foreachBatch must not
     * re-append its signatures, which would self-pair every future
     * probe). Null-safe on read: metas written before the field existed
     * deserialize with null. */
   final case class IndexMeta(kind: String, k: Int, numHashes: Int,
-      bands: Int, docs: Long, deltas: Seq[String],
+      bands: Int, docs: Long, deltas: Seq[String], scheme: String,
       runIds: Seq[String] = Nil) {
     def committedRunIds: Set[String] =
       if (runIds == null) Set.empty else runIds.toSet
@@ -72,6 +85,10 @@ object DedupIndex {
       .FAIL_ON_UNKNOWN_PROPERTIES, false)
     m
   }
+
+  /** Stamp of the signature scheme this build computes: one-permutation
+    * MinHash with optimal densification, banded by splitmix folds. */
+  val SigScheme = "oph-densified-v1"
 
   private def metaPath(dir: String) = Paths.get(dir, "index-meta.json")
 
@@ -106,6 +123,19 @@ object DedupIndex {
     deltas.map(d => d.substring(d.lastIndexOf('v') + 1).toInt)
       .foldLeft(0)(math.max) + 1
 
+  /** The meta at `dir`, which must exist and carry [[SigScheme]]: an
+    * index of another scheme must be rebuilt — probing or extending it
+    * would mix band keys that never collide across schemes. */
+  private def currentMeta(dir: String): IndexMeta = {
+    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
+      s"no index at $dir — call write() first"))
+    if (m.scheme != SigScheme) throw new IllegalStateException(
+      s"index at $dir has signature scheme " +
+        s"${Option(m.scheme).getOrElse("(unstamped)")}, this build " +
+        s"computes $SigScheme — rebuild it with write()")
+    m
+  }
+
   private def shinglerOf(m: IndexMeta): String => Array[Long] =
     m.kind match {
       case "char" => DedupOps.shingles(_, m.k)
@@ -116,8 +146,9 @@ object DedupIndex {
 
   /** Signature-pass shingler: the raw (unsorted multiset) char variant
     * — MinHash signatures, and therefore every band key stored or
-    * probed, are bit-identical to the sorted-distinct form (min is
-    * order- and duplicate-invariant) without the per-document sort.
+    * probed, are bit-identical to the sorted-distinct form (per-bin
+    * minima are order- and duplicate-invariant) without the
+    * per-document sort.
     * The verify tail keeps [[shinglerOf]]. */
   private def sigShinglerOf(m: IndexMeta): String => Array[Long] =
     m.kind match {
@@ -125,7 +156,7 @@ object DedupIndex {
       case _ => shinglerOf(m)
     }
 
-  /** (id, bandHash) signature rows of one document set — the fused
+  /** (id, bandHash) signature rows of one document set — the
     * shingle→minhash→band pass, map-side only. */
   private def banded(docs: DataFrame, idCol: String, textCol: String,
       m: IndexMeta): DataFrame = {
@@ -145,7 +176,7 @@ object DedupIndex {
       numHashes: Int = 64, bands: Int = 16): IndexMeta = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     dropDir(dir)
-    val m = IndexMeta(kind, k, numHashes, bands, 0L, Nil)
+    val m = IndexMeta(kind, k, numHashes, bands, 0L, Nil, SigScheme)
     writeMeta(dir, m)
     m
   }
@@ -174,8 +205,7 @@ object DedupIndex {
     * rewritten on replay (Overwrite mode), never double-referenced. */
   def append(docs: DataFrame, idCol: String, textCol: String,
       dir: String, runId: String = ""): IndexMeta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir — call write() first"))
+    val m = currentMeta(dir)
     if (runId.nonEmpty && m.committedRunIds.contains(runId)) return m
     val spark = docs.sparkSession
     val delta = f"sig/v${nextVersion(m.deltas)}%05d"
@@ -216,8 +246,7 @@ object DedupIndex {
     * idempotence is unaffected. Old delta dirs are deleted after the
     * atomic meta swap (the index is derived data: no time travel). */
   def compact(dir: String): IndexMeta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir"))
+    val m = currentMeta(dir)
     if (m.deltas.size <= 1) m else rewrite(dir, m, identity)
   }
 
@@ -288,8 +317,7 @@ object DedupIndex {
       idCol: String, textCol: String, dir: String,
       threshold: Double = 0.6,
       maxBroadcastRows: Long = 4000000L): DataFrame = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir"))
+    val m = currentMeta(dir)
     val cand = DedupOps.materialize(
       probeCandidates(newDocs, idCol, textCol, dir, maxBroadcastRows))
     val texts = corpusTexts
@@ -307,8 +335,7 @@ object DedupIndex {
     * exchange. */
   def probeCandidates(newDocs: DataFrame, idCol: String, textCol: String,
       dir: String, maxBroadcastRows: Long = 4000000L): DataFrame = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir"))
+    val m = currentMeta(dir)
     val spark = newDocs.sparkSession
     import spark.implicits._
     val newBanded = DedupOps.materialize(

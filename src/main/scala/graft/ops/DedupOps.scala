@@ -8,9 +8,10 @@ import graft.url.Hashing
 /** Near-duplicate detection for large text corpora — the operations a
   * 100 TB training-data pipeline runs between crawl and training:
   * exact dedup, MinHash+LSH, SimHash (Charikar), and exact n-gram
-  * Jaccard verification. All signatures are derived from splitmix64
-  * draws of fixed seeds, so results are reproducible across runs,
-  * partitionings and cluster sizes.
+  * Jaccard verification. All signatures are fixed functions of the
+  * document (splitmix64 mixes with fixed seeds, no sampled state), so
+  * results are reproducible across runs, partitionings and cluster
+  * sizes.
   *
   * Scale shape (standard MinHash-LSH dataflow):
   *   shingle → minhash signature (map-side, no shuffle)
@@ -71,8 +72,9 @@ object DedupOps {
 
   /** [[shingles]] WITHOUT the sort + dedup — the multiset of window
     * hashes in text order. For MinHash signatures ([[bandKeys]]) the
-    * two forms are interchangeable: `min` over a multiset equals `min`
-    * over its distinct set, so every signature (and band key, and
+    * two forms are interchangeable: each bin's `min` over a multiset
+    * equals its `min` over the distinct set, and bin occupancy (so
+    * densification) is the same, so every signature (and band key, and
     * emitted pair) is bit-identical — while the signature pass skips
     * the per-document sort that the exact-Jaccard verify path (which
     * genuinely needs sorted distinct sets) still pays. */
@@ -169,32 +171,13 @@ object DedupOps {
 
   // ---- MinHash ------------------------------------------------------
 
-  /** numHashes (a,b) pairs for the universal-hash permutations,
-    * deterministic; memoized per JVM as two FLAT long arrays (the
-    * boxed-tuple form paid a tuple dereference per shingle×hash in the
-    * signature loop — the single dominant loop of the dedup family). */
-  private val paramCache =
-    new java.util.concurrent.ConcurrentHashMap[Int, (Array[Long], Array[Long])]()
-  private def hashParams(numHashes: Int): (Array[Long], Array[Long]) =
-    paramCache.computeIfAbsent(numHashes, n => {
-      val pa = new Array[Long](n)
-      val pb = new Array[Long](n)
-      var i = 0
-      while (i < n) {
-        pa(i) = Hashing.mix(0x5EEDL, i.toLong * 2 + 1) | 1L
-        pb(i) = Hashing.mix(0x5EEDL, i.toLong * 2 + 2)
-        i += 1
-      }
-      (pa, pb)
-    })
-
-  /** Banded MinHash bucket keys of one document — shingle → signature
-    * → per-band key FUSED in one pass: a chained shUdf→sigUdf→bandUdf
-    * pipeline paid three Catalyst↔JVM array conversions (boxing 1k+
-    * longs per document per crossing) plus a string build per band,
-    * which dominated the whole signature stage at corpus scale. Band
-    * key = splitmix fold of the band's signature rows (salted by band
-    * index), primitive end to end. */
+  /** Banded MinHash bucket keys of one document: shingle → signature
+    * → per-band key in one call, primitive end to end. Chaining
+    * separate shingle, signature and band UDFs paid three Catalyst↔JVM
+    * array conversions per document (boxing 1k+ longs per crossing)
+    * plus a string build per band. Band key = splitmix fold of the
+    * band's `numHashes / bands` adjacent signature components — a run
+    * of adjacent [[minhash]] bins — salted by band index. */
   def bandKeys(text: String, shingler: String => Array[Long],
       numHashes: Int, bands: Int): Array[Long] = {
     val sig = minhash(shingler(text), numHashes)
@@ -211,37 +194,67 @@ object DedupOps {
     out
   }
 
-  /** MinHash signature of a shingle set. Hash-major loop order: (a, b)
-    * stay in registers across the whole shingle scan and `sh` is read
-    * sequentially — same arithmetic, same result, measurably faster
-    * than the shingle-major form whose inner loop re-read the param
-    * table per step. */
+  /** MinHash signature of a shingle (multi)set by one-permutation
+    * hashing (Li, Owen & Zhang, NIPS 2012) with optimal densification
+    * (Shrivastava, ICML 2017): `numHashes` components from ONE hash
+    * per shingle, where the k-permutation form it replaces ran
+    * `numHashes` splitmix steps per shingle.
+    *
+    *  - Each shingle hash is mixed once by splitmix64. The mixed
+    *    value's high 32 bits pick one of k bins by multiply-shift range
+    *    reduction (any k, not only powers of two), and each bin keeps
+    *    its minimum mixed value.
+    *  - A bin no shingle reached copies the value of the first filled
+    *    bin on the probe sequence `mix(bin, attempt)`, attempt = 1, 2,
+    *    … The sequence depends on the bin index and the attempt only,
+    *    never on the document, so two sets with the same bin occupancy
+    *    densify the same way and every component still collides with
+    *    probability equal to their Jaccard similarity.
+    *
+    * Per-bin minima are order- and duplicate-invariant, so a multiset
+    * gives the signature of its distinct set. An empty input gives
+    * all-`Long.MaxValue`. */
   def minhash(sh: Array[Long], numHashes: Int): Array[Long] = {
-    val (pa, pb) = hashParams(numHashes)
-    val sig = new Array[Long](numHashes)
+    val k = numHashes
+    val sig = new Array[Long](k)
+    val filled = new Array[Boolean](k)
+    var nFilled = 0
     val n = sh.length
-    var j = 0
-    while (j < numHashes) {
-      val a = pa(j)
-      val b = pb(j)
-      var m = Long.MaxValue
-      var i = 0
-      while (i < n) {
-        // splitmix64 of a*sh+b, inlined (one call layer less than
-        // Hashing.mix in the single hottest loop of the engine;
-        // measured at the ALU throughput floor — ~1.7 ns/step)
-        var z = a * sh(i) + b + 0x9E3779B97F4A7C15L
-        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-        z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-        z ^= z >>> 31
-        if (z < m) m = z
-        i += 1
+    var i = 0
+    while (i < n) {
+      // splitmix64 of the shingle hash, inlined (the one hot loop of
+      // the signature pass)
+      var z = sh(i) + 0x9E3779B97F4A7C15L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      z ^= z >>> 31
+      val bin = (((z >>> 32) * k) >>> 32).toInt
+      if (!filled(bin)) { filled(bin) = true; sig(bin) = z; nFilled += 1 }
+      else if (z < sig(bin)) sig(bin) = z
+      i += 1
+    }
+    if (nFilled == 0) java.util.Arrays.fill(sig, Long.MaxValue)
+    else if (nFilled < k) {
+      var b = 0
+      while (b < k) {
+        if (!filled(b)) {
+          var attempt = 1L
+          var src = densifyProbe(b, attempt, k)
+          while (!filled(src)) {
+            attempt += 1
+            src = densifyProbe(b, attempt, k)
+          }
+          sig(b) = sig(src)
+        }
+        b += 1
       }
-      sig(j) = m
-      j += 1
     }
     sig
   }
+
+  /** Bin the densification of empty bin `bin` reads at `attempt`. */
+  private def densifyProbe(bin: Int, attempt: Long, k: Int): Int =
+    (((Hashing.mix(bin.toLong, attempt) >>> 32) * k) >>> 32).toInt
 
   /** MinHash-LSH near-duplicate pairs over character k-shingles.
     * @param df (id BIGINT, text STRING)
@@ -440,9 +453,9 @@ object DedupOps {
   /** Shared MinHash-LSH dataflow, parameterized by the set builder.
     * `sigShingler` (defaults to `shingler`) feeds the SIGNATURE pass
     * only — callers pass a raw (unsorted, multiset) variant there when
-    * available, which is signature-identical (min is order- and
-    * duplicate-invariant) but skips the per-document sort; the verify
-    * tail always uses the sorted-distinct `shingler`. */
+    * available, which is signature-identical (per-bin minima are
+    * order- and duplicate-invariant) but skips the per-document sort;
+    * the verify tail always uses the sorted-distinct `shingler`. */
   private def lshJaccardPairs(df: DataFrame, idCol: String,
       textCol: String, shingler: String => Array[Long],
       numHashes: Int, bands: Int, threshold: Double,
@@ -509,8 +522,13 @@ object DedupOps {
       banded.groupBy(col("bandHash")).agg(count(lit(1)).as("n"))
         .filter(col("n") >= 2).select(col("bandHash")))
     val nDup = dupKeys.count() // free: materialized
+    // broadcast cap on the duplicate-key set (default 4M keys ≈ 32 MB);
+    // override via spark.graft.dedup.lsh.broadcastKeysMax (0 forces the
+    // Bloom-prune + merge-join path)
+    val broadcastKeysMax = spark.conf
+      .get("spark.graft.dedup.lsh.broadcastKeysMax", "4000000").toLong
     val dupRows =
-      if (nDup <= 4000000L)
+      if (nDup <= broadcastKeysMax)
         banded.join(broadcast(dupKeys), Seq("bandHash"))
       else {
         val bf = dupKeys.stat.bloomFilter("bandHash", nDup, 0.03)
@@ -897,7 +915,7 @@ object DedupOps {
     * backed frames hold their blocks on the materialized RDD inside
     * the plan's LogicalRDD leaf, which `Dataset.unpersist` never
     * touches. */
-  private def releaseBlocks(df: DataFrame): Unit = {
+  private[graft] def releaseBlocks(df: DataFrame): Unit = {
     df.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)

@@ -45,16 +45,36 @@ object SitemapSource {
     // XML-unescape loc: sitemap URLs with query parameters arrive as
     // &amp;-escaped text and must match the crawl's RAW canonical URLs
     // in freshCandidates' anti-join (r5 advice finding — an escaped loc
-    // never matched and re-emitted seen URLs as fresh). The five
-    // predefined entities; &amp; LAST so "&amp;lt;" round-trips to
-    // "&lt;" (the text it encodes), not to "<".
-    def unescape(c: org.apache.spark.sql.Column) =
-      regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        regexp_replace(c, lit("&lt;"), lit("<")),
-        lit("&gt;"), lit(">")),
-        lit("&quot;"), lit("\"")),
-        lit("&apos;"), lit("'")),
-        lit("&amp;"), lit("&"))
+    // never matched and re-emitted seen URLs as fresh). Decodes the
+    // five predefined entities and decimal/hex numeric character
+    // references (&#38;, &#x2F;) in ONE left-to-right pass: the text is
+    // split before every '&' and each piece's leading reference is
+    // decoded once, so "&amp;lt;" yields "&lt;" and "&#38;amp;" yields
+    // "&amp;" (the text they encode); chained replaces would decode
+    // the second through two levels. A numeric reference outside the
+    // Unicode scalar range (0, surrogates, > U+10FFFF) stays as is.
+    def unescape(c: org.apache.spark.sql.Column) = {
+      val ref = "^&(lt|gt|quot|apos|amp|#[0-9]{1,7}|#[xX][0-9a-fA-F]{1,6});"
+      array_join(transform(split(c, "(?=&)"), p => {
+        val name = regexp_extract(p, ref, 1)
+        val hex =
+          when(name.startsWith("#x") || name.startsWith("#X"),
+            substring(name, 3, 6))
+            .when(name.startsWith("#"), conv(substring(name, 2, 7), 10, 16))
+        val cp = conv(hex, 16, 10).cast("long")
+        val decoded =
+          when(name === "lt", lit("<"))
+            .when(name === "gt", lit(">"))
+            .when(name === "quot", lit("\""))
+            .when(name === "apos", lit("'"))
+            .when(name === "amp", lit("&"))
+            // the code point as 4 big-endian bytes, read as UTF-32
+            .when(cp > 0 && cp <= 0x10FFFFL &&
+              !cp.between(0xD800L, 0xDFFFL),
+              decode(unhex(lpad(hex, 8, "0")), "UTF-32"))
+        coalesce(concat(decoded, regexp_replace(p, lit(ref), lit(""))), p)
+      }), "")
+    }
     // trim() on loc/lastmod: a pretty-printed sitemap puts the VALUE on
     // its own line inside the tag, and an untrimmed loc would never
     // match the crawl's raw canonical URL in freshCandidates' anti-join

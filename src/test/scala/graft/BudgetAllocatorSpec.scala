@@ -94,6 +94,29 @@ class BudgetAllocatorSpec extends AnyFunSuite {
     assert(b2 === d2)
   }
 
+  test("distributed winner path leaves no CacheManager entry (materialize=cache)") {
+    // above collectWinnersMax the path pins its ranked frame; under
+    // `cache` that is a CacheManager persist, which outside a
+    // materialize scope nothing else would ever release
+    val sess = spark
+    import sess.implicits._
+    val n = 300L
+    val df = (0L until n).map(i => (i, 1L)).toDF("host", "w")
+    sess.catalog.clearCache()
+    sess.conf.set("spark.graft.dedup.materialize", "cache")
+    sess.conf.set("spark.graft.budget.collectWinnersMax", "0")
+    try {
+      val out = BudgetAllocator.apportion(df, "host", "w", 2 * n - 1)
+        .collect().map(r => r.getLong(2))
+      assert(out.sum === 2 * n - 1)
+      assert(sess.sharedState.cacheManager.isEmpty,
+        "apportion left pinned blocks in the CacheManager")
+    } finally {
+      sess.conf.unset("spark.graft.dedup.materialize")
+      sess.conf.unset("spark.graft.budget.collectWinnersMax")
+    }
+  }
+
   test("sum of allocations equals the budget exactly (skewed weights)") {
     val rows = (0L until 100L).map(i => (i, i * i % 83 + 1))
     val out = run(997L, rows: _*)
