@@ -51,8 +51,7 @@ object BudgetAllocator {
     // documented contract) — a LONG-LIVED driver apportioning every
     // crawl cycle should wrap calls in
     // DedupOps.withMaterializeScope { ... } so each cycle's block is
-    // released, as the streaming sinks do. (The distributed winner
-    // path returns a self-contained frame and releases it itself.)
+    // released, as the streaming sinks do.
     val w = graft.ops.DedupOps.materialize(
       weights.select(col(keyCol).as("key"),
         col(weightCol).cast("long").as("weight")))
@@ -114,14 +113,14 @@ object BudgetAllocator {
       // the pid column MUST come from one pinned execution: the offsets
       // collected below are only valid against the same range-sample's
       // partition boundaries, and an unpinned plan re-executes with a
-      // fresh sample for the winner pass (the `none` measurement mode
-      // of DedupOps.materialize would silently break the
-      // sum(alloc)==budget contract) — so pin unconditionally here
-      val ranked =
-        if (spark.conf.get("spark.graft.dedup.materialize", "auto")
-            == "none")
-          ranked0.localCheckpoint(eager = true)
-        else graft.ops.DedupOps.materialize(ranked0)
+      // fresh sample for the winner pass (silently breaking the
+      // sum(alloc)==budget contract). localCheckpoint in every
+      // materialize mode: it stores exactly one execution (a cached
+      // copy could recompute a lost block with a fresh sample), and
+      // its blocks sit outside the CacheManager — the ContextCleaner
+      // frees them once the returned frame goes unreachable, so the
+      // pin needs no explicit release
+      val ranked = ranked0.localCheckpoint(eager = true)
       // bounded driver state: one (pid, count) row per partition
       val counts = ranked.groupBy($"pid").count()
         .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
@@ -138,22 +137,10 @@ object BudgetAllocator {
         .filter($"grank" <= leftover)
         .select($"key")
         .withColumn("bonus", lit(1L))
-      val out = based
+      based
         .join(winners, Seq("key"), "left")
         .select($"key", $"weight",
           ($"base" + coalesce(col("bonus"), lit(0L))).as("alloc"))
-      // consume the winners join here, into a lineage-truncated frame
-      // (the connectedComponents round pattern), so `ranked` and `w`
-      // can be released before returning: left lazy, the result would
-      // need both pinned until the caller's last read, and in `cache`
-      // mode nothing would ever unpin them outside a materialize scope
-      val done =
-        if (spark.conf.get("spark.graft.dedup.materialize", "auto")
-            == "reliable") out.checkpoint(eager = true)
-        else out.localCheckpoint(eager = true)
-      graft.ops.DedupOps.releaseBlocks(ranked)
-      graft.ops.DedupOps.releaseBlocks(w)
-      done
     }
   }
 

@@ -455,11 +455,16 @@ object DedupOps {
     * only — callers pass a raw (unsorted, multiset) variant there when
     * available, which is signature-identical (per-bin minima are
     * order- and duplicate-invariant) but skips the per-document sort;
-    * the verify tail always uses the sorted-distinct `shingler`. */
-  private def lshJaccardPairs(df: DataFrame, idCol: String,
+    * the verify tail always uses the sorted-distinct `shingler`.
+    * `broadcastKeysMax` caps the duplicate band-key set that is
+    * broadcast to prune the signature table (4M keys ≈ 32 MB); past
+    * it the prune is a Bloom prefilter + merge join (0 forces that
+    * path). */
+  private[graft] def lshJaccardPairs(df: DataFrame, idCol: String,
       textCol: String, shingler: String => Array[Long],
       numHashes: Int, bands: Int, threshold: Double,
-      sigShingler: String => Array[Long] = null): DataFrame = {
+      sigShingler: String => Array[Long] = null,
+      broadcastKeysMax: Long = 4000000L): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     require(numHashes % bands == 0, "bands must divide numHashes")
@@ -522,11 +527,6 @@ object DedupOps {
       banded.groupBy(col("bandHash")).agg(count(lit(1)).as("n"))
         .filter(col("n") >= 2).select(col("bandHash")))
     val nDup = dupKeys.count() // free: materialized
-    // broadcast cap on the duplicate-key set (default 4M keys ≈ 32 MB);
-    // override via spark.graft.dedup.lsh.broadcastKeysMax (0 forces the
-    // Bloom-prune + merge-join path)
-    val broadcastKeysMax = spark.conf
-      .get("spark.graft.dedup.lsh.broadcastKeysMax", "4000000").toLong
     val dupRows =
       if (nDup <= broadcastKeysMax)
         banded.join(broadcast(dupKeys), Seq("bandHash"))
@@ -915,7 +915,7 @@ object DedupOps {
     * backed frames hold their blocks on the materialized RDD inside
     * the plan's LogicalRDD leaf, which `Dataset.unpersist` never
     * touches. */
-  private[graft] def releaseBlocks(df: DataFrame): Unit = {
+  private def releaseBlocks(df: DataFrame): Unit = {
     df.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * the `Sitemap:` directive, RFC 9309 §2.3 custom extension).
   *
   * Everything here is codegen built-ins — regexp extraction, date
-  * parse, window rank; no UDF, no XML library (sitemap XML is flat
+  * parse, window rank — except the per-`loc` [[unescape]] UDF; no XML
+  * library (sitemap XML is flat
   * enough that the sitemaps.org schema's `<url>` blocks are regular,
   * and a full parser would put JVM objects in the hot path for no
   * accuracy gain on well-formed feeds; malformed blocks yield empty
@@ -27,6 +28,39 @@ import org.apache.spark.sql.functions._
   * .capPerHost]] consumes exactly this shape).
   */
 object SitemapSource {
+
+  private val charRef =
+    "&(lt|gt|quot|apos|amp|#[0-9]+|#[xX][0-9a-fA-F]+);".r.pattern
+
+  /** XML-unescape one `loc` value: the five predefined entities and
+    * decimal/hex numeric character references (`&#38;`, `&#x2F;`, any
+    * number of digits) in ONE left-to-right pass, so each reference is
+    * decoded exactly once — `&amp;lt;` yields `&lt;` and `&#38;amp;`
+    * yields `&amp;` (the text they encode). A numeric reference that
+    * is not a Unicode scalar value (0, surrogates, > U+10FFFF) stays
+    * as written. */
+  private[sources] def unescape(s: String): String =
+    if (s == null) null
+    else charRef.matcher(s).replaceAll { (m: java.util.regex.MatchResult) =>
+      val name = m.group(1)
+      val out = name match {
+        case "lt" => "<"
+        case "gt" => ">"
+        case "quot" => "\""
+        case "apos" => "'"
+        case "amp" => "&"
+        case _ =>
+          val hex = name.charAt(1) == 'x' || name.charAt(1) == 'X'
+          val cp = scala.util.Try(Integer.parseInt(
+            name.substring(if (hex) 2 else 1), if (hex) 16 else 10))
+            .getOrElse(-1)
+          if (cp > 0 && cp <= Character.MAX_CODE_POINT &&
+              (cp < Character.MIN_SURROGATE || cp > Character.MAX_SURROGATE))
+            new String(Character.toChars(cp))
+          else m.group()
+      }
+      java.util.regex.Matcher.quoteReplacement(out)
+    }
 
   /** Parse a string column of sitemap XML into one row per `<url>`
     * entry: `(…passthrough cols…, loc, lastmod, priority_x10)`.
@@ -45,36 +79,8 @@ object SitemapSource {
     // XML-unescape loc: sitemap URLs with query parameters arrive as
     // &amp;-escaped text and must match the crawl's RAW canonical URLs
     // in freshCandidates' anti-join (r5 advice finding — an escaped loc
-    // never matched and re-emitted seen URLs as fresh). Decodes the
-    // five predefined entities and decimal/hex numeric character
-    // references (&#38;, &#x2F;) in ONE left-to-right pass: the text is
-    // split before every '&' and each piece's leading reference is
-    // decoded once, so "&amp;lt;" yields "&lt;" and "&#38;amp;" yields
-    // "&amp;" (the text they encode); chained replaces would decode
-    // the second through two levels. A numeric reference outside the
-    // Unicode scalar range (0, surrogates, > U+10FFFF) stays as is.
-    def unescape(c: org.apache.spark.sql.Column) = {
-      val ref = "^&(lt|gt|quot|apos|amp|#[0-9]{1,7}|#[xX][0-9a-fA-F]{1,6});"
-      array_join(transform(split(c, "(?=&)"), p => {
-        val name = regexp_extract(p, ref, 1)
-        val hex =
-          when(name.startsWith("#x") || name.startsWith("#X"),
-            substring(name, 3, 6))
-            .when(name.startsWith("#"), conv(substring(name, 2, 7), 10, 16))
-        val cp = conv(hex, 16, 10).cast("long")
-        val decoded =
-          when(name === "lt", lit("<"))
-            .when(name === "gt", lit(">"))
-            .when(name === "quot", lit("\""))
-            .when(name === "apos", lit("'"))
-            .when(name === "amp", lit("&"))
-            // the code point as 4 big-endian bytes, read as UTF-32
-            .when(cp > 0 && cp <= 0x10FFFFL &&
-              !cp.between(0xD800L, 0xDFFFL),
-              decode(unhex(lpad(hex, 8, "0")), "UTF-32"))
-        coalesce(concat(decoded, regexp_replace(p, lit(ref), lit(""))), p)
-      }), "")
-    }
+    // never matched and re-emitted seen URLs as fresh).
+    val unescapeLoc = udf(unescape _)
     // trim() on loc/lastmod: a pretty-printed sitemap puts the VALUE on
     // its own line inside the tag, and an untrimmed loc would never
     // match the crawl's raw canonical URL in freshCandidates' anti-join
@@ -85,7 +91,7 @@ object SitemapSource {
       regexp_replace(c, lit("^\\s+|\\s+$"), lit(""))
     df.select(passthrough :+ block.as("u"): _*)
       .select(passthrough ++ Seq(
-        unescape(wsTrim(
+        unescapeLoc(wsTrim(
           regexp_extract(col("u"), "(?s)<loc>(.*?)</loc>", 1)))
           .as("loc"),
         to_date(nullif(wsTrim(

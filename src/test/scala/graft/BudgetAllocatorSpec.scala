@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
 
 import graft.frontier.BudgetAllocator
 
@@ -94,10 +95,12 @@ class BudgetAllocatorSpec extends AnyFunSuite {
     assert(b2 === d2)
   }
 
-  test("distributed winner path leaves no CacheManager entry (materialize=cache)") {
+  test("distributed winner path pins no CacheManager entry of its own (materialize=cache)") {
     // above collectWinnersMax the path pins its ranked frame; under
-    // `cache` that is a CacheManager persist, which outside a
-    // materialize scope nothing else would ever release
+    // `cache` a materialize()d pin is a CacheManager persist, which
+    // outside a materialize scope nothing would ever release. The one
+    // entry left must be the (key, weight) projection, which
+    // materialize's scope contract covers.
     val sess = spark
     import sess.implicits._
     val n = 300L
@@ -109,9 +112,39 @@ class BudgetAllocatorSpec extends AnyFunSuite {
       val out = BudgetAllocator.apportion(df, "host", "w", 2 * n - 1)
         .collect().map(r => r.getLong(2))
       assert(out.sum === 2 * n - 1)
+      val w = df.select(col("host").as("key"),
+        col("w").cast("long").as("weight"))
+      assert(w.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      w.unpersist(blocking = true)
       assert(sess.sharedState.cacheManager.isEmpty,
-        "apportion left pinned blocks in the CacheManager")
+        "apportion left its own pinned blocks in the CacheManager")
     } finally {
+      sess.catalog.clearCache()
+      sess.conf.unset("spark.graft.dedup.materialize")
+      sess.conf.unset("spark.graft.budget.collectWinnersMax")
+    }
+  }
+
+  test("distributed winner path leaves the caller's checkpointed weights readable (materialize=cache)") {
+    // weights backed by a localCheckpoint (PageRank-style truncated
+    // lineage): apportion must not drop the caller's blocks
+    val sess = spark
+    import sess.implicits._
+    val n = 300L
+    val weights = (0L until n).map(i => (i, i % 7 + 1)).toDF("host", "w")
+      .localCheckpoint(eager = true)
+    sess.conf.set("spark.graft.dedup.materialize", "cache")
+    sess.conf.set("spark.graft.budget.collectWinnersMax", "0")
+    try {
+      val alloc = BudgetAllocator.apportion(weights, "host", "w", 997L)
+      assert(alloc.agg(sum("alloc")).as[Long].head() === 997L)
+      assert(weights.count() === n)
+      assert(weights.agg(sum("w")).as[Long].head() ===
+        (0L until n).map(i => i % 7 + 1).sum)
+      // the lazy result is still readable after the caller's reads
+      assert(alloc.count() === n)
+    } finally {
+      sess.catalog.clearCache()
       sess.conf.unset("spark.graft.dedup.materialize")
       sess.conf.unset("spark.graft.budget.collectWinnersMax")
     }

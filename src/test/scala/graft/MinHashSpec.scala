@@ -97,29 +97,31 @@ class MinHashSpec extends AnyFunSuite {
   }
 
   test("LSH candidates through the Bloom-prune path equal the broadcast path") {
-    val conf = "spark.graft.dedup.lsh.broadcastKeysMax"
     val planted = docs.orderBy("doc_id").limit(20)
       .withColumn("doc_id", col("doc_id") + lit(1000000L))
       .withColumn("text", concat(col("text"), lit(" documento duplicado")))
     val all = docs.unionByName(planted)
-    def pairs() = DedupOps.minhashPairs(all, "doc_id", "text",
-        threshold = 0.5)
+    // minhashPairs' defaults, with the broadcast cap made explicit
+    def lsh(cap: Long) = DedupOps.lshJaccardPairs(all, "doc_id", "text",
+      DedupOps.shingles(_, 5), 64, 16, 0.5,
+      sigShingler = DedupOps.shinglesRaw(_, 5), broadcastKeysMax = cap)
+    def pairs(cap: Long) = lsh(cap)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    def usesBloom(): Boolean = {
+    def usesBloom(cap: Long): Boolean = {
       // `none` keeps the whole lineage in the returned plan, so the
       // prune UDF is visible when that path was taken
       spark.conf.set("spark.graft.dedup.materialize", "none")
-      try DedupOps.minhashPairs(all, "doc_id", "text", threshold = 0.5)
-        .queryExecution.analyzed.toString.contains("graft_bloom_prune")
+      try lsh(cap).queryExecution.analyzed.toString
+        .contains("graft_bloom_prune")
       finally spark.conf.unset("spark.graft.dedup.materialize")
     }
-    val viaBroadcast = pairs()
-    assert(!usesBloom())
-    spark.conf.set(conf, "0")
-    try {
-      assert(usesBloom())
-      assert(pairs() === viaBroadcast)
-    } finally spark.conf.unset(conf)
+    val viaBroadcast = DedupOps.minhashPairs(all, "doc_id", "text",
+        threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(!usesBloom(4000000L))
+    assert(pairs(4000000L) === viaBroadcast)
+    assert(usesBloom(0L))
+    assert(pairs(0L) === viaBroadcast)
     assert(viaBroadcast.size >= 20)
   }
 

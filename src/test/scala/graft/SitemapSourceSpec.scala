@@ -83,18 +83,19 @@ class SitemapSourceSpec extends AnyFunSuite {
     // decimal and hex references are as legal in a loc as &amp;; the
     // decoded loc must equal the crawled URL for the freshness
     // anti-join to drop it
-    val crawled = "https://a/q?x=1&y=2&p=\u00e9/\ud83d\ude00"
+    val crawled = "https://a/q/r?x=1&y=2&z=3&p=\u00e9/\ud83d\ude00"
     val xml =
-      "<url><loc>https:&#x2F;&#x2f;a&#47;q?x=1&#38;y=2&amp;p=&#233;" +
-        "&#x2F;&#x1F600;</loc></url>" +
+      "<url><loc>https:&#x2F;&#x2f;a&#47;q&#x0000002F;r?x=1&#38;y=2" +
+        // zero-padded references are legal too
+        "&#00000038;z=3&amp;p=&#233;&#x2F;&#x1F600;</loc></url>" +
         // one level only, and invalid references stay as they are
         "<url><loc>https://a/r?t=&#38;amp;&#0;&#xD800;&#1114112;&#x;" +
-        "</loc></url>"
+        "&#99999999999;</loc></url>"
     val entries = SitemapSource.parse(Seq(("h", xml)).toDF("host", "xml"),
       "xml")
     val locs = entries.collect().map(_.getAs[String]("loc")).toSeq
     assert(locs === Seq(crawled,
-      "https://a/r?t=&amp;&#0;&#xD800;&#1114112;&#x;"))
+      "https://a/r?t=&amp;&#0;&#xD800;&#1114112;&#x;&#99999999999;"))
     val fresh = SitemapSource.freshCandidates(entries,
         Seq(crawled).toDF("url"), "url")
       .collect().map(_.getAs[String]("loc")).toSeq
