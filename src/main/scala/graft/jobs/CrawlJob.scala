@@ -67,13 +67,12 @@ object CrawlJob {
     import spark.implicits._
     val maxPages = cfg.maxPages
     val webSeed = cfg.webSeed
-    // one task handles a handful of seeds; parallelism scales with the
-    // session's shuffle-partition setting (a 1000-executor cluster
-    // raises it), never capped by a constant
+    // the seed list is sliced straight into tasks (no exchange): two
+    // tasks per shuffle partition of the session, never more tasks than
+    // seeds — a 3-seed crawl runs 3 tasks, not a constant floor of them
     val harvestParts = math.max(1, math.min(seeds.size,
-      math.max(64, spark.sessionState.conf.numShufflePartitions * 2)))
-    spark.createDataset(seeds)
-      .repartition(harvestParts)
+      spark.sessionState.conf.numShufflePartitions * 2))
+    spark.createDataset(spark.sparkContext.parallelize(seeds, harvestParts))
       .flatMap { s =>
         SyntheticWeb.harvestPeriod(s.site, s.year, s.month, maxPages, webSeed,
             s.uf, s.munValue)
@@ -446,44 +445,54 @@ object CrawlJob {
 
   /** Production resume loop: read the committed seen set from the
     * table, Bloom-prefilter + exact-join the skip flags, crawl, commit
-    * a new snapshot with lineage. */
+    * a new snapshot with lineage. A reserved maintenance runId is
+    * refused before any work (IllegalArgumentException); a throw in any
+    * later step releases every frame the run cached. */
   def runResumable(spark: SparkSession, cfg: CrawlConfig, tableDir: String,
       runId: String): (CrawlResult, graft.table.TableIO.Snapshot) = {
     import spark.implicits._
-    val seenTable = graft.table.TableIO.readSeen(spark, tableDir).cache()
-    val seenCount = seenTable.count()
-    val seeds = SeedExpansion.expand(cfg)
-    val raw = harvest(spark, cfg, seeds)
-    val frontier = buildFrontier(spark, raw).cache()
-    val (pruned, surviving) = pruneIfActive(spark, cfg, seeds, frontier)
-    val flagged =
-      if (cfg.seenSketch == "cuckoo")
-        flagViaCuckoo(spark, tableDir, seenTable, seenCount, surviving)
-      else
-        flagViaBloom(spark, tableDir, runId, seenTable, seenCount,
-          surviving)
-    val log = scheduleAndFetchFlagged(flagged, cfg.budget,
-      cfg.strictPerHost, cfg.hostBudgets).cache()
-    val result = CrawlResult(seeds, pruned, surviving, log,
-      materializeImages(log))
-    // Seen delta = Success-only hashes. The skip flags are EXACT by
-    // construction (flagSeen* confirms every Bloom "maybe" with an
-    // exact join), so a Success row is provably absent from the
-    // committed seen set and a Skipped row provably present — the
-    // delta needs no `except(seenTable)`, which would re-shuffle the
-    // entire committed seen table (~80 GB of hashes at the 10^10-key
-    // design point) on every run. Equivalence of the two formulations
-    // is asserted in ResumableCrawlSpec.
-    val snap = graft.table.TableIO.commit(spark, tableDir, result.images,
-      newSeenFrom(result.log), runId,
-      pruned.map(p => s"${p.site}/${p.year}/${p.month}"))
-    // the commit materialized everything these caches serve; release
-    // them now (the returned `log` stays cached for the caller — see
-    // CrawlResult.unpersist for full release) so repeated resumable
-    // runs in one JVM don't accumulate pinned storage
-    seenTable.unpersist(blocking = false)
-    frontier.unpersist(blocking = false)
-    (result, snap)
+    graft.table.TableIO.requireDeltaRunId(runId)
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    def pin[T](ds: Dataset[T]): Dataset[T] = { pinned += ds; ds.cache() }
+    try {
+      val seenTable = pin(graft.table.TableIO.readSeen(spark, tableDir))
+      val seenCount = seenTable.count()
+      val seeds = SeedExpansion.expand(cfg)
+      val frontier = pin(buildFrontier(spark, harvest(spark, cfg, seeds)))
+      val (pruned, surviving) = pruneIfActive(spark, cfg, seeds, frontier)
+      val flagged =
+        if (cfg.seenSketch == "cuckoo")
+          flagViaCuckoo(spark, tableDir, seenTable, seenCount, surviving)
+        else
+          flagViaBloom(spark, tableDir, runId, seenTable, seenCount,
+            surviving)
+      val log = pin(scheduleAndFetchFlagged(flagged, cfg.budget,
+        cfg.strictPerHost, cfg.hostBudgets))
+      val result = CrawlResult(seeds, pruned, surviving, log,
+        materializeImages(log))
+      // Seen delta = Success-only hashes. The skip flags are EXACT by
+      // construction (flagSeen* confirms every Bloom "maybe" with an
+      // exact join), so a Success row is provably absent from the
+      // committed seen set and a Skipped row provably present — the
+      // delta needs no `except(seenTable)`, which would re-shuffle the
+      // entire committed seen table (~80 GB of hashes at the 10^10-key
+      // design point) on every run. Equivalence of the two formulations
+      // is asserted in ResumableCrawlSpec.
+      val snap = graft.table.TableIO.commit(spark, tableDir, result.images,
+        newSeenFrom(result.log), runId,
+        pruned.map(p => s"${p.site}/${p.year}/${p.month}"))
+      // the commit materialized everything these caches serve; release
+      // them now (the returned `log` stays cached for the caller — see
+      // CrawlResult.unpersist for full release) so repeated resumable
+      // runs in one JVM don't accumulate pinned storage
+      seenTable.unpersist(blocking = false)
+      frontier.unpersist(blocking = false)
+      (result, snap)
+    } catch {
+      case e: Throwable =>
+        pinned.foreach(_.unpersist(blocking = false))
+        throw e
+    }
   }
 
   /** Full batch crawl. `seen` carries the committed URL-seen set for

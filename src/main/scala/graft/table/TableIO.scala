@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.ImageRecord
@@ -248,6 +249,18 @@ object TableIO {
       .toSeq
   }
 
+  /** Reject a delta-commit runId in the reserved maintenance namespace:
+    * cumulativePartitionMeta's legacy fallback treats these prefixes as
+    * compaction/invalidation markers, so a DELTA commit named e.g.
+    * "invalidate-retry-1" would corrupt reconstructed partition metadata
+    * on tables written before the explicit `cumulative` flag existed.
+    * Throws IllegalArgumentException. */
+  def requireDeltaRunId(runId: String): Unit =
+    require(!runId.startsWith("compact-") &&
+      !runId.startsWith("invalidate-") && !runId.startsWith("rollback-"),
+      s"runId '$runId' uses a reserved maintenance prefix " +
+        "(compact-/invalidate-/rollback-)")
+
   /** Commit one crawl wave: data + seen delta + snapshot + hint swap.
     * Data is laid out `PARTITIONED BY (site, year, month)` — the
     * reference's `<site>/<ano>/<mes>/` directory contract (§1.2,
@@ -257,31 +270,27 @@ object TableIO {
   def commit(spark: SparkSession, dir: String, images: Dataset[ImageRecord],
       seenDelta: Dataset[Long], runId: String,
       periods: Seq[String], note: String = ""): Snapshot = {
-    // reserved namespace: cumulativePartitionMeta's legacy fallback
-    // treats these prefixes as compaction/invalidation markers, so a
-    // DELTA commit named e.g. "invalidate-retry-1" would corrupt
-    // reconstructed partition metadata on tables written before the
-    // explicit `cumulative` flag existed
-    require(!runId.startsWith("compact-") &&
-      !runId.startsWith("invalidate-") && !runId.startsWith("rollback-"),
-      s"runId '$runId' uses a reserved maintenance prefix " +
-        "(compact-/invalidate-/rollback-)")
+    requireDeltaRunId(runId)
     val parent = currentSnapshot(dir)
     val version = parent.map(_.version).getOrElse(0) + 1
     val dataDirName = f"data/v$version%05d"
     val seenDirName = f"seen/v$version%05d"
 
-    // empty deltas add no directories (a schema-less parquet dir would
-    // poison later reads)
-    val hasImages = !images.isEmpty
-    val hasSeen = !seenDelta.isEmpty
-    if (hasImages)
-      images.write.mode(SaveMode.Overwrite)
-        .partitionBy("site", "year", "month")
-        .parquet(s"$dir/$dataDirName")
-    if (hasSeen)
-      seenDelta.toDF("urlHash").write.mode(SaveMode.Overwrite)
-        .parquet(s"$dir/$seenDirName")
+    // each delta is written once and counts its own rows on the way
+    // (no separate emptiness job); an empty delta's directory is deleted
+    // again, so no snapshot references it (a schema-less parquet dir
+    // would poison later reads)
+    def writeCounted(df: DataFrame, rel: String, partCols: String*) = {
+      val rows = new Observation()
+      df.observe(rows, count(lit(1)).as("n")).write.mode(SaveMode.Overwrite)
+        .partitionBy(partCols: _*).parquet(s"$dir/$rel")
+      val nonEmpty = rows.get("n") != 0L
+      if (!nonEmpty) deleteRec(Paths.get(dir, rel))
+      nonEmpty
+    }
+    val hasImages = writeCounted(images.toDF(), dataDirName,
+      "site", "year", "month")
+    val hasSeen = writeCounted(seenDelta.toDF("urlHash"), seenDirName)
 
     val parts =
       if (!hasImages) Seq.empty[PartitionMeta]

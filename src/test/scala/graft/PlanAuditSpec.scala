@@ -235,6 +235,24 @@ class PlanAuditSpec extends AnyFunSuite {
       s"RFC 9309 precedence filter (native expression) missing:\n$p")
   }
 
+  test("harvest slices the seed list straight into tasks: no exchange, no constant partition floor") {
+    val demo = graft.queries.CrawlQueries.demoConfig
+    val seeds = graft.frontier.SeedExpansion.expand(demo)
+    val raw = graft.jobs.CrawlJob.harvest(spark, demo, seeds)
+    val p = formatted(raw.toDF())
+    assert(!p.contains("Exchange") && !p.contains("RoundRobinPartitioning"),
+      s"harvest shuffles its seed list:\n$p")
+    assert(raw.rdd.getNumPartitions <= seeds.size)
+    val three = demo.copy(sites = Seq("portal_saude_mg"),
+      months = graft.model.MonthSelector.Multiple(Seq(1, 2, 3)))
+    val seeds3 = graft.frontier.SeedExpansion.expand(three)
+    assert(seeds3.size === 3)
+    val parts3 = graft.jobs.CrawlJob.harvest(spark, three, seeds3)
+      .rdd.getNumPartitions
+    assert(parts3 >= 1 && parts3 <= 3,
+      s"a 3-seed harvest runs $parts3 tasks")
+  }
+
   test("aligned sketch probe: pmod exchange + native key sort; the typed groupByKey shape is banned") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("plan-cuckoo").toString

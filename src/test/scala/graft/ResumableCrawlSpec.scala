@@ -254,4 +254,30 @@ class ResumableCrawlSpec extends AnyFunSuite {
           e.vtimeMs, e.attempts, e.status))
     assert(canon(r.log.collect().toSeq) === canon(ref.log.collect().toSeq))
   }
+
+  test("reserved runId is refused before any work; the CacheManager stays empty") {
+    val dir = Files.createTempDirectory("graft-resume-reserved").toString
+    spark.catalog.clearCache()
+    val e = intercept[IllegalArgumentException] {
+      CrawlJob.runResumable(spark, cfg, dir, "compact-v00001")
+    }
+    assert(e.getMessage.contains("reserved maintenance prefix"))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a refused run left cached frames pinned in the driver")
+    assert(!Files.exists(java.nio.file.Paths.get(dir, "data")),
+      "a refused run wrote data")
+  }
+
+  test("a throw in the commit step releases every frame the run cached") {
+    val dir = Files.createTempDirectory("graft-resume-fail").toString
+    // a plain file where the snapshot directory belongs: the data and
+    // seen writes succeed, the snapshot write throws
+    Files.writeString(java.nio.file.Paths.get(dir, "snapshots"), "")
+    spark.catalog.clearCache()
+    intercept[java.nio.file.FileAlreadyExistsException] {
+      CrawlJob.runResumable(spark, cfg, dir, "run-1")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a failed run left cached frames pinned in the driver")
+  }
 }

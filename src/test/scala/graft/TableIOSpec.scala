@@ -399,4 +399,42 @@ class TableIOSpec extends AnyFunSuite {
     assert(TableIO.committedRunIds(dir) ===
       Set("run-1", "run-2", "run-3", "run-4"))
   }
+
+  test("one-sided commits: the empty side leaves no directory on disk, reads still work") {
+    import spark.implicits._
+    val dir = tmpDir()
+    val r = CrawlJob.run(spark, cfgA)
+    val images = r.images.collect().toSeq
+    val hashes = CrawlJob.seenFrom(r.log).collect().toSet
+    assert(images.nonEmpty && hashes.nonEmpty)
+    def onDisk(rel: String) = Files.exists(java.nio.file.Paths.get(dir, rel))
+
+    // v1: seen delta only — no data/v00001 at all, not just unreferenced
+    val s1 = TableIO.commit(spark, dir, spark.emptyDataset[ImageRecord],
+      hashes.toSeq.toDS(), "seen-only", Nil)
+    assert(s1.dataDirs.isEmpty && s1.seenDirs === Seq("seen/v00001"))
+    assert(s1.partitions.isEmpty && s1.totalRows === 0L)
+    assert(!onDisk("data/v00001") && onDisk("seen/v00001"))
+    assert(TableIO.readImages(spark, dir).count() === 0L)
+    assert(TableIO.readSeen(spark, dir).collect().toSet === hashes)
+
+    // v2: images only — no seen/v00002 on disk
+    val s2 = TableIO.commit(spark, dir, images.toDS(),
+      spark.emptyDataset[Long], "images-only", Nil)
+    assert(s2.dataDirs === Seq("data/v00002"))
+    assert(s2.seenDirs === Seq("seen/v00001"))
+    assert(s2.totalRows === images.size.toLong)
+    assert(onDisk("data/v00002") && !onDisk("seen/v00002"))
+    assert(TableIO.readImages(spark, dir).select("image_id").as[String]
+      .collect().toSet === images.map(_.image_id).toSet)
+    assert(TableIO.readSeen(spark, dir).collect().toSet === hashes)
+
+    // a filtered-to-nothing delta (plan with partitions, zero rows) is
+    // treated the same way as an empty local one
+    val s3 = TableIO.commit(spark, dir, images.toDS().filter(_ => false),
+      hashes.toSeq.toDS().filter(_ => false), "both-empty", Nil)
+    assert(s3.dataDirs === s2.dataDirs && s3.seenDirs === s2.seenDirs)
+    assert(!onDisk("data/v00003") && !onDisk("seen/v00003"))
+    assert(TableIO.readImages(spark, dir).count() === images.size.toLong)
+  }
 }

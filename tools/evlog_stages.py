@@ -1,14 +1,58 @@
 #!/usr/bin/env python3
-"""Summarize a Spark event log: per-stage wall time, task time, GC,
-shuffle and spill — the offline half of the bench's
+"""Summarize a Spark event log: per-stage wall time, task count, task
+time, task CPU, GC, shuffle and spill — the offline half of the bench's
 SPARK_GRAFT_EVENTLOG profiling aid (clusterSession in Bench.scala).
 
-Usage: python3 tools/evlog_stages.py /tmp/graft_evlog/app-...  [minWallSec]
-"""
-import json, sys, collections
+Reads a plain event log file, a zstd-compressed one (`*.zstd`, as Spark 4
+writes by default; decompressed with the `zstd` command-line tool), or a
+rolling log directory (`eventlog_v2_<app>/`, whose `events_<n>_*` files
+are read in order).
 
-path = sys.argv[1]
-min_wall = float(sys.argv[2]) if len(sys.argv) > 2 else 1.0
+Usage:
+  python3 tools/evlog_stages.py LOG [minWallSec] [--prop KEY=VALUE ...]
+
+  --prop KEY=VALUE  keep only stages of jobs whose job properties hold
+                    KEY=VALUE (repeatable; all must match), e.g.
+                    --prop "perfbench.span=job:job 3"
+
+`cpu_s` is executor CPU plus executor deserialize CPU — the task CPU
+perfbench's LayerListener counts.
+"""
+import argparse, collections, glob, json, os, re, subprocess
+
+ap = argparse.ArgumentParser(
+    description="Per-stage summary of a Spark event log.")
+ap.add_argument("log", help="event log file or eventlog_v2_* directory")
+ap.add_argument("min_wall", nargs="?", type=float, default=1.0,
+                help="hide stages shorter than this many seconds (1.0)")
+ap.add_argument("--prop", action="append", default=[],
+                metavar="KEY=VALUE", help="job-property filter")
+args = ap.parse_args()
+props = dict(p.split("=", 1) for p in args.prop)
+min_wall = args.min_wall
+
+
+def log_files(path):
+    if not os.path.isdir(path):
+        return [path]
+    def index(f):
+        m = re.match(r"events_(\d+)_", os.path.basename(f))
+        return int(m.group(1)) if m else 0
+    return sorted(glob.glob(os.path.join(path, "events_*")), key=index)
+
+
+def lines(path):
+    for f in log_files(path):
+        if f.endswith((".zstd", ".zst")):
+            p = subprocess.Popen(["zstd", "-dc", f], stdout=subprocess.PIPE,
+                                 text=True)
+            yield from p.stdout
+            if p.wait() != 0:
+                raise SystemExit(f"zstd -dc {f} failed")
+        else:
+            with open(f) as fh:
+                yield from fh
+
 
 stages = {}          # (stageId, attempt) -> dict
 tasks = collections.defaultdict(lambda: dict(run=0, gc=0, n=0,
@@ -16,78 +60,88 @@ tasks = collections.defaultdict(lambda: dict(run=0, gc=0, n=0,
                                              shRead=0, shWrite=0,
                                              deser=0, resSer=0,
                                              cpu=0))
-jobs = []
+jobs = []            # [jobId, submitted, completed, stageIds, kept]
 
-with open(path) as f:
-    for line in f:
-        try:
-            ev = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        e = ev.get("Event")
-        if e == "SparkListenerStageSubmitted":
-            si = ev["Stage Info"]
-            stages[(si["Stage ID"], si["Stage Attempt ID"])] = dict(
-                name=si["Stage Name"], sub=si.get("Submission Time", 0),
-                done=None, ntask=si["Number of Tasks"])
-        elif e == "SparkListenerStageCompleted":
-            si = ev["Stage Info"]
-            key = (si["Stage ID"], si["Stage Attempt ID"])
-            st = stages.setdefault(key, dict(name=si["Stage Name"],
-                                             sub=si.get("Submission Time", 0),
-                                             done=None,
-                                             ntask=si["Number of Tasks"]))
-            st["done"] = si.get("Completion Time", 0)
-        elif e == "SparkListenerTaskEnd":
-            key = (ev["Stage ID"], ev["Stage Attempt ID"])
-            m = ev.get("Task Metrics") or {}
-            t = tasks[key]
-            t["n"] += 1
-            t["run"] += m.get("Executor Run Time", 0)
-            t["cpu"] += m.get("Executor CPU Time", 0) / 1e6  # ns->ms
-            t["gc"] += m.get("JVM GC Time", 0)
-            t["deser"] += m.get("Executor Deserialize Time", 0)
-            t["resSer"] += m.get("Result Serialization Time", 0)
-            t["spillMem"] += m.get("Memory Bytes Spilled", 0)
-            t["spillDisk"] += m.get("Disk Bytes Spilled", 0)
-            sr = m.get("Shuffle Read Metrics") or {}
-            t["shRead"] += sr.get("Remote Bytes Read", 0) + \
-                sr.get("Local Bytes Read", 0)
-            sw = m.get("Shuffle Write Metrics") or {}
-            t["shWrite"] += sw.get("Shuffle Bytes Written", 0)
-        elif e == "SparkListenerJobStart":
-            jobs.append((ev["Job ID"], ev.get("Submission Time", 0),
-                         None, [s["Stage ID"] for s in ev["Stage Infos"]]))
-        elif e == "SparkListenerJobEnd":
-            for i, j in enumerate(jobs):
-                if j[0] == ev["Job ID"]:
-                    jobs[i] = (j[0], j[1], ev.get("Completion Time", 0), j[3])
+for line in lines(args.log):
+    try:
+        ev = json.loads(line)
+    except json.JSONDecodeError:
+        continue
+    e = ev.get("Event")
+    if e == "SparkListenerStageSubmitted":
+        si = ev["Stage Info"]
+        stages[(si["Stage ID"], si["Stage Attempt ID"])] = dict(
+            name=si["Stage Name"], sub=si.get("Submission Time", 0),
+            done=None, ntask=si["Number of Tasks"])
+    elif e == "SparkListenerStageCompleted":
+        si = ev["Stage Info"]
+        key = (si["Stage ID"], si["Stage Attempt ID"])
+        st = stages.setdefault(key, dict(name=si["Stage Name"],
+                                         sub=si.get("Submission Time", 0),
+                                         done=None,
+                                         ntask=si["Number of Tasks"]))
+        st["done"] = si.get("Completion Time", 0)
+    elif e == "SparkListenerTaskEnd":
+        key = (ev["Stage ID"], ev["Stage Attempt ID"])
+        m = ev.get("Task Metrics") or {}
+        t = tasks[key]
+        t["n"] += 1
+        t["run"] += m.get("Executor Run Time", 0)
+        t["cpu"] += (m.get("Executor CPU Time", 0) +
+                     m.get("Executor Deserialize CPU Time", 0)) / 1e6
+        t["gc"] += m.get("JVM GC Time", 0)
+        t["deser"] += m.get("Executor Deserialize Time", 0)
+        t["resSer"] += m.get("Result Serialization Time", 0)
+        t["spillMem"] += m.get("Memory Bytes Spilled", 0)
+        t["spillDisk"] += m.get("Disk Bytes Spilled", 0)
+        sr = m.get("Shuffle Read Metrics") or {}
+        t["shRead"] += sr.get("Remote Bytes Read", 0) + \
+            sr.get("Local Bytes Read", 0)
+        sw = m.get("Shuffle Write Metrics") or {}
+        t["shWrite"] += sw.get("Shuffle Bytes Written", 0)
+    elif e == "SparkListenerJobStart":
+        jp = ev.get("Properties") or {}
+        kept = all(jp.get(k) == v for k, v in props.items())
+        jobs.append([ev["Job ID"], ev.get("Submission Time", 0), None,
+                     [s["Stage ID"] for s in ev["Stage Infos"]], kept])
+    elif e == "SparkListenerJobEnd":
+        for j in jobs:
+            if j[0] == ev["Job ID"]:
+                j[2] = ev.get("Completion Time", 0)
+
+jobs = [j for j in jobs if j[4]]
+kept_stages = {s for j in jobs for s in j[3]}
 
 rows = []
 for key, st in stages.items():
     if st["done"] is None or st["sub"] == 0:
+        continue
+    if props and key[0] not in kept_stages:
         continue
     wall = (st["done"] - st["sub"]) / 1e3
     if wall < min_wall:
         continue
     t = tasks.get(key, {})
     rows.append((wall, key, st, t))
-rows.sort(reverse=True)
+rows.sort(key=lambda r: (r[0], r[1]), reverse=True)
 
 tot_wall = sum(r[0] for r in rows)
-print(f"stages >= {min_wall}s wall (sum {tot_wall:.1f}s):")
+tot_cpu = sum(r[3].get("cpu", 0) for r in rows) / 1e3
+tot_tasks = sum(r[3].get("n", 0) for r in rows)
+where = " ".join(f"{k}={v}" for k, v in props.items())
+print(f"stages >= {min_wall}s wall{' with ' + where if where else ''} "
+      f"(n {len(rows)}, sum wall {tot_wall:.3f}s, tasks {tot_tasks}, "
+      f"cpu {tot_cpu:.3f}s):")
 print(f"{'wall_s':>7} {'stage':>6} {'tasks':>5} {'task_s':>8} {'cpu_s':>8} "
       f"{'gc_s':>6} {'spill_mb':>8} {'shR_mb':>7} {'shW_mb':>7}  name")
 for wall, key, st, t in rows[:40]:
-    print(f"{wall:7.1f} {key[0]:>6} {st['ntask']:>5} "
-          f"{t.get('run', 0)/1e3:8.1f} {t.get('cpu', 0)/1e3:8.1f} "
-          f"{t.get('gc', 0)/1e3:6.1f} "
-          f"{t.get('spillDisk', 0)/1e6:8.1f} {t.get('shRead', 0)/1e6:7.1f} "
-          f"{t.get('shWrite', 0)/1e6:7.1f}  {st['name'][:70]}")
+    print(f"{wall:7.3f} {key[0]:>6} {t.get('n', 0):>5} "
+          f"{t.get('run', 0)/1e3:8.3f} {t.get('cpu', 0)/1e3:8.3f} "
+          f"{t.get('gc', 0)/1e3:6.3f} "
+          f"{t.get('spillDisk', 0)/1e6:8.1f} {t.get('shRead', 0)/1e6:7.3f} "
+          f"{t.get('shWrite', 0)/1e6:7.3f}  {st['name'][:70]}")
 
 # gaps: wall time not covered by any stage (driver-side/scheduling)
-iv = sorted((st["sub"], st["done"]) for _, _, st, _ in
-            [(r[0], r[1], r[2], r[3]) for r in rows] ) if rows else []
 iv = sorted((st["sub"], st["done"]) for _, key, st, _ in rows)
 merged = []
 for s, e in iv:
@@ -96,9 +150,10 @@ for s, e in iv:
     else:
         merged.append((s, e))
 covered = sum(e - s for s, e in merged) / 1e3
-if jobs:
-    j0 = min(j[1] for j in jobs if j[1])
-    j1 = max(j[2] for j in jobs if j[2])
-    print(f"\njobs span {(j1 - j0)/1e3:.1f}s; stage-covered {covered:.1f}s; "
-          f"uncovered (driver/scheduling) {(j1 - j0)/1e3 - covered:.1f}s; "
+starts = [j[1] for j in jobs if j[1]]
+ends = [j[2] for j in jobs if j[2]]
+if starts and ends:
+    span = (max(ends) - min(starts)) / 1e3
+    print(f"\njobs span {span:.3f}s; stage-covered {covered:.3f}s; "
+          f"uncovered (driver/scheduling) {span - covered:.3f}s; "
           f"n_jobs {len(jobs)}")
