@@ -2,7 +2,7 @@ package graft.ops
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Persisted MinHash-LSH signature index — INCREMENTAL near-duplicate
@@ -136,36 +136,30 @@ object DedupIndex {
     m
   }
 
-  private def shinglerOf(m: IndexMeta): String => Array[Long] =
+  /** Shingler of both the signature pass and the verify tail: the
+    * raw (unsorted multiset) char variant, or word n-gram sets — MinHash
+    * signatures, and therefore every band key stored or probed, and
+    * every exact jaccard are bit-identical to the sorted-distinct form
+    * (per-bin minima and [[DedupOps.jaccard]] are order- and
+    * duplicate-invariant) without the per-document sort. */
+  private def sigShinglerOf(m: IndexMeta): String => Array[Long] =
     m.kind match {
-      case "char" => DedupOps.shingles(_, m.k)
+      case "char" => DedupOps.shinglesRaw(_, m.k)
       case "word" => DedupOps.wordNgrams(_, m.k)
       case other => throw new IllegalArgumentException(
         s"unknown index kind '$other' (expected char|word)")
     }
 
-  /** Signature-pass shingler: the raw (unsorted multiset) char variant
-    * — MinHash signatures, and therefore every band key stored or
-    * probed, are bit-identical to the sorted-distinct form (per-bin
-    * minima are order- and duplicate-invariant) without the
-    * per-document sort.
-    * The verify tail keeps [[shinglerOf]]. */
-  private def sigShinglerOf(m: IndexMeta): String => Array[Long] =
-    m.kind match {
-      case "char" => DedupOps.shinglesRaw(_, m.k)
-      case _ => shinglerOf(m)
-    }
-
-  /** (id, bandHash) signature rows of one document set — the
-    * shingle→minhash→band pass, map-side only. */
-  private def banded(docs: DataFrame, idCol: String, textCol: String,
-      m: IndexMeta): DataFrame = {
+  /** Band keys of `textCol`, `m.bands` per document — the
+    * shingle→minhash→band pass as one map-side UDF. A null text has no
+    * shingles: callers drop it first, so it pairs with nothing and is
+    * not indexed. */
+  private def bandKeys(textCol: String, m: IndexMeta): Column = {
     val sh = sigShinglerOf(m)
     val nh = m.numHashes
     val nb = m.bands
-    val bandsUdf = udf((t: String) => DedupOps.bandKeys(t, sh, nh, nb))
-    docs.select(col(idCol).as("id"),
-      explode(bandsUdf(col(textCol))).as("bandHash"))
+    udf((t: String) => DedupOps.bandKeys(t, sh, nh, nb))
+      .withName("graft_band_keys").apply(col(textCol))
   }
 
   /** Initialize an EMPTY index (geometry only, no deltas) — the
@@ -216,11 +210,23 @@ object DedupIndex {
     val parts = math.max(
       math.max(1, spark.sessionState.conf.numShufflePartitions / 4),
       math.ceil(n.toDouble * m.bands / 4e6).toInt)
-    banded(docs, idCol, textCol, m)
+    // indexed docs = written signature rows / bands (every indexed doc
+    // has `bands` keys; null texts have none), counted by the write
+    // itself: a filtered count would read the batch's text column
+    // once more. Observed in the writing stage (see `rewrite`).
+    val rows = new Observation()
+    // exploded in the UDF's own projection: a generator over a
+    // projected column makes the optimizer infer `isnotnull`/`size > 0`
+    // filters on it, pushed below the projection as two more UDF calls
+    docs.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"),
+        explode(bandKeys(textCol, m)).as("bandHash"))
       .repartition(parts, col("bandHash"))
       .sortWithinPartitions("bandHash")
+      .observe(rows, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
-    val next = m.copy(docs = m.docs + n, deltas = m.deltas :+ delta,
+    val indexed = rows.get("n").asInstanceOf[Long] / m.bands
+    val next = m.copy(docs = m.docs + indexed, deltas = m.deltas :+ delta,
       runIds =
         if (runId.isEmpty) m.runIds
         else (if (m.runIds == null) Nil else m.runIds) :+ runId)
@@ -242,12 +248,13 @@ object DedupIndex {
 
   /** Compact the delta chain into ONE signature dir (a long-lived
     * stream appends one delta per micro-batch; without compaction
-    * [[readIndex]] plans O(batches) scans). runIds survive — replay
-    * idempotence is unaffected. Old delta dirs are deleted after the
-    * atomic meta swap (the index is derived data: no time travel). */
+    * [[readIndex]] plans O(batches) scans). runIds and the docs count
+    * survive — replay idempotence is unaffected. Old delta dirs are
+    * deleted after the atomic meta swap (the index is derived data: no
+    * time travel). */
   def compact(dir: String): IndexMeta = {
     val m = currentMeta(dir)
-    if (m.deltas.size <= 1) m else rewrite(dir, m, identity)
+    if (m.deltas.size <= 1) m else rewrite(dir, m, identity, recount = false)
   }
 
   /** Remove documents from the index (the revised-corpus workflow:
@@ -256,7 +263,8 @@ object DedupIndex {
     * emit phantom pairs against deleted docs on every future probe).
     * Rewrites the signature rows anti-joined on id — O(index bytes),
     * which is ~0.3% of the corpus (16 B × bands per doc), not a
-    * corpus rewrite. Compacts as a side effect. */
+    * corpus rewrite — and recounts the indexed docs. Compacts as a
+    * side effect. */
   def deleteIds(ids: DataFrame, dir: String): IndexMeta = {
     val m = readMeta(dir).getOrElse(throw new IllegalStateException(
       s"no index at $dir"))
@@ -264,36 +272,41 @@ object DedupIndex {
     else {
       val del = ids.toDF("del_id")
       rewrite(dir, m,
-        _.join(del, col("id") === col("del_id"), "left_anti"))
+        _.join(del, col("id") === col("del_id"), "left_anti"),
+        recount = true)
     }
   }
 
   /** Shared rewrite: read all deltas, transform, land ONE new delta,
-    * swap meta, reap superseded dirs. */
+    * swap meta, reap superseded dirs. The write counts its own rows
+    * (an `Observation`), so emptiness costs no extra job: an emptied
+    * index references NO delta and keeps no `sig/` dir (a schema-less
+    * empty parquet dir would poison the next read). `recount` recounts
+    * the docs from the new delta; otherwise `m.docs` carries over. */
   private def rewrite(dir: String, m: IndexMeta,
-      f: DataFrame => DataFrame): IndexMeta = {
+      f: DataFrame => DataFrame, recount: Boolean): IndexMeta = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val rows = f(readIndex(spark, dir))
-    // an emptied index must reference NO delta (a schema-less empty
-    // parquet dir would poison the next read)
-    if (rows.isEmpty) {
-      val next = m.copy(docs = 0L, deltas = Nil)
-      writeMeta(dir, next)
-      m.deltas.foreach(d => dropDir(s"$dir/$d"))
-      return next
-    }
     val delta = f"sig/v${nextVersion(m.deltas)}%05d"
     val parts = math.max(1,
       spark.sessionState.conf.numShufflePartitions / 4)
-    rows.repartition(parts, col("bandHash"))
+    // observed above the exchange, in the writing stage: adaptive
+    // execution replaces an empty shuffle stage (and any counter inside
+    // it) by an empty relation, so a counter below the exchange would
+    // report nothing for exactly the empty case
+    val rows = new Observation()
+    f(readIndex(spark, dir))
+      .repartition(parts, col("bandHash"))
       .sortWithinPartitions("bandHash")
+      .observe(rows, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
-    // docs count survives compaction; deletes recount from the rows
-    val docs = spark.read.parquet(s"$dir/$delta")
-      .select("id").distinct().count()
-    val next = m.copy(docs = docs, deltas = Seq(delta))
+    val next =
+      if (rows.get("n") == 0L) m.copy(docs = 0L, deltas = Nil)
+      else if (!recount) m.copy(deltas = Seq(delta))
+      else m.copy(deltas = Seq(delta), docs = spark.read
+        .parquet(s"$dir/$delta").select("id").distinct().count())
     writeMeta(dir, next)
-    m.deltas.foreach(d => dropDir(s"$dir/$d"))
+    if (next.deltas.isEmpty) dropDir(s"$dir/sig")
+    else m.deltas.foreach(d => dropDir(s"$dir/$d"))
     next
   }
 
@@ -305,8 +318,9 @@ object DedupIndex {
     * a crashed run re-probe instead of self-pair).
     *
     * `corpusTexts` supplies (id → text) for indexed ids; only
-    * candidate ids' texts are ever read/shuffled (semi-join in the
-    * verify tail), so passing the full corpus table is free.
+    * candidate ids' texts ever leave the scan (the verify tail
+    * filters it map-side against the broadcast candidate ids), so
+    * passing the full corpus table is free.
     *
     * Scale: the batch side is broadcast when small (its signature
     * rows are counted AFTER materialization, so the decision is
@@ -324,7 +338,7 @@ object DedupIndex {
       .select(col(idCol).as("id"), col(textCol).as("text"))
       .unionByName(newDocs
         .select(col(idCol).as("id"), col(textCol).as("text")))
-    DedupOps.exactVerifyPairs(cand, texts, shinglerOf(m), threshold)
+    DedupOps.exactVerifyPairs(cand, texts, sigShinglerOf(m), threshold)
   }
 
   /** Candidate pairs of [[probePairs]] WITHOUT the exact verify —
@@ -338,9 +352,18 @@ object DedupIndex {
     val m = currentMeta(dir)
     val spark = newDocs.sparkSession
     import spark.implicits._
-    val newBanded = DedupOps.materialize(
-      banded(newDocs, idCol, textCol, m))
-    val batchSigRows = newBanded.count() // free: materialized
+    // one stored row per document, exploded on read (see
+    // DedupOps.lshJaccardPairs): every stored document has `m.bands`
+    // band keys, so the signature row count is docs × bands, and
+    // `explode_outer` emits the same rows as `explode` without the
+    // inferred filter that `materialize=none` would push below the
+    // projection as two more UDF calls per document
+    val newSigs = DedupOps.materialize(newDocs
+      .filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), bandKeys(textCol, m).as("bands")))
+    val batchSigRows = newSigs.count() * m.bands // free: materialized
+    val newBanded =
+      newSigs.select($"id", explode_outer($"bands").as("bandHash"))
     val nb = newBanded.select($"id".as("n_id"), $"bandHash")
     val l = newBanded.as("l")
     val r = newBanded.as("r")

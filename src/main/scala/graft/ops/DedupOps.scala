@@ -71,13 +71,13 @@ object DedupOps {
   }
 
   /** [[shingles]] WITHOUT the sort + dedup — the multiset of window
-    * hashes in text order. For MinHash signatures ([[bandKeys]]) the
-    * two forms are interchangeable: each bin's `min` over a multiset
-    * equals its `min` over the distinct set, and bin occupancy (so
-    * densification) is the same, so every signature (and band key, and
-    * emitted pair) is bit-identical — while the signature pass skips
-    * the per-document sort that the exact-Jaccard verify path (which
-    * genuinely needs sorted distinct sets) still pays. */
+    * hashes in text order. Both consumers are multiset-invariant, so
+    * the two forms are interchangeable there: for MinHash signatures
+    * ([[bandKeys]]) each bin's `min` over a multiset equals its `min`
+    * over the distinct set and bin occupancy (so densification) is the
+    * same; [[jaccard]] counts distinct values. Every signature, band
+    * key, emitted pair and jaccard value is bit-identical, and neither
+    * the signature pass nor the verify tail pays a per-document sort. */
   private[graft] def shinglesRaw(text: String, k: Int): Array[Long] = {
     val t = WsRun.matcher(text.toLowerCase).replaceAll(" ")
     if (t.length < k) Array(Hashing.xxh64(t))
@@ -157,15 +157,44 @@ object DedupOps {
     }
   }
 
-  /** Exact Jaccard similarity of two documents' shingle sets. */
+  /** Exact Jaccard similarity of two documents' shingle sets, given as
+    * UNSORTED MULTISETS (the [[shinglesRaw]] form; sorted-distinct
+    * arrays are a special case): |distinct(a) ∩ distinct(b)| over
+    * |distinct(a) ∪ distinct(b)|, 1.0 when both are empty. One
+    * open-addressing table takes a's distinct values, then b's lookups
+    * count the intersection and insert b-only values once — no sort,
+    * and the two integer counts (so the Double) equal a merge walk over
+    * the sorted distinct sets. */
   def jaccard(a: Array[Long], b: Array[Long]): Double = {
-    var i = 0; var j = 0; var inter = 0
-    while (i < a.length && j < b.length) {
-      if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
-      else if (a(i) < b(j)) i += 1
-      else j += 1
+    // load factor ≤ 1/2: 2^bits ≥ 2·(|a| + |b|)
+    val bits = math.max(4,
+      64 - java.lang.Long.numberOfLeadingZeros(2L * (a.length + b.length)))
+    val shift = 64 - bits
+    val mask = (1 << bits) - 1
+    val keys = new Array[Long](1 << bits)
+    // slot state: 0 empty, 1 in a only, 2 in a and b, 3 in b only
+    val state = new Array[Byte](1 << bits)
+    def slot(x: Long): Int = {
+      var s = ((x * 0x9E3779B97F4A7C15L) >>> shift).toInt
+      while (state(s) != 0 && keys(s) != x) s = (s + 1) & mask
+      s
     }
-    val union = a.length + b.length - inter
+    var distinctA = 0
+    var i = 0
+    while (i < a.length) {
+      val s = slot(a(i))
+      if (state(s) == 0) { keys(s) = a(i); state(s) = 1; distinctA += 1 }
+      i += 1
+    }
+    var inter = 0; var onlyB = 0
+    i = 0
+    while (i < b.length) {
+      val s = slot(b(i))
+      if (state(s) == 0) { keys(s) = b(i); state(s) = 3; onlyB += 1 }
+      else if (state(s) == 1) { state(s) = 2; inter += 1 }
+      i += 1
+    }
+    val union = distinctA + onlyB
     if (union == 0) 1.0 else inter.toDouble / union
   }
 
@@ -263,9 +292,8 @@ object DedupOps {
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleK: Int = 5,
       threshold: Double = 0.6): DataFrame =
-    lshJaccardPairs(df, idCol, textCol, shingles(_, shingleK),
-      numHashes, bands, threshold,
-      sigShingler = shinglesRaw(_, shingleK))
+    lshJaccardPairs(df, idCol, textCol, shinglesRaw(_, shingleK),
+      numHashes, bands, threshold)
 
   /** Word n-gram Jaccard near-duplicate pairs: same
     * signature→band→verify dataflow, over [[wordNgrams]] sets —
@@ -451,11 +479,11 @@ object DedupOps {
   }
 
   /** Shared MinHash-LSH dataflow, parameterized by the set builder.
-    * `sigShingler` (defaults to `shingler`) feeds the SIGNATURE pass
-    * only — callers pass a raw (unsorted, multiset) variant there when
-    * available, which is signature-identical (per-bin minima are
-    * order- and duplicate-invariant) but skips the per-document sort;
-    * the verify tail always uses the sorted-distinct `shingler`.
+    * `shingler` feeds both the signature pass and the exact verify, so
+    * it may return an unsorted multiset (the [[shinglesRaw]] form):
+    * MinHash per-bin minima and [[jaccard]] are both order- and
+    * duplicate-invariant. Rows with a null text have no shingles:
+    * they pair with nothing and are dropped before the signature pass.
     * `broadcastKeysMax` caps the duplicate band-key set that is
     * broadcast to prune the signature table (4M keys ≈ 32 MB); past
     * it the prune is a Bloom prefilter + merge join (0 forces that
@@ -463,34 +491,42 @@ object DedupOps {
   private[graft] def lshJaccardPairs(df: DataFrame, idCol: String,
       textCol: String, shingler: String => Array[Long],
       numHashes: Int, bands: Int, threshold: Double,
-      sigShingler: String => Array[Long] = null,
       broadcastKeysMax: Long = 4000000L): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     require(numHashes % bands == 0, "bands must divide numHashes")
     // shingle arrays are computed per document, never per PAIR: one
     // full-corpus pass feeds the signature stage map-side; the verify
-    // stage recomputes arrays for CANDIDATE documents only (see the
-    // semi-join below). Deliberately NOT persisted: the sorted hash
-    // array is ~8x the text size, so at corpus scale caching it would
-    // spill multiples of the input to executor disk — recomputing a
-    // map-side UDF is the cheaper, bounded choice (and leaves nothing
-    // pinned across calls).
-    val sigSh = if (sigShingler == null) shingler else sigShingler
+    // stage recomputes arrays for CANDIDATE documents only (see
+    // exactVerifyPairs). Deliberately NOT persisted: the hash array is
+    // ~8x the text size, so at corpus scale caching it would spill
+    // multiples of the input to executor disk — recomputing a map-side
+    // UDF is the cheaper, bounded choice (and leaves nothing pinned
+    // across calls).
     val bandsUdf = udf((t: String) =>
-      bandKeys(t, sigSh, numHashes, bands))
-    // the signature pass output, materialized once (see
-    // `materialize` for the churn-tolerance modes): Spark plans are
-    // trees, so the self-join below
-    // would otherwise run the WHOLE shingle→minhash pass twice (once
-    // per side — exchange reuse does not fire across the self-join's
-    // realiased subtrees, verified in the event log). (id, bandHash)
-    // rows are 16 bytes × bands per doc — storing them beats 2x the
-    // dominant CPU stage at any scale (MEMORY_AND_DISK; spills, never
-    // OOMs).
-    val banded = materialize(df
-      .select(col(idCol).as("id"),
-        explode(bandsUdf(col(textCol))).as("bandHash")))
+      bandKeys(t, shingler, numHashes, bands)).withName("graft_band_keys")
+    val docs = df.filter(col(textCol).isNotNull)
+    // the signature pass output, materialized once (see `materialize`
+    // for the churn-tolerance modes): the band table is read twice
+    // below (duplicate-key count, prune join), and Spark plans are
+    // trees, so each read would otherwise rerun the WHOLE
+    // shingle→minhash pass. ONE row per document, (id, bands: array of
+    // `bands` longs), is stored and exploded to (id, bandHash) on each
+    // read: the explode is a cheap map-side generator, while storing
+    // exploded rows multiplies the stored row count by `bands`. Under
+    // `cache` the array column makes the cache scan row-based, not
+    // vectorized; measured at 8k docs on local[4], the signature pass
+    // still costs ~0.12 s less task CPU than with exploded rows, and the
+    // two scans of it cost the same. `explode_outer` because every
+    // document has exactly `bands` keys, so it emits the same rows as
+    // `explode`, but the optimizer infers no `isnotnull(bands) AND
+    // size(bands) > 0` filter for it: under `materialize=none` that
+    // filter is pushed below the projection as two more signature-UDF
+    // calls per document.
+    val sigs = materialize(docs.select(col(idCol).as("id"),
+      bandsUdf(col(textCol)).as("bands")))
+    val banded = sigs.select(col("id"),
+      explode_outer(col("bands")).as("bandHash"))
     // candidate pairs: ids sharing any band bucket. The former
     // formulation self-joined the banded table — TWO exchanges of
     // every signature row plus a sort per side under the default
@@ -515,8 +551,8 @@ object DedupOps {
     // OUTPUT has long made the job unrunnable under any shape;
     // exactDedup upstream removes the identical-content mass that
     // creates such buckets). The pair table is MATERIALIZED
-    // once: it is referenced five times
-    // downstream (the join chain plus two scans per candIds branch),
+    // once: it is referenced four times downstream (the verify
+    // tail's count, its two candidate-id scans and its pair join),
     // and Spark plans are trees — without truncating the lineage every
     // reference re-ran the whole signature pass over the corpus
     // (profiled: ~5x the signature cost, the dominant term at 300k
@@ -549,7 +585,7 @@ object DedupOps {
       .distinct()
       .transform(materialize)
     exactVerifyPairs(cand,
-      df.select(col(idCol).as("id"), col(textCol).as("text")),
+      docs.select(col(idCol).as("id"), col(textCol).as("text")),
       shingler, threshold)
   }
 
@@ -557,15 +593,21 @@ object DedupOps {
     * texts — the shared verify tail of every Jaccard family (the
     * batch LSH dataflow above and [[DedupIndex.probePairs]]).
     * `cand`: (id_a, id_b) candidate pairs; `texts`: (id, text) for
-    * every id the pairs may reference.
+    * every id the pairs may reference. `shingler` may return an
+    * unsorted multiset ([[jaccard]] counts distinct values).
     *
     * Two scale rules, both measured on multi-executor runs:
-    *  1. shrink FIRST: semi-join the corpus down to ids that appear
-    *     in some candidate pair before computing/shuffling shingle
-    *     arrays — candidates ≪ corpus, so the verify stage's shuffle
-    *     carries O(candidate) arrays, not every document's (the
-    *     all-rows join was shuffle-I/O-bound: 1 and 4 executors took
-    *     the SAME wall time moving ~GBs of arrays);
+    *  1. shrink FIRST, map-side: the corpus is semi-joined down to ids
+    *     that appear in some candidate pair before any text moves or
+    *     any shingle array is computed. Under the candidate cap the
+    *     candidate-id set is broadcast into the text scan, so the
+    *     filter runs in the scan's own tasks and non-candidate texts
+    *     never cross an exchange; only past the cap (pathological
+    *     near-dup mass, up to 2 × 5M ids) does the semi-join shuffle
+    *     the texts. The verify stage therefore moves O(candidate)
+    *     texts, not the corpus (the all-rows join was
+    *     shuffle-I/O-bound: 1 and 4 executors took the SAME wall time
+    *     moving ~GBs of arrays);
     *  2. never broadcast the array side: its logical estimate is a
     *     few bytes/row (the planner can't see the arrays a UDF
     *     adds — ~8x the text), so the static planner would build a
@@ -577,15 +619,22 @@ object DedupOps {
       shingler: String => Array[Long], threshold: Double): DataFrame = {
     val spark = cand.sparkSession
     import spark.implicits._
+    // join shapes picked by the MEASURED candidate count (cand is
+    // materialized, so counting is free): under the cap the candidate
+    // ids filter the text scan map-side (rule 1) and side A attaches
+    // by broadcasting PAIRS into the text stream — texts never shuffle
+    // for that side; a huge candidate set falls back to a shuffle
+    // semi-join and two shuffle merge joins.
+    val candSmall = cand.count() <= 5000000L
     val candIds = cand.select($"id_a".as("id"))
       .union(cand.select($"id_b".as("id"))).distinct()
     // candidate TEXTS materialized once (~the candidate fraction of
     // the corpus). Two measured lessons shape
     // the verify stage:
-    //  - ship texts, not shingle arrays: the sorted hash array is
-    //    ~8.5x the text, and moving arrays through the checkpoint +
-    //    two join shuffles made the verify tail shuffle-I/O-bound
-    //    (1 and 4 executors at the same wall time);
+    //  - ship texts, not shingle arrays: the hash array is ~8.5x the
+    //    text, and moving arrays through the checkpoint + two join
+    //    shuffles made the verify tail shuffle-I/O-bound (1 and 4
+    //    executors at the same wall time);
     //  - materialize, don't recompute: left lazy, per-row UDFs get
     //    woven into the join's sort/merge machinery and re-evaluate
     //    far beyond once per row (profiled at ~80x expected CPU).
@@ -593,17 +642,11 @@ object DedupOps {
     // candidate doc is shingled ~once per pair it appears in, bounded
     // by the candidate count, never by the corpus.
     val prepCand = texts
-      .join(candIds, Seq("id"), "left_semi")
+      .join(if (candSmall) broadcast(candIds) else candIds, Seq("id"),
+        "left_semi")
       .transform(materialize)
     val jacTextUdf = udf((ta: String, tb: String) =>
       jaccard(shingler(ta), shingler(tb)))
-    // join shape picked by the MEASURED candidate count (cand is
-    // materialized, so counting is free): when the pair table is
-    // broadcastable, side A attaches by broadcasting PAIRS into the
-    // text stream — texts never shuffle for that side; a huge
-    // candidate set (pathological near-dup mass) falls back to two
-    // shuffle merge joins.
-    val candSmall = cand.count() <= 5000000L
     val out =
       if (candSmall)
         prepCand.join(broadcast(cand), $"id" === $"id_a")

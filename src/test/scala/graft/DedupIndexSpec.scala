@@ -332,4 +332,36 @@ class DedupIndexSpec extends AnyFunSuite {
       dirW, threshold = 0.9)
     assert(found.count() >= 5, "verbatim copies must pair at 0.9 word-jaccard")
   }
+
+  test("maintenance counts: compact keeps the appended docs; deleting every id leaves no delta and no sig dir") {
+    val dir = Files.createTempDirectory("graft-idx-counts").toString
+    val corpus = docs.filter(col("doc_id") < 40)
+    val b1 = docs.filter(col("doc_id") >= 40 && col("doc_id") < 70)
+    val b2 = docs.filter(col("doc_id") >= 70 && col("doc_id") < 100)
+    val m0 = DedupIndex.write(corpus, "doc_id", "text", dir)
+    DedupIndex.append(b1, "doc_id", "text", dir)
+    val m2 = DedupIndex.append(b2, "doc_id", "text", dir)
+    assert(m2.docs === m0.docs + b1.count() + b2.count())
+    val mc = DedupIndex.compact(dir)
+    assert(mc.deltas.size === 1 && mc.docs === m2.docs)
+    assert(DedupIndex.readMeta(dir).get === mc)
+
+    val all = corpus.unionByName(b1).unionByName(b2)
+    val md = DedupIndex.deleteIds(all.select("doc_id"), dir)
+    assert(md.docs === 0L && md.deltas.isEmpty)
+    assert(DedupIndex.readMeta(dir).get === md)
+    assert(!Files.exists(java.nio.file.Paths.get(dir, "sig")),
+      "an emptied index keeps a sig/ dir")
+
+    // the emptied index takes appends and probes again
+    val ma = DedupIndex.append(b1, "doc_id", "text", dir)
+    assert(ma.docs === b1.count() && ma.deltas.size === 1)
+    val batch = b1.filter(col("doc_id") < 45)
+      .withColumn("doc_id", col("doc_id") + lit(9000000L))
+      .withColumn("text", concat(col("text"), lit(" cópia")))
+    val found = pairSet(DedupIndex.probePairs(batch, b1, "doc_id", "text",
+      dir, threshold = 0.5))
+    assert(found.map(p => (p._1, p._2)) ===
+      (40L until 45L).map(i => (i, i + 9000000L)).toSet)
+  }
 }

@@ -103,8 +103,7 @@ class MinHashSpec extends AnyFunSuite {
     val all = docs.unionByName(planted)
     // minhashPairs' defaults, with the broadcast cap made explicit
     def lsh(cap: Long) = DedupOps.lshJaccardPairs(all, "doc_id", "text",
-      DedupOps.shingles(_, 5), 64, 16, 0.5,
-      sigShingler = DedupOps.shinglesRaw(_, 5), broadcastKeysMax = cap)
+      DedupOps.shinglesRaw(_, 5), 64, 16, 0.5, broadcastKeysMax = cap)
     def pairs(cap: Long) = lsh(cap)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     def usesBloom(cap: Long): Boolean = {
@@ -154,5 +153,42 @@ class MinHashSpec extends AnyFunSuite {
     DedupIndex.write(corpus, "doc_id", "text", dir)
     assert(DedupIndex.probePairs(batch, corpus, "doc_id", "text", dir,
       threshold = 0.9).count() >= 5)
+  }
+
+  test("null-text rows pair with nothing and are not indexed (batch and index paths)") {
+    val base = docs.filter(col("doc_id") < 60)
+    val planted = base.filter(col("doc_id") < 10)
+      .withColumn("doc_id", col("doc_id") + lit(1000000L))
+      .withColumn("text", concat(col("text"), lit(" documento duplicado")))
+    def nulls(from: Long) = spark.range(from, from + 4).select(
+      col("id").as("doc_id"), lit(null).cast("string").as("text"))
+    val clean = base.unionByName(planted)
+    val dirty = nulls(3000000L).unionByName(base).unionByName(planted)
+      .unionByName(nulls(3000010L))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val mh = pairs(DedupOps.minhashPairs(clean, "doc_id", "text",
+      threshold = 0.5))
+    assert(mh.size >= 10)
+    assert(pairs(DedupOps.minhashPairs(dirty, "doc_id", "text",
+      threshold = 0.5)) === mh)
+    val ng = pairs(DedupOps.ngramJaccardPairs(clean, "doc_id", "text",
+      threshold = 0.5))
+    assert(ng.size >= 10)
+    assert(pairs(DedupOps.ngramJaccardPairs(dirty, "doc_id", "text",
+      threshold = 0.5)) === ng)
+    // index: write → probePairs → append, null rows on both sides
+    val cleanDir = Files.createTempDirectory("graft-idx-null-ref").toString
+    val dir = Files.createTempDirectory("graft-idx-null").toString
+    DedupIndex.write(base, "doc_id", "text", cleanDir)
+    val corpusDirty = base.unionByName(nulls(3000000L))
+    val batchDirty = planted.unionByName(nulls(3000010L))
+    assert(DedupIndex.write(corpusDirty, "doc_id", "text", dir).docs === 60)
+    val want = pairs(DedupIndex.probePairs(planted, base, "doc_id", "text",
+      cleanDir, threshold = 0.5))
+    assert(want.size >= 10)
+    assert(pairs(DedupIndex.probePairs(batchDirty, corpusDirty, "doc_id",
+      "text", dir, threshold = 0.5)) === want)
+    assert(DedupIndex.append(batchDirty, "doc_id", "text", dir).docs === 70)
   }
 }

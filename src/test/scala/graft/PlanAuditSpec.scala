@@ -506,4 +506,96 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("BroadcastExchange"), s"L1 total not broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian blowup:\n$p")
   }
+
+  test("exact verify: the corpus text scan meets the candidate semi-join map-side (broadcast ids, no exchange)") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      ShuffledHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.functions._
+    import graft.ops.{DedupIndex, DedupOps}
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val corpus = docs.filter(col("doc_id") % 2 === 0)
+    val batch = docs.filter(col("doc_id") % 2 =!= 0)
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-verify")
+    DedupIndex.write(corpus, "doc_id", "text", dir.toString)
+    /** The physical plan before execution, exchanges included. */
+    def physical(df: DataFrame): SparkPlan =
+      df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    def textScan(p: SparkPlan): Boolean = p.collectFirst {
+      case s: FileSourceScanExec if s.output.exists(_.name == "text") => s
+    }.nonEmpty
+    // `none` keeps the whole lineage in the returned plan, so the text
+    // scan feeding the verify tail is visible
+    spark.conf.set("spark.graft.dedup.materialize", "none")
+    try for ((name, df) <- Seq(
+        "minhashPairs" -> DedupOps.minhashPairs(docs, "doc_id", "text",
+          threshold = 0.5),
+        "probePairs" -> DedupIndex.probePairs(batch, corpus, "doc_id",
+          "text", dir.toString, threshold = 0.5))) {
+      val p = physical(df)
+      val semis = p.collect {
+        case j: SortMergeJoinExec if j.joinType == LeftSemi => j
+        case j: ShuffledHashJoinExec if j.joinType == LeftSemi => j
+        case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
+      }
+      assert(semis.nonEmpty, s"$name: no semi-join in the plan:\n$p")
+      semis.foreach {
+        case j: BroadcastHashJoinExec =>
+          assert(j.buildSide.toString == "BuildRight" &&
+              j.right.output.map(_.name) == Seq("id"),
+            s"$name: semi-join build side is not the candidate ids:\n$j")
+          assert(textScan(j.left),
+            s"$name: the semi-join's stream side is not the text scan:\n$j")
+          assert(j.left.collectFirst { case e: Exchange => e }.isEmpty,
+            s"$name: the text scan crosses an exchange before the " +
+              s"candidate semi-join:\n$j")
+        case j => fail(s"$name: candidate semi-join is not a broadcast " +
+          s"hash join:\n$j")
+      }
+    } finally spark.conf.unset("spark.graft.dedup.materialize")
+  }
+
+  test("signature pass: the band-key UDF runs once per document, never inside a pushed filter") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.apache.spark.sql.functions._
+    import graft.ops.{DedupIndex, DedupOps}
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val corpus = docs.filter(col("doc_id") % 2 === 0)
+    val batch = docs.filter(col("doc_id") % 2 =!= 0)
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-sig")
+    DedupIndex.write(corpus, "doc_id", "text", dir.toString)
+    def bandUdf(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.exists {
+        case u: ScalaUDF => u.udfName.contains("graft_band_keys")
+        case _ => false
+      }
+    // `none` keeps the signature projection and the explode of its
+    // stored `bands` column in one plan: an optimizer-inferred
+    // generator filter pushed below that projection would call the
+    // UDF again from the filter
+    spark.conf.set("spark.graft.dedup.materialize", "none")
+    try for ((name, df) <- Seq(
+        "minhashPairs" -> DedupOps.minhashPairs(docs, "doc_id", "text",
+          threshold = 0.5),
+        "probeCandidates" -> DedupIndex.probeCandidates(batch, "doc_id",
+          "text", dir.toString))) {
+      val p = df.queryExecution.optimizedPlan
+      assert(p.exists(_.expressions.exists(bandUdf)),
+        s"$name: no band-key UDF in the plan:\n$p")
+      val filtered = p.collect {
+        case f: Filter if bandUdf(f.condition) => f.condition
+      }
+      assert(filtered.isEmpty,
+        s"$name: band-key UDF evaluated inside a filter: $filtered\n$p")
+    } finally spark.conf.unset("spark.graft.dedup.materialize")
+  }
 }

@@ -10,10 +10,19 @@ are read in order).
 
 Usage:
   python3 tools/evlog_stages.py LOG [minWallSec] [--prop KEY=VALUE ...]
+                                [--by stage|exec]
 
   --prop KEY=VALUE  keep only stages of jobs whose job properties hold
                     KEY=VALUE (repeatable; all must match), e.g.
                     --prop "perfbench.span=job:job 3"
+  --by exec         one row per SQL execution instead of per stage: jobs,
+                    tasks, task CPU and shuffle write, with the first
+                    graft./perfbench. frames of the execution's call site
+                    (SQLExecutionStart details; DedupOps.materialize's
+                    own frames are skipped). Stages that adaptive
+                    execution submits carry no library frame in their
+                    names, so only this grouping attributes them.
+                    minWallSec does not apply.
 
 `cpu_s` is executor CPU plus executor deserialize CPU — the task CPU
 perfbench's LayerListener counts.
@@ -27,6 +36,8 @@ ap.add_argument("min_wall", nargs="?", type=float, default=1.0,
                 help="hide stages shorter than this many seconds (1.0)")
 ap.add_argument("--prop", action="append", default=[],
                 metavar="KEY=VALUE", help="job-property filter")
+ap.add_argument("--by", choices=["stage", "exec"], default="stage",
+                help="group by stage (default) or by SQL execution")
 args = ap.parse_args()
 props = dict(p.split("=", 1) for p in args.prop)
 min_wall = args.min_wall
@@ -60,7 +71,13 @@ tasks = collections.defaultdict(lambda: dict(run=0, gc=0, n=0,
                                              shRead=0, shWrite=0,
                                              deser=0, resSer=0,
                                              cpu=0))
-jobs = []            # [jobId, submitted, completed, stageIds, kept]
+jobs = []            # [jobId, submitted, completed, stageIds, kept, exec]
+execs = {}           # executionId -> call site
+stage_exec = {}      # stageId -> executionId (from stage properties)
+LIB_FRAME = re.compile(r"^\s*(?:at\s+)?((?:graft|perfbench)\.\S+)")
+# DedupOps.materialize and its cache helper run the job of every frame
+# they pin; the call site is the frame that asked for it
+HELPER_FRAME = re.compile(r"DedupOps\$\.(?:materialize|cachePersist)")
 
 for line in lines(args.log):
     try:
@@ -73,6 +90,16 @@ for line in lines(args.log):
         stages[(si["Stage ID"], si["Stage Attempt ID"])] = dict(
             name=si["Stage Name"], sub=si.get("Submission Time", 0),
             done=None, ntask=si["Number of Tasks"])
+        sp = ev.get("Properties") or {}
+        if "spark.sql.execution.id" in sp:
+            stage_exec[si["Stage ID"]] = sp["spark.sql.execution.id"]
+    elif e.endswith("SparkListenerSQLExecutionStart"):
+        frames = [m.group(1) for m in map(LIB_FRAME.match,
+                                          (ev.get("details") or "")
+                                          .splitlines())
+                  if m and not HELPER_FRAME.search(m.group(1))]
+        execs[str(ev["executionId"])] = " < ".join(frames[:2]) or \
+            (ev.get("description") or "")[:60]
     elif e == "SparkListenerStageCompleted":
         si = ev["Stage Info"]
         key = (si["Stage ID"], si["Stage Attempt ID"])
@@ -103,7 +130,8 @@ for line in lines(args.log):
         jp = ev.get("Properties") or {}
         kept = all(jp.get(k) == v for k, v in props.items())
         jobs.append([ev["Job ID"], ev.get("Submission Time", 0), None,
-                     [s["Stage ID"] for s in ev["Stage Infos"]], kept])
+                     [s["Stage ID"] for s in ev["Stage Infos"]], kept,
+                     jp.get("spark.sql.execution.id")])
     elif e == "SparkListenerJobEnd":
         for j in jobs:
             if j[0] == ev["Job ID"]:
@@ -111,6 +139,39 @@ for line in lines(args.log):
 
 jobs = [j for j in jobs if j[4]]
 kept_stages = {s for j in jobs for s in j[3]}
+
+if args.by == "exec":
+    # a stage counts once, toward the execution that submitted it (a
+    # later job lists reused map stages again, as skipped)
+    first_job_exec = {}
+    for j in sorted(jobs):
+        for sid in j[3]:
+            first_job_exec.setdefault(sid, j[5])
+    groups = collections.defaultdict(lambda: dict(jobs=0, n=0, cpu=0.0,
+                                                  shWrite=0))
+    for j in jobs:
+        groups[j[5]]["jobs"] += 1
+    for key, st in stages.items():
+        if st["done"] is None or key[0] not in kept_stages:
+            continue
+        ex = stage_exec.get(key[0], first_job_exec.get(key[0]))
+        t = tasks.get(key, {})
+        g = groups[ex]
+        g["n"] += t.get("n", 0)
+        g["cpu"] += t.get("cpu", 0) / 1e3
+        g["shWrite"] += t.get("shWrite", 0)
+    where = " ".join(f"{k}={v}" for k, v in props.items())
+    print(f"SQL executions{' with ' + where if where else ''} "
+          f"(n {len(groups)}, jobs {sum(g['jobs'] for g in groups.values())}"
+          f", tasks {sum(g['n'] for g in groups.values())}, cpu "
+          f"{sum(g['cpu'] for g in groups.values()):.3f}s):")
+    print(f"{'exec':>6} {'jobs':>4} {'tasks':>5} {'cpu_s':>8} {'shW_mb':>7}"
+          "  call site")
+    for ex, g in sorted(groups.items(), key=lambda kv: -kv[1]["cpu"]):
+        site = execs.get(ex, "-") if ex is not None else "(no SQL execution)"
+        print(f"{ex if ex is not None else '-':>6} {g['jobs']:>4} "
+              f"{g['n']:>5} {g['cpu']:8.3f} {g['shWrite']/1e6:7.3f}  {site}")
+    raise SystemExit(0)
 
 rows = []
 for key, st in stages.items():
