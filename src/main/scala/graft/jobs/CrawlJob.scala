@@ -346,21 +346,11 @@ object CrawlJob {
       runId: String, seenTable: Dataset[Long], seenCount: Long,
       surviving: Dataset[ScheduledEntry])
       : Dataset[(ScheduledEntry, Boolean)] = {
-    val bloomRoot = java.nio.file.Paths.get(tableDir, "_bloom")
-    if (java.nio.file.Files.exists(bloomRoot)) {
-      // depth-first delete, tolerant of stray plain files and
-      // unexpected nesting (a crashed writer's tmp debris must not
-      // abort the next resumable run)
-      def deleteRec(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p)) {
-          val children = java.nio.file.Files.list(p)
-          try children.forEach(deleteRec) finally children.close()
-        }
-        java.nio.file.Files.deleteIfExists(p)
-      }
-      val listing = java.nio.file.Files.list(bloomRoot)
-      try listing.forEach(deleteRec) finally listing.close()
-    }
+    // depth-first, tolerant of stray plain files and unexpected
+    // nesting (a crashed writer's tmp debris must not abort the next
+    // resumable run)
+    graft.table.StateFiles.list(java.nio.file.Paths.get(tableDir, "_bloom"))
+      .foreach(graft.table.StateFiles.delete)
     val bloomDir = s"$tableDir/_bloom/$runId"
     // partition count scales with BOTH the cluster conf (probe
     // parallelism) and the key count (≤ ~100M keys ≈ 120 MiB filter
@@ -402,7 +392,7 @@ object CrawlJob {
     val C = graft.seen.CuckooSeen
     val dir = C.sketchDir(tableDir)
     if (seenCount == 0) {
-      C.dropDir(dir)
+      graft.table.StateFiles.delete(java.nio.file.Paths.get(dir))
       flagSeen(surviving, seenTable, None)
     } else {
       val currentDirs = graft.table.TableIO.currentSnapshot(tableDir)

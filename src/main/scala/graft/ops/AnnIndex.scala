@@ -1,9 +1,9 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.table.StateFiles
 
 /** Persisted IVF ANN index — similarity search over a GROWING
   * embedding corpus without re-clustering or re-scanning it.
@@ -26,38 +26,22 @@ import org.apache.spark.sql.functions._
   * heavy drift degrades recall, at which point [[build]] retrains (a
   * rebuild, amortized over the table's life like the cuckoo sketch's
   * occupancy rebuilds). Appends are runId-guarded for streaming
-  * replay idempotence. Scores are bit-identical to scoring the same
-  * frozen centroids in one pass — spec-pinned across appends. */
+  * replay idempotence ([[StateFiles.DeltaChain]]). Scores are
+  * bit-identical to scoring the same frozen centroids in one pass —
+  * spec-pinned across appends. */
 object AnnIndex {
 
   final case class Meta(dim: Int, nlist: Int, docs: Long,
-      deltas: Seq[String], runIds: Seq[String] = Nil) {
-    def committedRunIds: Set[String] =
-      if (runIds == null) Set.empty else runIds.toSet
+      deltas: Seq[String], runIds: Seq[String] = Nil)
+      extends StateFiles.ChainMeta[Meta] {
+    def withChain(docs: Long, deltas: Seq[String], runIds: Seq[String]) =
+      copy(docs = docs, deltas = deltas, runIds = runIds)
   }
 
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m.configure(com.fasterxml.jackson.databind.DeserializationFeature
-      .FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
-  }
+  private[graft] val chain = new StateFiles.DeltaChain[Meta](
+    "ann-meta.json", "cells/", "ANN index", "build()")
 
-  private def metaPath(dir: String) = Paths.get(dir, "ann-meta.json")
-
-  def readMeta(dir: String): Option[Meta] =
-    if (!Files.exists(metaPath(dir))) None
-    else Some(mapper.readValue(Files.readString(metaPath(dir)),
-      classOf[Meta]))
-
-  private def writeMeta(dir: String, m: Meta): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val tmp = metaPath(dir).resolveSibling("ann-meta.json.tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(m))
-    Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def readMeta(dir: String): Option[Meta] = chain.read(dir)
 
   /** The frozen quantizer, ordered by cell index. */
   def readCentroids(spark: SparkSession, dir: String)
@@ -81,13 +65,13 @@ object AnnIndex {
       centroids: Array[Array[Double]]): Meta = {
     val spark = candidates.sparkSession
     import spark.implicits._
-    DedupIndex.dropDir(dir)
+    chain.drop(dir)
     spark.createDataset(centroids.toIndexedSeq.zipWithIndex
         .map { case (c, i) => (i, c.toSeq) })
       .toDF("cl", "c")
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
-    writeMeta(dir, Meta(centroids(0).length, centroids.length, 0L, Nil))
+    chain.write(dir, Meta(centroids(0).length, centroids.length, 0L, Nil))
     append(candidates, dir)
   }
 
@@ -95,35 +79,40 @@ object AnnIndex {
     * vectors as a new cell-partitioned delta — O(batch), no retrain.
     * Non-empty `runId` = idempotent streaming replay guard. */
   def append(vectors: DataFrame, dir: String,
-      runId: String = ""): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no ANN index at $dir — call build() first"))
-    if (runId.nonEmpty && m.committedRunIds.contains(runId)) return m
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val centroids = readCentroids(spark, dir)
-    val delta = f"cells/v${DedupIndex.nextVersion(m.deltas)}%05d"
-    val n = vectors.count()
-    vectors
-      .withColumn("cl", AnnOps.assignCell(vectors, "cv", centroids))
-      .withColumn("cnorm",
-        graft.functions.VecExpressions.vec_norm($"cv"))
+      runId: String = ""): Meta =
+    chain.append(dir, chain.current(dir), runId) { delta =>
+      val centroids = readCentroids(vectors.sparkSession, dir)
+      writeCells(vectors.withColumn("cl",
+          AnnOps.assignCell(vectors, "cv", centroids))
+        .withColumn("cnorm", graft.functions.VecExpressions.vec_norm(
+          col("cv"))), dir, delta)
+    }
+
+  /** Land one cell-partitioned delta; returns its rows (one per vector),
+    * counted by the write itself. */
+  private def writeCells(rows: DataFrame, dir: String,
+      delta: String): Long = {
+    val n = new Observation()
+    rows.observe(n, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite).partitionBy("cl")
       .parquet(s"$dir/$delta")
-    val next = m.copy(docs = m.docs + n, deltas = m.deltas :+ delta,
-      runIds =
-        if (runId.isEmpty) m.runIds
-        else (if (m.runIds == null) Nil else m.runIds) :+ runId)
-    writeMeta(dir, next)
-    next
+    n.get("n").asInstanceOf[Long]
   }
+
+  /** The live cell rows: one scan per delta, each with its own basePath
+    * so the cl partition column survives. */
+  private def readCells(spark: SparkSession, dir: String,
+      m: Meta): DataFrame =
+    m.deltas
+      .map(d => spark.read.option("basePath", s"$dir/$d")
+        .parquet(s"$dir/$d"))
+      .reduce(_.unionByName(_))
 
   /** Compact the cell-partitioned delta chain into ONE dir; the
     * frozen centroids (and thus every assignment) are untouched, so
     * probe results are bit-identical. runIds survive. */
   def compact(dir: String): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no ANN index at $dir"))
+    val m = chain.current(dir)
     if (m.deltas.size <= 1) m else rewrite(dir, m, identity)
   }
 
@@ -131,40 +120,16 @@ object AnnIndex {
     * document's embedding must stop surfacing as a neighbor).
     * O(index) rewrite preserving the cell partitioning. */
   def deleteIds(ids: DataFrame, dir: String): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no ANN index at $dir"))
-    if (m.deltas.isEmpty) m
-    else {
-      val del = ids.toDF("del_id")
-      rewrite(dir, m,
-        _.join(del, col("cid") === col("del_id"), "left_anti"))
-    }
+    val del = ids.toDF("del_id")
+    rewrite(dir, chain.current(dir),
+      _.join(del, col("cid") === col("del_id"), "left_anti"))
   }
 
   private def rewrite(dir: String, m: Meta,
-      f: DataFrame => DataFrame): Meta = {
-    val spark = SparkSession.active
-    val all = m.deltas
-      .map(d => spark.read.option("basePath", s"$dir/$d")
-        .parquet(s"$dir/$d"))
-      .reduce(_.unionByName(_))
-    val rows = f(all)
-    if (rows.isEmpty) {
-      val next = m.copy(docs = 0L, deltas = Nil)
-      writeMeta(dir, next)
-      m.deltas.foreach(d => DedupIndex.dropDir(s"$dir/$d"))
-      return next
+      f: DataFrame => DataFrame): Meta =
+    chain.rewrite(dir, m) { delta =>
+      writeCells(f(readCells(SparkSession.active, dir, m)), dir, delta)
     }
-    val delta = f"cells/v${DedupIndex.nextVersion(m.deltas)}%05d"
-    rows.write.mode(SaveMode.Overwrite).partitionBy("cl")
-      .parquet(s"$dir/$delta")
-    val docs = spark.read.option("basePath", s"$dir/$delta")
-      .parquet(s"$dir/$delta").count()
-    val next = m.copy(docs = docs, deltas = Seq(delta))
-    writeMeta(dir, next)
-    m.deltas.foreach(d => DedupIndex.dropDir(s"$dir/$d"))
-    next
-  }
 
   /** IVF top-k over the persisted index: queries ((qid, qv)) assign
     * to their nProbe nearest cells against the frozen centroids, and
@@ -175,8 +140,7 @@ object AnnIndex {
     * [[AnnOps.ivfTopK]]. */
   def topK(queries: DataFrame, dir: String, k: Int,
       nProbe: Int = 4): DataFrame = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no ANN index at $dir"))
+    val m = chain.current(dir)
     val spark = queries.sparkSession
     // an emptied index (deleteIds removed every vector → deltas=Nil)
     // has no neighbors to return: an empty frame in the result shape,
@@ -190,14 +154,10 @@ object AnnIndex {
       AnnOps.probedQueries(queries, centroids, nProbe))
     val cells = qs.select("cl").distinct().collect()
       .map(r => Int.box(r.getInt(0))).toSeq
-    // one scan per delta, each with its own basePath so the cl
-    // partition column survives; the static isin prunes each scan to
-    // the probed cells' directories
-    val index = m.deltas
-      .map(d => spark.read.option("basePath", s"$dir/$d")
-        .parquet(s"$dir/$d"))
-      .reduce(_.unionByName(_))
-    AnnOps.topKByCell(qs, index.filter(col("cl").isin(cells: _*)), k)
+    // the static isin prunes each delta's scan to the probed cells'
+    // directories
+    AnnOps.topKByCell(qs,
+      readCells(spark, dir, m).filter(col("cl").isin(cells: _*)), k)
   }
 
   /** Incremental SemDeDup probe — the semantic complement of
@@ -220,8 +180,7 @@ object AnnIndex {
     * decides when to [[append]] the batch (runId-guarded). */
   def probePairs(batch: DataFrame, dir: String,
       threshold: Double = 0.95): DataFrame = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no ANN index at $dir"))
+    val m = chain.current(dir)
     val spark = batch.sparkSession
     import spark.implicits._
     val centroids = readCentroids(spark, dir)
@@ -244,11 +203,7 @@ object AnnIndex {
     if (m.deltas.isEmpty) return within
     val cells = b.select("cl").distinct().collect()
       .map(r => Int.box(r.getInt(0))).toSeq
-    val idx = m.deltas
-      .map(d => spark.read.option("basePath", s"$dir/$d")
-        .parquet(s"$dir/$d"))
-      .reduce(_.unionByName(_))
-      .filter(col("cl").isin(cells: _*))
+    val idx = readCells(spark, dir, m).filter(col("cl").isin(cells: _*))
     // cross pairs: orientation by id (cosine is symmetric — dot and
     // norm products commute bit-exactly, so flipping sides never
     // changes the rounded score)

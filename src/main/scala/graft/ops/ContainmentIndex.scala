@@ -1,9 +1,9 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
+
+import graft.table.StateFiles
 
 /** Persisted containment index — INCREMENTAL exact containment
   * dedup ([[DedupOps.containmentPairs]]) for a growing corpus, the
@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *      cross-multiplied containment verdict against persisted
   *      corpus sizes + batch sizes,
   *   4. appends its postings + sizes as a new delta, runId-guarded
-  *      for streaming replay idempotence.
+  *      for streaming replay idempotence ([[StateFiles.DeltaChain]]).
   *
   * FROZEN-universe semantics (the [[AnnIndex]] frozen-quantizer
   * precedent): the stop-gram set is fixed at [[build]] time, so an
@@ -46,33 +46,16 @@ object ContainmentIndex {
 
   final case class Meta(n: Int, freqCap: Long, pct: Int, minSize: Long,
       docs: Long, deltas: Seq[String], runIds: Seq[String] = Nil,
-      stopsVer: Int = 1) {
-    def committedRunIds: Set[String] =
-      if (runIds == null) Set.empty else runIds.toSet
+      stopsVer: Int = 1) extends StateFiles.ChainMeta[Meta] {
+    def withChain(docs: Long, deltas: Seq[String], runIds: Seq[String]) =
+      copy(docs = docs, deltas = deltas, runIds = runIds)
   }
 
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m.configure(com.fasterxml.jackson.databind.DeserializationFeature
-      .FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
-  }
+  private[graft] val chain = new StateFiles.DeltaChain[Meta](
+    "cont-meta.json", "", "containment index", "init()/build()",
+    d => Seq(s"grams/$d", s"sizes/$d"))
 
-  private def metaPath(dir: String) = Paths.get(dir, "cont-meta.json")
-
-  def readMeta(dir: String): Option[Meta] =
-    if (!Files.exists(metaPath(dir))) None
-    else Some(mapper.readValue(Files.readString(metaPath(dir)),
-      classOf[Meta]))
-
-  private def writeMeta(dir: String, m: Meta): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val tmp = metaPath(dir).resolveSibling("cont-meta.json.tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(m))
-    Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def readMeta(dir: String): Option[Meta] = chain.read(dir)
 
   private def gramsOf(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
@@ -85,14 +68,17 @@ object ContainmentIndex {
   // stops-v{N+1}, commits it via the atomic meta swap, THEN drops the
   // old dir — no crash window ever leaves the index without a
   // readable stop set
-  private def stopsPath(dir: String, ver: Int) = s"$dir/stops-v$ver"
+  private def stopsDir(ver: Int) = s"stops-v$ver"
+  private def stopsPath(dir: String, ver: Int) = s"$dir/${stopsDir(ver)}"
   private def gramsPath(dir: String, d: String) = s"$dir/grams/$d"
   private def sizesPath(dir: String, d: String) = s"$dir/sizes/$d"
 
   /** One delta's physical layout, shared by append and rewrite so the
     * two write sites can never drift: g-partitioned sorted postings +
     * id-partitioned sizes (each O(corpus) at scale — never a
-    * single-task write). Returns the count of docs WITH postings. */
+    * single-task write). Returns the count of docs WITH postings —
+    * the sizes rows, counted by their own write (observed above the
+    * exchange, in the writing stage). */
   private def writeDelta(kept: DataFrame, dir: String,
       v: String): Long = {
     val spark = kept.sparkSession
@@ -100,10 +86,12 @@ object ContainmentIndex {
       spark.sessionState.conf.numShufflePartitions / 4)
     kept.repartition(parts, col("g")).sortWithinPartitions("g")
       .write.mode(SaveMode.Overwrite).parquet(gramsPath(dir, v))
+    val docs = new Observation()
     kept.groupBy(col("id")).agg(count(lit(1)).as("sz"))
       .repartition(parts, col("id"))
+      .observe(docs, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite).parquet(sizesPath(dir, v))
-    kept.select(col("id")).distinct().count()
+    docs.get("n").asInstanceOf[Long]
   }
 
   /** Initialize an EMPTY index (streaming-start mode): the stop set
@@ -116,12 +104,12 @@ object ContainmentIndex {
       minSize: Long = 4): Meta = {
     require(n >= 1 && freqCap >= 2 && pct >= 1 && pct <= 100 &&
       minSize >= 1)
-    DedupIndex.dropDir(dir)
+    chain.drop(dir)
     val spark = org.apache.spark.sql.SparkSession.active
     spark.range(0).select(col("id").as("g"))
       .write.mode(SaveMode.Overwrite).parquet(stopsPath(dir, 1))
     val m = Meta(n, freqCap, pct, minSize, 0L, Nil)
-    writeMeta(dir, m)
+    chain.write(dir, m)
     m
   }
 
@@ -134,49 +122,40 @@ object ContainmentIndex {
       minSize: Long = 4): Meta = {
     require(n >= 1 && freqCap >= 2 && pct >= 1 && pct <= 100 &&
       minSize >= 1)
-    DedupIndex.dropDir(dir)
+    chain.drop(dir)
     val grams = DedupOps.materialize(gramsOf(docs, idCol, textCol, n))
     grams.groupBy(col("g")).agg(count(lit(1)).as("dfreq"))
       .filter(col("dfreq") > freqCap)
       .select(col("g"))
       .write.mode(SaveMode.Overwrite).parquet(stopsPath(dir, 1))
     val m = Meta(n, freqCap, pct, minSize, 0L, Nil)
-    writeMeta(dir, m)
+    chain.write(dir, m)
     appendGrams(grams, dir, m, runId = "")
   }
 
   /** Append one batch's postings + sizes as a new delta (batch grams
     * minus the FROZEN stop set). Non-empty `runId` = idempotent
-    * streaming replay guard (same contract as [[DedupIndex.append]]).
-    */
+    * streaming replay guard ([[StateFiles.DeltaChain]]). */
   def append(batch: DataFrame, idCol: String, textCol: String,
       dir: String, runId: String = ""): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no containment index at $dir — call build() first"))
-    if (runId.nonEmpty && m.committedRunIds.contains(runId)) return m
-    appendGrams(
+    val m = chain.current(dir)
+    if (chain.committed(m, runId)) m
+    else appendGrams(
       DedupOps.materialize(gramsOf(batch, idCol, textCol, m.n)),
       dir, m, runId)
   }
 
+  // docs counts documents WITH postings (a doc whose every gram is
+  // stopped contributes none) — the same rule rewrite() uses, so a
+  // no-op compact never changes the count
   private def appendGrams(grams: DataFrame, dir: String, m: Meta,
-      runId: String): Meta = {
-    val spark = grams.sparkSession
-    val stops = spark.read.parquet(stopsPath(dir, m.stopsVer))
-    val kept = DedupOps.materialize(
-      grams.join(stops, Seq("g"), "left_anti"))
-    val v = f"v${DedupIndex.nextVersion(m.deltas)}%05d"
-    // docs counts documents WITH postings (a doc whose every gram is
-    // stopped contributes none) — the same rule rewrite() uses, so a
-    // no-op compact never changes the count
-    val nDocs = writeDelta(kept, dir, v)
-    val next = m.copy(docs = m.docs + nDocs, deltas = m.deltas :+ v,
-      runIds =
-        if (runId.isEmpty) m.runIds
-        else (if (m.runIds == null) Nil else m.runIds) :+ runId)
-    writeMeta(dir, next)
-    next
-  }
+      runId: String): Meta =
+    chain.append(dir, m, runId) { v =>
+      val stops = grams.sparkSession.read
+        .parquet(stopsPath(dir, m.stopsVer))
+      writeDelta(DedupOps.materialize(
+        grams.join(stops, Seq("g"), "left_anti")), dir, v)
+    }
 
   /** Containment pairs a NEW batch introduces: (batch ↔ indexed)
     * cross pairs plus within-batch pairs, under the index's frozen
@@ -201,8 +180,7 @@ object ContainmentIndex {
   def probePairs(batch: DataFrame, idCol: String, textCol: String,
       dir: String, maxBroadcastRows: Long = 4000000L,
       dfGuard: Boolean = false): DataFrame = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no containment index at $dir"))
+    val m = chain.current(dir)
     val spark = batch.sparkSession
     import spark.implicits._
     val stops = spark.read.parquet(stopsPath(dir, m.stopsVer))
@@ -304,43 +282,30 @@ object ContainmentIndex {
   }
 
   private def rewrite(dir: String, f: DataFrame => DataFrame): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no containment index at $dir"))
-    val spark = org.apache.spark.sql.SparkSession.active
-    if (m.deltas.isEmpty) return m
-    // postings hold every kept gram occurrence, so df re-derives from
-    // them alone — no text is ever re-shingled here. Old stop grams
-    // are already absent; they stay stopped only if re-counted over
-    // the surviving rows... they cannot be re-counted (their rows were
-    // never stored), so the frozen stop set persists ACROSS compacts
-    // by design: un-stopping a gram would need its postings back,
-    // which only a rebuild from text can provide (documented
-    // one-way ratchet, same shape as AnnIndex's frozen quantizer).
-    val rows = DedupOps.materialize(f(spark.read
-      .parquet(m.deltas.map(d => gramsPath(dir, d)): _*)))
-    val newStops = rows.groupBy(col("g"))
-      .agg(count(lit(1)).as("dfreq"))
-      .filter(col("dfreq") > m.freqCap).select(col("g"))
-    val oldStops = spark.read.parquet(stopsPath(dir, m.stopsVer))
-    val stops = DedupOps.materialize(
-      oldStops.unionByName(newStops).distinct())
-    val kept = DedupOps.materialize(
-      rows.join(stops, Seq("g"), "left_anti"))
-    val v = f"v${DedupIndex.nextVersion(m.deltas)}%05d"
-    val docs = writeDelta(kept, dir, v)
-    // write the NEW stops dir first, commit both via the atomic meta
-    // swap, THEN drop the old artifacts — a crash anywhere leaves the
-    // meta pointing at a complete, readable index state
+    val m = chain.current(dir)
     val nextVer = m.stopsVer + 1
-    stops.write.mode(SaveMode.Overwrite)
-      .parquet(stopsPath(dir, nextVer))
-    val next = m.copy(docs = docs, deltas = Seq(v), stopsVer = nextVer)
-    writeMeta(dir, next)
-    DedupIndex.dropDir(stopsPath(dir, m.stopsVer))
-    m.deltas.foreach { d =>
-      DedupIndex.dropDir(gramsPath(dir, d))
-      DedupIndex.dropDir(sizesPath(dir, d))
+    chain.rewrite(dir, m, _.copy(stopsVer = nextVer),
+        superseded = Seq(stopsDir(m.stopsVer))) { v =>
+      val spark = org.apache.spark.sql.SparkSession.active
+      // postings hold every kept gram occurrence, so df re-derives from
+      // them alone — no text is ever re-shingled here. Stopped grams
+      // have no stored rows to re-count, so the frozen stop set persists
+      // ACROSS rewrites: un-stopping a gram would need its postings
+      // back, which only a rebuild from text can provide (documented
+      // one-way ratchet, same shape as AnnIndex's frozen quantizer).
+      val rows = DedupOps.materialize(f(spark.read
+        .parquet(m.deltas.map(d => gramsPath(dir, d)): _*)))
+      val newStops = rows.groupBy(col("g"))
+        .agg(count(lit(1)).as("dfreq"))
+        .filter(col("dfreq") > m.freqCap).select(col("g"))
+      val oldStops = spark.read.parquet(stopsPath(dir, m.stopsVer))
+      val stops = DedupOps.materialize(
+        oldStops.unionByName(newStops).distinct())
+      val docs = writeDelta(DedupOps.materialize(
+        rows.join(stops, Seq("g"), "left_anti")), dir, v)
+      stops.write.mode(SaveMode.Overwrite)
+        .parquet(stopsPath(dir, nextVer))
+      docs
     }
-    next
   }
 }

@@ -1,9 +1,9 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
+
+import graft.table.StateFiles
 
 /** Persisted MinHash-LSH signature index — INCREMENTAL near-duplicate
   * detection for a growing corpus.
@@ -32,8 +32,8 @@ import org.apache.spark.sql.functions._
   *   3. exact-verifies candidates through the same measured verify
   *      tail as the batch dataflow ([[DedupOps.exactVerifyPairs]]),
   *   4. appends its signatures as a new delta dir, so the next batch
-  *      sees this one — append-only deltas with an atomically-swapped
-  *      meta file, the [[graft.table.TableIO]] commit pattern.
+  *      sees this one — the append-only delta chain with an
+  *      atomically-swapped meta file of [[StateFiles.DeltaChain]].
   *
   * Determinism: signatures are one-permutation MinHash with optimal
   * densification ([[DedupOps.minhash]]: one splitmix64 mix per
@@ -73,62 +73,25 @@ object DedupIndex {
     * deserialize with null. */
   final case class IndexMeta(kind: String, k: Int, numHashes: Int,
       bands: Int, docs: Long, deltas: Seq[String], scheme: String,
-      runIds: Seq[String] = Nil) {
-    def committedRunIds: Set[String] =
-      if (runIds == null) Set.empty else runIds.toSet
-  }
-
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m.configure(com.fasterxml.jackson.databind.DeserializationFeature
-      .FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
+      runIds: Seq[String] = Nil) extends StateFiles.ChainMeta[IndexMeta] {
+    def withChain(docs: Long, deltas: Seq[String], runIds: Seq[String]) =
+      copy(docs = docs, deltas = deltas, runIds = runIds)
   }
 
   /** Stamp of the signature scheme this build computes: one-permutation
     * MinHash with optimal densification, banded by splitmix folds. */
   val SigScheme = "oph-densified-v1"
 
-  private def metaPath(dir: String) = Paths.get(dir, "index-meta.json")
+  private[graft] val chain = new StateFiles.DeltaChain[IndexMeta](
+    "index-meta.json", "sig/", "index", "write()")
 
-  def readMeta(dir: String): Option[IndexMeta] =
-    if (!Files.exists(metaPath(dir))) None
-    else Some(mapper.readValue(Files.readString(metaPath(dir)),
-      classOf[IndexMeta]))
-
-  private def writeMeta(dir: String, m: IndexMeta): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val tmp = metaPath(dir).resolveSibling("index-meta.json.tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(m))
-    Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  def dropDir(dir: String): Unit = {
-    def rec(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val ls = Files.list(p)
-        try ls.forEach(rec) finally ls.close()
-      }
-      Files.deleteIfExists(p)
-    }
-    if (Files.exists(Paths.get(dir))) rec(Paths.get(dir))
-  }
-
-  /** Next delta version: max over LIVE dirs + 1, never deltas.size+1 —
-    * after a compaction ([v00005] with size 1) size-based naming would
-    * eventually Overwrite the live dir. */
-  private[graft] def nextVersion(deltas: Seq[String]): Int =
-    deltas.map(d => d.substring(d.lastIndexOf('v') + 1).toInt)
-      .foldLeft(0)(math.max) + 1
+  def readMeta(dir: String): Option[IndexMeta] = chain.read(dir)
 
   /** The meta at `dir`, which must exist and carry [[SigScheme]]: an
     * index of another scheme must be rebuilt — probing or extending it
     * would mix band keys that never collide across schemes. */
   private def currentMeta(dir: String): IndexMeta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir — call write() first"))
+    val m = chain.current(dir)
     if (m.scheme != SigScheme) throw new IllegalStateException(
       s"index at $dir has signature scheme " +
         s"${Option(m.scheme).getOrElse("(unstamped)")}, this build " +
@@ -169,9 +132,9 @@ object DedupIndex {
   def init(dir: String, kind: String = "char", k: Int = 5,
       numHashes: Int = 64, bands: Int = 16): IndexMeta = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    dropDir(dir)
+    chain.drop(dir)
     val m = IndexMeta(kind, k, numHashes, bands, 0L, Nil, SigScheme)
-    writeMeta(dir, m)
+    chain.write(dir, m)
     m
   }
 
@@ -190,55 +153,53 @@ object DedupIndex {
     * stats stay tight (the shuffle-join fallback's runtime bloom
     * filter prunes row groups against them).
     *
-    * A non-empty `runId` makes the append IDEMPOTENT: a runId already
-    * recorded returns the current meta without writing (the streaming
-    * replay guard — foreachBatch is at-least-once, and a re-appended
-    * batch would self-pair on every future probe). The meta swap is
-    * atomic and happens AFTER the delta lands, so a crash between
-    * write and swap leaves an orphan delta dir that is simply
-    * rewritten on replay (Overwrite mode), never double-referenced. */
+    * A non-empty `runId` makes the append IDEMPOTENT, and a crash
+    * before the meta swap leaves only an orphan delta the replay
+    * rewrites ([[StateFiles.DeltaChain]]). */
   def append(docs: DataFrame, idCol: String, textCol: String,
       dir: String, runId: String = ""): IndexMeta = {
     val m = currentMeta(dir)
-    if (runId.nonEmpty && m.committedRunIds.contains(runId)) return m
-    val spark = docs.sparkSession
-    val delta = f"sig/v${nextVersion(m.deltas)}%05d"
-    val n = docs.count()
-    // partition count scales with batch size (~4M sig rows each, a
-    // few tens of MB of parquet) and never below the session's
-    // parallelism floor for small batches
-    val parts = math.max(
-      math.max(1, spark.sessionState.conf.numShufflePartitions / 4),
-      math.ceil(n.toDouble * m.bands / 4e6).toInt)
-    // indexed docs = written signature rows / bands (every indexed doc
-    // has `bands` keys; null texts have none), counted by the write
-    // itself: a filtered count would read the batch's text column
-    // once more. Observed in the writing stage (see `rewrite`).
+    chain.append(dir, m, runId) { delta =>
+      val spark = docs.sparkSession
+      val n = docs.count()
+      // partition count scales with batch size (~4M sig rows each, a
+      // few tens of MB of parquet) and never below the session's
+      // parallelism floor for small batches
+      val parts = math.max(
+        math.max(1, spark.sessionState.conf.numShufflePartitions / 4),
+        math.ceil(n.toDouble * m.bands / 4e6).toInt)
+      // exploded in the UDF's own projection: a generator over a
+      // projected column makes the optimizer infer `isnotnull`/`size > 0`
+      // filters on it, pushed below the projection as two more UDF calls
+      writeSigs(docs.filter(col(textCol).isNotNull)
+        .select(col(idCol).as("id"),
+          explode(bandKeys(textCol, m)).as("bandHash")),
+        parts, dir, delta, m)
+    }
+  }
+
+  /** Land one signature delta, repartitioned + sorted by bandHash, and
+    * return the docs it indexes: written rows / bands (every indexed
+    * doc has `bands` keys; null texts have none), counted by the write
+    * itself — a filtered count would read the batch's text column once
+    * more. The counter sits above the exchange, in the writing stage:
+    * adaptive execution replaces an empty shuffle stage (and any
+    * counter inside it) by an empty relation, so a counter below the
+    * exchange would report nothing for exactly the empty case. */
+  private def writeSigs(sigs: DataFrame, parts: Int, dir: String,
+      delta: String, m: IndexMeta): Long = {
     val rows = new Observation()
-    // exploded in the UDF's own projection: a generator over a
-    // projected column makes the optimizer infer `isnotnull`/`size > 0`
-    // filters on it, pushed below the projection as two more UDF calls
-    docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        explode(bandKeys(textCol, m)).as("bandHash"))
-      .repartition(parts, col("bandHash"))
+    sigs.repartition(parts, col("bandHash"))
       .sortWithinPartitions("bandHash")
       .observe(rows, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
-    val indexed = rows.get("n").asInstanceOf[Long] / m.bands
-    val next = m.copy(docs = m.docs + indexed, deltas = m.deltas :+ delta,
-      runIds =
-        if (runId.isEmpty) m.runIds
-        else (if (m.runIds == null) Nil else m.runIds) :+ runId)
-    writeMeta(dir, next)
-    next
+    rows.get("n").asInstanceOf[Long] / m.bands
   }
 
   /** Read the full signature index (union of delta dirs). */
   def readIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir"))
+    val m = chain.current(dir)
     if (m.deltas.isEmpty)
       spark.createDataFrame(spark.sparkContext
           .emptyRDD[org.apache.spark.sql.Row],
@@ -254,7 +215,7 @@ object DedupIndex {
     * time travel). */
   def compact(dir: String): IndexMeta = {
     val m = currentMeta(dir)
-    if (m.deltas.size <= 1) m else rewrite(dir, m, identity, recount = false)
+    if (m.deltas.size <= 1) m else rewrite(dir, m, identity)
   }
 
   /** Remove documents from the index (the revised-corpus workflow:
@@ -266,49 +227,21 @@ object DedupIndex {
     * corpus rewrite — and recounts the indexed docs. Compacts as a
     * side effect. */
   def deleteIds(ids: DataFrame, dir: String): IndexMeta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir"))
-    if (m.deltas.isEmpty) m
-    else {
-      val del = ids.toDF("del_id")
-      rewrite(dir, m,
-        _.join(del, col("id") === col("del_id"), "left_anti"),
-        recount = true)
-    }
+    val del = ids.toDF("del_id")
+    rewrite(dir, chain.current(dir),
+      _.join(del, col("id") === col("del_id"), "left_anti"))
   }
 
-  /** Shared rewrite: read all deltas, transform, land ONE new delta,
-    * swap meta, reap superseded dirs. The write counts its own rows
-    * (an `Observation`), so emptiness costs no extra job: an emptied
-    * index references NO delta and keeps no `sig/` dir (a schema-less
-    * empty parquet dir would poison the next read). `recount` recounts
-    * the docs from the new delta; otherwise `m.docs` carries over. */
+  /** [[StateFiles.DeltaChain.rewrite]] of the signature rows through
+    * `f` into one delta. */
   private def rewrite(dir: String, m: IndexMeta,
-      f: DataFrame => DataFrame, recount: Boolean): IndexMeta = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val delta = f"sig/v${nextVersion(m.deltas)}%05d"
-    val parts = math.max(1,
-      spark.sessionState.conf.numShufflePartitions / 4)
-    // observed above the exchange, in the writing stage: adaptive
-    // execution replaces an empty shuffle stage (and any counter inside
-    // it) by an empty relation, so a counter below the exchange would
-    // report nothing for exactly the empty case
-    val rows = new Observation()
-    f(readIndex(spark, dir))
-      .repartition(parts, col("bandHash"))
-      .sortWithinPartitions("bandHash")
-      .observe(rows, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
-    val next =
-      if (rows.get("n") == 0L) m.copy(docs = 0L, deltas = Nil)
-      else if (!recount) m.copy(deltas = Seq(delta))
-      else m.copy(deltas = Seq(delta), docs = spark.read
-        .parquet(s"$dir/$delta").select("id").distinct().count())
-    writeMeta(dir, next)
-    if (next.deltas.isEmpty) dropDir(s"$dir/sig")
-    else m.deltas.foreach(d => dropDir(s"$dir/$d"))
-    next
-  }
+      f: DataFrame => DataFrame): IndexMeta =
+    chain.rewrite(dir, m) { delta =>
+      val spark = org.apache.spark.sql.SparkSession.active
+      writeSigs(f(readIndex(spark, dir)),
+        math.max(1, spark.sessionState.conf.numShufflePartitions / 4),
+        dir, delta, m)
+    }
 
   /** Near-dup pairs a NEW batch introduces: (batch ↔ indexed corpus)
     * cross pairs plus within-batch pairs, exact-verified at

@@ -11,27 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Lazy lineage truncation for deep fixed points: every
-    * `truncateEvery` iterations the score frame's LOGICAL plan is cut
-    * to a LogicalRDD leaf (localCheckpoint; `reliable` materialize
-    * mode checkpoints to the configured dir instead, surviving block
-    * loss) — without it a 50-iteration production run re-analyzes an
-    * O(iters)-deep Catalyst tree on every rule pass. Values are
-    * untouched (truncation changes the plan, never the data), so
-    * `truncateEvery = 0` (off, the oracle default) and any positive
-    * setting are bit-identical; truncated intermediates' blocks stay
-    * pinned until the job's action completes (bounded: O(nodes) rows
-    * per truncation point). */
-  private def maybeTruncate(df: DataFrame, iter: Int, iters: Int,
-      truncateEvery: Int): DataFrame =
-    if (truncateEvery > 0 && iter % truncateEvery == 0 && iter < iters)
-      df.sparkSession.conf
-        .get("spark.graft.dedup.materialize", "auto") match {
-        case "reliable" => df.checkpoint(eager = false)
-        case _ => df.localCheckpoint(eager = false)
-      }
-    else df
-
   /** Shared (src, dst, outdeg) edge projection, materialized once —
     * every fixed point here reads the edge table `iters` times, so
     * the outdeg join must not re-derive per iteration. */
@@ -68,7 +47,7 @@ object GraphOps {
     * (id, pr) with `pr` in micro-units of `scale`. */
   def pageRankFixedPoint(nodes: DataFrame, edges: DataFrame, iters: Int,
       nNodes: Long, dampingPct: Int = 85,
-      scale: Long = 1000000000000L, truncateEvery: Int = 0): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && nNodes >= 1 && dampingPct >= 0 && dampingPct <= 100)
     val e = withOutdeg(edges)
     val base = math.floor(
@@ -83,12 +62,10 @@ object GraphOps {
           floor(col("pr") * lit(dampingPct.toDouble) /
             (lit(100.0) * col("outdeg"))).cast("long").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      pr = maybeTruncate(
-        nodes.select(col("id"))
-          .join(contrib, col("id") === col("dst"), "left")
-          .select(col("id"),
-            (lit(base) + coalesce(col("inflow"), lit(0L))).as("pr")),
-        it, iters, truncateEvery)
+      pr = nodes.select(col("id"))
+        .join(contrib, col("id") === col("dst"), "left")
+        .select(col("id"),
+          (lit(base) + coalesce(col("inflow"), lit(0L))).as("pr"))
     }
     pr
   }
@@ -118,7 +95,7 @@ object GraphOps {
     * must equal its distinct count). Returns (id, trust_u). */
   def trustRankFixedPoint(nodes: DataFrame, edges: DataFrame,
       seeds: DataFrame, iters: Int, nSeeds: Long, dampingPct: Int = 85,
-      scale: Long = 1000000000000L, truncateEvery: Int = 0): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && nSeeds >= 1 && dampingPct >= 0 && dampingPct <= 100)
     val e = withOutdeg(edges)
     val sd = seeds.select(col("id")).distinct()
@@ -139,12 +116,11 @@ object GraphOps {
           floor(col("trust_u") * lit(dampingPct.toDouble) /
             (lit(100.0) * col("outdeg"))).cast("long").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      tr = maybeTruncate(marked
+      tr = marked
         .join(contrib, col("id") === col("dst"), "left")
         .select(col("id"), col("is_seed"),
           (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
-            coalesce(col("inflow"), lit(0L))).as("trust_u")),
-        it, iters, truncateEvery)
+            coalesce(col("inflow"), lit(0L))).as("trust_u"))
     }
     tr.select(col("id"), col("trust_u"))
   }
@@ -172,8 +148,7 @@ object GraphOps {
     * bit-identical to composing them. */
   def spamMass(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
       iters: Int, nNodes: Long, nSeeds: Long, dampingPct: Int = 85,
-      scale: Long = 1000000000000L, spamPct: Int = 90,
-      truncateEvery: Int = 0): DataFrame = {
+      scale: Long = 1000000000000L, spamPct: Int = 90): DataFrame = {
     require(spamPct >= 1 && spamPct <= 100)
     require(iters >= 1 && nNodes >= 1 && nSeeds >= 1 &&
       dampingPct >= 0 && dampingPct <= 100)
@@ -203,13 +178,12 @@ object GraphOps {
             (lit(100.0) * col("outdeg"))).cast("long").as("ct"))
         .groupBy(col("dst"))
         .agg(sum(col("cp")).as("ip"), sum(col("ct")).as("it"))
-      v = maybeTruncate(marked
+      v = marked
         .join(contrib, col("id") === col("dst"), "left")
         .select(col("id"), col("is_seed"),
           (lit(prBase) + coalesce(col("ip"), lit(0L))).as("pr"),
           (when(col("is_seed"), lit(trBase)).otherwise(lit(0L)) +
-            coalesce(col("it"), lit(0L))).as("trust_u")),
-        iter, iters, truncateEvery)
+            coalesce(col("it"), lit(0L))).as("trust_u"))
     }
     v.select(col("id"), col("pr"), col("trust_u"),
       greatest(lit(0L), col("pr") - col("trust_u")).as("mass_u"),
@@ -241,8 +215,7 @@ object GraphOps {
     * materialized once.
     * @return (id, cash_u, hist_u, imp_u = hist_u + cash_u). */
   def opicFixedPoint(nodes: DataFrame, edges: DataFrame, iters: Int,
-      nNodes: Long, scale: Long = 1000000000000L,
-      truncateEvery: Int = 0): DataFrame = {
+      nNodes: Long, scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && nNodes >= 1 && scale > 0)
     val e = withOutdeg(edges)
     val hasOut = e.select(col("src")).distinct()
@@ -263,14 +236,13 @@ object GraphOps {
         .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
       val root = prev.filter(!col("has_out"))
         .agg(coalesce(sum(col("cash")), lit(0L)).as("root"))
-      v = maybeTruncate(prev
+      v = prev
         .join(inflow, prev("id") === inflow("dst"), "left")
         .crossJoin(broadcast(root))
         .select(prev("id"), prev("has_out"),
           (coalesce(col("inflow"), lit(0L)) +
             expr(s"root div ${nNodes}L")).as("cash"),
-          (prev("hist") + prev("cash")).as("hist")),
-        it, iters, truncateEvery)
+          (prev("hist") + prev("cash")).as("hist"))
     }
     v.select(col("id"), col("cash").as("cash_u"),
       col("hist").as("hist_u"),
@@ -304,7 +276,7 @@ object GraphOps {
     * materialized once (read `2·iters` times). Returns
     * (id, auth_u, hub_u). */
   def hitsFixedPoint(nodes: DataFrame, edges: DataFrame, iters: Int,
-      scale: Long = 1000000L, truncateEvery: Int = 0): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     require(iters >= 1 && scale > 0)
     val e = DedupOps.materialize(edges.select(col("src"), col("dst")))
     val ids = nodes.select(col("id"))
@@ -326,14 +298,14 @@ object GraphOps {
           .groupBy(col("dst")).agg(sum(col("h")).as("a")),
           col("id") === col("dst"), "left")
         .select(col("id"), coalesce(col("a"), lit(0L)).as("a"))
-      auth = maybeTruncate(renorm(rawA, "a"), it, iters, truncateEvery)
+      auth = renorm(rawA, "a")
       val rawH = ids
         .join(e.join(auth.select(col("id").as("aid"), col("a")),
           col("dst") === col("aid"))
           .groupBy(col("src")).agg(sum(col("a")).as("h")),
           col("id") === col("src"), "left")
         .select(col("id"), coalesce(col("h"), lit(0L)).as("h"))
-      hub = maybeTruncate(renorm(rawH, "h"), it, iters, truncateEvery)
+      hub = renorm(rawH, "h")
     }
     auth.join(hub, "id")
       .select(col("id"), col("a").as("auth_u"), col("h").as("hub_u"))

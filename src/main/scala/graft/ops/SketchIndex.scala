@@ -1,9 +1,9 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
+
+import graft.table.StateFiles
 
 /** Persisted 64-bit-sketch index — INCREMENTAL Hamming near-dup
   * detection for a growing corpus, the [[DedupIndex]] analog for the
@@ -26,8 +26,7 @@ import org.apache.spark.sql.functions._
   *      nothing but the two sketches already on the joined row:
   *      `bit_count(sim ^ n_sim) <= maxDist`, whole-stage codegen —
   *   4. appends its chunk rows as a new delta, runId-guarded for
-  *      streaming replay idempotence (same contract as
-  *      [[DedupIndex.append]]).
+  *      streaming replay idempotence ([[StateFiles.DeltaChain]]).
   *
   * Same pigeonhole soundness as [[DedupOps.hammingPairs64]]: with
   * `maxDist+1` disjoint chunks, any pair within `maxDist` shares at
@@ -38,33 +37,15 @@ import org.apache.spark.sql.functions._
 object SketchIndex {
 
   final case class Meta(maxDist: Int, docs: Long, deltas: Seq[String],
-      runIds: Seq[String] = Nil) {
-    def committedRunIds: Set[String] =
-      if (runIds == null) Set.empty else runIds.toSet
+      runIds: Seq[String] = Nil) extends StateFiles.ChainMeta[Meta] {
+    def withChain(docs: Long, deltas: Seq[String], runIds: Seq[String]) =
+      copy(docs = docs, deltas = deltas, runIds = runIds)
   }
 
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m.configure(com.fasterxml.jackson.databind.DeserializationFeature
-      .FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
-  }
+  private[graft] val chain = new StateFiles.DeltaChain[Meta](
+    "sketch-meta.json", "chunk/", "sketch index", "init()")
 
-  private def metaPath(dir: String) = Paths.get(dir, "sketch-meta.json")
-
-  def readMeta(dir: String): Option[Meta] =
-    if (!Files.exists(metaPath(dir))) None
-    else Some(mapper.readValue(Files.readString(metaPath(dir)),
-      classOf[Meta]))
-
-  private def writeMeta(dir: String, m: Meta): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val tmp = metaPath(dir).resolveSibling("sketch-meta.json.tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(m))
-    Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def readMeta(dir: String): Option[Meta] = chain.read(dir)
 
   /** Initialize an empty index for sketches verified at `maxDist`
     * (drops any existing index — chunk geometry derives from it and
@@ -74,9 +55,9 @@ object SketchIndex {
     // degenerates under JVM shift-mod-64 — exact sketch equality is a
     // plain groupBy, not an index problem
     require(maxDist >= 1 && maxDist < 64, "maxDist must be in [1, 64)")
-    DedupIndex.dropDir(dir)
+    chain.drop(dir)
     val m = Meta(maxDist, 0L, Nil)
-    writeMeta(dir, m)
+    chain.write(dir, m)
     m
   }
 
@@ -103,37 +84,30 @@ object SketchIndex {
     * Non-empty `runId` = idempotent streaming replay guard. */
   def append(sketches: DataFrame, idCol: String, simCol: String,
       dir: String, runId: String = ""): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no sketch index at $dir — call init() first"))
-    if (runId.nonEmpty && m.committedRunIds.contains(runId)) return m
-    val spark = sketches.sparkSession
-    val delta = f"chunk/v${DedupIndex.nextVersion(m.deltas)}%05d"
-    val rows = sketches.select(col(idCol).as("id"),
-      col(simCol).cast("long").as("sim"))
-    val n = rows.count()
-    val parts = math.max(
-      math.max(1, spark.sessionState.conf.numShufflePartitions / 4),
-      math.ceil(n.toDouble * (m.maxDist + 1) / 8e6).toInt)
-    rows
-      .select(col("id"), col("sim"),
-        explode(array(chunkKeys(col("sim"), m.maxDist): _*))
-          .as("chunkKey"))
-      .repartition(parts, col("chunkKey"))
-      .sortWithinPartitions("chunkKey")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
-    val next = m.copy(docs = m.docs + n, deltas = m.deltas :+ delta,
-      runIds =
-        if (runId.isEmpty) m.runIds
-        else (if (m.runIds == null) Nil else m.runIds) :+ runId)
-    writeMeta(dir, next)
-    next
+    val m = chain.current(dir)
+    chain.append(dir, m, runId) { delta =>
+      val spark = sketches.sparkSession
+      val rows = sketches.select(col(idCol).as("id"),
+        col(simCol).cast("long").as("sim"))
+      val n = rows.count()
+      val parts = math.max(
+        math.max(1, spark.sessionState.conf.numShufflePartitions / 4),
+        math.ceil(n.toDouble * (m.maxDist + 1) / 8e6).toInt)
+      rows
+        .select(col("id"), col("sim"),
+          explode(array(chunkKeys(col("sim"), m.maxDist): _*))
+            .as("chunkKey"))
+        .repartition(parts, col("chunkKey"))
+        .sortWithinPartitions("chunkKey")
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
+      n
+    }
   }
 
-  /** Compact the delta chain into ONE chunk dir; runIds survive.
-    * Same contract as [[DedupIndex.compact]]. */
+  /** Compact the delta chain into ONE chunk dir; runIds and docs
+    * survive. */
   def compact(dir: String): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no sketch index at $dir"))
+    val m = chain.current(dir)
     if (m.deltas.size <= 1) m else rewrite(dir, m, identity)
   }
 
@@ -141,39 +115,27 @@ object SketchIndex {
     * row would emit phantom pairs against deleted images on every
     * probe). O(index bytes) rewrite; compacts as a side effect. */
   def deleteIds(ids: DataFrame, dir: String): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no sketch index at $dir"))
-    if (m.deltas.isEmpty) m
-    else {
-      val del = ids.toDF("del_id")
-      rewrite(dir, m,
-        _.join(del, col("id") === col("del_id"), "left_anti"))
-    }
+    val del = ids.toDF("del_id")
+    rewrite(dir, chain.current(dir),
+      _.join(del, col("id") === col("del_id"), "left_anti"))
   }
 
+  /** [[StateFiles.DeltaChain.rewrite]] of the chunk rows through `f`:
+    * every sketch has `maxDist + 1` chunk rows, so the write's own row
+    * count (observed in the writing stage) gives the docs. */
   private def rewrite(dir: String, m: Meta,
-      f: DataFrame => DataFrame): Meta = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val rows = f(spark.read.parquet(m.deltas.map(d => s"$dir/$d"): _*))
-    if (rows.isEmpty) {
-      val next = m.copy(docs = 0L, deltas = Nil)
-      writeMeta(dir, next)
-      m.deltas.foreach(d => DedupIndex.dropDir(s"$dir/$d"))
-      return next
+      f: DataFrame => DataFrame): Meta =
+    chain.rewrite(dir, m) { delta =>
+      val spark = org.apache.spark.sql.SparkSession.active
+      val rows = new Observation()
+      f(spark.read.parquet(m.deltas.map(d => s"$dir/$d"): _*))
+        .repartition(math.max(1,
+          spark.sessionState.conf.numShufflePartitions / 4), col("chunkKey"))
+        .sortWithinPartitions("chunkKey")
+        .observe(rows, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
+      rows.get("n").asInstanceOf[Long] / (m.maxDist + 1)
     }
-    val delta = f"chunk/v${DedupIndex.nextVersion(m.deltas)}%05d"
-    val parts = math.max(1,
-      spark.sessionState.conf.numShufflePartitions / 4)
-    rows.repartition(parts, col("chunkKey"))
-      .sortWithinPartitions("chunkKey")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
-    val docs = spark.read.parquet(s"$dir/$delta")
-      .select("id").distinct().count()
-    val next = m.copy(docs = docs, deltas = Seq(delta))
-    writeMeta(dir, next)
-    m.deltas.foreach(d => DedupIndex.dropDir(s"$dir/$d"))
-    next
-  }
 
   /** Hamming near-dup pairs a NEW batch of sketches introduces:
     * (batch ↔ indexed) cross pairs plus within-batch pairs, verified
@@ -182,8 +144,7 @@ object SketchIndex {
     * pairs touching ≥1 batch id. Probe first, then [[append]]. */
   def probePairs(batch: DataFrame, idCol: String, simCol: String,
       dir: String, maxBroadcastRows: Long = 4000000L): DataFrame = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no sketch index at $dir"))
+    val m = chain.current(dir)
     val spark = batch.sparkSession
     import spark.implicits._
     val sketches = DedupOps.materialize(batch.select(

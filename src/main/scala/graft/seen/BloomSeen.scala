@@ -159,8 +159,8 @@ object BloomSeen {
 
   /** Build P partition filters and persist each as its own file under
     * `dir` (shared table storage on a real cluster). Executors write
-    * their own partitions — tmp file + atomic move, mirroring
-    * TableIO's commit discipline; nothing is collected or broadcast.
+    * their own partitions ([[graft.table.StateFiles.replaceFromTask]]);
+    * nothing is collected or broadcast.
     * One filter file per non-empty partition. */
   def write(hashes: Dataset[Long], dir: String, parts: Int,
       expectedKeys: Long, fpp: Double = 0.01): BloomMeta = {
@@ -168,21 +168,9 @@ object BloomSeen {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     filterRows(hashes, parts, numBytes, k).foreachPartition {
       (it: Iterator[org.apache.spark.sql.Row]) =>
-        // tmp name includes the task ATTEMPT id: under speculative
-        // execution (or a zombie task racing its retry) two attempts
-        // of the same partition must not interleave writes into one
-        // tmp file — each writes its own, and the ATOMIC_MOVE makes
-        // whichever finishes last win with a complete filter
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
         it.foreach { r =>
-          val part = r.getInt(0)
-          val tmp = java.nio.file.Paths.get(dir,
-            f".part-$part%05d.bloom.$attempt%d.tmp")
-          java.nio.file.Files.write(tmp, r.getAs[Array[Byte]](1))
-          java.nio.file.Files.move(tmp, filterFile(dir, part),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          graft.table.StateFiles.replaceFromTask(
+            filterFile(dir, r.getInt(0)), r.getAs[Array[Byte]](1))
         }
     }
     BloomMeta(parts, k, numBytes)

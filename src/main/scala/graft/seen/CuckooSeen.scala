@@ -1,9 +1,10 @@
 package graft.seen
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.Dataset
 
+import graft.table.StateFiles
 import graft.url.Hashing
 
 /** Partitioned cuckoo-filter URL-seen set — the deletable alternative
@@ -45,7 +46,8 @@ import graft.url.Hashing
   * Distribution mirrors [[BloomSeen]]'s scale path: P independent
   * filters routed by `floorMod(urlHash, P)`, each built/updated/probed
   * by the one task that owns its shuffle group, persisted one file per
-  * partition with tmp+ATOMIC_MOVE. The driver holds only [[CuckooMeta]].
+  * partition by [[StateFiles.replaceFromTask]]. The driver holds only
+  * [[CuckooMeta]], swapped by [[StateFiles.writeJson]].
   * Unlike Bloom bit-OR, cuckoo tables don't merge, so builds shuffle
   * keys to their owning task (`groupByKey`) instead of partial-agg —
   * the same data movement the Bloom UDAF's final merge pays.
@@ -191,14 +193,6 @@ object CuckooSeen {
   final case class CuckooMeta(parts: Int, bucketBytes: Int,
       covered: Seq[String] = Nil)
 
-  private val metaMapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m.configure(com.fasterxml.jackson.databind.DeserializationFeature
-      .FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
-  }
-
   /** The sketch's location inside a crawl table's storage — the ONE
     * definition shared by CrawlJob (build/insert/probe) and TableIO
     * (compaction coverage handoff, invalidation eviction); a drifted
@@ -211,38 +205,11 @@ object CuckooSeen {
   private def metaFile(dir: String) = Paths.get(dir, "meta.json")
 
   def readMeta(dir: String): Option[CuckooMeta] =
-    if (!Files.exists(metaFile(dir))) None
-    else Some(metaMapper.readValue(Files.readString(metaFile(dir)),
-      classOf[CuckooMeta]))
+    StateFiles.readJson[CuckooMeta](metaFile(dir))
 
-  def writeMeta(dir: String, meta: CuckooMeta): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val tmp = Paths.get(dir, ".meta.json.tmp")
-    Files.writeString(tmp, metaMapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsString(meta))
-    Files.move(tmp, metaFile(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  def dropDir(dir: String): Unit = {
-    val root = Paths.get(dir)
-    if (Files.exists(root)) {
-      val listing = Files.list(root)
-      try listing.forEach(p => Files.deleteIfExists(p))
-      finally listing.close()
-      Files.deleteIfExists(root)
-    }
-  }
-
-  private def atomicWriteFilter(dir: String, part: Int,
-      filter: Array[Byte]): Unit = {
-    val attempt = Option(org.apache.spark.TaskContext.get())
-      .map(_.taskAttemptId()).getOrElse(0L)
-    val tmp = Paths.get(dir, f".part-$part%05d.cuckoo.$attempt%d.tmp")
-    Files.write(tmp, filter)
-    Files.move(tmp, filterFile(dir, part), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def writeMeta(dir: String, meta: CuckooMeta): Unit =
+    StateFiles.writeJson(metaFile(dir), meta, pretty = true,
+      tmpName = ".meta.json.tmp")
 
   /** Route `hashes` to their owning partition task and apply `op` to
     * that partition's filter file (created empty when absent), then
@@ -284,7 +251,7 @@ object CuckooSeen {
         var failed = 0L
         def flush(): Unit =
           if (filter != null) {
-            atomicWriteFilter(dir, curPart, filter)
+            StateFiles.replaceFromTask(filterFile(dir, curPart), filter)
             filter = null
           }
         it.foreach { h =>
@@ -310,7 +277,7 @@ object CuckooSeen {
     * first — a half-replaced set would mix geometries). */
   def write(hashes: Dataset[Long], dir: String, parts: Int,
       expectedKeys: Long, covered: Seq[String] = Nil): CuckooMeta = {
-    dropDir(dir)
+    StateFiles.delete(Paths.get(dir))
     val perPart = math.max(1024L, expectedKeys / parts)
     val meta = CuckooMeta(parts,
       bucketsFor(perPart) * BytesPerBucket, covered)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.model._
 import graft.model.{CrawlStatus, ImageRecord}
 import graft.politeness.HostScheduler
+import graft.table.StateFiles
 
 /** Structured-Streaming fetch loop (north rule): frontier entries
   * arrive as a stream, `flatMapGroupsWithState` keyed by the
@@ -225,25 +226,12 @@ object StreamingCrawl {
   private def docsLogPath(docsDir: String) =
     java.nio.file.Paths.get(docsDir, "docs-log.txt")
 
-  private def readDocsLog(docsDir: String): Seq[String] = {
-    val p = docsLogPath(docsDir)
-    if (!java.nio.file.Files.exists(p)) Nil
-    else {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.readAllLines(p).asScala.toSeq
-        .map(_.trim).filter(_.nonEmpty)
-    }
-  }
+  private def readDocsLog(docsDir: String): Seq[String] =
+    StateFiles.readText(docsLogPath(docsDir)).toSeq
+      .flatMap(_.split("\n")).map(_.trim).filter(_.nonEmpty)
 
-  private def writeDocsLog(docsDir: String, dirs: Seq[String]): Unit = {
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(docsDir))
-    val tmp = docsLogPath(docsDir).resolveSibling("docs-log.txt.tmp")
-    java.nio.file.Files.writeString(tmp, dirs.mkString("\n"))
-    java.nio.file.Files.move(tmp, docsLogPath(docsDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeDocsLog(docsDir: String, dirs: Seq[String]): Unit =
+    StateFiles.replaceText(docsLogPath(docsDir), dirs.mkString("\n"))
 
   /** Streaming NEAR-DUP curation over a document stream, backed by
     * the persisted signature index ([[graft.ops.DedupIndex]] — call
@@ -285,10 +273,7 @@ object StreamingCrawl {
       batch: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val runId = s"$runTag-batch-$batchId"
-    val m = graft.ops.DedupIndex.readMeta(indexDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no index at $indexDir — DedupIndex.init() it before starting"))
-    if (m.committedRunIds.contains(runId)) return // full replay
+    if (graft.ops.DedupIndex.chain.replayed(indexDir, runId)) return
     val cached = batch.persist()
     try graft.ops.DedupOps.withMaterializeScope {
       if (!cached.isEmpty) {
@@ -323,13 +308,14 @@ object StreamingCrawl {
             graft.ops.DedupIndex.compact(indexDir)
           val live = readDocsLog(docsDir)
           if (live.size >= compactEvery) {
-            val merged = f"merged-v${graft.ops.DedupIndex
+            val merged = f"merged-v${StateFiles
               .nextVersion(live.filter(_.startsWith("merged-")))}%05d"
             spark.read.parquet(live.map(d => s"$docsDir/$d"): _*)
               .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
               .parquet(s"$docsDir/$merged")
             writeDocsLog(docsDir, Seq(merged))
-            live.foreach(d => graft.ops.DedupIndex.dropDir(s"$docsDir/$d"))
+            live.foreach(d =>
+              StateFiles.delete(java.nio.file.Paths.get(docsDir, d)))
           }
         }
       }
@@ -366,11 +352,7 @@ object StreamingCrawl {
       runTag: String, threshold: Double = 0.95, compactEvery: Int = 0)(
       batch: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
     val runId = s"$runTag-batch-$batchId"
-    val m = graft.ops.AnnIndex.readMeta(indexDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no ANN index at $indexDir — AnnIndex.build() it before " +
-          "starting"))
-    if (m.committedRunIds.contains(runId)) return // full replay
+    if (graft.ops.AnnIndex.chain.replayed(indexDir, runId)) return
     val cached = batch.persist()
     try graft.ops.DedupOps.withMaterializeScope {
       if (!cached.isEmpty) {
@@ -404,11 +386,7 @@ object StreamingCrawl {
       compactEvery: Int = 0)(
       batch: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
     val runId = s"$runTag-batch-$batchId"
-    val m = graft.ops.ContainmentIndex.readMeta(indexDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no containment index at $indexDir — init()/build() it " +
-          "before starting"))
-    if (m.committedRunIds.contains(runId)) return // full replay
+    if (graft.ops.ContainmentIndex.chain.replayed(indexDir, runId)) return
     val cached = batch.persist()
     try graft.ops.DedupOps.withMaterializeScope {
       if (!cached.isEmpty) {

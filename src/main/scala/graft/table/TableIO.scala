@@ -1,10 +1,7 @@
 package graft.table
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path, Paths}
 
-import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
-import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode,
   SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,7 +12,8 @@ import graft.model.ImageRecord
   * plus versioned JSON snapshots with per-partition manifests and
   * lineage, committed via the reference's own atomic tmp+rename
   * pattern (portal_saude_mg.py:777-791) — write snapshot vN+1, then
-  * atomically swap `version-hint.txt`.
+  * atomically swap `version-hint.txt`. Every file operation here that
+  * is not a Spark write goes through [[StateFiles]].
   *
   * Layout:
   * {{{
@@ -61,43 +59,38 @@ object TableIO {
       totalRows: Long, lineage: Lineage, runIds: Seq[String] = Nil,
       cumulative: Boolean = false)
 
-  private val mapper = {
-    val m = new ObjectMapper()
-    m.registerModule(DefaultScalaModule)
-    m.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
-  }
-
   private def hintPath(dir: String): Path = Paths.get(dir, "version-hint.txt")
 
-  def currentVersion(dir: String): Option[Int] = {
-    val p = hintPath(dir)
-    if (Files.exists(p)) Some(Files.readString(p).trim.toInt) else None
-  }
+  private def snapshotPath(dir: String, version: Int): Path =
+    Paths.get(dir, "snapshots", f"v$version%05d.json")
+
+  def currentVersion(dir: String): Option[Int] =
+    StateFiles.readText(hintPath(dir)).map(_.trim.toInt)
 
   def readSnapshot(dir: String, version: Int): Snapshot = {
-    val p = Paths.get(dir, "snapshots", f"v$version%05d.json")
+    val p = snapshotPath(dir, version)
     // NoSuchFileException (an IOException), NOT require/IAE: the
     // expired-chain fallbacks (cumulativePartitionMeta, recordRunId's
     // heal path) catch IOException — an IAE here would turn their
     // documented degrade-to-scan behavior into a crash
-    if (!Files.exists(p))
+    StateFiles.readJson[Snapshot](p).getOrElse(
       throw new java.nio.file.NoSuchFileException(p.toString, null,
         s"snapshot v$version does not exist (never committed, or " +
-          "expired by TableIO.expire)")
-    mapper.readValue(Files.readString(p), classOf[Snapshot])
+          "expired by TableIO.expire)"))
   }
 
   def currentSnapshot(dir: String): Option[Snapshot] =
     currentVersion(dir).map(readSnapshot(dir, _))
 
-  /** Atomic write: tmp file in the same directory, then ATOMIC_MOVE. */
-  private def atomicWrite(target: Path, content: String): Unit = {
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  /** The commit point of every snapshot-producing operation: write
+    * snapshot vN, atomically swap the hint to N, then record its runId
+    * in the sidecar. */
+  private def publish(dir: String, parent: Option[Snapshot],
+      snap: Snapshot): Unit = {
+    StateFiles.writeJson(snapshotPath(dir, snap.version), snap,
+      pretty = true)
+    StateFiles.replaceText(hintPath(dir), snap.version.toString)
+    recordRunId(dir, parent, snap.lineage.runId)
   }
 
   // ---- cumulative runId sidecar ------------------------------------
@@ -106,9 +99,7 @@ object TableIO {
     Paths.get(dir, "snapshots", "runids.json")
 
   private def readRunIdsSidecar(dir: String): Option[Seq[String]] =
-    if (!Files.exists(runIdsPath(dir))) None
-    else Some(mapper.readValue(Files.readString(runIdsPath(dir)),
-      classOf[Array[String]]).toSeq)
+    StateFiles.readJson[Array[String]](runIdsPath(dir)).map(_.toSeq)
 
   /** Append `runId` to the cumulative sidecar (called AFTER the hint
     * swap, so the sidecar never lists an uncommitted run). Crashes in
@@ -140,8 +131,7 @@ object TableIO {
         prior :+ p.lineage.runId
       case _ => prior
     }
-    atomicWrite(runIdsPath(dir),
-      mapper.writeValueAsString(healed :+ runId))
+    StateFiles.writeJson(runIdsPath(dir), healed :+ runId)
   }
 
   /** Cumulative run ids of `snap` WITHOUT the sidecar: its embedded
@@ -191,9 +181,7 @@ object TableIO {
           have.contains("month")) Seq(rel -> have)
       else if (!Files.isDirectory(p)) Nil
       else {
-        val ls = Files.list(p)
-        val children = try ls.iterator().asScala.toVector finally ls.close()
-        children.filter(Files.isDirectory(_)).flatMap { c =>
+        StateFiles.list(p).filter(Files.isDirectory(_)).flatMap { c =>
           kv(c.getFileName.toString) match {
             case Some((k, v)) =>
               walk(c, s"$rel/${c.getFileName}", have + (k -> v))
@@ -285,7 +273,7 @@ object TableIO {
       df.observe(rows, count(lit(1)).as("n")).write.mode(SaveMode.Overwrite)
         .partitionBy(partCols: _*).parquet(s"$dir/$rel")
       val nonEmpty = rows.get("n") != 0L
-      if (!nonEmpty) deleteRec(Paths.get(dir, rel))
+      if (!nonEmpty) StateFiles.delete(Paths.get(dir, rel))
       nonEmpty
     }
     val hasImages = writeCounted(images.toDF(), dataDirName,
@@ -304,10 +292,7 @@ object TableIO {
       parts,
       parent.map(_.totalRows).getOrElse(0L) + parts.map(_.rows).sum,
       Lineage(runId, parent.map(_.version).getOrElse(0), periods, note))
-    atomicWrite(Paths.get(dir, "snapshots", f"v$version%05d.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(snap))
-    atomicWrite(hintPath(dir), version.toString)
-    recordRunId(dir, parent, runId)
+    publish(dir, parent, snap)
     snap
   }
 
@@ -358,10 +343,7 @@ object TableIO {
           s"$note: ${parent.dataDirs.size} data dirs, " +
             s"${parent.seenDirs.size} seen dirs -> 1 each"),
         cumulative = true)
-      atomicWrite(Paths.get(dir, "snapshots", f"v$version%05d.json"),
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsString(snap))
-      atomicWrite(hintPath(dir), version.toString)
-      recordRunId(dir, Some(parent), runId)
+      publish(dir, Some(parent), snap)
       // the compacted seen dir holds the same key SET (distinct of the
       // union), so a cuckoo sketch covering the parent's dirs stays
       // valid — only its coverage list must follow the rewrite; a
@@ -372,7 +354,7 @@ object TableIO {
           if (m.covered.toSet == parent.seenDirs.toSet)
             graft.seen.CuckooSeen.writeMeta(sk,
               m.copy(covered = if (hasSeen) Seq(seenDirName) else Nil))
-          else graft.seen.CuckooSeen.dropDir(sk)
+          else StateFiles.delete(Paths.get(sk))
         }
       }
       snap
@@ -460,10 +442,7 @@ object TableIO {
             s"(metadata-only: ${droppedLeaves.size} partition refs " +
             "dropped, 0 data files rewritten)"),
         cumulative = true)
-      atomicWrite(Paths.get(dir, "snapshots", f"v$version%05d.json"),
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsString(snap))
-      atomicWrite(hintPath(dir), version.toString)
-      recordRunId(dir, Some(parent), runId)
+      publish(dir, Some(parent), snap)
       snap
     }
 
@@ -531,9 +510,9 @@ object TableIO {
                 .select($"urlHash").as[Long].distinct()
               val kept = m.covered.filter(target.seenDirs.toSet)
               try C.deleteFromDir(dropped, sk, m, kept)
-              catch { case _: Exception => C.dropDir(sk) }
+              catch { case _: Exception => StateFiles.delete(Paths.get(sk)) }
             }
-          } else C.dropDir(sk)
+          } else StateFiles.delete(Paths.get(sk))
         }
       }
 
@@ -560,10 +539,7 @@ object TableIO {
             s"${parent.dataDirs.size - target.dataDirs.size} data dir " +
             "refs dropped)"),
         cumulative = true)
-      atomicWrite(Paths.get(dir, "snapshots", f"v$version%05d.json"),
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsString(snap))
-      atomicWrite(hintPath(dir), version.toString)
-      recordRunId(dir, Some(parent), runId)
+      publish(dir, Some(parent), snap)
       snap
     }
 
@@ -585,17 +561,11 @@ object TableIO {
         // distinct: a URL may appear in several dropped image rows,
         // but its hash was inserted into the sketch exactly once
         try C.deleteFromDir(dropped.distinct(), sketchDir, m, newCovered)
-        catch { case _: Exception => C.dropDir(sketchDir) }
-      } else C.dropDir(sketchDir)
+        catch {
+          case _: Exception => StateFiles.delete(Paths.get(sketchDir))
+        }
+      } else StateFiles.delete(Paths.get(sketchDir))
     }
-  }
-
-  private def deleteRec(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val children = Files.list(p)
-      try children.forEach(deleteRec) finally children.close()
-    }
-    Files.deleteIfExists(p)
   }
 
   /** Expire everything the CURRENT snapshot does not reference: data/
@@ -613,31 +583,22 @@ object TableIO {
       // make sure the sidecar index exists BEFORE deleting the chain
       // it would otherwise be derived from
       if (readRunIdsSidecar(dir).isEmpty)
-        atomicWrite(runIdsPath(dir),
-          mapper.writeValueAsString(chainRunIds(dir, cur)))
+        StateFiles.writeJson(runIdsPath(dir), chainRunIds(dir, cur))
       // rel is kept outright when an entry covers it (equals it or is
       // an ancestor of it); partially kept when some entry lives
       // below it (recurse); otherwise deleted
       def sweep(p: Path, rel: String): Unit =
         if (!keep.exists(e => e == rel || rel.startsWith(e + "/"))) {
-          if (keep.exists(_.startsWith(rel + "/"))) {
-            val ls = Files.list(p)
-            val children = try ls.iterator().asScala.toVector
-              finally ls.close()
-            children.foreach(c => sweep(c, s"$rel/${c.getFileName}"))
-          } else deleteRec(p)
+          if (keep.exists(_.startsWith(rel + "/")))
+            StateFiles.list(p)
+              .foreach(c => sweep(c, s"$rel/${c.getFileName}"))
+          else StateFiles.delete(p)
         }
-      for (root <- Seq("data", "seen")) {
-        val rp = Paths.get(dir, root)
-        if (Files.exists(rp)) {
-          val ls = Files.list(rp)
-          try ls.forEach { child =>
-            sweep(child, s"$root/${child.getFileName}")
-          } finally ls.close()
-        }
-      }
+      for (root <- Seq("data", "seen"))
+        StateFiles.list(Paths.get(dir, root))
+          .foreach(child => sweep(child, s"$root/${child.getFileName}"))
       for (v <- 1 until cur.version)
-        Files.deleteIfExists(Paths.get(dir, "snapshots", f"v$v%05d.json"))
+        StateFiles.delete(snapshotPath(dir, v))
     }
 
   /** Read a set of dataDirs entries (whole commit dirs or partition

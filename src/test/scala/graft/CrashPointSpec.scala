@@ -1,0 +1,154 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.IndexFixtures._
+import graft.model.ImageRecord
+import graft.seen.CuckooSeen
+import graft.table.{StateFiles, TableIO}
+
+/** Crash points of every persisted store. Each operation first runs
+  * uncrashed to count its driver-side mutations (meta and pointer
+  * swaps, deletes) through the `StateFiles` crash seam; then, for every
+  * N up to that count, it runs again from the same starting state with
+  * the N-th mutation throwing. N = 1 is the landed data with no pointer
+  * swap. After each crash:
+  *
+  *  - every reader of the store sees exactly the old state or exactly
+  *    the new one, never a mix;
+  *  - replaying the same call with the same runId — guarded the way the
+  *    store's callers guard it — converges on the state the uncrashed
+  *    run left.
+  *
+  * Unreferenced debris (an orphan delta, a tmp file) is allowed: no
+  * reader resolves it. */
+class CrashPointSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+
+  /** `setup` builds the starting state in a fresh dir, `run` is the
+    * operation, `replay` its guarded re-run, `view` what readers see. */
+  private case class Case(store: String, op: String,
+      setup: String => Unit, run: String => Any, view: String => Any,
+      replay: Option[String => Any] = None)
+
+  // ---- TableIO -------------------------------------------------------
+
+  private def image(id: Int, month: Int): ImageRecord =
+    ImageRecord(s"i$id", Array.fill[Byte](id)(id.toByte), 4, 5, "png",
+      s"c$id", id.toLong, "s", 2024, month, s"http://x/$id", id * 11L,
+      id * 100L, 1)
+
+  private def commit(dir: String, runId: String, ids: Int*): Unit = {
+    import spark.implicits._
+    TableIO.commit(spark, dir, ids.map(i => image(i, i)).toDS(),
+      ids.map(_ * 11L).toDS(), runId, ids.map(i => s"s/2024/$i"))
+  }
+
+  private def tableView(dir: String): Any = {
+    val images = TableIO.readImages(spark, dir)
+    val snap = TableIO.currentSnapshot(dir).get
+    (if (images.columns.isEmpty) Nil
+     else rowsOf(images.select("image_id", "site", "year", "month")),
+      TableIO.readSeen(spark, dir).collect().sorted.toSeq,
+      // maintenance ids name their version: a replayed compaction
+      // commits the same table under another one
+      TableIO.committedRunIds(dir).filterNot(_.contains("-v0")),
+      snap.dataDirs.size, snap.seenDirs.size, snap.totalRows,
+      snap.partitions.sortBy(p => (p.site, p.year, p.month)))
+  }
+
+  private def tableSetup(dir: String): Unit = {
+    commit(dir, "run-1", 1, 2)
+    commit(dir, "run-2", 3)
+  }
+
+  private val tableCases = Seq(
+    Case("TableIO", "commit", tableSetup, commit(_, "run-3", 4), tableView,
+      replay = Some(d =>
+        if (!TableIO.committedRunIds(d).contains("run-3"))
+          commit(d, "run-3", 4))),
+    Case("TableIO", "compact", tableSetup, TableIO.compact(spark, _),
+      tableView),
+    Case("TableIO", "invalidatePeriods", tableSetup,
+      TableIO.invalidatePeriods(spark, _, Set(("s", 2024, 1))), tableView),
+    Case("TableIO", "rollback", tableSetup, TableIO.rollback(spark, _, 1),
+      tableView))
+
+  // ---- CuckooSeen ----------------------------------------------------
+
+  private val cuckooKeys = Map("a" -> (1L to 300L), "b" -> (1001L to 1100L))
+
+  private def cuckooInsert(dir: String): Unit = {
+    import spark.implicits._
+    val m = CuckooSeen.readMeta(dir).get
+    CuckooSeen.insertIntoDir(cuckooKeys("b").toDS(), dir, m, Seq("a", "b"))
+  }
+
+  /** The meta, and whether the probe finds every key it covers (the
+    * sketch's contract: no false negative for a covered key). */
+  private def cuckooView(dir: String): Any = {
+    import spark.implicits._
+    val m = CuckooSeen.readMeta(dir).get
+    val keys = m.covered.flatMap(cuckooKeys)
+    (m, CuckooSeen.probeAligned(keys.toDF("h"), "h", dir, m)
+      .filter(!org.apache.spark.sql.functions.col("maybeSeen")).count())
+  }
+
+  private val cuckooCase = Case("CuckooSeen", "insert",
+    dir => {
+      import spark.implicits._
+      CuckooSeen.write(cuckooKeys("a").toDS(), dir, parts = 2,
+        expectedKeys = 2000L, covered = Seq("a"))
+    },
+    cuckooInsert, cuckooView,
+    replay = Some(d =>
+      if (!CuckooSeen.readMeta(d).get.covered.contains("b"))
+        cuckooInsert(d)))
+
+  // ---- the four ops indexes -------------------------------------------
+
+  private def indexCases(s: Store): Seq[Case] = {
+    def setup(dir: String): Unit = {
+      s.create(dir)
+      s.append(dir, batch1, "r1")
+    }
+    def view(dir: String): Any = (s.metaView(dir), s.rows(dir), s.probe(dir))
+    Seq(
+      Case(s.name, "append", setup, s.append(_, batch2, "r2"), view),
+      Case(s.name, "compact", setup, s.compact, view),
+      Case(s.name, "deleteIds", setup, s.deleteIds(_, Seq(1L, 101L, 102L)),
+        view))
+  }
+
+  private val cases =
+    tableCases ++ Seq(cuckooCase) ++ stores.flatMap(indexCases)
+
+  for (c <- cases)
+    test(s"${c.store}.${c.op}: every crash point leaves the old or the new state; the replay converges") {
+      val template = tmpDir("crash-template")
+      c.setup(template)
+      val old = c.view(template)
+      val clean = tmpDir("crash-clean")
+      copyTree(template, clean)
+      StateFiles.crashAt(0)
+      c.run(clean)
+      val mutations = StateFiles.mutationCount
+      val fresh = c.view(clean)
+      assert(mutations >= 1)
+      assert(fresh != old, "the operation must change what readers see")
+      for (n <- 1 to mutations) {
+        val dir = tmpDir("crash")
+        copyTree(template, dir)
+        StateFiles.crashAt(n)
+        try intercept[StateFiles.InjectedCrash](c.run(dir))
+        finally StateFiles.crashAt(0)
+        val seen = c.view(dir)
+        assert(seen == old || seen == fresh,
+          s"crash at mutation $n of $mutations: readers see a mix\n" +
+            s"  seen: $seen\n  old: $old\n  new: $fresh")
+        c.replay.getOrElse(c.run)(dir)
+        assert(c.view(dir) == fresh,
+          s"replay after a crash at mutation $n of $mutations diverged")
+      }
+    }
+}

@@ -1,0 +1,296 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.model.ImageRecord
+import graft.ops.{AnnIndex, ContainmentIndex, DedupIndex, SketchIndex}
+import graft.seen.CuckooSeen
+import graft.table.TableIO
+
+/** Pins the on-disk form of every persisted meta: the four index metas,
+  * the cuckoo sketch meta and the table's snapshot, `runids.json` and
+  * `version-hint.txt`. The strings below were written by the build
+  * before the persisted-state code moved into `graft.table.StateFiles`;
+  * they must read back to the same values (legacy shapes included), and
+  * the same small inputs must write them byte for byte. */
+class PersistedFormatSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+
+  private val pinned: Map[String, String] = Map(
+    "dedup-init.json" ->
+      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":0,"deltas":[],"scheme":"oph-densified-v1","runIds":[]}""",
+    "dedup-append.json" ->
+      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":2,"deltas":["sig/v00001"],"scheme":"oph-densified-v1","runIds":["r1"]}""",
+    "sketch-init.json" ->
+      """{"maxDist":4,"docs":0,"deltas":[],"runIds":[]}""",
+    "sketch-append.json" ->
+      """{"maxDist":4,"docs":2,"deltas":["chunk/v00001"],"runIds":["r1"]}""",
+    "ann-build.json" ->
+      """{"dim":2,"nlist":2,"docs":2,"deltas":["cells/v00001"],"runIds":[]}""",
+    "ann-append.json" ->
+      """{"dim":2,"nlist":2,"docs":3,"deltas":["cells/v00001","cells/v00002"],"runIds":["r1"]}""",
+    "cont-init.json" ->
+      """{"n":4,"freqCap":64,"pct":90,"minSize":4,"docs":0,"deltas":[],"runIds":[],"stopsVer":1}""",
+    "cont-append.json" ->
+      """{"n":4,"freqCap":64,"pct":90,"minSize":4,"docs":2,"deltas":["v00001"],"runIds":["r1"],"stopsVer":1}""",
+    "cuckoo-meta.json" ->
+      """{
+      |  "parts" : 2,
+      |  "bucketBytes" : 8192,
+      |  "covered" : [ "seen/v00001", "seen/v00002" ]
+      |}""".stripMargin,
+    "cuckoo-meta-empty.json" ->
+      """{
+      |  "parts" : 1,
+      |  "bucketBytes" : 8,
+      |  "covered" : [ ]
+      |}""".stripMargin,
+    "table-v1.json" ->
+      """{
+      |  "version" : 1,
+      |  "dataDirs" : [ "data/v00001" ],
+      |  "seenDirs" : [ "seen/v00001" ],
+      |  "partitions" : [ {
+      |    "site" : "s",
+      |    "year" : 2024,
+      |    "month" : 1,
+      |    "rows" : 1,
+      |    "bytes" : 3
+      |  }, {
+      |    "site" : "s",
+      |    "year" : 2024,
+      |    "month" : 2,
+      |    "rows" : 1,
+      |    "bytes" : 2
+      |  } ],
+      |  "totalRows" : 2,
+      |  "lineage" : {
+      |    "runId" : "run-1",
+      |    "parentVersion" : 0,
+      |    "periods" : [ "s/2024/1", "s/2024/2" ],
+      |    "note" : "note"
+      |  },
+      |  "runIds" : [ ],
+      |  "cumulative" : false
+      |}""".stripMargin,
+    "table-v2.json" ->
+      """{
+      |  "version" : 2,
+      |  "dataDirs" : [ "data/v00001" ],
+      |  "seenDirs" : [ "seen/v00001" ],
+      |  "partitions" : [ ],
+      |  "totalRows" : 2,
+      |  "lineage" : {
+      |    "runId" : "run-2",
+      |    "parentVersion" : 1,
+      |    "periods" : [ ],
+      |    "note" : ""
+      |  },
+      |  "runIds" : [ ],
+      |  "cumulative" : false
+      |}""".stripMargin,
+    "table-v3.json" ->
+      """{
+      |  "version" : 3,
+      |  "dataDirs" : [ "data/v00003" ],
+      |  "seenDirs" : [ "seen/v00003" ],
+      |  "partitions" : [ {
+      |    "site" : "s",
+      |    "year" : 2024,
+      |    "month" : 1,
+      |    "rows" : 1,
+      |    "bytes" : 3
+      |  }, {
+      |    "site" : "s",
+      |    "year" : 2024,
+      |    "month" : 2,
+      |    "rows" : 1,
+      |    "bytes" : 2
+      |  } ],
+      |  "totalRows" : 2,
+      |  "lineage" : {
+      |    "runId" : "compact-v00003",
+      |    "parentVersion" : 2,
+      |    "periods" : [ ],
+      |    "note" : "compaction: 1 data dirs, 1 seen dirs -> 1 each"
+      |  },
+      |  "runIds" : [ ],
+      |  "cumulative" : true
+      |}""".stripMargin,
+    "table-runids-1.json" ->
+      """["run-1"]""",
+    "table-runids-2.json" ->
+      """["run-1","run-2"]""",
+    "table-runids-3.json" ->
+      """["run-1","run-2","compact-v00003"]""",
+    "table-hint-1.txt" ->
+      """1""",
+    "table-hint-3.txt" ->
+      """3"""
+  )
+
+  private def tmp(): Path = Files.createTempDirectory("graft-format")
+
+  private def put(dir: Path, rel: String, content: String): Unit = {
+    Files.createDirectories(dir.resolve(rel).getParent)
+    Files.writeString(dir.resolve(rel), content)
+  }
+
+  private def metaDir(file: String, content: String): String = {
+    val d = tmp()
+    put(d, file, content)
+    d.toString
+  }
+
+  test("pinned index and sketch metas read back to their values") {
+    assert(DedupIndex.readMeta(metaDir("index-meta.json",
+        pinned("dedup-append.json"))).get ===
+      DedupIndex.IndexMeta("char", 5, 64, 16, 2L, Seq("sig/v00001"),
+        DedupIndex.SigScheme, Seq("r1")))
+    assert(SketchIndex.readMeta(metaDir("sketch-meta.json",
+        pinned("sketch-append.json"))).get ===
+      SketchIndex.Meta(4, 2L, Seq("chunk/v00001"), Seq("r1")))
+    assert(AnnIndex.readMeta(metaDir("ann-meta.json",
+        pinned("ann-append.json"))).get ===
+      AnnIndex.Meta(2, 2, 3L, Seq("cells/v00001", "cells/v00002"), Seq("r1")))
+    assert(ContainmentIndex.readMeta(metaDir("cont-meta.json",
+        pinned("cont-append.json"))).get ===
+      ContainmentIndex.Meta(4, 64L, 90, 4L, 2L, Seq("v00001"), Seq("r1"), 1))
+    assert(CuckooSeen.readMeta(metaDir("meta.json",
+        pinned("cuckoo-meta.json"))).get ===
+      CuckooSeen.CuckooMeta(2, 8192, Seq("seen/v00001", "seen/v00002")))
+    assert(CuckooSeen.readMeta(metaDir("meta.json",
+        pinned("cuckoo-meta-empty.json"))).get ===
+      CuckooSeen.CuckooMeta(1, 8, Nil))
+  }
+
+  test("legacy shapes read back: no scheme stamp, null runIds") {
+    val unstamped = pinned("dedup-append.json")
+      .replace("\"scheme\":\"" + DedupIndex.SigScheme + "\",", "")
+    assert(unstamped !== pinned("dedup-append.json"))
+    val m = DedupIndex.readMeta(metaDir("index-meta.json", unstamped)).get
+    assert(m.scheme === null && m.docs === 2L && m.runIds === Seq("r1"))
+    val nullIds = Seq(
+      "index-meta.json" -> pinned("dedup-append.json"),
+      "sketch-meta.json" -> pinned("sketch-append.json"),
+      "ann-meta.json" -> pinned("ann-append.json"),
+      "cont-meta.json" -> pinned("cont-append.json"))
+      .map { case (f, s) => f -> s.replace("\"runIds\":[\"r1\"]",
+        "\"runIds\":null") }
+    nullIds.foreach { case (_, s) => assert(s.contains("\"runIds\":null")) }
+    val metas: Seq[graft.table.StateFiles.ChainMeta[_]] = nullIds.map {
+      case (f, s) =>
+      val d = metaDir(f, s)
+      f match {
+        case "index-meta.json" => DedupIndex.readMeta(d).get
+        case "sketch-meta.json" => SketchIndex.readMeta(d).get
+        case "ann-meta.json" => AnnIndex.readMeta(d).get
+        case _ => ContainmentIndex.readMeta(d).get
+      }
+    }
+    // the Scala module reads a null collection as empty
+    metas.foreach { m =>
+      assert(Option(m.runIds).forall(_.isEmpty) && m.committedRunIds.isEmpty,
+        m)
+      assert(m.docs === 2L || m.docs === 3L, m)
+    }
+  }
+
+  test("pinned table files read back, legacy embedded runIds included") {
+    val t = tmp()
+    put(t, "snapshots/v00001.json", pinned("table-v1.json"))
+    put(t, "snapshots/v00002.json", pinned("table-v2.json"))
+    put(t, "snapshots/v00003.json", pinned("table-v3.json"))
+    put(t, "snapshots/runids.json", pinned("table-runids-3.json"))
+    put(t, "version-hint.txt", pinned("table-hint-3.txt"))
+    val dir = t.toString
+    assert(TableIO.currentVersion(dir) === Some(3))
+    val v1 = TableIO.readSnapshot(dir, 1)
+    assert(v1 === TableIO.Snapshot(1, Seq("data/v00001"), Seq("seen/v00001"),
+      Seq(TableIO.PartitionMeta("s", 2024, 1, 1L, 3L),
+        TableIO.PartitionMeta("s", 2024, 2, 1L, 2L)),
+      2L, TableIO.Lineage("run-1", 0, Seq("s/2024/1", "s/2024/2"), "note"),
+      Nil, cumulative = false))
+    val v3 = TableIO.currentSnapshot(dir).get
+    assert(v3.cumulative && v3.lineage.runId === "compact-v00003" &&
+      v3.dataDirs === Seq("data/v00003") && v3.lineage.parentVersion === 2)
+    assert(TableIO.committedRunIds(dir) ===
+      Set("run-1", "run-2", "compact-v00003"))
+
+    // a table written before the runids.json sidecar: every snapshot
+    // embeds the cumulative id list
+    val legacy = tmp()
+    put(legacy, "snapshots/v00001.json", pinned("table-v1.json").replace(
+      "\"runIds\" : [ ]", "\"runIds\" : [ \"run-0\", \"run-1\" ]"))
+    put(legacy, "version-hint.txt", pinned("table-hint-1.txt"))
+    assert(TableIO.currentSnapshot(legacy.toString).get.runIds ===
+      Seq("run-0", "run-1"))
+    assert(TableIO.committedRunIds(legacy.toString) === Set("run-0", "run-1"))
+  }
+
+  test("the same small inputs write the pinned files byte for byte") {
+    import spark.implicits._
+    val root = tmp()
+    def same(name: String, file: Path): Unit =
+      assert(Files.readString(file) === pinned(name), name)
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "lorem ipsum dolor sit amet consectetur adipiscing"))
+      .toDF("id", "text")
+
+    val d = root.resolve("dedup").toString
+    DedupIndex.init(d)
+    same("dedup-init.json", Paths.get(d, "index-meta.json"))
+    DedupIndex.append(docs, "id", "text", d, "r1")
+    same("dedup-append.json", Paths.get(d, "index-meta.json"))
+
+    val s = root.resolve("sketch").toString
+    SketchIndex.init(s, 4)
+    same("sketch-init.json", Paths.get(s, "sketch-meta.json"))
+    SketchIndex.append(Seq((1L, 7L), (2L, 99L)).toDF("id", "sim"),
+      "id", "sim", s, "r1")
+    same("sketch-append.json", Paths.get(s, "sketch-meta.json"))
+
+    val a = root.resolve("ann").toString
+    AnnIndex.buildFrozen(
+      Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f))).toDF("cid", "cv"),
+      a, Array(Array(1.0, 0.0), Array(0.0, 1.0)))
+    same("ann-build.json", Paths.get(a, "ann-meta.json"))
+    AnnIndex.append(Seq((3L, Seq(1.0f, 1.0f))).toDF("cid", "cv"), a, "r1")
+    same("ann-append.json", Paths.get(a, "ann-meta.json"))
+
+    val c = root.resolve("cont").toString
+    ContainmentIndex.init(c)
+    same("cont-init.json", Paths.get(c, "cont-meta.json"))
+    ContainmentIndex.append(docs, "id", "text", c, "r1")
+    same("cont-append.json", Paths.get(c, "cont-meta.json"))
+
+    val k = root.resolve("cuckoo").toString
+    CuckooSeen.writeMeta(k,
+      CuckooSeen.CuckooMeta(2, 8192, Seq("seen/v00001", "seen/v00002")))
+    same("cuckoo-meta.json", Paths.get(k, "meta.json"))
+    CuckooSeen.writeMeta(k, CuckooSeen.CuckooMeta(1, 8))
+    same("cuckoo-meta-empty.json", Paths.get(k, "meta.json"))
+
+    val t = root.resolve("table").toString
+    val imgs = Seq(
+      ImageRecord("i1", Array[Byte](1, 2, 3), 4, 5, "png", "cap", 77L, "s",
+        2024, 1, "http://x/1", 11L, 100L, 1),
+      ImageRecord("i2", Array[Byte](4, 5), 6, 7, "jpeg", null, 78L, "s",
+        2024, 2, "http://x/2", 22L, 200L, 2)).toDS()
+    TableIO.commit(spark, t, imgs, Seq(11L, 22L).toDS(), "run-1",
+      Seq("s/2024/1", "s/2024/2"), "note")
+    same("table-v1.json", Paths.get(t, "snapshots", "v00001.json"))
+    same("table-runids-1.json", Paths.get(t, "snapshots", "runids.json"))
+    same("table-hint-1.txt", Paths.get(t, "version-hint.txt"))
+    TableIO.commit(spark, t, spark.emptyDataset[ImageRecord],
+      spark.emptyDataset[Long], "run-2", Nil)
+    same("table-v2.json", Paths.get(t, "snapshots", "v00002.json"))
+    same("table-runids-2.json", Paths.get(t, "snapshots", "runids.json"))
+    TableIO.compact(spark, t)
+    same("table-v3.json", Paths.get(t, "snapshots", "v00003.json"))
+    same("table-runids-3.json", Paths.get(t, "snapshots", "runids.json"))
+    same("table-hint-3.txt", Paths.get(t, "version-hint.txt"))
+  }
+}

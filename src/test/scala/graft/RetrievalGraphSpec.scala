@@ -141,35 +141,6 @@ class RetrievalGraphSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("deep fixed points: truncateEvery keeps 50 iterations plannable, values bit-identical") {
-    // truncation changes the PLAN, never the data: a 50-iteration
-    // PageRank with truncateEvery=8 must equal the untruncated chain
-    // bit-for-bit while its analyzed tree stays shallow (the
-    // untruncated logical plan grows ~linearly per iteration — fine at
-    // the oracle's 3-5 iterations, re-analysis-heavy at production
-    // depths). Same check for the fused spam-mass chain.
-    val nodes = spark.range(0, 60).toDF("id")
-    val edges = GraphOps.syntheticEdges(nodes, 60L)
-    val full = GraphOps.pageRankFixedPoint(nodes, edges, 50, 60L)
-    val trunc = GraphOps.pageRankFixedPoint(nodes, edges, 50, 60L,
-      truncateEvery = 8)
-    val a = full.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    val b = trunc.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    assert(a.toSeq == b.toSeq)
-    val fullNodes = full.queryExecution.analyzed.collect { case p => p }.size
-    val truncNodes = trunc.queryExecution.analyzed.collect { case p => p }.size
-    assert(truncNodes * 4 < fullNodes,
-      s"truncated plan ($truncNodes nodes) should be far below the " +
-        s"untruncated one ($fullNodes)")
-    val seeds = nodes.where(col("id") % 7 === 0)
-    val smFull = GraphOps.spamMass(nodes, edges, seeds, 12, 60L, 9L)
-      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long].toString)
-    val smTrunc = GraphOps.spamMass(nodes, edges, seeds, 12, 60L, 9L,
-        truncateEvery = 4)
-      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long].toString)
-    assert(smFull.toSeq == smTrunc.toSeq)
-  }
-
   // ---- DUST ----------------------------------------------------------
 
   test("dust: same-content param deletion mines a rule; different content and unfetched targets do not") {
