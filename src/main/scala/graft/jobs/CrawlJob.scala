@@ -168,15 +168,10 @@ object CrawlJob {
       .toMap
   }
 
-  /** Politeness-scheduled fetch over (site, host) domains.
-    * Secondary-sort pattern: hash-repartition on the domain key, sort
-    * within partitions, then stream domain runs — constant memory per
-    * task regardless of domain size. Emits byte-free log rows;
-    * payloads materialize in [[graft.fetch.PayloadStage]].
-    *
-    * `seen` here is a broadcast in-memory set — DEMO/TEST ONLY (capped
-    * at 10^6 keys). The production resume path is [[runResumable]]:
-    * Bloom-prefiltered exact join ([[flagSeenPersisted]]) feeding
+  /** [[scheduleAndFetchFlagged]] with the skip-if-exists flags taken
+    * from `seen`, a broadcast in-memory set — DEMO/TEST ONLY (capped at
+    * 10^6 keys). The production resume path is [[runResumable]]: a
+    * sketch-prefiltered exact join ([[flagSeen]]) feeding
     * [[scheduleAndFetchFlagged]]. */
   def scheduleAndFetch(spark: SparkSession, frontier: Dataset[ScheduledEntry],
       budget: PolitenessBudget,
@@ -189,35 +184,9 @@ object CrawlJob {
       "broadcast seen-set path is demo/test-only; use runResumable's " +
         "Bloom-prefiltered exact join at scale")
     val seenBc = spark.sparkContext.broadcast(seen)
-    val numPartitions = spark.sessionState.conf.numShufflePartitions
-    // domain key: (site, host) in reference-compat mode, host alone in
-    // strict web-polite mode (sites sharing a host share one budget)
-    def domainOf(e: ScheduledEntry): (String, String) =
-      (if (strictPerHost) "" else e.site, e.host)
-    val partKeys =
-      if (strictPerHost) Seq($"host") else Seq($"site", $"host")
-    frontier
-      .repartition(numPartitions, partKeys: _*)
-      .sortWithinPartitions(
-        (partKeys :+ $"seedSeq") :+ $"discoverySeq": _*)
-      .mapPartitions { it =>
-        // consecutive runs of one domain key = one politeness timeline
-        new Iterator[Iterator[CrawlLogEntry]] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Iterator[CrawlLogEntry] = {
-            val key = domainOf(buf.head)
-            val domain = new Iterator[ScheduledEntry] {
-              def hasNext: Boolean =
-                buf.hasNext && domainOf(buf.head) == key
-              def next(): ScheduledEntry = buf.next()
-            }
-            HostScheduler.run(domain,
-              hostBudgets.getOrElse(key._2, budget),
-              seenBc.value.contains)
-          }
-        }.flatten
-      }
+    scheduleAndFetchFlagged(
+      frontier.map(e => (e, seenBc.value.contains(e.urlHash))),
+      budget, strictPerHost, hostBudgets)
   }
 
   /** Payload materialization over the crawl log (see PayloadStage). */
@@ -226,78 +195,51 @@ object CrawlJob {
     log.flatMap(graft.fetch.PayloadStage.imageFor(_))
   }
 
-  /** Skip-if-exists flags at scale (D2): a Bloom prefilter splits the
-    * frontier so only might-contain candidates pay the shuffle of the
-    * exact join against the committed seen table; Bloom "no" answers
-    * are exact (no false negatives) and never join. The final flag is
-    * always exact — a false positive must not suppress a fetch. */
+  /** Skip-if-exists flags (D2), exact by construction. `probe` appends
+    * a seen sketch's `maybeSeen` column to the frontier (the persisted
+    * partition-aligned filters, [[graft.seen.BloomSeen.probeAligned]] or
+    * [[graft.seen.CuckooSeen.probeAligned]]): sketch "no" rows are exact
+    * (no false negatives) and skip the exact join, so only "maybe" rows
+    * pay its shuffle against the committed seen table. `None` joins
+    * every row. A false positive must not suppress a fetch, so the
+    * final flag is always the join's. */
   def flagSeen(frontier: Dataset[ScheduledEntry],
       seenTable: Dataset[Long],
-      bloom: Option[graft.seen.BloomSeen.PartitionedBloom])
+      probe: Option[DataFrame => DataFrame])
       : Dataset[(ScheduledEntry, Boolean)] = {
     val spark = frontier.sparkSession
     import spark.implicits._
-    bloom match {
-      case None =>
-        frontier.joinWith(seenTable.toDF("sh"),
-            frontier("urlHash") === col("sh"), "left_outer")
-          .map { case (e, r) => (e, r != null) }
-      case Some(b) =>
-        val probe = graft.seen.BloomSeen.probeColumn(spark, b, $"urlHash")
-        val flagged = frontier.withColumn("maybe", probe)
-        val definiteNew = flagged.filter(!$"maybe").drop("maybe")
-          .as[ScheduledEntry].map(e => (e, false))
-        val candidates = flagged.filter($"maybe").drop("maybe")
-          .as[ScheduledEntry]
-        val confirmed = candidates.joinWith(seenTable.toDF("sh"),
-            candidates("urlHash") === col("sh"), "left_outer")
-          .map { case (e, r) => (e, r != null) }
-        definiteNew.union(confirmed)
-      }
+    def confirm(entries: Dataset[ScheduledEntry]) =
+      entries.joinWith(seenTable.toDF("sh"),
+          entries("urlHash") === col("sh"), "left_outer")
+        .map { case (e, r) => (e, r != null) }
+    probe match {
+      case None => confirm(frontier)
+      case Some(p) =>
+        val probed = p(frontier.toDF())
+        val definiteNew = probed.filter(!col("maybeSeen"))
+          .drop("maybeSeen").as[ScheduledEntry].map(e => (e, false))
+        definiteNew.union(confirm(probed.filter(col("maybeSeen"))
+          .drop("maybeSeen").as[ScheduledEntry]))
+    }
   }
 
-  /** Skip-if-exists flags at 10^10-key scale: the Bloom prefilter is a
-    * PERSISTED partition-aligned filter directory (BloomSeen.write) —
-    * rows route by `pmod(urlHash, parts)` and each shuffle group
-    * streams against its single filter loaded inside the task; no
-    * driver materialization, no whole-map broadcast. Bloom "no" rows
-    * skip the exact join entirely; "maybe" rows are confirmed exactly. */
+  /** [[flagSeen]] against a PERSISTED partition-aligned Bloom filter
+    * directory ([[graft.seen.BloomSeen.write]]): no driver
+    * materialization, no whole-map broadcast. */
   def flagSeenPersisted(frontier: Dataset[ScheduledEntry],
       seenTable: Dataset[Long], bloomDir: String,
       meta: graft.seen.BloomSeen.BloomMeta)
       : Dataset[(ScheduledEntry, Boolean)] =
-    flagFromProbed(graft.seen.BloomSeen.probeAligned(frontier.toDF(),
-      "urlHash", bloomDir, meta), seenTable)
+    flagSeen(frontier, seenTable,
+      Some(graft.seen.BloomSeen.probeAligned(_, "urlHash", bloomDir, meta)))
 
-  /** [[flagSeenPersisted]] over the persisted cuckoo sketch — same
-    * routing/confirm contract, ~80× fewer false candidates reach the
-    * exact join (FPP ~1.2e-4 vs the Bloom's 1%). */
-  def flagSeenPersistedCuckoo(frontier: Dataset[ScheduledEntry],
-      seenTable: Dataset[Long], cuckooDir: String,
-      meta: graft.seen.CuckooSeen.CuckooMeta)
-      : Dataset[(ScheduledEntry, Boolean)] =
-    flagFromProbed(graft.seen.CuckooSeen.probeAligned(frontier.toDF(),
-      "urlHash", cuckooDir, meta), seenTable)
-
-  /** Sketch "no" rows are exact and skip the join; "maybe" rows are
-    * confirmed against the committed seen table (a false positive must
-    * not suppress a fetch). `probed` carries the aligned probes'
-    * `maybeSeen` column over the ScheduledEntry schema. */
-  private def flagFromProbed(probed: org.apache.spark.sql.DataFrame,
-      seenTable: Dataset[Long]): Dataset[(ScheduledEntry, Boolean)] = {
-    val spark = probed.sparkSession
-    import spark.implicits._
-    val definiteNew = probed.filter(!col("maybeSeen")).drop("maybeSeen")
-      .as[ScheduledEntry].map(e => (e, false))
-    val candidates = probed.filter(col("maybeSeen")).drop("maybeSeen")
-      .as[ScheduledEntry]
-    val confirmed = candidates.joinWith(seenTable.toDF("sh"),
-        candidates("urlHash") === col("sh"), "left_outer")
-      .map { case (e, r) => (e, r != null) }
-    definiteNew.union(confirmed)
-  }
-
-  /** scheduleAndFetch over pre-flagged entries (production path). */
+  /** Politeness-scheduled fetch over (site, host) domains, with the
+    * skip-if-exists flag precomputed per entry. Secondary-sort pattern:
+    * hash-repartition on the domain key, sort within partitions, then
+    * stream domain runs — constant memory per task regardless of domain
+    * size. Emits byte-free log rows; payloads materialize in
+    * [[graft.fetch.PayloadStage]]. */
   def scheduleAndFetchFlagged(
       flagged: Dataset[(ScheduledEntry, Boolean)],
       budget: PolitenessBudget,
@@ -307,6 +249,8 @@ object CrawlJob {
     val spark = flagged.sparkSession
     import spark.implicits._
     val numPartitions = spark.sessionState.conf.numShufflePartitions
+    // domain key: (site, host) in reference-compat mode, host alone in
+    // strict web-polite mode (sites sharing a host share one budget)
     def domainOf(e: ScheduledEntry): (String, String) =
       (if (strictPerHost) "" else e.site, e.host)
     val partKeys =
@@ -317,6 +261,7 @@ object CrawlJob {
       .sortWithinPartitions(
         (partKeys :+ col("_1.seedSeq")) :+ col("_1.discoverySeq"): _*)
       .mapPartitions { it =>
+        // consecutive runs of one domain key = one politeness timeline
         new Iterator[Iterator[CrawlLogEntry]] {
           private val buf = it.buffered
           def hasNext: Boolean = buf.hasNext
@@ -333,6 +278,21 @@ object CrawlJob {
         }.flatten
       }
   }
+
+  /** Partition count of a seen sketch over `seenCount` keys. It scales
+    * with BOTH the cluster conf (probe parallelism) and the key count
+    * (≤ `keysPerPart` keys per partition, so a single task never loads
+    * a multi-GiB filter no matter how large the seen set grows) — and
+    * is CAPPED from below by the key count too (≥ ~50k keys per
+    * partition): a small committed set must not fan out into conf-many
+    * near-empty filter files and a conf-wide probe shuffle just because
+    * the session has many cores. */
+  private def sketchParts(spark: SparkSession, seenCount: Long,
+      keysPerPart: Double): Int =
+    math.max(1, math.min(
+      math.max(spark.sessionState.conf.numShufflePartitions / 2,
+        math.ceil(seenCount / keysPerPart).toInt),
+      math.ceil(seenCount / 5e4).toInt))
 
   /** Skip flags via the per-run Bloom prefilter: partition-aligned
     * persisted filters REBUILT each run from the committed seen set
@@ -352,22 +312,11 @@ object CrawlJob {
     graft.table.StateFiles.list(java.nio.file.Paths.get(tableDir, "_bloom"))
       .foreach(graft.table.StateFiles.delete)
     val bloomDir = s"$tableDir/_bloom/$runId"
-    // partition count scales with BOTH the cluster conf (probe
-    // parallelism) and the key count (≤ ~100M keys ≈ 120 MiB filter
-    // per partition at 1% FPP, so a single task never loads a
-    // multi-GiB filter no matter how large the seen set grows) — and
-    // is CAPPED from below by the key count too (≥ ~50k keys per
-    // partition): a small committed set must not fan out into
-    // conf-many near-empty filter files and a conf-wide probe shuffle
-    // just because the session has many cores
-    val bloomParts = math.max(1, math.min(
-      math.max(spark.sessionState.conf.numShufflePartitions / 2,
-        math.ceil(seenCount / 100e6).toInt),
-      math.ceil(seenCount / 5e4).toInt))
     if (seenCount == 0) flagSeen(surviving, seenTable, None)
     else {
+      // ≤ ~100M keys ≈ 120 MiB filter per partition at 1% FPP
       val meta = graft.seen.BloomSeen.write(seenTable, bloomDir,
-        parts = bloomParts,
+        parts = sketchParts(spark, seenCount, 100e6),
         expectedKeys = math.max(seenCount, 1024L), fpp = 0.01)
       flagSeenPersisted(surviving, seenTable, bloomDir, meta)
     }
@@ -397,19 +346,12 @@ object CrawlJob {
     } else {
       val currentDirs = graft.table.TableIO.currentSnapshot(tableDir)
         .map(_.seenDirs).getOrElse(Nil)
-      def rebuild(): C.CuckooMeta = {
-        // ≤ ~200M keys ≈ 540 MiB filter per partition (16-bit
-        // fingerprints, 4-slot buckets, 84% sizing load + pow2 round);
-        // key-count floor as in flagViaBloom — a tiny set gets few
-        // partitions, not conf-many near-empty ones
-        val parts = math.max(1, math.min(
-          math.max(spark.sessionState.conf.numShufflePartitions / 2,
-            math.ceil(seenCount / 2e8).toInt),
-          math.ceil(seenCount / 5e4).toInt))
-        C.write(seenTable, dir, parts,
+      // ≤ ~200M keys ≈ 540 MiB filter per partition (16-bit
+      // fingerprints, 4-slot buckets, 84% sizing load + pow2 round)
+      def rebuild(): C.CuckooMeta =
+        C.write(seenTable, dir, sketchParts(spark, seenCount, 2e8),
           expectedKeys = math.max(seenCount * 2, 1024L),
           covered = currentDirs)
-      }
       val meta = C.readMeta(dir) match {
         case Some(m)
             if m.covered.toSet.subsetOf(currentDirs.toSet) &&
@@ -429,7 +371,8 @@ object CrawlJob {
           }
         case _ => rebuild()
       }
-      flagSeenPersistedCuckoo(surviving, seenTable, dir, meta)
+      flagSeen(surviving, seenTable,
+        Some(C.probeAligned(_, "urlHash", dir, meta)))
     }
   }
 
@@ -461,7 +404,7 @@ object CrawlJob {
       val result = CrawlResult(seeds, pruned, surviving, log,
         materializeImages(log))
       // Seen delta = Success-only hashes. The skip flags are EXACT by
-      // construction (flagSeen* confirms every Bloom "maybe" with an
+      // construction (flagSeen confirms every sketch "maybe" with an
       // exact join), so a Success row is provably absent from the
       // committed seen set and a Skipped row provably present — the
       // delta needs no `except(seenTable)`, which would re-shuffle the

@@ -173,22 +173,10 @@ object HostScheduler {
     }
   }
 
-  /** Strict variant: materializes outcomes and returns the final
-    * clock state for checkpointing (streaming mode). */
-  def runBuffered(entries: Seq[ScheduledEntry], budget: PolitenessBudget,
-      alreadySeen: Long => Boolean,
-      state0: DomainState): (Seq[CrawlLogEntry], DomainState) = {
-    val clock = new Clock(budget, state0)
-    val out = entries.map { e =>
-      if (alreadySeen(e.urlHash)) skippedEntry(e, clock.now)
-      else fetchOne(e, budget, clock)
-    }
-    (out, clock.snapshot)
-  }
-
-  /** As [[runBuffered]], with the skip-if-exists decision precomputed
-    * per entry (streaming scale path: flags come from a stream-static
-    * join against the committed seen table, not a driver-side set). */
+  /** Strict variant of [[runFlagged]] for streaming mode: materializes
+    * outcomes and returns the final clock state for checkpointing. The
+    * flags come from a stream-static join against the committed seen
+    * table, not a driver-side set. */
   def runBufferedFlagged(entries: Seq[(ScheduledEntry, Boolean)],
       budget: PolitenessBudget,
       state0: DomainState): (Seq[CrawlLogEntry], DomainState) = {

@@ -144,7 +144,7 @@ object CrawlQueries {
 
     // D2 at scale through the driver: two resumable runs against one
     // committed table — run 2 probes the PERSISTED partition-aligned
-    // Bloom (BloomSeen.write/probe) + exact join and must spend zero
+    // Bloom (BloomSeen.write/probeAligned) + exact join and must spend zero
     // budget re-fetching (all durable URLs come back `skipped`)
     "crawl_resume" -> ((s: SparkSession, _: String) => {
       val dir = java.nio.file.Files

@@ -1,6 +1,6 @@
 package graft.seen
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoder
@@ -18,16 +18,14 @@ import graft.url.Hashing
   * plan). Partition routing is `pmod(urlHash, P)`, aligned with the
   * frontier's hash bucketing so a probe touches exactly one filter.
   *
-  * THE SCALE PATH NEVER TOUCHES THE DRIVER: [[write]] persists each
-  * partition's filter as its own file (executors write their own
-  * partitions to shared table storage), and [[probe]] routes frontier
-  * rows by `pmod(urlHash, P)` so each shuffle group streams against
-  * exactly ONE filter, loaded lazily inside the task. At the design
-  * point (1.2 GiB/10^9 keys/partition, 10^10-URL seen set) the driver
-  * holds only a 3-field meta record and no executor ever sees more
-  * than its own partitions' filters. The legacy collect+broadcast
-  * path ([[build]]/[[probeColumn]]) is retained for small dimension
-  * tables and tests behind a hard total-size cap.
+  * NOTHING TOUCHES THE DRIVER: [[write]] persists each partition's
+  * filter as its own file (executors write their own partitions to
+  * shared table storage), and [[probeAligned]] routes frontier rows by
+  * `pmod(urlHash, P)` so each task streams against exactly ONE filter,
+  * loaded lazily inside the task. At the design point (1.2 GiB/10^9
+  * keys/partition, 10^10-URL seen set) the driver holds only a 3-field
+  * meta record and no executor ever sees more than its own
+  * partitions' filters.
   *
   * Sizing: bits/key ≈ 1.44·log2(1/fpp); at 1% FPP and 10^9 keys per
   * partition group that is ~1.2 GiB per partition — documented in
@@ -87,18 +85,6 @@ object BloomSeen {
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** A built partitioned filter: `parts` filters of `numBytes` each. */
-  final case class PartitionedBloom(parts: Int, numHashes: Int,
-      filters: Map[Int, Array[Byte]]) {
-    def mightContain(urlHash: Long): Boolean = {
-      val p = ((urlHash % parts) + parts) % parts
-      filters.get(p.toInt) match {
-        case Some(f) => BloomSeen.mightContain(f, urlHash, numHashes)
-        case None => false
-      }
-    }
-  }
-
   private def sizing(parts: Int, expectedKeys: Long,
       fpp: Double): (Int, Int) = {
     val perPart = math.max(64L, expectedKeys / parts)
@@ -106,49 +92,6 @@ object BloomSeen {
     // round bytes up; cap single-partition filters at 256 MiB
     (math.min((numBits + 7) / 8, 256L << 20).toInt, optimalNumHashes(fpp))
   }
-
-  /** The partition-filter DataFrame (part INT, filter BINARY) — built
-    * entirely on executors; shared by [[build]] and [[write]]. */
-  private def filterRows(hashes: Dataset[Long], parts: Int,
-      numBytes: Int, numHashes: Int): org.apache.spark.sql.DataFrame = {
-    val spark = hashes.sparkSession
-    import spark.implicits._
-    val bloomUdaf = udaf(BloomAggregator(numBytes, numHashes),
-      Encoders.scalaLong)
-    hashes.toDF("h")
-      .groupBy(pmod($"h", lit(parts)).cast("int").as("part"))
-      .agg(bloomUdaf($"h").as("filter"))
-  }
-
-  /** Hard cap on the collect+broadcast path: this path puts parts ×
-    * numBytes on the driver AND on every executor — test/demo only. */
-  val MaxCollectedBytes: Long = 64L << 20
-
-  /** TEST/DEMO ONLY — build P partition filters and collect them to
-    * the driver. Enforces [[MaxCollectedBytes]]; the scale path is
-    * [[write]] + [[probe]], which keeps every filter on executors. */
-  def build(hashes: Dataset[Long], parts: Int, expectedKeys: Long,
-      fpp: Double = 0.01): PartitionedBloom = {
-    val (numBytes, k) = sizing(parts, expectedKeys, fpp)
-    require(parts.toLong * numBytes <= MaxCollectedBytes,
-      s"collect+broadcast bloom of $parts×$numBytes B exceeds the " +
-        s"$MaxCollectedBytes B cap; use BloomSeen.write/probe " +
-        "(partition-aligned, no driver materialization) at scale")
-    val rows = filterRows(hashes, parts, numBytes, k).collect()
-    PartitionedBloom(parts, k,
-      rows.map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap)
-  }
-
-  /** Probe column for a [[build]]-produced (capped) filter map,
-    * broadcast once per job. */
-  def probeColumn(spark: SparkSession, bloom: PartitionedBloom,
-      hashCol: Column): Column = {
-    val bc = spark.sparkContext.broadcast(bloom)
-    val f = udf((h: Long) => bc.value.mightContain(h))
-    f(hashCol)
-  }
-
-  // ---- partition-aligned persisted filters (the 10^10-key path) -----
 
   /** Descriptor of a persisted filter directory (driver-side state is
     * ONLY this record, never the filters). */
@@ -158,56 +101,39 @@ object BloomSeen {
     java.nio.file.Paths.get(dir, f"part-$part%05d.bloom")
 
   /** Build P partition filters and persist each as its own file under
-    * `dir` (shared table storage on a real cluster). Executors write
-    * their own partitions ([[graft.table.StateFiles.replaceFromTask]]);
-    * nothing is collected or broadcast.
-    * One filter file per non-empty partition. */
+    * `dir` (shared table storage on a real cluster): the typed
+    * [[BloomAggregator]] builds one filter per `pmod(hash, parts)`
+    * group on executors, and each task writes its own partitions
+    * ([[graft.table.StateFiles.replaceFromTask]]); nothing is collected
+    * or broadcast. One filter file per non-empty partition. */
   def write(hashes: Dataset[Long], dir: String, parts: Int,
       expectedKeys: Long, fpp: Double = 0.01): BloomMeta = {
+    val spark = hashes.sparkSession
+    import spark.implicits._
     val (numBytes, k) = sizing(parts, expectedKeys, fpp)
+    val bloomUdaf = udaf(BloomAggregator(numBytes, k), Encoders.scalaLong)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    filterRows(hashes, parts, numBytes, k).foreachPartition {
-      (it: Iterator[org.apache.spark.sql.Row]) =>
+    hashes.toDF("h")
+      .groupBy(pmod($"h", lit(parts)).cast("int").as("part"))
+      .agg(bloomUdaf($"h").as("filter"))
+      .foreachPartition { (it: Iterator[Row]) =>
         it.foreach { r =>
           graft.table.StateFiles.replaceFromTask(
             filterFile(dir, r.getInt(0)), r.getAs[Array[Byte]](1))
         }
-    }
+      }
     BloomMeta(parts, k, numBytes)
   }
 
-  /** Partition-aligned probe: route rows by `pmod(hash, parts)` so one
-    * shuffle group = one filter partition, then stream each group
-    * against its single filter, loaded lazily INSIDE the task (a task
-    * holds at most one filter at a time; a missing file means the
-    * partition is empty → definite miss). Returns (row, mightBeSeen);
-    * "false" is exact (Bloom has no false negatives), "true" must be
-    * confirmed by the exact join. */
-  /** Column-keyed aligned probe (the production shape): appends
-    * `maybeSeen` to `df` via [[SketchProbe.probeAligned]] — a codegen
-    * `pmod` repartition instead of [[probe]]'s typed groupByKey,
-    * which sorts every partition by its lambda key for nothing. */
-  def probeAligned(df: org.apache.spark.sql.DataFrame, hashCol: String,
-      dir: String, meta: BloomMeta): org.apache.spark.sql.DataFrame =
+  /** Partition-aligned probe: appends `maybeSeen` to `df` via
+    * [[SketchProbe.probeAligned]] — rows route by `pmod(hash, parts)`
+    * and each task streams against one filter at a time, loaded lazily
+    * INSIDE the task (a missing file means the partition is empty →
+    * definite miss). "false" is exact (Bloom has no false negatives),
+    * "true" must be confirmed by the exact join. */
+  def probeAligned(df: DataFrame, hashCol: String, dir: String,
+      meta: BloomMeta): DataFrame =
     SketchProbe.probeAligned(df, hashCol, meta.parts,
       part => filterFile(dir, part),
       (f, h) => mightContain(f, h, meta.numHashes))
-
-  def probe[T](ds: Dataset[T], dir: String, meta: BloomMeta)(
-      hashOf: T => Long)(
-      implicit enc: org.apache.spark.sql.Encoder[(T, Boolean)])
-      : Dataset[(T, Boolean)] = {
-    import ds.sparkSession.implicits.newIntEncoder
-    val parts = meta.parts
-    val k = meta.numHashes
-    ds.groupByKey(e => java.lang.Math.floorMod(hashOf(e), parts))
-      .flatMapGroups { (part: Int, it: Iterator[T]) =>
-        val f = filterFile(dir, part)
-        if (!java.nio.file.Files.exists(f)) it.map(e => (e, false))
-        else {
-          val filter = java.nio.file.Files.readAllBytes(f)
-          it.map(e => (e, mightContain(filter, hashOf(e), k)))
-        }
-      }
-  }
 }

@@ -43,14 +43,15 @@ import graft.url.Hashing
   * the sketch for rebuild). [[deleteFromDir]] additionally FAILS on
   * any miss rather than guessing.
   *
-  * Distribution mirrors [[BloomSeen]]'s scale path: P independent
-  * filters routed by `floorMod(urlHash, P)`, each built/updated/probed
-  * by the one task that owns its shuffle group, persisted one file per
-  * partition by [[StateFiles.replaceFromTask]]. The driver holds only
+  * Distribution mirrors [[BloomSeen]]: P independent filters routed
+  * by `floorMod(urlHash, P)`, each built/updated/probed by the one task
+  * that owns its shuffle group, persisted one file per partition by
+  * [[StateFiles.replaceFromTask]]. The driver holds only
   * [[CuckooMeta]], swapped by [[StateFiles.writeJson]].
   * Unlike Bloom bit-OR, cuckoo tables don't merge, so builds shuffle
-  * keys to their owning task (`groupByKey`) instead of partial-agg —
-  * the same data movement the Bloom UDAF's final merge pays.
+  * keys to their owning task (a `pmod` repartition) instead of
+  * partial-agg — the same data movement the Bloom UDAF's final merge
+  * pays.
   */
 object CuckooSeen {
 
@@ -317,32 +318,10 @@ object CuckooSeen {
     next
   }
 
-  /** Partition-aligned probe — identical routing contract to
-    * [[BloomSeen.probe]]: "false" is exact for inserted keys, "true"
-    * must be confirmed by the exact join (FPP ~1.2e-4). Test/compat
-    * surface; the production flag path uses [[probeAligned]]. */
-  def probe[T](ds: Dataset[T], dir: String, meta: CuckooMeta)(
-      hashOf: T => Long)(
-      implicit enc: org.apache.spark.sql.Encoder[(T, Boolean)])
-      : Dataset[(T, Boolean)] = {
-    import ds.sparkSession.implicits.newIntEncoder
-    val parts = meta.parts
-    ds.groupByKey(e => java.lang.Math.floorMod(hashOf(e), parts))
-      .flatMapGroups { (part: Int, it: Iterator[T]) =>
-        val f = filterFile(dir, part)
-        if (!Files.exists(f)) it.map(e => (e, false))
-        else {
-          val filter = Files.readAllBytes(f)
-          it.map(e => (e, mightContain(filter, hashOf(e))))
-        }
-      }
-  }
-
-  /** Column-keyed aligned probe (the production shape): appends
-    * `maybeSeen` to `df`, routing by a `pmod` column repartition so
-    * the exchange stays whole-stage-codegen'd — the typed [[probe]]
-    * sorts every partition by its lambda key, a cost the semantics
-    * never needed (any row order within the owning task is fine). */
+  /** Partition-aligned probe — the routing contract of
+    * [[BloomSeen.probeAligned]]: appends `maybeSeen` to `df` via
+    * [[SketchProbe.probeAligned]]; "false" is exact for inserted keys,
+    * "true" must be confirmed by the exact join (FPP ~1.2e-4). */
   def probeAligned(df: org.apache.spark.sql.DataFrame, hashCol: String,
       dir: String, meta: CuckooMeta): org.apache.spark.sql.DataFrame =
     SketchProbe.probeAligned(df, hashCol, meta.parts,

@@ -75,15 +75,11 @@ object StreamingCrawl {
       : Dataset[StreamedOutcome] = {
     val spark = frontier.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val flagged: Dataset[(ScheduledEntry, Boolean)] = seenTable match {
       case None => frontier.map(e => (e, false))
-      case Some(st) =>
-        // stream-static left-outer join (D2 at scale: the static seen
-        // side is a table, never a driver-side set)
-        frontier.joinWith(st.toDF("sh"),
-            frontier("urlHash") === col("sh"), "left_outer")
-          .map { case (e, r) => (e, r != null) }
+      // stream-static left-outer join (D2 at scale: the static seen
+      // side is a table, never a driver-side set)
+      case Some(st) => graft.jobs.CrawlJob.flagSeen(frontier, st, None)
     }
     flagged
       .groupByKey(t =>

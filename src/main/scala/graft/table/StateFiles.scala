@@ -140,6 +140,9 @@ object StateFiles {
     names.map(d => d.substring(d.lastIndexOf('v') + 1).toInt)
       .foldLeft(0)(math.max) + 1
 
+  /** A delta dir's own name: `vNNNNN`. */
+  private val DeltaName = """v\d+""".r
+
   // ---- delta chains --------------------------------------------------
 
   /** The lineage fields of an index meta: indexed `docs`, the live
@@ -165,8 +168,10 @@ object StateFiles {
     *    at-least-once, and a re-appended batch would self-pair on
     *    every later probe.
     *  - Rewrite (compact, deleteIds): write ONE delta from the live
-    *    ones, swap the meta, then reap the superseded dirs. The write
-    *    counts its own rows, so emptiness costs no extra job; an
+    *    ones, swap the meta, then reap every `vNNNNN` dir under the
+    *    delta roots that the new meta does not name — by listing, so a
+    *    crash mid-reap leaves debris only until the next rewrite. The
+    *    write counts its own rows, so emptiness costs no extra job; an
     *    emptied index references no delta and keeps no delta dir.
     *
     * `layout(d)`: the dirs (relative to the index dir) delta `d`
@@ -230,14 +235,19 @@ object StateFiles {
           if (docs == 0L) m.withChain(0L, Nil, m.runIds)
           else m.withChain(docs, Seq(delta), m.runIds))
         write(dir, next)
-        val reaped = (m.deltas :+ delta).filterNot(next.deltas.contains)
-          .flatMap(layout) ++ superseded
-        reaped.foreach(r => delete(Paths.get(dir, r)))
+        // reap by listing, not from `m`: a crash between an earlier
+        // swap and its reap left superseded deltas no meta names
+        val base = Paths.get(dir)
+        val live = next.deltas.flatMap(layout).map(base.resolve).toSet
+        val roots =
+          layout(s"${prefix}v").map(r => base.resolve(r).getParent).distinct
+        roots.flatMap(list).filterNot(live)
+          .filter(p => DeltaName.matches(p.getFileName.toString))
+          .foreach(delete)
+        superseded.foreach(r => delete(base.resolve(r)))
         // a delta root left empty goes too: an emptied index keeps no
         // delta dir (a schema-less parquet dir would poison a read)
-        reaped.flatMap(r => Option(Paths.get(r).getParent)).distinct
-          .map(p => Paths.get(dir).resolve(p))
-          .filter(p => Files.isDirectory(p) && list(p).isEmpty)
+        roots.filter(p => Files.isDirectory(p) && list(p).isEmpty)
           .foreach(delete)
         next
       }

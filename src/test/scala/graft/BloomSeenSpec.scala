@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.seen.BloomSeen
@@ -8,52 +10,67 @@ import graft.url.Hashing
 class BloomSeenSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  private def tmp(tag: String): String =
+    Files.createTempDirectory(tag).toString
+
+  /** `hashes` through the persisted filters at `dir`: (hash, maybeSeen). */
+  private def probe(hashes: Seq[Long], dir: String,
+      meta: BloomSeen.BloomMeta): Map[Long, Boolean] = {
+    import spark.implicits._
+    BloomSeen.probeAligned(spark.createDataset(hashes).toDF("urlHash"),
+        "urlHash", dir, meta)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+  }
+
+  /** Driver-side reference for [[BloomSeen.probeAligned]]: read the one
+    * filter file of `h`'s partition and test it (a missing file is an
+    * empty partition). */
+  private def reference(dir: String, meta: BloomSeen.BloomMeta)(
+      h: Long): Boolean = {
+    val f = Paths.get(dir,
+      f"part-${java.lang.Math.floorMod(h, meta.parts)}%05d.bloom")
+    Files.exists(f) &&
+      BloomSeen.mightContain(Files.readAllBytes(f), h, meta.numHashes)
+  }
+
+  private def filterBytes(dir: String): Map[String, Seq[Byte]] =
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".bloom"))
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+
   test("no false negatives; FPP within 2x of configured") {
     import spark.implicits._
     val n = 50000
     val inserted = (0 until n).map(i => Hashing.mix(i.toLong, 1L))
-    val bloom = BloomSeen.build(spark.createDataset(inserted), parts = 8,
-      expectedKeys = n.toLong, fpp = 0.01)
-    // every inserted key must hit
-    assert(inserted.forall(bloom.mightContain), "false negative!")
+    val dir = tmp("bloom-fpp")
+    val meta = BloomSeen.write(spark.createDataset(inserted), dir,
+      parts = 8, expectedKeys = n.toLong, fpp = 0.01)
     // false-positive rate on disjoint keys
     val probes = (0 until n).map(i => Hashing.mix(i.toLong, 999L))
       .filterNot(inserted.toSet)
-    val fp = probes.count(bloom.mightContain).toDouble / probes.size
+    val flags = probe(inserted ++ probes, dir, meta)
+    // every inserted key must hit
+    assert(inserted.forall(flags), "false negative!")
+    val fp = probes.count(flags).toDouble / probes.size
     assert(fp <= 0.02, s"FPP $fp exceeds 2x configured 0.01")
   }
 
   test("merge is associative/commutative (partition-order invariant)") {
     import spark.implicits._
     val keys = (0 until 20000).map(i => Hashing.mix(i.toLong, 7L))
-    val a = BloomSeen.build(
-      spark.createDataset(keys).repartition(13), 4, 20000, 0.01)
-    val b = BloomSeen.build(
-      spark.createDataset(keys.reverse).repartition(3), 4, 20000, 0.01)
-    assert(a.parts === b.parts)
-    a.filters.keySet.foreach { p =>
-      assert(java.util.Arrays.equals(a.filters(p), b.filters(p)),
-        s"partition $p filter differs under repartitioning")
-    }
-  }
-
-  test("probe column filters a frontier DataFrame") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val seen = (0 until 1000).map(i => Hashing.mix(i.toLong, 3L))
-    val bloom = BloomSeen.build(spark.createDataset(seen), 4, 1000, 0.01)
-    val frontier = spark.createDataset(
-      seen.take(100) ++ (0 until 100).map(i => Hashing.mix(i.toLong, 555L)))
-      .toDF("urlHash")
-    val kept = frontier.filter(
-      !BloomSeen.probeColumn(spark, bloom, col("urlHash"))).count()
-    // all 100 seen drop; ~100 unseen survive modulo false positives
-    assert(kept >= 95 && kept <= 100, s"kept=$kept")
+    val (dirA, dirB) = (tmp("bloom-a"), tmp("bloom-b"))
+    val a = BloomSeen.write(
+      spark.createDataset(keys).repartition(13), dirA, 4, 20000, 0.01)
+    val b = BloomSeen.write(
+      spark.createDataset(keys.reverse).repartition(3), dirB, 4, 20000, 0.01)
+    assert(a === b)
+    val (filesA, filesB) = (filterBytes(dirA), filterBytes(dirB))
+    assert(filesA.size === 4)
+    assert(filesA === filesB, "a filter file differs under repartitioning")
   }
 
   test("persisted partition-aligned filters: write on executors, probe one filter per group") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bloom").toString
+    val dir = tmp("bloom")
     val n = 20000
     val seen = (0 until n).map(i => Hashing.mix(i.toLong, 3L))
     val meta = BloomSeen.write(spark.createDataset(seen), dir,
@@ -68,28 +85,13 @@ class BloomSeenSpec extends AnyFunSuite {
     // mostly definite-new
     val unseen = (0 until n).map(i => Hashing.mix(i.toLong, 999L))
       .filterNot(seen.toSet)
-    val ds = spark.createDataset(seen ++ unseen)
-    val flags = BloomSeen.probe(ds, dir, meta)(identity).collect().toMap
+    val flags = probe(seen ++ unseen, dir, meta)
     assert(seen.forall(flags(_)), "false negative in persisted probe")
     val fp = unseen.count(flags(_)).toDouble / unseen.size
     assert(fp <= 0.02, s"FPP $fp exceeds 2x configured 0.01")
-    // the flags equal the capped in-memory path bit-for-bit
-    val mem = BloomSeen.build(spark.createDataset(seen), 8, n.toLong, 0.01)
-    assert((seen ++ unseen).forall(h => flags(h) == mem.mightContain(h)))
-    // and the column-routed aligned probe (production path) agrees
-    val aligned = BloomSeen.probeAligned(ds.toDF("urlHash"), "urlHash",
-        dir, meta)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert((seen ++ unseen).forall(h => aligned(h) == flags(h)))
-  }
-
-  test("collect+broadcast path is hard-capped (scale path is write/probe)") {
-    import spark.implicits._
-    val ds = spark.createDataset(Seq(1L, 2L))
-    // 10^10 expected keys over 4 partitions → ~1.2 GiB/partition ≫ cap
-    assertThrows[IllegalArgumentException] {
-      BloomSeen.build(ds, parts = 4, expectedKeys = 10000000000L)
-    }
+    // the flags equal a driver-side read of each key's filter
+    // bit-for-bit
+    assert((seen ++ unseen).forall(h => flags(h) == reference(dir, meta)(h)))
   }
 
   test("sizing math matches the published formulas") {

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Paths
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.IndexFixtures._
@@ -21,7 +23,8 @@ import graft.table.{StateFiles, TableIO}
   *    run left.
   *
   * Unreferenced debris (an orphan delta, a tmp file) is allowed: no
-  * reader resolves it. */
+  * reader resolves it. An index's next rewrite reaps the orphan deltas
+  * under its delta roots. */
 class CrashPointSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -149,6 +152,45 @@ class CrashPointSpec extends AnyFunSuite {
         c.replay.getOrElse(c.run)(dir)
         assert(c.view(dir) == fresh,
           s"replay after a crash at mutation $n of $mutations diverged")
+      }
+    }
+
+  /** The `vNNNNN` dirs under `s`'s delta roots that its meta at `dir`
+    * does not name. */
+  private def unreferenced(s: Store, dir: String): Seq[String] = {
+    val live = s.meta(dir).deltas.toSet
+    for {
+      root <- s.roots
+      child <- StateFiles.list(Paths.get(dir, root))
+      name = child.getFileName.toString
+      if name.matches("v\\d+") && !live(s"$root/$name") && !live(name)
+    } yield s"$root/$name"
+  }
+
+  for (s <- stores)
+    test(s"${s.name}.compact: after a crash at any mutation, the replay and one more append + compact leave no unreferenced delta dir") {
+      val template = tmpDir("reap-template")
+      s.create(template)
+      s.append(template, batch1, "r1")
+      val clean = tmpDir("reap-clean")
+      copyTree(template, clean)
+      StateFiles.crashAt(0)
+      s.compact(clean)
+      val mutations = StateFiles.mutationCount
+      for (n <- 1 to mutations) {
+        val dir = tmpDir("reap")
+        copyTree(template, dir)
+        StateFiles.crashAt(n)
+        try intercept[StateFiles.InjectedCrash](s.compact(dir))
+        finally StateFiles.crashAt(0)
+        s.compact(dir)
+        // a one-delta index compacts to itself: append first, so the
+        // last compact rewrites
+        s.append(dir, batch2, "r2")
+        s.compact(dir)
+        val orphans = unreferenced(s, dir)
+        assert(orphans.isEmpty,
+          s"crash at mutation $n of $mutations left orphan deltas $orphans")
       }
     }
 }

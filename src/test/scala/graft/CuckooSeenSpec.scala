@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.seen.CuckooSeen
@@ -10,6 +12,15 @@ class CuckooSeenSpec extends AnyFunSuite {
 
   private def keys(n: Int, salt: Long): IndexedSeq[Long] =
     (0 until n).map(i => Hashing.mix(i.toLong, salt))
+
+  /** `hashes` through the persisted filters at `dir`: (hash, maybeSeen). */
+  private def probe(hashes: Seq[Long], dir: String,
+      meta: CuckooSeen.CuckooMeta): Map[Long, Boolean] = {
+    import spark.implicits._
+    CuckooSeen.probeAligned(spark.createDataset(hashes).toDF("urlHash"),
+        "urlHash", dir, meta)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+  }
 
   test("no false negatives; FPP far below the bloom's 1%") {
     val n = 50000
@@ -63,8 +74,7 @@ class CuckooSeenSpec extends AnyFunSuite {
       parts = 8, expectedKeys = n.toLong)
     assert(meta.parts === 8)
     val frontier = seen.take(500) ++ keys(500, 777L)
-    val flagged = CuckooSeen.probe(
-      spark.createDataset(frontier), dir, meta)(identity).collect().toMap
+    val flagged = probe(frontier, dir, meta)
     assert(seen.take(500).forall(flagged(_)), "persisted false negative")
     val fps = keys(500, 777L).filterNot(seen.toSet).count(flagged(_))
     assert(fps <= 5, s"$fps false positives in 500 unseen probes")
@@ -75,8 +85,7 @@ class CuckooSeenSpec extends AnyFunSuite {
     val meta2 = CuckooSeen.write(
       spark.createDataset(seen.reverse).repartition(13), dir2,
       parts = 8, expectedKeys = n.toLong)
-    val flagged2 = CuckooSeen.probe(
-      spark.createDataset(frontier), dir2, meta2)(identity).collect().toMap
+    val flagged2 = probe(frontier, dir2, meta2)
     assert(seen.take(500).forall(flagged2(_)))
   }
 
@@ -96,10 +105,8 @@ class CuckooSeenSpec extends AnyFunSuite {
     val mf = CuckooSeen.write(spark.createDataset(base ++ delta), dirFull,
       parts = 4, expectedKeys = 40000L)
     val probeSet = (base ++ delta) ++ keys(2000, 999L)
-    val inc = CuckooSeen.probe(
-      spark.createDataset(probeSet), dirInc, m1)(identity).collect().toMap
-    val full = CuckooSeen.probe(
-      spark.createDataset(probeSet), dirFull, mf)(identity).collect().toMap
+    val inc = probe(probeSet, dirInc, m1)
+    val full = probe(probeSet, dirFull, mf)
     assert((base ++ delta).forall(inc(_)), "incremental false negative")
     assert((base ++ delta).forall(full(_)))
   }
@@ -113,8 +120,7 @@ class CuckooSeenSpec extends AnyFunSuite {
     val dropped = all.take(2000)
     val m2 = CuckooSeen.deleteFromDir(spark.createDataset(dropped), dir, m,
       Seq("seen/v00002"))
-    val flagged = CuckooSeen.probe(
-      spark.createDataset(all), dir, m2)(identity).collect().toMap
+    val flagged = probe(all, dir, m2)
     assert(all.drop(2000).forall(flagged(_)),
       "eviction created a false negative on a kept key")
     assert(dropped.count(flagged(_)) <= 10, "eviction left dropped keys")
@@ -128,19 +134,22 @@ class CuckooSeenSpec extends AnyFunSuite {
     }
   }
 
-  test("probeAligned (column route, production path) matches the typed probe") {
+  test("probeAligned (column route, production path) matches a driver-side read") {
     import spark.implicits._
     val seen = keys(20000, 41L)
     val dir = java.nio.file.Files.createTempDirectory("cuckoo-al").toString
     val meta = CuckooSeen.write(spark.createDataset(seen), dir,
       parts = 8, expectedKeys = seen.size.toLong)
     val probes = seen.take(1000) ++ keys(1000, 4321L)
-    val aligned = CuckooSeen.probeAligned(
-        spark.createDataset(probes).toDF("urlHash"), "urlHash", dir, meta)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val typed = CuckooSeen.probe(
-      spark.createDataset(probes), dir, meta)(identity).collect().toMap
-    assert(aligned === typed)
+    val aligned = probe(probes, dir, meta)
+    // reference: the one filter file of each key's partition, read and
+    // tested on the driver (a missing file is an empty partition)
+    def reference(h: Long): Boolean = {
+      val f = Paths.get(dir,
+        f"part-${java.lang.Math.floorMod(h, meta.parts)}%05d.cuckoo")
+      Files.exists(f) && CuckooSeen.mightContain(Files.readAllBytes(f), h)
+    }
+    assert(aligned === probes.map(h => h -> reference(h)).toMap)
   }
 
   test("overfull build fails instead of dropping inserts") {

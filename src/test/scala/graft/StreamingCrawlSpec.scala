@@ -345,7 +345,8 @@ class StreamingCrawlSpec extends AnyFunSuite {
       // advance the watermark far past hash 1's expiry (0 + 2 min):
       // its state row is EVICTED (bounded state), so a much-later
       // re-crawl of the same URL re-emits — the durable cross-run
-      // guard is BloomSeen, not this operator
+      // guard is the committed seen set (CrawlJob.flagSeen), not this
+      // operator
       in.addData(outcome(9, 600000))
       q.processAllAvailable()
       in.addData(outcome(1, 601000))
