@@ -684,19 +684,25 @@ object Bench {
             parts = 16, expectedKeys = total + deltaN, fpp = 0.01)
         }
         // cuckoo: build once (amortized away), then per-run delta
-        // insert + one period eviction
-        var meta = null.asInstanceOf[graft.seen.CuckooSeen.CuckooMeta]
+        // insert + one period eviction, each through the sync a crawl
+        // table runs — over a table whose committed seen dirs are the
+        // base set (v1) and one run's delta (v2)
+        val C = graft.seen.CuckooSeen
+        base.toDF("urlHash").write.parquet(s"$tmp/seen/v1")
+        delta.toDF("urlHash").write.parquet(s"$tmp/seen/v2")
+        val v1 = Seq("seen/v1")
+        val v12 = v1 :+ "seen/v2"
         val cuckooBuild = timed {
-          meta = graft.seen.CuckooSeen.write(base, s"$tmp/cuckoo",
-            parts = 16, expectedKeys = total * 2)
+          C.sync(s, tmp, v1, v1, C.Referenced,
+            Some(C.Build(base, total, parts = 16)))
         }
         val cuckooDelta = timed {
-          meta = graft.seen.CuckooSeen.insertIntoDir(delta, s"$tmp/cuckoo",
-            meta, Seq("delta"))
+          C.sync(s, tmp, v12, v12, C.Referenced,
+            Some(C.Build(base.union(delta), total + deltaN, parts = 16)))
         }
         val cuckooEvict = timed {
-          meta = graft.seen.CuckooSeen.deleteFromDir(keys(evictN, 1L),
-            s"$tmp/cuckoo", meta, Seq("evicted"))
+          C.sync(s, tmp, v12, Seq("seen/v3"),
+            C.Rewritten(Some(keys(evictN, 1L))))
         }
         println(f"""{"metric":"sketch_maintenance","value":$bloomRebuild%.2f,""" +
           f""""unit":"sec","keys":$total,"delta":$deltaN,"evict":$evictN,""" +

@@ -325,66 +325,39 @@ object CrawlJob {
   /** Skip flags via the PERSISTED cuckoo sketch (cfg.seenSketch =
     * "cuckoo"): instead of rebuilding a filter set from all committed
     * keys every run (O(total), ~10^10 keys at the design point), the
-    * sketch lives in table storage across runs and each run inserts
-    * only the seen-delta dirs it has not yet covered — O(delta) per
-    * run. A full rebuild happens only when (a) no sketch exists, (b)
-    * maintenance rewrote seen dirs the sketch thinks it covers
-    * (compaction updates coverage in place; a failed eviction drops
-    * the sketch), or (c) growth crossed 95% occupancy — rebuilds size
-    * at 2× the current key count, so they are amortized-logarithmic
-    * over the table's life. */
+    * sketch lives in table storage across runs and each run start
+    * inserts only the seen-delta dirs it does not cover yet — O(delta)
+    * per run ([[graft.seen.CuckooSeen.sync]]). A full rebuild happens
+    * only when no valid sketch exists or growth crossed 95% occupancy —
+    * rebuilds size at 2× the current key count, so they are
+    * amortized-logarithmic over the table's life. */
   private def flagViaCuckoo(spark: SparkSession, tableDir: String,
       seenTable: Dataset[Long], seenCount: Long,
       surviving: Dataset[ScheduledEntry])
       : Dataset[(ScheduledEntry, Boolean)] = {
-    import spark.implicits._
     val C = graft.seen.CuckooSeen
-    val dir = C.sketchDir(tableDir)
-    if (seenCount == 0) {
-      graft.table.StateFiles.delete(java.nio.file.Paths.get(dir))
-      flagSeen(surviving, seenTable, None)
-    } else {
-      val currentDirs = graft.table.TableIO.currentSnapshot(tableDir)
-        .map(_.seenDirs).getOrElse(Nil)
-      // ≤ ~200M keys ≈ 540 MiB filter per partition (16-bit
-      // fingerprints, 4-slot buckets, 84% sizing load + pow2 round)
-      def rebuild(): C.CuckooMeta =
-        C.write(seenTable, dir, sketchParts(spark, seenCount, 2e8),
-          expectedKeys = math.max(seenCount * 2, 1024L),
-          covered = currentDirs)
-      val meta = C.readMeta(dir) match {
-        case Some(m)
-            if m.covered.toSet.subsetOf(currentDirs.toSet) &&
-              seenCount <= (m.parts.toLong *
-                (m.bucketBytes / C.BytesPerBucket) * C.SlotsPerBucket
-                * 0.95).toLong =>
-          val newDirs = currentDirs.filterNot(m.covered.toSet)
-          if (newDirs.isEmpty) m
-          else {
-            val delta = spark.read
-              .parquet(newDirs.map(d => s"$tableDir/$d"): _*)
-              .select($"urlHash").as[Long]
-            // unlucky kick chains can overfill a filter below the 95%
-            // gate; a rebuild is semantically identical, just unamortized
-            try C.insertIntoDir(delta, dir, m, currentDirs)
-            catch { case _: Exception => rebuild() }
-          }
-        case _ => rebuild()
-      }
-      flagSeen(surviving, seenTable,
-        Some(C.probeAligned(_, "urlHash", dir, meta)))
-    }
+    val dirs = graft.table.TableIO.currentSnapshot(tableDir)
+      .map(_.seenDirs).getOrElse(Nil)
+    // ≤ ~200M keys ≈ 540 MiB filter per partition (16-bit
+    // fingerprints, 4-slot buckets, 84% sizing load + pow2 round)
+    val meta = C.sync(spark, tableDir, dirs, dirs, C.Referenced,
+      Some(C.Build(seenTable, seenCount, sketchParts(spark, seenCount, 2e8))))
+    flagSeen(surviving, seenTable,
+      meta.map(m => C.probeAligned(_, "urlHash", C.sketchDir(tableDir), m)))
   }
 
   /** Production resume loop: read the committed seen set from the
     * table, Bloom-prefilter + exact-join the skip flags, crawl, commit
-    * a new snapshot with lineage. A reserved maintenance runId is
-    * refused before any work (IllegalArgumentException); a throw in any
-    * later step releases every frame the run cached. */
+    * a new snapshot with lineage. A reserved maintenance runId or an
+    * unknown `cfg.seenSketch` is refused before any work
+    * (IllegalArgumentException); a throw in any later step releases
+    * every frame the run cached. */
   def runResumable(spark: SparkSession, cfg: CrawlConfig, tableDir: String,
       runId: String): (CrawlResult, graft.table.TableIO.Snapshot) = {
     import spark.implicits._
     graft.table.TableIO.requireDeltaRunId(runId)
+    require(cfg.seenSketch == "bloom" || cfg.seenSketch == "cuckoo",
+      s"seenSketch '${cfg.seenSketch}' is neither \"bloom\" nor \"cuckoo\"")
     val pinned = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
     def pin[T](ds: Dataset[T]): Dataset[T] = { pinned += ds; ds.cache() }
     try {

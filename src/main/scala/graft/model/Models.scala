@@ -168,7 +168,8 @@ final case class CrawlConfig(
     /** URL-seen sketch backend for resumable runs: `"bloom"` (per-run
       * rebuild from the committed seen set) or `"cuckoo"` (persisted
       * across runs — per-run DELTA inserts, deletable on period
-      * invalidation; see graft.seen.CuckooSeen). */
+      * invalidation; see graft.seen.CuckooSeen). `runResumable`
+      * refuses any other value. */
     seenSketch: String = "bloom") {
   def budgetFor(host: String): PolitenessBudget =
     hostBudgets.getOrElse(host, budget)

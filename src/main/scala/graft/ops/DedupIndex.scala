@@ -320,21 +320,14 @@ object DedupIndex {
             // whole 10^11-row index streams through the shuffle to
             // match a batch that touches a sliver of its buckets. The
             // bloom costs one cheap pass over the ALREADY-materialized
-            // signatures; sizing is measured (batchSigRows), fpp 3% —
-            // a false positive only forwards a row the join drops.
+            // signatures; sizing is measured (batchSigRows).
             // Capped: past ~2^27 distinct hashes the filter itself is
             // driver-heavy (~200 MB); such a "batch" is a backfill —
             // run the batch dataflow instead.
             val pruned =
-              if (batchSigRows <= (1L << 27)) {
-                val bf = nb.stat.bloomFilter("bandHash",
-                  batchSigRows, 0.03)
-                val bc = spark.sparkContext.broadcast(bf)
-                val mightContain =
-                  udf((h: Long) => bc.value.mightContainLong(h))
-                    .withName("graft_bloom_prune")
-                index.filter(mightContain($"bandHash"))
-              } else index
+              if (batchSigRows <= (1L << 27))
+                DedupOps.bloomPrune(index, nb, batchSigRows)
+              else index
             pruned.hint("merge").join(nb.hint("merge"), Seq("bandHash"))
           }
         joined

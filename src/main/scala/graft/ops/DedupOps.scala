@@ -23,51 +23,26 @@ object DedupOps {
 
   // ---- shingling ----------------------------------------------------
 
-  /** Character k-shingle hash set of a document (lowercased,
-    * whitespace-collapsed), returned sorted + distinct. Primitive
-    * array + sort + in-place dedup — no boxing, no tree: this runs
-    * once per document per stage on the corpus hot path.
-    *
-    * ASCII documents (the overwhelming mass of a web corpus) take an
-    * allocation-free path: the normalized text is UTF-8-encoded ONCE
-    * and every window hashes a byte RANGE ([[Hashing.xxh64Range]]) —
-    * byte offsets equal char offsets, so the hashes are bit-identical
-    * to the substring form, without the two allocations per window
-    * that made shingling allocator-bound. Non-ASCII falls back to the
-    * substring path (identical results by construction). */
   // precompiled hot-path patterns: String.replaceAll/split(regex)
   // re-compile their pattern on EVERY call — per-document cost on the
   // corpus hot path (semantics identical: same regex, same engine)
   private val WsRun = java.util.regex.Pattern.compile("\\s+")
 
+  /** Character k-shingle hash set of a document (lowercased,
+    * whitespace-collapsed), returned sorted + distinct: the fresh array
+    * of [[shinglesRaw]], sorted and deduplicated in place — no boxing,
+    * no tree: this runs once per document per stage on the corpus hot
+    * path. */
   def shingles(text: String, k: Int): Array[Long] = {
-    val t = WsRun.matcher(text.toLowerCase).replaceAll(" ")
-    if (t.length < k) Array(Hashing.xxh64(t))
-    else {
-      val n = t.length - k + 1
-      val all = new Array[Long](n)
-      val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      if (bytes.length == t.length) {
-        while (i < n) {
-          all(i) = Hashing.xxh64Range(bytes, i, k, Hashing.SparkSeed)
-          i += 1
-        }
-      } else {
-        while (i < n) {
-          all(i) = Hashing.xxh64(t.substring(i, i + k))
-          i += 1
-        }
-      }
-      java.util.Arrays.sort(all)
-      var w = 1
-      i = 1
-      while (i < n) {
-        if (all(i) != all(w - 1)) { all(w) = all(i); w += 1 }
-        i += 1
-      }
-      if (w == n) all else java.util.Arrays.copyOf(all, w)
+    val all = shinglesRaw(text, k)
+    java.util.Arrays.sort(all)
+    var w = 1
+    var i = 1
+    while (i < all.length) {
+      if (all(i) != all(w - 1)) { all(w) = all(i); w += 1 }
+      i += 1
     }
+    if (w == all.length) all else java.util.Arrays.copyOf(all, w)
   }
 
   /** [[shingles]] WITHOUT the sort + dedup — the multiset of window
@@ -77,7 +52,15 @@ object DedupOps {
     * over the distinct set and bin occupancy (so densification) is the
     * same; [[jaccard]] counts distinct values. Every signature, band
     * key, emitted pair and jaccard value is bit-identical, and neither
-    * the signature pass nor the verify tail pays a per-document sort. */
+    * the signature pass nor the verify tail pays a per-document sort.
+    *
+    * ASCII documents (the overwhelming mass of a web corpus) take an
+    * allocation-free path: the normalized text is UTF-8-encoded ONCE
+    * and every window hashes a byte RANGE ([[Hashing.xxh64Range]]) —
+    * byte offsets equal char offsets, so the hashes are bit-identical
+    * to the substring form, without the two allocations per window
+    * that made shingling allocator-bound. Non-ASCII falls back to the
+    * substring path (identical results by construction). */
   private[graft] def shinglesRaw(text: String, k: Int): Array[Long] = {
     val t = WsRun.matcher(text.toLowerCase).replaceAll(" ")
     if (t.length < k) Array(Hashing.xxh64(t))
@@ -390,6 +373,21 @@ object DedupOps {
           .as("cont_x1000"))
   }
 
+  /** `rows` filtered through a broadcast 3%-FPP Bloom filter over the
+    * `bandHash` values of `keys` (`expected` of them) — the explicit
+    * prune in front of a shuffle merge join on `bandHash`, where Spark's
+    * own runtime filter cannot help. A false positive only forwards a
+    * row the join drops. The UDF is named `graft_bloom_prune` in the
+    * plan. */
+  private[ops] def bloomPrune(rows: DataFrame, keys: DataFrame,
+      expected: Long): DataFrame = {
+    val bc = rows.sparkSession.sparkContext.broadcast(
+      keys.stat.bloomFilter("bandHash", expected, 0.03))
+    val mightContain = udf((h: Long) => bc.value.mightContainLong(h))
+      .withName("graft_bloom_prune")
+    rows.filter(mightContain(col("bandHash")))
+  }
+
   /** Materialize an intermediate the LSH dataflow references several
     * times, per `spark.graft.dedup.materialize`:
     *  - `auto` (default): `local` when the session is a single
@@ -566,15 +564,8 @@ object DedupOps {
     val dupRows =
       if (nDup <= broadcastKeysMax)
         banded.join(broadcast(dupKeys), Seq("bandHash"))
-      else {
-        val bf = dupKeys.stat.bloomFilter("bandHash", nDup, 0.03)
-        val bc = spark.sparkContext.broadcast(bf)
-        val mightContain =
-          udf((h: Long) => bc.value.mightContainLong(h))
-            .withName("graft_bloom_prune")
-        banded.filter(mightContain(col("bandHash")))
-          .hint("merge").join(dupKeys.hint("merge"), Seq("bandHash"))
-      }
+      else bloomPrune(banded, dupKeys, nDup)
+        .hint("merge").join(dupKeys.hint("merge"), Seq("bandHash"))
     val cand = dupRows.groupBy(col("bandHash"))
       .agg(collect_list(col("id")).as("ids"))
       .filter(size(col("ids")) >= 2)

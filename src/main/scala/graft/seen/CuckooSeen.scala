@@ -2,7 +2,7 @@ package graft.seen
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.table.StateFiles
 import graft.url.Hashing
@@ -36,12 +36,11 @@ import graft.url.Hashing
   * Deletion caveat (inherent to cuckoo filters): deleting a key that
   * was never inserted can strip a colliding key's fingerprint and
   * create a false negative. Every delete site must prove insertion;
-  * here the contract is structural — evicted hashes come from
-  * committed partitions, and committed hashes are exactly what the
-  * filter holds ([[graft.table.TableIO.invalidatePeriods]] only evicts
-  * when the sketch covers the full committed seen set, else it drops
-  * the sketch for rebuild). [[deleteFromDir]] additionally FAILS on
-  * any miss rather than guessing.
+  * here the proof is the coverage rule [[sync]] holds — it deletes
+  * only keys of dirs the meta names as inserted, and drops the sketch
+  * for rebuild when the meta names a dir the table no longer commits.
+  * [[deleteFromDir]] additionally FAILS on any miss rather than
+  * guessing.
   *
   * Distribution mirrors [[BloomSeen]]: P independent filters routed
   * by `floorMod(urlHash, P)`, each built/updated/probed by the one task
@@ -188,17 +187,13 @@ object CuckooSeen {
   // ---- partition-aligned persisted filters (the 10^10-key path) -----
 
   /** Driver-side descriptor; `covered` lists the seen-delta dirs whose
-    * hashes the filter holds (set equality against the table's current
-    * seenDirs decides incremental-insert vs rebuild vs evict-safety —
-    * [[graft.jobs.CrawlJob.runResumable]], `TableIO.invalidatePeriods`). */
+    * hashes the filters hold. It is trusted only while every dir it
+    * names is committed in the table's current snapshot ([[sync]]). */
   final case class CuckooMeta(parts: Int, bucketBytes: Int,
       covered: Seq[String] = Nil)
 
-  /** The sketch's location inside a crawl table's storage — the ONE
-    * definition shared by CrawlJob (build/insert/probe) and TableIO
-    * (compaction coverage handoff, invalidation eviction); a drifted
-    * copy in either site would silently stop sketch maintenance and
-    * force full rebuilds. */
+  /** The sketch's location inside a crawl table's storage — the one
+    * definition [[sync]] maintains and the resumable run probes. */
   def sketchDir(tableDir: String): String = s"$tableDir/_cuckoo"
 
   private def filterFile(dir: String, part: Int) =
@@ -291,8 +286,8 @@ object CuckooSeen {
   }
 
   /** Insert a seen DELTA into the persisted set (the per-run
-    * incremental path). Throws when the filter can no longer absorb
-    * the delta — callers fall back to a fresh [[write]]. */
+    * incremental path of [[sync]]). Throws when the filter can no
+    * longer absorb the delta — callers fall back to a fresh [[write]]. */
   def insertIntoDir(hashes: Dataset[Long], dir: String,
       meta: CuckooMeta, nowCovered: Seq[String]): CuckooMeta = {
     val failed =
@@ -304,7 +299,8 @@ object CuckooSeen {
     next
   }
 
-  /** Evict previously-committed hashes (period invalidation). Throws
+  /** Evict previously-inserted hashes ([[sync]]: a period
+    * invalidation, a rollback). Throws
     * on any miss: a miss means the sketch never held the key, and
     * blind deletion could strip a colliding key's fingerprint. */
   def deleteFromDir(hashes: Dataset[Long], dir: String,
@@ -316,6 +312,91 @@ object CuckooSeen {
     val next = meta.copy(covered = nowCovered)
     writeMeta(dir, next)
     next
+  }
+
+  // ---- the sketch of a crawl table ---------------------------------
+
+  /** How a table operation turned the committed seen dirs `before`
+    * into `after`. */
+  sealed trait SeenChange
+
+  /** `after` names committed dirs as they are (a run start, a
+    * rollback): a covered dir it drops takes its keys out of the
+    * filters, a dir it adds goes in. */
+  case object Referenced extends SeenChange
+
+  /** `after`'s new dirs rewrite all of `before`'s keys minus `removed`
+    * (a compaction: None; a period invalidation: the dropped hashes,
+    * each once). */
+  final case class Rewritten(removed: Option[Dataset[Long]])
+      extends SeenChange
+
+  /** What a run start needs to (re)build the sketch: the whole
+    * committed seen set, its size and the partition count for it. */
+  final case class Build(keys: Dataset[Long], count: Long, parts: Int)
+
+  /** The one rule of a crawl table's sketch: the filters hold the keys
+    * of `covered`, and `covered` ⊆ the committed seen dirs. A meta
+    * that names any other dir is stale and is never trusted.
+    *
+    * Called once the table committed `after` — by a maintenance
+    * operation with its parent's dirs as `before`, by a run start with
+    * `before == after` and `build`. When the meta is valid:
+    *  1. insert the dirs it must cover and does not: a sketch that
+    *     lags the last commit catches up in O(last delta);
+    *  2. retract the coverage (delete `meta.json`, keep the filters),
+    *     then delete the removed keys — a crash between the filter
+    *     rewrite and the meta swap costs one rebuild, never a false
+    *     negative;
+    *  3. swap in the meta covering `after`.
+    * An insert needs no retraction: a key no meta names costs at most a
+    * false positive. A sketch that is absent, stale or past 95%
+    * occupancy, and any failure, ends in a rebuild when `build` is
+    * given and in a dropped sketch otherwise (none when the seen set is
+    * empty). Returns the sketch to probe. */
+  def sync(spark: SparkSession, tableDir: String, before: Seq[String],
+      after: Seq[String], change: SeenChange,
+      build: Option[Build] = None): Option[CuckooMeta] = {
+    import spark.implicits._
+    val dir = sketchDir(tableDir)
+    def keysOf(dirs: Seq[String]): Dataset[Long] =
+      spark.read.parquet(dirs.map(d => s"$tableDir/$d"): _*)
+        .select($"urlHash").as[Long]
+    def rebuildOrDrop(): Option[CuckooMeta] = build match {
+      case Some(b) if b.count > 0 =>
+        Some(write(b.keys, dir, b.parts, math.max(b.count * 2, 1024L),
+          after))
+      case _ =>
+        StateFiles.delete(Paths.get(dir))
+        None
+    }
+    readMeta(dir) match {
+      case Some(m) if m.covered.toSet.subsetOf(before.toSet) &&
+          build.forall(b => b.count > 0 && b.count <= 0.95 * m.parts *
+            (m.bucketBytes / BytesPerBucket) * SlotsPerBucket) =>
+        try {
+          val (mustCover, removed) = change match {
+            case Referenced => (after,
+              Some(m.covered.filterNot(after.toSet)).filter(_.nonEmpty)
+                .map(keysOf))
+            case Rewritten(keys) => (before, keys)
+          }
+          val gap = mustCover.filterNot(m.covered.toSet)
+          val caught =
+            if (gap.isEmpty) m
+            else insertIntoDir(keysOf(gap), dir, m, m.covered ++ gap)
+          removed match {
+            case Some(keys) =>
+              StateFiles.delete(metaFile(dir))
+              Some(deleteFromDir(keys, dir, caught, after))
+            case None =>
+              val next = caught.copy(covered = after)
+              if (next != caught) writeMeta(dir, next)
+              Some(next)
+          }
+        } catch { case _: Exception => rebuildOrDrop() }
+      case _ => rebuildOrDrop()
+    }
   }
 
   /** Partition-aligned probe — the routing contract of

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode,
 import org.apache.spark.sql.functions._
 
 import graft.model.ImageRecord
+import graft.seen.CuckooSeen
 
 /** Iceberg-style table layer (SURVEY §7.1): partitioned Parquet data
   * plus versioned JSON snapshots with per-partition manifests and
@@ -70,7 +71,7 @@ object TableIO {
   def readSnapshot(dir: String, version: Int): Snapshot = {
     val p = snapshotPath(dir, version)
     // NoSuchFileException (an IOException), NOT require/IAE: the
-    // expired-chain fallbacks (cumulativePartitionMeta, recordRunId's
+    // expired-chain fallbacks (partitionMeta, recordRunId's
     // heal path) catch IOException — an IAE here would turn their
     // documented degrade-to-scan behavior into a crash
     StateFiles.readJson[Snapshot](p).getOrElse(
@@ -195,13 +196,15 @@ object TableIO {
     }
   }
 
-  /** Cumulative per-partition meta of `snap`, reconstructed from
-    * snapshot METADATA only: walk back to the nearest cumulative
-    * snapshot (compaction/invalidation) and sum the commit deltas on
-    * top of it — no data scan. Returns None when the walk needs an
-    * expired snapshot file (callers fall back to a scan). */
-  private def cumulativePartitionMeta(dir: String, snap: Snapshot)
-      : Option[Map[(String, Int, Int), (Long, Long)]] = {
+  /** Cumulative per-partition meta of `snap` without the `dropped`
+    * partitions, reconstructed from snapshot METADATA only: walk back to
+    * the nearest cumulative snapshot (compaction/invalidation/rollback)
+    * and sum the commit deltas on top of it — no data scan. Only when
+    * the walk needs an expired snapshot file does it scan `dataDirs`
+    * (the table's entries without the dropped partitions) instead. */
+  private def partitionMeta(spark: SparkSession, dir: String,
+      snap: Snapshot, dataDirs: Seq[String],
+      dropped: Set[(String, Int, Int)] = Set.empty): Seq[PartitionMeta] = {
     def isCum(s: Snapshot) = s.cumulative ||
       s.lineage.runId.startsWith("compact-") ||
       s.lineage.runId.startsWith("invalidate-")
@@ -220,8 +223,14 @@ object TableIO {
           acc(k) = (r + p.rows, b + p.bytes)
         }
       }
-      Some(acc.toMap)
-    } catch { case _: java.io.IOException => None }
+      acc.toSeq.filterNot(e => dropped.contains(e._1))
+        .map { case ((s, y, m), (r, b)) => PartitionMeta(s, y, m, r, b) }
+        .sortBy(p => (p.site, p.year, p.month))
+    } catch {
+      case _: java.io.IOException =>
+        if (dataDirs.isEmpty) Nil
+        else scanPartitionMeta(spark, readFrom(spark, dir, dataDirs))
+    }
   }
 
   private def scanPartitionMeta(spark: SparkSession, df: DataFrame)
@@ -238,7 +247,7 @@ object TableIO {
   }
 
   /** Reject a delta-commit runId in the reserved maintenance namespace:
-    * cumulativePartitionMeta's legacy fallback treats these prefixes as
+    * partitionMeta's legacy fallback treats these prefixes as
     * compaction/invalidation markers, so a DELTA commit named e.g.
     * "invalidate-retry-1" would corrupt reconstructed partition metadata
     * on tables written before the explicit `cumulative` flag existed.
@@ -344,19 +353,9 @@ object TableIO {
             s"${parent.seenDirs.size} seen dirs -> 1 each"),
         cumulative = true)
       publish(dir, Some(parent), snap)
-      // the compacted seen dir holds the same key SET (distinct of the
-      // union), so a cuckoo sketch covering the parent's dirs stays
-      // valid — only its coverage list must follow the rewrite; a
-      // partially-covering sketch would mis-skip the delta, drop it
-      locally {
-        val sk = graft.seen.CuckooSeen.sketchDir(dir)
-        graft.seen.CuckooSeen.readMeta(sk).foreach { m =>
-          if (m.covered.toSet == parent.seenDirs.toSet)
-            graft.seen.CuckooSeen.writeMeta(sk,
-              m.copy(covered = if (hasSeen) Seq(seenDirName) else Nil))
-          else StateFiles.delete(Paths.get(sk))
-        }
-      }
+      // the compacted seen dir holds the same key set
+      CuckooSeen.sync(spark, dir, parent.seenDirs, snap.seenDirs,
+        CuckooSeen.Rewritten(None))
       snap
     }
 
@@ -395,9 +394,9 @@ object TableIO {
       // seen eviction: anti-join against the urlHashes of ONLY the
       // dropped partitions (their files are read directly — pruning by
       // construction, no UDF, no full-image scan)
-      val seenDirs =
+      val (seenDirs, evicted) =
         if (droppedLeaves.isEmpty || parent.seenDirs.isEmpty)
-          parent.seenDirs
+          (parent.seenDirs, None)
         else {
           val droppedHashes = spark.read
             .parquet(droppedLeaves.map(l => s"$dir/${l._1}"): _*)
@@ -411,24 +410,12 @@ object TableIO {
                 .parquet(s"$dir/$seenDirName")
               Seq(seenDirName)
             }
-          evictFromCuckoo(spark, dir, parent.seenDirs,
-            droppedHashes.select(col("dh")).as[Long], dirs)
-          dirs
+          // distinct: a URL may appear in several dropped image rows,
+          // but its hash is committed once
+          (dirs, Some(droppedHashes.as[Long].distinct()))
         }
 
-      // kept partition meta from snapshot metadata (no data scan);
-      // scan fallback only when the chain walk hits expired snapshots
-      val droppedKeys = droppedLeaves.map(_._2).toSet
-      val parts = cumulativePartitionMeta(dir, parent) match {
-        case Some(cum) =>
-          cum.view.filterKeys(k => !droppedKeys.contains(k) &&
-              !periods.contains(k))
-            .map { case ((s, y, m), (r, b)) => PartitionMeta(s, y, m, r, b) }
-            .toSeq.sortBy(p => (p.site, p.year, p.month))
-        case None if keptDataDirs.nonEmpty =>
-          scanPartitionMeta(spark, readFrom(spark, dir, keptDataDirs))
-        case None => Nil
-      }
+      val parts = partitionMeta(spark, dir, parent, keptDataDirs, periods)
       val runId = f"invalidate-v$version%05d"
       val snap = Snapshot(
         version,
@@ -443,6 +430,8 @@ object TableIO {
             "dropped, 0 data files rewritten)"),
         cumulative = true)
       publish(dir, Some(parent), snap)
+      CuckooSeen.sync(spark, dir, parent.seenDirs, seenDirs,
+        CuckooSeen.Rewritten(evicted))
       snap
     }
 
@@ -453,8 +442,9 @@ object TableIO {
     * rolled-back commits' dirs stay on disk (time travel to them keeps
     * working) until [[expire]] reclaims them. Two bounded READS can
     * still occur: (a) maintaining the cuckoo seen sketch in place
-    * reads the ROLLED-BACK seen-delta parquet (hash columns only —
-    * O(dropped keys), the rows being evicted); (b) when the cumulative
+    * reads the hash column of the seen deltas it deletes (the covered
+    * ones the rollback un-references — O(dropped keys)) or inserts
+    * (target deltas it did not cover yet); (b) when the cumulative
     * partition-meta chain hits an expired snapshot, the fallback
     * rescans partition meta from the target's data dirs — O(target
     * data) and only on an already-expired chain. Neither rewrites
@@ -466,12 +456,10 @@ object TableIO {
     * deliberately KEEPS the rolled-back ids (it is append-only):
     * streaming replay idempotence must survive an operator rollback —
     * a crash-replayed micro-batch must not silently re-commit data the
-    * operator just removed. The persisted cuckoo seen sketch is
-    * maintained IN PLACE whenever its coverage list is a subset of the
-    * committed seen dirs (delete exactly the rolled-back covered
-    * deltas' hashes — O(dropped), the eviction a Bloom filter cannot
-    * do); coverage a rewrite invalidated drops the sketch for rebuild
-    * on the next run.
+    * operator just removed. The persisted cuckoo seen sketch follows
+    * the references in place ([[graft.seen.CuckooSeen.sync]]): it
+    * deletes exactly the hashes of the covered deltas the rollback
+    * drops — O(dropped), the eviction a Bloom filter cannot do.
     *
     * Throws (NoSuchFileException / IllegalArgumentException) when the
     * target snapshot or a dir it references was expired. None when
@@ -480,7 +468,6 @@ object TableIO {
   def rollback(spark: SparkSession, dir: String,
       toVersion: Int): Option[Snapshot] =
     currentSnapshot(dir).filter(_.version != toVersion).map { parent =>
-      import spark.implicits._
       val target = readSnapshot(dir, toVersion)
       val missing = (target.dataDirs ++ target.seenDirs)
         .filterNot(e => Files.exists(Paths.get(dir, e)))
@@ -489,43 +476,7 @@ object TableIO {
           s"'${missing.head}' (and ${missing.size - 1} more)")
       val version = parent.version + 1
 
-      // cuckoo sketch: seen deltas align 1:1 with seen dirs and are
-      // pairwise disjoint, so the sketch survives a rollback IN PLACE
-      // when its coverage is a sane subset of the committed dirs —
-      // delete exactly the hashes of covered dirs the rollback
-      // un-references (dirs the sketch never inserted need no delete),
-      // hand coverage to the covered∩target intersection, and let the
-      // next run's delta-insert fill in target dirs it never covered.
-      // Coverage outside the committed set (a rewrite happened under
-      // the sketch) cannot be proven consistent: drop for rebuild.
-      locally {
-        val C = graft.seen.CuckooSeen
-        val sk = C.sketchDir(dir)
-        C.readMeta(sk).foreach { m =>
-          if (m.covered.toSet.subsetOf(parent.seenDirs.toSet)) {
-            val deleteDirs = m.covered.filterNot(target.seenDirs.toSet)
-            if (deleteDirs.nonEmpty) {
-              val dropped = spark.read
-                .parquet(deleteDirs.map(d => s"$dir/$d"): _*)
-                .select($"urlHash").as[Long].distinct()
-              val kept = m.covered.filter(target.seenDirs.toSet)
-              try C.deleteFromDir(dropped, sk, m, kept)
-              catch { case _: Exception => StateFiles.delete(Paths.get(sk)) }
-            }
-          } else StateFiles.delete(Paths.get(sk))
-        }
-      }
-
-      // cumulative per-partition meta of the TARGET, from snapshot
-      // metadata only; scan fallback when the walk hits expired chain
-      val parts = cumulativePartitionMeta(dir, target) match {
-        case Some(cum) => cum
-          .map { case ((s, y, m), (r, b)) => PartitionMeta(s, y, m, r, b) }
-          .toSeq.sortBy(p => (p.site, p.year, p.month))
-        case None if target.dataDirs.nonEmpty =>
-          scanPartitionMeta(spark, readFrom(spark, dir, target.dataDirs))
-        case None => Nil
-      }
+      val parts = partitionMeta(spark, dir, target, target.dataDirs)
       val runId = f"rollback-v$version%05d"
       val snap = Snapshot(
         version,
@@ -540,33 +491,10 @@ object TableIO {
             "refs dropped)"),
         cumulative = true)
       publish(dir, Some(parent), snap)
+      CuckooSeen.sync(spark, dir, parent.seenDirs, target.seenDirs,
+        CuckooSeen.Referenced)
       snap
     }
-
-  /** Keep the persisted cuckoo URL-seen sketch (CrawlJob
-    * `cfg.seenSketch = "cuckoo"`) consistent across a seen-set
-    * eviction: when the sketch provably covers the full committed set
-    * (coverage == the parent snapshot's seen dirs), delete exactly the
-    * dropped hashes — the O(dropped) maintenance a Bloom filter cannot
-    * do — and hand coverage to the rewritten dir; any doubt (stale
-    * coverage, a delete miss) drops the sketch so the next resumable
-    * run rebuilds instead of trusting a possibly-corrupt filter. */
-  private def evictFromCuckoo(spark: SparkSession, dir: String,
-      parentSeenDirs: Seq[String], dropped: Dataset[Long],
-      newCovered: Seq[String]): Unit = {
-    val C = graft.seen.CuckooSeen
-    val sketchDir = C.sketchDir(dir)
-    C.readMeta(sketchDir).foreach { m =>
-      if (m.covered.toSet == parentSeenDirs.toSet) {
-        // distinct: a URL may appear in several dropped image rows,
-        // but its hash was inserted into the sketch exactly once
-        try C.deleteFromDir(dropped.distinct(), sketchDir, m, newCovered)
-        catch {
-          case _: Exception => StateFiles.delete(Paths.get(sketchDir))
-        }
-      } else StateFiles.delete(Paths.get(sketchDir))
-    }
-  }
 
   /** Expire everything the CURRENT snapshot does not reference: data/
     * seen dirs of superseded versions (reclaimable after [[compact]]

@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.Paths
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.IndexFixtures._
-import graft.model.ImageRecord
+import graft.jobs.CrawlJob
+import graft.model.{CrawlConfig, ImageRecord, MonthSelector, YearSelector}
 import graft.seen.CuckooSeen
 import graft.table.{StateFiles, TableIO}
 
@@ -108,6 +110,58 @@ class CrashPointSpec extends AnyFunSuite {
       if (!CuckooSeen.readMeta(d).get.covered.contains("b"))
         cuckooInsert(d)))
 
+  // ---- TableIO under a cuckoo sketch ---------------------------------
+
+  private val crawlCfg = CrawlConfig(
+    sites = Seq("portal_saude_mg", "mds_saldo"),
+    years = YearSelector.Single(2024),
+    months = MonthSelector.Multiple(Seq(1, 2, 3)),
+    nowYear = 2024, nowMonth = 6, maxPages = 3, seenSketch = "cuckoo")
+
+  private def crawl(dir: String, runId: String, months: Int*): Unit =
+    CrawlJob.runResumable(spark,
+      crawlCfg.copy(months = MonthSelector.Multiple(months)), dir, runId)
+      ._1.unpersist()
+
+  /** Two identical runs: the second builds the sketch over the first's
+    * seen delta and commits nothing new, so the sketch covers every
+    * committed seen dir. */
+  private def sketchedSetup(dir: String): Unit = {
+    crawl(dir, "ck-1", 1, 2, 3)
+    crawl(dir, "ck-2", 1, 2, 3)
+  }
+
+  /** The committed keys the sketch claims to cover but does not find:
+    * a resumed run would refetch and recommit them. None to find when
+    * the sketch is absent or claims a dir the snapshot does not name —
+    * the next run rebuilds it. */
+  private def sketchMisses(dir: String): Long = {
+    val seenDirs = TableIO.currentSnapshot(dir).get.seenDirs.toSet
+    val sk = CuckooSeen.sketchDir(dir)
+    CuckooSeen.readMeta(sk) match {
+      case Some(m)
+          if m.covered.nonEmpty && m.covered.toSet.subsetOf(seenDirs) =>
+        val keys = spark.read.parquet(m.covered.map(d => s"$dir/$d"): _*)
+          .select("urlHash")
+        CuckooSeen.probeAligned(keys, "urlHash", sk, m)
+          .filter(!col("maybeSeen")).count()
+      case _ => 0L
+    }
+  }
+
+  private def sketchedView(dir: String): Any =
+    (sketchMisses(dir), tableView(dir))
+
+  private val sketchedCases = Seq(
+    Case("TableIO+cuckoo", "invalidatePeriods", sketchedSetup,
+      TableIO.invalidatePeriods(spark, _,
+        crawlCfg.sites.map(s => (s, 2024, 2)).toSet), sketchedView),
+    // a first run over months 1-2 ahead of the identical pair: the
+    // rollback to it deletes the covered month-3 delta from the sketch
+    Case("TableIO+cuckoo", "rollback",
+      dir => { crawl(dir, "ck-0", 1, 2); sketchedSetup(dir) },
+      TableIO.rollback(spark, _, 1), sketchedView))
+
   // ---- the four ops indexes -------------------------------------------
 
   private def indexCases(s: Store): Seq[Case] = {
@@ -123,8 +177,8 @@ class CrashPointSpec extends AnyFunSuite {
         view))
   }
 
-  private val cases =
-    tableCases ++ Seq(cuckooCase) ++ stores.flatMap(indexCases)
+  private val cases = tableCases ++ sketchedCases ++ Seq(cuckooCase) ++
+    stores.flatMap(indexCases)
 
   for (c <- cases)
     test(s"${c.store}.${c.op}: every crash point leaves the old or the new state; the replay converges") {

@@ -243,6 +243,73 @@ class ResumableCrawlSpec extends AnyFunSuite {
       === fullImages)
   }
 
+  test("a cuckoo sketch one commit behind is caught up in place by compact and by invalidatePeriods") {
+    import graft.seen.CuckooSeen
+    import graft.table.TableIO
+    def cuckoo(months: Int*) = cfg.copy(seenSketch = "cuckoo",
+      months = MonthSelector.Multiple(months))
+    val template = Files.createTempDirectory("graft-lag-ck").toString
+    // each run commits new URLs; a run start inserts the deltas before
+    // it, so after run 3 the sketch lacks run 3's own delta
+    val (r1, _) = CrawlJob.runResumable(spark, cuckoo(1), template, "lag-1")
+    val (r2, _) = CrawlJob.runResumable(spark, cuckoo(1, 2), template, "lag-2")
+    val (r3, snap3) =
+      CrawlJob.runResumable(spark, cuckoo(1, 2, 3), template, "lag-3")
+    Seq(r1, r3).foreach(_.unpersist())
+    assert(snap3.seenDirs.size === 3, "every run must commit new URLs")
+    assert(CuckooSeen.readMeta(CuckooSeen.sketchDir(template)).get.covered
+      === snap3.seenDirs.init)
+    // marker file: any rebuild or drop deletes it
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(
+      CuckooSeen.sketchDir(template), "marker.keep"), "incremental-witness")
+    val monthTwo = r2.log.collect()
+      .filter(e => e.month == 2 && e.status == CrawlStatus.Success)
+      .map(_.urlHash).toSet
+    r2.unpersist()
+    assert(monthTwo.nonEmpty)
+    val committed = TableIO.readSeen(spark, template).collect().toSet
+
+    def check(op: String, maintain: String => TableIO.Snapshot,
+        reopened: Set[Long]): Unit = {
+      val dir = Files.createTempDirectory(s"graft-lag-$op").toString
+      IndexFixtures.copyTree(template, dir)
+      val snap = maintain(dir)
+      val marker =
+        java.nio.file.Paths.get(CuckooSeen.sketchDir(dir), "marker.keep")
+      assert(Files.exists(marker), s"$op dropped the lagging sketch")
+      assert(CuckooSeen.readMeta(CuckooSeen.sketchDir(dir)).get.covered
+        === snap.seenDirs)
+      // the next run skips exactly the committed keys, refetches the
+      // re-opened ones, and keeps the sketch
+      val (r, _) = CrawlJob.runResumable(spark, cuckoo(1, 2, 3), dir,
+        s"lag-$op")
+      val log = r.log.collect()
+      r.unpersist()
+      assert(log.filter(_.status == CrawlStatus.Skipped).map(_.urlHash)
+        .toSet === committed -- reopened, s"after $op")
+      assert(log.filter(e => reopened(e.urlHash))
+        .forall(_.status != CrawlStatus.Skipped))
+      assert(Files.exists(marker), s"the run after $op rebuilt the sketch")
+    }
+    check("compact", TableIO.compact(spark, _).get, Set.empty)
+    check("invalidate", TableIO.invalidatePeriods(spark, _,
+      cfg.sites.map(s => (s, 2024, 2)).toSet).get, monthTwo)
+  }
+
+  test("an unknown seenSketch is refused before any work; the CacheManager stays empty") {
+    val dir = Files.createTempDirectory("graft-resume-sketch").toString
+    spark.catalog.clearCache()
+    val e = intercept[IllegalArgumentException] {
+      CrawlJob.runResumable(spark, cfg.copy(seenSketch = "Cuckoo"), dir,
+        "run-1")
+    }
+    assert(e.getMessage.contains("'Cuckoo'"))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a refused run left cached frames pinned in the driver")
+    assert(!Files.exists(java.nio.file.Paths.get(dir, "data")),
+      "a refused run wrote data")
+  }
+
   test("strict per-host mode flows through the resumable (flagged) path") {
     val dir = Files.createTempDirectory("graft-resume-strict").toString
     val strictCfg = cfg.copy(strictPerHost = true)
