@@ -204,8 +204,13 @@ object DedupIndex {
       spark.createDataFrame(spark.sparkContext
           .emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Nil))
-    else spark.read.parquet(m.deltas.map(d => s"$dir/$d"): _*)
+    else spark.read.schema(SigSchema)
+      .parquet(m.deltas.map(d => s"$dir/$d"): _*)
   }
+
+  /** Columns of every signature delta; passing them to the reader
+    * spares a footer-reading schema-inference job per read. */
+  private val SigSchema = "id BIGINT, bandHash BIGINT"
 
   /** Compact the delta chain into ONE signature dir (a long-lived
     * stream appends one delta per micro-batch; without compaction
@@ -256,7 +261,7 @@ object DedupIndex {
     * passing the full corpus table is free.
     *
     * Scale: the batch side is broadcast when small (its signature
-    * rows are counted AFTER materialization, so the decision is
+    * rows are counted by the job that pins them, so the decision is
     * measured, not estimated) — the index then streams map-side with
     * no exchange; a huge batch falls back to a shuffle merge join.
     */
@@ -265,8 +270,7 @@ object DedupIndex {
       threshold: Double = 0.6,
       maxBroadcastRows: Long = 4000000L): DataFrame = {
     val m = currentMeta(dir)
-    val cand = DedupOps.materialize(
-      probeCandidates(newDocs, idCol, textCol, dir, maxBroadcastRows))
+    val cand = probeCandidates(newDocs, idCol, textCol, dir, maxBroadcastRows)
     val texts = corpusTexts
       .select(col(idCol).as("id"), col(textCol).as("text"))
       .unionByName(newDocs
@@ -291,10 +295,10 @@ object DedupIndex {
     // `explode_outer` emits the same rows as `explode` without the
     // inferred filter that `materialize=none` would push below the
     // projection as two more UDF calls per document
-    val newSigs = DedupOps.materialize(newDocs
+    val (newSigs, batchDocs) = DedupOps.materializeCounted(newDocs
       .filter(col(textCol).isNotNull)
       .select(col(idCol).as("id"), bandKeys(textCol, m).as("bands")))
-    val batchSigRows = newSigs.count() * m.bands // free: materialized
+    val batchSigRows = batchDocs * m.bands
     val newBanded =
       newSigs.select($"id", explode_outer($"bands").as("bandHash"))
     val nb = newBanded.select($"id".as("n_id"), $"bandHash")
@@ -323,11 +327,15 @@ object DedupIndex {
             // signatures; sizing is measured (batchSigRows).
             // Capped: past ~2^27 distinct hashes the filter itself is
             // driver-heavy (~200 MB); such a "batch" is a backfill —
-            // run the batch dataflow instead.
+            // run the batch dataflow instead. A 3% false positive only
+            // forwards an index row the join drops.
             val pruned =
-              if (batchSigRows <= (1L << 27))
-                DedupOps.bloomPrune(index, nb, batchSigRows)
-              else index
+              if (batchSigRows <= (1L << 27)) {
+                val bloom = spark.sparkContext.broadcast(
+                  nb.stat.bloomFilter("bandHash", batchSigRows, 0.03))
+                index.filter(udf((h: Long) => bloom.value.mightContainLong(h))
+                  .withName("graft_bloom_prune")($"bandHash"))
+              } else index
             pruned.hint("merge").join(nb.hint("merge"), Seq("bandHash"))
           }
         joined

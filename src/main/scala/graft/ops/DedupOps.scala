@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.url.Hashing
@@ -16,7 +16,7 @@ import graft.url.Hashing
   * Scale shape (standard MinHash-LSH dataflow):
   *   shingle → minhash signature (map-side, no shuffle)
   *   → explode to (band, bandHash) keys → shuffle ONLY on bucket keys
-  *   → self-join within buckets (candidates ≪ n²)
+  *   → sorted run scan within buckets (candidates ≪ n²)
   *   → exact Jaccard verify on the candidate pairs only.
   */
 object DedupOps {
@@ -54,35 +54,67 @@ object DedupOps {
     * key, emitted pair and jaccard value is bit-identical, and neither
     * the signature pass nor the verify tail pays a per-document sort.
     *
-    * ASCII documents (the overwhelming mass of a web corpus) take an
-    * allocation-free path: the normalized text is UTF-8-encoded ONCE
-    * and every window hashes a byte RANGE ([[Hashing.xxh64Range]]) —
-    * byte offsets equal char offsets, so the hashes are bit-identical
-    * to the substring form, without the two allocations per window
-    * that made shingling allocator-bound. Non-ASCII falls back to the
-    * substring path (identical results by construction). */
+    * The normalized text is `text.toLowerCase` with every run of the
+    * six `\s` characters (space, `\t \n \x0B \f \r`) replaced by one
+    * space. ASCII documents (the overwhelming mass of a web corpus) are
+    * normalized in ONE pass straight into a byte array — no lowercased
+    * copy, no regex (it was ~60% of the kernel), no UTF-8 encode — and
+    * every window hashes a byte RANGE of it ([[Hashing.xxh64Range]]):
+    * byte offsets equal char offsets, so the hashes are bit-identical to
+    * the substring form, without two allocations per window. Non-ASCII
+    * text, and a default locale whose lowercase of ASCII is not plain
+    * A–Z → a–z (`tr`/`az` map 'I' to 'ı'), take the regex form, whose
+    * non-ASCII results hash substrings: the same UTF-8 bytes of the same
+    * normalized text. */
   private[graft] def shinglesRaw(text: String, k: Int): Array[Long] = {
-    val t = WsRun.matcher(text.toLowerCase).replaceAll(" ")
-    if (t.length < k) Array(Hashing.xxh64(t))
-    else {
-      val n = t.length - k + 1
-      val all = new Array[Long](n)
-      val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      if (bytes.length == t.length) {
-        while (i < n) {
-          all(i) = Hashing.xxh64Range(bytes, i, k, Hashing.SparkSeed)
-          i += 1
-        }
+    val n = text.length
+    val buf = new Array[Byte](n)
+    var len = 0
+    var inWs = false
+    var ascii = plainAsciiLower()
+    var i = 0
+    while (ascii && i < n) {
+      val c = text.charAt(i)
+      if (c >= 0x80) ascii = false
+      else if (c == ' ' || (c >= '\t' && c <= '\r')) {
+        if (!inWs) { buf(len) = ' '; len += 1; inWs = true }
       } else {
-        while (i < n) {
-          all(i) = Hashing.xxh64(t.substring(i, i + k))
-          i += 1
-        }
+        buf(len) = (if (c >= 'A' && c <= 'Z') c + 32 else c).toByte
+        len += 1
+        inWs = false
+      }
+      i += 1
+    }
+    if (ascii) windowHashes(buf, len, k)
+    else {
+      val t = WsRun.matcher(text.toLowerCase).replaceAll(" ")
+      val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      if (bytes.length == t.length) windowHashes(bytes, bytes.length, k)
+      else if (t.length < k) Array(Hashing.xxh64(t))
+      else Array.tabulate(t.length - k + 1)(j =>
+        Hashing.xxh64(t.substring(j, j + k)))
+    }
+  }
+
+  /** xxh64 of every `k`-byte window of `bytes[0, len)`, in order; the
+    * whole range when it is shorter than `k`. */
+  private def windowHashes(bytes: Array[Byte], len: Int, k: Int)
+      : Array[Long] =
+    if (len < k) Array(Hashing.xxh64Range(bytes, 0, len, Hashing.SparkSeed))
+    else {
+      val all = new Array[Long](len - k + 1)
+      var i = 0
+      while (i < all.length) {
+        all(i) = Hashing.xxh64Range(bytes, i, k, Hashing.SparkSeed)
+        i += 1
       }
       all
     }
-  }
+
+  /** Whether `String.toLowerCase` under the current default locale maps
+    * ASCII exactly A–Z → a–z. */
+  private def plainAsciiLower(): Boolean =
+    "ABCDEFGHIJKLMNOPQRSTUVWXYZ".toLowerCase == "abcdefghijklmnopqrstuvwxyz"
 
   /** Word n-gram hash set (n consecutive whitespace tokens),
     * lowercased, sorted + distinct — the token-level alternative to
@@ -373,21 +405,6 @@ object DedupOps {
           .as("cont_x1000"))
   }
 
-  /** `rows` filtered through a broadcast 3%-FPP Bloom filter over the
-    * `bandHash` values of `keys` (`expected` of them) — the explicit
-    * prune in front of a shuffle merge join on `bandHash`, where Spark's
-    * own runtime filter cannot help. A false positive only forwards a
-    * row the join drops. The UDF is named `graft_bloom_prune` in the
-    * plan. */
-  private[ops] def bloomPrune(rows: DataFrame, keys: DataFrame,
-      expected: Long): DataFrame = {
-    val bc = rows.sparkSession.sparkContext.broadcast(
-      keys.stat.bloomFilter("bandHash", expected, 0.03))
-    val mightContain = udf((h: Long) => bc.value.mightContainLong(h))
-      .withName("graft_bloom_prune")
-    rows.filter(mightContain(col("bandHash")))
-  }
-
   /** Materialize an intermediate the LSH dataflow references several
     * times, per `spark.graft.dedup.materialize`:
     *  - `auto` (default): `local` when the session is a single
@@ -423,25 +440,44 @@ object DedupOps {
     * shape — are unaffected; a long-lived session calling these
     * repeatedly should `spark.catalog.clearCache()` between corpora,
     * as Bench does between measured runs. */
-  private[graft] def materialize(df: DataFrame): DataFrame = {
+  private[graft] def materialize(df: DataFrame): DataFrame =
+    materializeWith(df, counted = false)._1
+
+  /** [[materialize]], plus the row count of the frame, counted by the
+    * materializing job itself: the `cache` mode's count action returns
+    * it, and the checkpoint modes observe it in the checkpoint job
+    * ([[Observation]]), so no second job counts the pinned frame. Under
+    * `none` nothing is pinned and a count job runs. */
+  private[graft] def materializeCounted(df: DataFrame): (DataFrame, Long) =
+    materializeWith(df, counted = true)
+
+  /** The pinned frame and, when `counted`, its row count (else -1). */
+  private def materializeWith(df: DataFrame, counted: Boolean)
+      : (DataFrame, Long) = {
     val spark = df.sparkSession
-    def cachePersist(): DataFrame = {
+    val rows = new Observation()
+    lazy val observed =
+      if (counted) df.observe(rows, count(lit(1)).as("n")) else df
+    def checkpointed(out: DataFrame): (DataFrame, Long) =
+      (out, if (counted) rows.get("n").asInstanceOf[Long] else -1L)
+    def cachePersist(): (DataFrame, Long) = {
       val p = df.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
+      (p, p.count())
     }
-    val out = spark.conf.get("spark.graft.dedup.materialize", "auto") match {
-      case "reliable" => df.checkpoint(eager = true)
-      case "local" => df.localCheckpoint(eager = true)
-      case "cache" => cachePersist()
-      case "none" => df
-      case _ => // auto
-        if (spark.sparkContext.isLocal) df.localCheckpoint(eager = true)
-        else cachePersist()
-    }
+    val (out, n) =
+      spark.conf.get("spark.graft.dedup.materialize", "auto") match {
+        case "reliable" => checkpointed(observed.checkpoint(eager = true))
+        case "local" => checkpointed(observed.localCheckpoint(eager = true))
+        case "cache" => cachePersist()
+        case "none" => (df, if (counted) df.count() else -1L)
+        case _ => // auto
+          if (spark.sparkContext.isLocal)
+            checkpointed(observed.localCheckpoint(eager = true))
+          else cachePersist()
+      }
     if (out ne df) Option(matScope.get()).foreach(_ += out)
-    out
+    (out, n)
   }
 
   // ---- materialization scopes ----------------------------------------
@@ -482,14 +518,10 @@ object DedupOps {
     * MinHash per-bin minima and [[jaccard]] are both order- and
     * duplicate-invariant. Rows with a null text have no shingles:
     * they pair with nothing and are dropped before the signature pass.
-    * `broadcastKeysMax` caps the duplicate band-key set that is
-    * broadcast to prune the signature table (4M keys ≈ 32 MB); past
-    * it the prune is a Bloom prefilter + merge join (0 forces that
-    * path). */
+    * @param df (id BIGINT, text STRING) */
   private[graft] def lshJaccardPairs(df: DataFrame, idCol: String,
       textCol: String, shingler: String => Array[Long],
-      numHashes: Int, bands: Int, threshold: Double,
-      broadcastKeysMax: Long = 4000000L): DataFrame = {
+      numHashes: Int, bands: Int, threshold: Double): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     require(numHashes % bands == 0, "bands must divide numHashes")
@@ -498,94 +530,76 @@ object DedupOps {
     // stage recomputes arrays for CANDIDATE documents only (see
     // exactVerifyPairs). Deliberately NOT persisted: the hash array is
     // ~8x the text size, so at corpus scale caching it would spill
-    // multiples of the input to executor disk — recomputing a map-side
-    // UDF is the cheaper, bounded choice (and leaves nothing pinned
-    // across calls).
+    // multiples of the input to executor disk.
     val bandsUdf = udf((t: String) =>
       bandKeys(t, shingler, numHashes, bands)).withName("graft_band_keys")
     val docs = df.filter(col(textCol).isNotNull)
-    // the signature pass output, materialized once (see `materialize`
-    // for the churn-tolerance modes): the band table is read twice
-    // below (duplicate-key count, prune join), and Spark plans are
-    // trees, so each read would otherwise rerun the WHOLE
-    // shingle→minhash pass. ONE row per document, (id, bands: array of
-    // `bands` longs), is stored and exploded to (id, bandHash) on each
-    // read: the explode is a cheap map-side generator, while storing
-    // exploded rows multiplies the stored row count by `bands`. Under
-    // `cache` the array column makes the cache scan row-based, not
-    // vectorized; measured at 8k docs on local[4], the signature pass
-    // still costs ~0.12 s less task CPU than with exploded rows, and the
-    // two scans of it cost the same. `explode_outer` because every
-    // document has exactly `bands` keys, so it emits the same rows as
-    // `explode`, but the optimizer infers no `isnotnull(bands) AND
-    // size(bands) > 0` filter for it: under `materialize=none` that
-    // filter is pushed below the projection as two more signature-UDF
-    // calls per document.
-    val sigs = materialize(docs.select(col(idCol).as("id"),
-      bandsUdf(col(textCol)).as("bands")))
-    val banded = sigs.select(col("id"),
-      explode_outer(col("bands")).as("bandHash"))
-    // candidate pairs: ids sharing any band bucket. The former
-    // formulation self-joined the banded table — TWO exchanges of
-    // every signature row plus a sort per side under the default
-    // sort-merge planning. Now: ONE codegen count-aggregation finds
-    // the duplicate band keys (fixed-width UnsafeMap, spills
-    // gracefully — a collect_list here would run as an
-    // ObjectHashAggregate that sort-falls-back past 128 in-memory
-    // keys), the duplicate-key set prunes the MATERIALIZED banded
-    // table map-side (broadcast semi-join when it fits, a Bloom
-    // prefilter + shuffle join past the cap — guide-§3.2 shape; Bloom
-    // false positives only forward rows the bucket grouping ignores),
-    // and only the surviving sliver — duplicate-bucket rows, O(pairs)
-    // not O(corpus) — pays the list aggregation and in-partition pair
-    // explode. Net: the corpus-sized signature table crosses ONE
-    // exchange instead of two, unsorted.
-    // Bucket membership lists are bounded by the near-dup cluster size
-    // sharing a band key — pathological buckets explode quadratically
-    // in EITHER formulation, and the grouped form additionally holds
-    // one bucket's ids in a single aggregation row (8 B/id: a 10^6-id
-    // degenerate bucket is an 8 MB buffer — by the time a bucket is
-    // big enough to threaten executor memory, its quadratic pair
-    // OUTPUT has long made the job unrunnable under any shape;
-    // exactDedup upstream removes the identical-content mass that
-    // creates such buckets). The pair table is MATERIALIZED
-    // once: it is referenced four times downstream (the verify
-    // tail's count, its two candidate-id scans and its pair join),
-    // and Spark plans are trees — without truncating the lineage every
-    // reference re-ran the whole signature pass over the corpus
-    // (profiled: ~5x the signature cost, the dominant term at 300k
-    // docs). Candidates are the SMALL intermediate (≪ corpus rows,
-    // two BIGINTs each), exactly what should be pinned; the blocks are
-    // freed by the ContextCleaner when the result goes unreachable.
-    val dupKeys = materialize(
-      banded.groupBy(col("bandHash")).agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2).select(col("bandHash")))
-    val nDup = dupKeys.count() // free: materialized
-    val dupRows =
-      if (nDup <= broadcastKeysMax)
-        banded.join(broadcast(dupKeys), Seq("bandHash"))
-      else bloomPrune(banded, dupKeys, nDup)
-        .hint("merge").join(dupKeys.hint("merge"), Seq("bandHash"))
-    val cand = dupRows.groupBy(col("bandHash"))
-      .agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
+    // candidate pairs: ids sharing any band bucket, in ONE sorted pass.
+    // The signature rows (id, bandHash) cross one exchange on bandHash
+    // and are sorted by (bandHash, id) within each partition, so every
+    // bucket is one run of ascending ids; the run scan (the domain-run
+    // idiom of CrawlJob.scheduleAndFetchFlagged) emits each run's
+    // (smaller, larger) id pairs, and singleton buckets — almost all of
+    // them — emit nothing. The signature rows are read once, so nothing
+    // is pinned before the candidates. A sort, not a hash aggregation,
+    // groups the band keys: they are nearly unique, so a partial
+    // aggregation would save nothing. One bucket's distinct ids are
+    // held in one long array while its pairs stream out: a bucket large
+    // enough to threaten executor memory has long made its quadratic
+    // pair output unrunnable under any shape (exactDedup upstream
+    // removes the identical-content mass that creates such buckets).
+    // Adaptive execution may coalesce the bandHash exchange: it merges
+    // whole hash partitions, so a bucket never splits. The explode sits
+    // in the UDF's own projection: a generator over a projected column
+    // makes the optimizer infer `isnotnull`/`size > 0` filters on it,
+    // pushed below the projection as two more signature-UDF calls per
+    // document.
+    val cand = docs
+      .select(col(idCol).as("id"),
+        explode(bandsUdf(col(textCol))).as("bandHash"))
+      .repartition(col("bandHash"))
+      .sortWithinPartitions("bandHash", "id")
+      .select(col("bandHash"), col("id")).as[(Long, Long)]
+      .mapPartitions(bucketPairs)
+      .toDF("id_a", "id_b")
       .distinct()
-      .transform(materialize)
     exactVerifyPairs(cand,
       docs.select(col(idCol).as("id"), col(textCol).as("text")),
       shingler, threshold)
   }
 
+  /** Every (smaller, larger) id pair of each bucket in `rows`, which
+    * are (bandHash, id) sorted by bandHash, then id: each bucket is one
+    * run, its repeated ids count once, and a run of one id emits
+    * nothing. */
+  private def bucketPairs(rows: Iterator[(Long, Long)])
+      : Iterator[(Long, Long)] = {
+    val buf = rows.buffered
+    new Iterator[Iterator[(Long, Long)]] {
+      def hasNext: Boolean = buf.hasNext
+      def next(): Iterator[(Long, Long)] = {
+        val key = buf.head._1
+        val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+        var last = 0L
+        var n = 0
+        while (buf.hasNext && buf.head._1 == key) {
+          val id = buf.next()._2
+          if (n == 0 || id != last) { ids += id; last = id; n += 1 }
+        }
+        val run = ids.result()
+        Iterator.range(0, n - 1).flatMap(i =>
+          Iterator.range(i + 1, n).map(j => (run(i), run(j))))
+      }
+    }.flatten
+  }
+
   /** Exact-Jaccard verification of candidate pairs against document
     * texts — the shared verify tail of every Jaccard family (the
     * batch LSH dataflow above and [[DedupIndex.probePairs]]).
-    * `cand`: (id_a, id_b) candidate pairs; `texts`: (id, text) for
-    * every id the pairs may reference. `shingler` may return an
-    * unsorted multiset ([[jaccard]] counts distinct values).
+    * `candidates`: distinct (id_a, id_b) candidate pairs, pinned here
+    * by [[materializeCounted]], whose job also counts them; `texts`:
+    * (id, text) for every id the pairs may reference. `shingler` may
+    * return an unsorted multiset ([[jaccard]] counts distinct values).
     *
     * Two scale rules, both measured on multi-executor runs:
     *  1. shrink FIRST, map-side: the corpus is semi-joined down to ids
@@ -606,17 +620,21 @@ object DedupOps {
     *     executor, which anti-scales with cluster size (measured:
     *     4 executors 2x SLOWER than 1, and 1-GiB executors die
     *     building it). The merge hint forces the shuffle join. */
-  private[ops] def exactVerifyPairs(cand: DataFrame, texts: DataFrame,
-      shingler: String => Array[Long], threshold: Double): DataFrame = {
-    val spark = cand.sparkSession
+  private[ops] def exactVerifyPairs(candidates: DataFrame,
+      texts: DataFrame, shingler: String => Array[Long],
+      threshold: Double): DataFrame = {
+    val spark = candidates.sparkSession
     import spark.implicits._
-    // join shapes picked by the MEASURED candidate count (cand is
-    // materialized, so counting is free): under the cap the candidate
-    // ids filter the text scan map-side (rule 1) and side A attaches
-    // by broadcasting PAIRS into the text stream — texts never shuffle
-    // for that side; a huge candidate set falls back to a shuffle
-    // semi-join and two shuffle merge joins.
-    val candSmall = cand.count() <= 5000000L
+    // the candidate pairs are read three times below (both id scans
+    // and the pair join), and Spark plans are trees: unpinned, each
+    // read would rerun the whole candidate pass. Join shapes are picked
+    // by the MEASURED candidate count, taken by the pinning job: under
+    // the cap the candidate ids filter the text scan map-side (rule 1)
+    // and side A attaches by broadcasting PAIRS into the text stream —
+    // texts never shuffle for that side; a huge candidate set falls
+    // back to a shuffle semi-join and two shuffle merge joins.
+    val (cand, nCand) = materializeCounted(candidates)
+    val candSmall = nCand <= 5000000L
     val candIds = cand.select($"id_a".as("id"))
       .union(cand.select($"id_b".as("id"))).distinct()
     // candidate TEXTS materialized once (~the candidate fraction of

@@ -11,8 +11,9 @@ import graft.url.Hashing
 /** The one-permutation MinHash kernel (DedupOps.minhash): set/multiset
   * invariance, densification of sparse sets, the per-component
   * collision probability against known Jaccard (including a
-  * non-power-of-two k), the index's signature-scheme stamp, and the
-  * LSH candidate stage's Bloom-prune path. */
+  * non-power-of-two k), the index's signature-scheme stamp, the
+  * shingle kernel against its regex reference, and the LSH candidate
+  * pass against a brute-force band-key reference. */
 class MinHashSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
@@ -96,32 +97,86 @@ class MinHashSpec extends AnyFunSuite {
     assert((expected -- found).isEmpty, s"missed: ${expected -- found}")
   }
 
-  test("LSH candidates through the Bloom-prune path equal the broadcast path") {
-    val planted = docs.orderBy("doc_id").limit(20)
-      .withColumn("doc_id", col("doc_id") + lit(1000000L))
-      .withColumn("text", concat(col("text"), lit(" documento duplicado")))
-    val all = docs.unionByName(planted)
-    // minhashPairs' defaults, with the broadcast cap made explicit
-    def lsh(cap: Long) = DedupOps.lshJaccardPairs(all, "doc_id", "text",
-      DedupOps.shinglesRaw(_, 5), 64, 16, 0.5, broadcastKeysMax = cap)
-    def pairs(cap: Long) = lsh(cap)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    def usesBloom(cap: Long): Boolean = {
-      // `none` keeps the whole lineage in the returned plan, so the
-      // prune UDF is visible when that path was taken
-      spark.conf.set("spark.graft.dedup.materialize", "none")
-      try lsh(cap).queryExecution.analyzed.toString
-        .contains("graft_bloom_prune")
-      finally spark.conf.unset("spark.graft.dedup.materialize")
+  /** The regex normalization `shinglesRaw` replaced, kept as its
+    * reference: lowercase, collapse `\s+` runs, hash substrings. */
+  private def regexShingles(text: String, k: Int): Array[Long] = {
+    val t = java.util.regex.Pattern.compile("\\s+")
+      .matcher(text.toLowerCase).replaceAll(" ")
+    if (t.length < k) Array(Hashing.xxh64(t))
+    else Array.tabulate(t.length - k + 1)(i =>
+      Hashing.xxh64(t.substring(i, i + k)))
+  }
+
+  test("shinglesRaw equals the regex reference bit for bit, under the default and the Turkish locale") {
+    val rnd = new scala.util.Random(8)
+    val ascii = Seq(" ", "\t", "\n", "\u000B", "\f", "\r", "  ", " \t\n ",
+      "\r\n", "a", "Z", "I", "i", "Hello", "WORLD", "x9", "-_.", "QUICK fox")
+    val other = Seq("\u00A0", "\u0085", "\u2028", "\u00C9", "\u00C7",
+      "\u0130", "\u0131", "a\u00E7\u00E3o", "\u00C0\u00C9\u00CE")
+    def piece(): String =
+      if (rnd.nextInt(5) == 0) other(rnd.nextInt(other.size))
+      else ascii(rnd.nextInt(ascii.size))
+    val texts = Seq("", " ", "\t\n", "A", "Ab", "  Lead AND trail \t ",
+      "I I I", "\u00A0 \u00A0") ++
+      Seq.fill(3000)(Seq.fill(rnd.nextInt(14))(piece()).mkString)
+    assert(texts.count(_.forall(_ < 0x80)) > 1000)
+    def check(locale: String): Unit = for (t <- texts; k <- Seq(1, 3, 5, 9)) {
+      val got = DedupOps.shinglesRaw(t, k)
+      assert(got.sameElements(regexShingles(t, k)),
+        s"$locale k=$k text=${t.map(c => f"\\u${c.toInt}%04x").mkString}")
     }
-    val viaBroadcast = DedupOps.minhashPairs(all, "doc_id", "text",
-        threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(!usesBloom(4000000L))
-    assert(pairs(4000000L) === viaBroadcast)
-    assert(usesBloom(0L))
-    assert(pairs(0L) === viaBroadcast)
-    assert(viaBroadcast.size >= 20)
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.ROOT)
+      check("root")
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+      // the reference itself differs under tr: ASCII 'I' lowercases to 'ı'
+      assert(!regexShingles("I", 1).sameElements(Array(Hashing.xxh64("i"))))
+      check("tr")
+    } finally java.util.Locale.setDefault(saved)
+    check("default")
+  }
+
+  test("LSH candidates equal the shares-a-band-key reference, one 300-member bucket included") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(300)
+    def words(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(400)}").mkString(" ")
+    val base = (0L until 120L).map(i => i -> words(20 + rnd.nextInt(30)))
+    // near copies: one word replaced, or a few appended
+    val near = base.take(40).map { case (i, t) =>
+      val ws = t.split(" ")
+      (i + 1000L,
+        if (i % 2 == 0) ws.updated(ws.length / 2, "zz").mkString(" ")
+        else t + " extra words")
+    }
+    val same = words(25)
+    val bucket = (0L until 300L).map(i => (5000L + i, same))
+    val short = Seq(9000L -> "ab", 9001L -> "AB", 9002L -> "a \t b",
+      9003L -> "")
+    val corpus = base ++ near ++ bucket ++ short
+    val text = corpus.toMap
+    val df = corpus.toDF("doc_id", "text")
+    for ((family, shingler, pairs) <- Seq[(String, String => Array[Long],
+        org.apache.spark.sql.DataFrame)](
+      ("minhashPairs", DedupOps.shinglesRaw(_, 5),
+        DedupOps.minhashPairs(df, "doc_id", "text", threshold = 0.0)),
+      ("ngramJaccardPairs", DedupOps.wordNgrams(_, 2),
+        DedupOps.ngramJaccardPairs(df, "doc_id", "text", threshold = 0.0)))) {
+      // threshold 0 keeps every candidate: the verified pairs ARE them
+      val keys = corpus.map { case (id, t) =>
+        id -> DedupOps.bandKeys(t, shingler, 64, 16).toSet }
+      val want = (for ((a, ka) <- keys; (b, kb) <- keys
+        if a < b && ka.exists(kb.contains)) yield (a, b)).toSet
+      val got = pairs.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(want.size >= 300 * 299 / 2 + 40, family)
+      assert(got.length === want.size, s"$family: repeated pairs")
+      assert(got.map(p => (p._1, p._2)).toSet === want, family)
+      got.foreach { case (a, b, j) =>
+        val exact = DedupOps.jaccard(shingler(text(a)), shingler(text(b)))
+        assert(math.abs(j - exact) <= 5e-7, s"$family ($a, $b)")
+      }
+    }
   }
 
   test("DedupIndex refuses a meta without the current signature-scheme stamp") {

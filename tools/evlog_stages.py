@@ -19,7 +19,11 @@ Usage:
                     tasks, task CPU and shuffle write, with the first
                     graft./perfbench. frames of the execution's call site
                     (SQLExecutionStart details; DedupOps.materialize's
-                    own frames are skipped). Stages that adaptive
+                    own frames are skipped). Jobs that run outside any
+                    SQL execution get one row per call site, the name
+                    of the job's last stage (e.g. "parquet at
+                    Workloads.scala:421", a schema-inference read),
+                    with "-" as their execution. Stages that adaptive
                     execution submits carry no library frame in their
                     names, so only this grouping attributes them.
                     minWallSec does not apply.
@@ -71,12 +75,12 @@ tasks = collections.defaultdict(lambda: dict(run=0, gc=0, n=0,
                                              shRead=0, shWrite=0,
                                              deser=0, resSer=0,
                                              cpu=0))
-jobs = []            # [jobId, submitted, completed, stageIds, kept, exec]
+jobs = []            # [jobId, submitted, completed, stageIds, kept, group]
 execs = {}           # executionId -> call site
 stage_exec = {}      # stageId -> executionId (from stage properties)
 LIB_FRAME = re.compile(r"^\s*(?:at\s+)?((?:graft|perfbench)\.\S+)")
-# DedupOps.materialize and its cache helper run the job of every frame
-# they pin; the call site is the frame that asked for it
+# DedupOps.materialize and its helpers run the job of every frame they
+# pin; the call site is the frame that asked for it
 HELPER_FRAME = re.compile(r"DedupOps\$\.(?:materialize|cachePersist)")
 
 for line in lines(args.log):
@@ -129,9 +133,13 @@ for line in lines(args.log):
     elif e == "SparkListenerJobStart":
         jp = ev.get("Properties") or {}
         kept = all(jp.get(k) == v for k, v in props.items())
+        # a job outside any SQL execution is grouped by its call site:
+        # the name of its last (result) stage
+        group = jp.get("spark.sql.execution.id") or "site:" + max(
+            ev["Stage Infos"], key=lambda s: s["Stage ID"])["Stage Name"]
         jobs.append([ev["Job ID"], ev.get("Submission Time", 0), None,
                      [s["Stage ID"] for s in ev["Stage Infos"]], kept,
-                     jp.get("spark.sql.execution.id")])
+                     group])
     elif e == "SparkListenerJobEnd":
         for j in jobs:
             if j[0] == ev["Job ID"]:
@@ -168,8 +176,11 @@ if args.by == "exec":
     print(f"{'exec':>6} {'jobs':>4} {'tasks':>5} {'cpu_s':>8} {'shW_mb':>7}"
           "  call site")
     for ex, g in sorted(groups.items(), key=lambda kv: -kv[1]["cpu"]):
-        site = execs.get(ex, "-") if ex is not None else "(no SQL execution)"
-        print(f"{ex if ex is not None else '-':>6} {g['jobs']:>4} "
+        if ex.startswith("site:"):
+            ex, site = "-", ex[len("site:"):]
+        else:
+            site = execs.get(ex, "-")
+        print(f"{ex:>6} {g['jobs']:>4} "
               f"{g['n']:>5} {g['cpu']:8.3f} {g['shWrite']/1e6:7.3f}  {site}")
     raise SystemExit(0)
 
