@@ -45,20 +45,21 @@ import graft.url.{Hashing, UrlCanon}
   */
 object CrawlJob {
 
+  /** `pinned`: frames the crawl cached that no field names — the
+    * whole frontier, when `frontier` is its early-stop-pruned view. */
   final case class CrawlResult(
       seeds: Seq[PeriodSeed],
       prunedSeeds: Seq[PeriodSeed],
       frontier: Dataset[ScheduledEntry],
       log: Dataset[CrawlLogEntry],
-      images: Dataset[ImageRecord]) {
-    /** Release every dataset this result may have pinned (the frontier
-      * and, when `cacheLog`, the crawl log). Call when the result has
-      * been fully consumed — long-lived JVMs running many crawls must
-      * not accumulate pinned storage. */
-    def unpersist(): Unit = {
-      frontier.unpersist(blocking = false)
-      log.unpersist(blocking = false)
-    }
+      images: Dataset[ImageRecord],
+      pinned: Seq[Dataset[_]] = Nil) {
+    /** Release every dataset this result may have pinned (the frontier,
+      * `pinned` and, when `cacheLog`, the crawl log). Call when the
+      * result has been fully consumed — long-lived JVMs running many
+      * crawls must not accumulate pinned storage. */
+    def unpersist(): Unit =
+      (frontier +: log +: pinned).foreach(_.unpersist(blocking = false))
   }
 
   /** Harvest all periods' listing pages into the raw frontier. */
@@ -202,7 +203,19 @@ object CrawlJob {
     * (no false negatives) and skip the exact join, so only "maybe" rows
     * pay its shuffle against the committed seen table. `None` joins
     * every row. A false positive must not suppress a fetch, so the
-    * final flag is always the join's. */
+    * final flag is always the join's.
+    *
+    * Both branches read one probed frame, and adaptive execution runs
+    * the probe's exchange once: the "maybe" branch reads it as a reused
+    * exchange. That holds only when `frontier` is not read from a
+    * cached frame. Adaptive execution plans each scan of a cached
+    * relation as its own table-cache stage, and that stage's canonical
+    * form keeps its stage id (Spark 4.1), so two exchanges above two
+    * scans of one cached frame never match and the frontier is
+    * shuffled once per branch. [[runResumable]] therefore pins the
+    * frontier only when the early-stop pass reads it too. The probe
+    * runs above the exchange, so each branch's tasks still open the
+    * filter files of their own pmod groups. */
   def flagSeen(frontier: Dataset[ScheduledEntry],
       seenTable: Dataset[Long],
       probe: Option[DataFrame => DataFrame])
@@ -364,7 +377,11 @@ object CrawlJob {
       val seenTable = pin(graft.table.TableIO.readSeen(spark, tableDir))
       val seenCount = seenTable.count()
       val seeds = SeedExpansion.expand(cfg)
-      val frontier = pin(buildFrontier(spark, harvest(spark, cfg, seeds)))
+      val built = buildFrontier(spark, harvest(spark, cfg, seeds))
+      // pinned only when the early-stop pass reads it before the flag
+      // does: with the flag as its one reader, an unpinned frontier lets
+      // both flagSeen branches share one probe exchange
+      val frontier = if (prunes(cfg)) pin(built) else built
       val (pruned, surviving) = pruneIfActive(spark, cfg, seeds, frontier)
       val flagged =
         if (cfg.seenSketch == "cuckoo")
@@ -419,8 +436,13 @@ object CrawlJob {
     val log0 = scheduleAndFetch(spark, surviving, cfg.budget, seen,
       cfg.strictPerHost, cfg.hostBudgets)
     val log = if (cacheLog) log0.cache() else log0
-    CrawlResult(seeds, pruned, surviving, log, materializeImages(log))
+    CrawlResult(seeds, pruned, surviving, log, materializeImages(log),
+      pinned = Seq(frontier))
   }
+
+  /** Whether an `All` selector makes the early-stop rules live. */
+  private def prunes(cfg: CrawlConfig): Boolean =
+    cfg.years == YearSelector.All || cfg.months == MonthSelector.All
 
   /** The early-stop feedback pass (speculative per-period counts +
     * prune) runs ONLY when an `All` selector makes the stop rules
@@ -432,7 +454,7 @@ object CrawlJob {
       : (Seq[PeriodSeed], Dataset[ScheduledEntry]) = {
     val allYearsMode = cfg.years == YearSelector.All
     val allMonthsMode = cfg.months == MonthSelector.All
-    if (!allYearsMode && !allMonthsMode) (seeds, frontier)
+    if (!prunes(cfg)) (seeds, frontier)
     else {
       val counts = periodCounts(spark, frontier, cfg.budget,
         cfg.hostBudgets)
@@ -462,7 +484,10 @@ object CrawlJob {
     * what lets [[graft.table.TableIO.readSeen]] skip a dedup shuffle. */
   def newSeenFrom(log: Dataset[CrawlLogEntry]): Dataset[Long] = {
     import log.sparkSession.implicits._
-    log.filter(_.status == CrawlStatus.Success).map(_.urlHash).distinct()
+    // column expressions: a cached log is read as 2 columns, not
+    // decoded into CrawlLogEntry objects
+    log.filter($"status" === CrawlStatus.Success).select($"urlHash")
+      .distinct().as[Long]
   }
 
   /** Per-host health table (S11 + recovery, portal_saude_mg.py:

@@ -2,9 +2,12 @@ package graft.table
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode,
   SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.AccumulatorV2
 
 import graft.model.ImageRecord
 import graft.seen.CuckooSeen
@@ -233,6 +236,9 @@ object TableIO {
     }
   }
 
+  /** Per-partition meta of data already on disk — the expired-chain
+    * fallback of [[partitionMeta]]. A write's own meta comes from
+    * [[writeImages]], never from reading the files back. */
   private def scanPartitionMeta(spark: SparkSession, df: DataFrame)
       : Seq[PartitionMeta] = {
     import spark.implicits._
@@ -244,6 +250,57 @@ object TableIO {
         r.getLong(3), r.getLong(4)))
       .sortBy(p => (p.site, p.year, p.month))
       .toSeq
+  }
+
+  /** Rows and payload bytes per (site, year, month), summed by the
+    * tasks that write the rows. A null `bytes` counts as a row of 0
+    * bytes, as `sum(length(bytes))` does. */
+  private final class PartitionCounts
+      extends AccumulatorV2[ImageRecord, Seq[PartitionMeta]] {
+    private val acc = mutable.HashMap.empty[(String, Int, Int), (Long, Long)]
+    private def plus(k: (String, Int, Int), rows: Long, bytes: Long) = {
+      val (r, b) = acc.getOrElse(k, (0L, 0L))
+      acc(k) = (r + rows, b + bytes)
+    }
+    def isZero: Boolean = acc.isEmpty
+    def copy(): PartitionCounts = {
+      val c = new PartitionCounts
+      c.merge(this)
+      c
+    }
+    def reset(): Unit = acc.clear()
+    def add(r: ImageRecord): Unit = plus((r.site, r.year, r.month), 1,
+      if (r.bytes == null) 0 else r.bytes.length)
+    def merge(other: AccumulatorV2[ImageRecord, Seq[PartitionMeta]])
+        : Unit = other match {
+      case o: PartitionCounts =>
+        o.acc.foreach { case (k, (r, b)) => plus(k, r, b) }
+    }
+    def value: Seq[PartitionMeta] = acc.toSeq
+      .map { case ((s, y, m), (r, b)) => PartitionMeta(s, y, m, r, b) }
+      .sortBy(p => (p.site, p.year, p.month))
+  }
+
+  /** Write `images` as `dir/rel`, `PARTITIONED BY (site, year, month)`,
+    * and return the per-partition meta of what was written. The rows
+    * are counted on their way into the writer, inside the write's
+    * result stage: Spark applies a result task's accumulator updates
+    * once per partition and only on success, so the count is exact and
+    * no job reads the files back. An empty write's directory is
+    * deleted again, so no snapshot references it (a schema-less
+    * parquet dir would poison later reads). */
+  private def writeImages(images: Dataset[ImageRecord], dir: String,
+      rel: String): Seq[PartitionMeta] = {
+    val spark = images.sparkSession
+    import spark.implicits._
+    val counts = new PartitionCounts
+    spark.sparkContext.register(counts)
+    images.mapPartitions(_.map { r => counts.add(r); r })
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy("site", "year", "month").parquet(s"$dir/$rel")
+    val parts = counts.value
+    if (parts.isEmpty) StateFiles.delete(Paths.get(dir, rel))
+    parts
   }
 
   /** Reject a delta-commit runId in the reserved maintenance namespace:
@@ -261,7 +318,12 @@ object TableIO {
   /** Commit one crawl wave: data + seen delta + snapshot + hint swap.
     * Data is laid out `PARTITIONED BY (site, year, month)` — the
     * reference's `<site>/<ano>/<mes>/` directory contract (§1.2,
-    * portal_saude_mg.py:206-219). The seen delta MUST be disjoint from
+    * portal_saude_mg.py:206-219). Each delta is written once: the image
+    * write counts its own rows and bytes per partition
+    * ([[writeImages]]), and that count is the snapshot's manifest — no
+    * job reads the new data back. The seen delta counts its rows with
+    * an `Observation` on the way. An empty delta leaves no directory
+    * and no snapshot reference. The seen delta MUST be disjoint from
     * the committed seen set (CrawlJob.newSeenFrom guarantees it) so
     * [[readSeen]] needs no dedup shuffle. */
   def commit(spark: SparkSession, dir: String, images: Dataset[ImageRecord],
@@ -273,25 +335,14 @@ object TableIO {
     val dataDirName = f"data/v$version%05d"
     val seenDirName = f"seen/v$version%05d"
 
-    // each delta is written once and counts its own rows on the way
-    // (no separate emptiness job); an empty delta's directory is deleted
-    // again, so no snapshot references it (a schema-less parquet dir
-    // would poison later reads)
-    def writeCounted(df: DataFrame, rel: String, partCols: String*) = {
-      val rows = new Observation()
-      df.observe(rows, count(lit(1)).as("n")).write.mode(SaveMode.Overwrite)
-        .partitionBy(partCols: _*).parquet(s"$dir/$rel")
-      val nonEmpty = rows.get("n") != 0L
-      if (!nonEmpty) StateFiles.delete(Paths.get(dir, rel))
-      nonEmpty
-    }
-    val hasImages = writeCounted(images.toDF(), dataDirName,
-      "site", "year", "month")
-    val hasSeen = writeCounted(seenDelta.toDF("urlHash"), seenDirName)
+    val parts = writeImages(images, dir, dataDirName)
+    val hasImages = parts.nonEmpty
+    val seenRows = new Observation()
+    seenDelta.toDF("urlHash").observe(seenRows, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$seenDirName")
+    val hasSeen = seenRows.get("n") != 0L
+    if (!hasSeen) StateFiles.delete(Paths.get(dir, seenDirName))
 
-    val parts =
-      if (!hasImages) Seq.empty[PartitionMeta]
-      else scanPartitionMeta(spark, spark.read.parquet(s"$dir/$dataDirName"))
     val snap = Snapshot(
       version,
       parent.map(_.dataDirs).getOrElse(Nil) ++
@@ -311,21 +362,26 @@ object TableIO {
     * micro-batch commit, so without compaction [[readImages]] plans
     * O(versions) unions — this is the manifest-rewrite a real table
     * format (e.g. Iceberg's rewrite_data_files) runs on a schedule.
-    * Older version dirs stay on disk for snapshot time travel; replay
-    * idempotence travels in the runids.json sidecar. No-op (None) on
-    * an empty/uninitialized table. */
+    * The data rewrite counts itself ([[writeImages]]): that count is
+    * the snapshot's cumulative per-partition meta, with no read-back of
+    * the rewritten files. Older version dirs stay on disk for snapshot
+    * time travel; replay idempotence travels in the runids.json
+    * sidecar. No-op (None) on an empty/uninitialized table. */
   def compact(spark: SparkSession, dir: String,
       note: String = "compaction"): Option[Snapshot] =
     currentSnapshot(dir).map { parent =>
+      import spark.implicits._
       val version = parent.version + 1
       val dataDirName = f"data/v$version%05d"
       val seenDirName = f"seen/v$version%05d"
-      val hasImages = parent.dataDirs.nonEmpty
+      // the cumulative meta of the whole table (a regular commit's
+      // `partitions` covers its delta only)
+      val parts =
+        if (parent.dataDirs.isEmpty) Seq.empty[PartitionMeta]
+        else writeImages(readImages(spark, dir).as[ImageRecord], dir,
+          dataDirName)
+      val hasImages = parts.nonEmpty
       val hasSeen = parent.seenDirs.nonEmpty
-      if (hasImages)
-        readImages(spark, dir).write.mode(SaveMode.Overwrite)
-          .partitionBy("site", "year", "month")
-          .parquet(s"$dir/$dataDirName")
       if (hasSeen)
         // distinct here (NOT in readSeen): new-format deltas are
         // disjoint by construction, but tables whose streaming commits
@@ -335,12 +391,6 @@ object TableIO {
         readSeen(spark, dir).distinct().toDF("urlHash")
           .write.mode(SaveMode.Overwrite)
           .parquet(s"$dir/$seenDirName")
-      // cumulative per-partition meta recomputed from the compacted
-      // data (a regular commit's `partitions` covers its delta only)
-      val parts =
-        if (!hasImages) Seq.empty[PartitionMeta]
-        else scanPartitionMeta(spark,
-          spark.read.parquet(s"$dir/$dataDirName"))
       val runId = f"compact-v$version%05d"
       val snap = Snapshot(
         version,
@@ -570,8 +620,8 @@ object TableIO {
     import spark.implicits._
     val s = readSnapshot(dir, version)
     if (s.seenDirs.nonEmpty)
-      spark.read.parquet(s.seenDirs.map(d => s"$dir/$d"): _*)
-        .select($"urlHash").as[Long]
+      spark.read.schema(SeenSchema)
+        .parquet(s.seenDirs.map(d => s"$dir/$d"): _*).as[Long]
     else spark.emptyDataset[Long]
   }
 
@@ -594,9 +644,13 @@ object TableIO {
     import spark.implicits._
     currentSnapshot(dir) match {
       case Some(s) if s.seenDirs.nonEmpty =>
-        spark.read.parquet(s.seenDirs.map(d => s"$dir/$d"): _*)
-          .select($"urlHash").as[Long]
+        spark.read.schema(SeenSchema)
+          .parquet(s.seenDirs.map(d => s"$dir/$d"): _*).as[Long]
       case _ => spark.emptyDataset[Long]
     }
   }
+
+  /** The one column of every seen delta; passing it to the reader
+    * spares a footer-reading schema-inference job per read. */
+  private val SeenSchema = "urlHash BIGINT"
 }

@@ -13,8 +13,9 @@ import graft.model._
   * path: a Bloom first run into an empty table (exact join only), a
   * Bloom resumed run (filter rebuild, aligned probe, confirm join) and a
   * cuckoo resumed run (sketch build from the committed table, aligned
-  * probe, confirm join). A change that adds or drops a job in the
-  * resumable crawl fails here and must restate the count. */
+  * probe, confirm join); and the jobs of one `TableIO.compact`. A
+  * change that adds or drops a job in the resumable crawl or the table
+  * compaction fails here and must restate the count. */
 class ResumableJobsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -60,7 +61,20 @@ class ResumableJobsSpec extends AnyFunSuite {
     assert(exists("_cuckoo/meta.json"), "no cuckoo sketch written")
     val counts = Seq("bloom, empty table" -> first,
       "bloom, resumed" -> bloom, "cuckoo, resumed" -> cuckoo)
-    assert(counts === Seq("bloom, empty table" -> 14,
-      "bloom, resumed" -> 18, "cuckoo, resumed" -> 19))
+    assert(counts === Seq("bloom, empty table" -> 10,
+      "bloom, resumed" -> 14, "cuckoo, resumed" -> 15))
+  }
+
+  test("TableIO.compact: Spark jobs of compacting a two-commit table") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-jobs-compact").toString
+    def image(month: Int, i: Int) = ImageRecord(s"img-$month-$i",
+      Array.fill[Byte](i)(1), 1, 1, "png", "cap", i.toLong, "site", 2024,
+      month, s"http://h/$month/$i", month * 100L + i, 0L, 1)
+    for (m <- 1 to 2)
+      graft.table.TableIO.commit(spark, dir,
+        (1 to 20).map(image(m, _)).toDS(),
+        (1 to 20).map(m * 100L + _).toDS(), s"c-$m", Nil)
+    assert(jobCount { graft.table.TableIO.compact(spark, dir) } === 5)
   }
 }

@@ -29,7 +29,9 @@ Usage:
                     minWallSec does not apply.
 
 `cpu_s` is executor CPU plus executor deserialize CPU — the task CPU
-perfbench's LayerListener counts.
+perfbench's LayerListener counts. `deser_s` is the deserialize CPU part
+of it on its own: a fixed cost per task (task binary, closures), so it
+grows with the task count, not with the rows a task handles.
 """
 import argparse, collections, glob, json, os, re, subprocess
 
@@ -74,7 +76,7 @@ tasks = collections.defaultdict(lambda: dict(run=0, gc=0, n=0,
                                              spillMem=0, spillDisk=0,
                                              shRead=0, shWrite=0,
                                              deser=0, resSer=0,
-                                             cpu=0))
+                                             cpu=0, deserCpu=0))
 jobs = []            # [jobId, submitted, completed, stageIds, kept, group]
 execs = {}           # executionId -> call site
 stage_exec = {}      # stageId -> executionId (from stage properties)
@@ -120,6 +122,7 @@ for line in lines(args.log):
         t["run"] += m.get("Executor Run Time", 0)
         t["cpu"] += (m.get("Executor CPU Time", 0) +
                      m.get("Executor Deserialize CPU Time", 0)) / 1e6
+        t["deserCpu"] += m.get("Executor Deserialize CPU Time", 0) / 1e6
         t["gc"] += m.get("JVM GC Time", 0)
         t["deser"] += m.get("Executor Deserialize Time", 0)
         t["resSer"] += m.get("Result Serialization Time", 0)
@@ -156,7 +159,7 @@ if args.by == "exec":
         for sid in j[3]:
             first_job_exec.setdefault(sid, j[5])
     groups = collections.defaultdict(lambda: dict(jobs=0, n=0, cpu=0.0,
-                                                  shWrite=0))
+                                                  deserCpu=0.0, shWrite=0))
     for j in jobs:
         groups[j[5]]["jobs"] += 1
     for key, st in stages.items():
@@ -167,21 +170,24 @@ if args.by == "exec":
         g = groups[ex]
         g["n"] += t.get("n", 0)
         g["cpu"] += t.get("cpu", 0) / 1e3
+        g["deserCpu"] += t.get("deserCpu", 0) / 1e3
         g["shWrite"] += t.get("shWrite", 0)
     where = " ".join(f"{k}={v}" for k, v in props.items())
     print(f"SQL executions{' with ' + where if where else ''} "
           f"(n {len(groups)}, jobs {sum(g['jobs'] for g in groups.values())}"
           f", tasks {sum(g['n'] for g in groups.values())}, cpu "
-          f"{sum(g['cpu'] for g in groups.values()):.3f}s):")
-    print(f"{'exec':>6} {'jobs':>4} {'tasks':>5} {'cpu_s':>8} {'shW_mb':>7}"
-          "  call site")
+          f"{sum(g['cpu'] for g in groups.values()):.3f}s, deser "
+          f"{sum(g['deserCpu'] for g in groups.values()):.3f}s):")
+    print(f"{'exec':>6} {'jobs':>4} {'tasks':>5} {'cpu_s':>8} {'deser_s':>8}"
+          f" {'shW_mb':>7}  call site")
     for ex, g in sorted(groups.items(), key=lambda kv: -kv[1]["cpu"]):
         if ex.startswith("site:"):
             ex, site = "-", ex[len("site:"):]
         else:
             site = execs.get(ex, "-")
         print(f"{ex:>6} {g['jobs']:>4} "
-              f"{g['n']:>5} {g['cpu']:8.3f} {g['shWrite']/1e6:7.3f}  {site}")
+              f"{g['n']:>5} {g['cpu']:8.3f} {g['deserCpu']:8.3f} "
+              f"{g['shWrite']/1e6:7.3f}  {site}")
     raise SystemExit(0)
 
 rows = []
@@ -200,16 +206,18 @@ rows.sort(key=lambda r: (r[0], r[1]), reverse=True)
 tot_wall = sum(r[0] for r in rows)
 tot_cpu = sum(r[3].get("cpu", 0) for r in rows) / 1e3
 tot_tasks = sum(r[3].get("n", 0) for r in rows)
+tot_deser = sum(r[3].get("deserCpu", 0) for r in rows) / 1e3
 where = " ".join(f"{k}={v}" for k, v in props.items())
 print(f"stages >= {min_wall}s wall{' with ' + where if where else ''} "
       f"(n {len(rows)}, sum wall {tot_wall:.3f}s, tasks {tot_tasks}, "
-      f"cpu {tot_cpu:.3f}s):")
+      f"cpu {tot_cpu:.3f}s, deser {tot_deser:.3f}s):")
 print(f"{'wall_s':>7} {'stage':>6} {'tasks':>5} {'task_s':>8} {'cpu_s':>8} "
-      f"{'gc_s':>6} {'spill_mb':>8} {'shR_mb':>7} {'shW_mb':>7}  name")
+      f"{'deser_s':>8} {'gc_s':>6} {'spill_mb':>8} {'shR_mb':>7} "
+      f"{'shW_mb':>7}  name")
 for wall, key, st, t in rows[:40]:
     print(f"{wall:7.3f} {key[0]:>6} {t.get('n', 0):>5} "
           f"{t.get('run', 0)/1e3:8.3f} {t.get('cpu', 0)/1e3:8.3f} "
-          f"{t.get('gc', 0)/1e3:6.3f} "
+          f"{t.get('deserCpu', 0)/1e3:8.3f} {t.get('gc', 0)/1e3:6.3f} "
           f"{t.get('spillDisk', 0)/1e6:8.1f} {t.get('shRead', 0)/1e6:7.3f} "
           f"{t.get('shWrite', 0)/1e6:7.3f}  {st['name'][:70]}")
 
