@@ -15,20 +15,23 @@ import graft.table.StateFiles
   * pages every run; re-shingling 10^10 settled documents to dedup one
   * day's 10^7 is the dominant waste). This index is the document-level
   * analog of the persisted cuckoo URL-seen sketch: signatures are
-  * computed ONCE per document, persist in table storage as (id,
-  * bandHash) rows — 16 bytes × bands per document, ~0.3% of a 10 KB
+  * computed ONCE per document, persist in table storage as one
+  * (id, bands) row per document — 8 bytes × (bands + 1) per document
+  * before compression (~132 B on disk at 16 bands), ~1.3% of a 10 KB
   * document — and each new batch
   *
   *   1. computes signatures for ITS documents only (O(batch) CPU),
   *   2. probes the index with a BROADCAST hash join on bandHash —
-  *      the index side streams map-side in its parquet partition
-  *      order; the 10^11-row index is never shuffled, never sorted,
-  *      and only its two 8-byte columns are read (column pruning);
-  *      pathologically large batches fall back to a shuffle merge
-  *      join behind an EXPLICIT bloom prune: a filter built over the
-  *      batch's band hashes drops non-candidate index rows before
-  *      the exchange (measured: `merge_fallback_*` keys in the
-  *      dedupindex bench mode),
+  *      the index rows, exploded to (id, bandHash) in the scan's own
+  *      projection, stream map-side in their parquet partition order
+  *      together with the batch's own band rows against ONE broadcast
+  *      of the batch's band rows, so cross and within-batch pairs
+  *      come out of one join; the 10^10-row index is never shuffled
+  *      and never sorted; pathologically large batches fall back to
+  *      a shuffle merge join behind an EXPLICIT bloom prune: a filter
+  *      built over the batch's band hashes drops non-candidate index
+  *      rows before the exchange (measured: `merge_fallback_*` keys
+  *      in the dedupindex bench mode),
   *   3. exact-verifies candidates through the same measured verify
   *      tail as the batch dataflow ([[DedupOps.exactVerifyPairs]]),
   *   4. appends its signatures as a new delta dir, so the next batch
@@ -46,11 +49,13 @@ import graft.table.StateFiles
   *
   * Persisted band keys are only comparable with keys computed by the
   * same signature scheme, so the meta carries a scheme stamp
-  * ([[SigScheme]]) that [[init]]/[[write]] set. An index without the
-  * current stamp — built by an earlier signature kernel — is refused
-  * by [[append]], [[probePairs]], [[probeCandidates]] and [[compact]]:
-  * its keys would silently never collide with new ones. Rebuild it
-  * with [[write]].
+  * ([[SigScheme]]) that [[init]]/[[write]] set; the stamp also names
+  * the delta layout. An index without the current stamp — built by an
+  * earlier signature kernel, or stored in an earlier layout — is
+  * refused by [[append]], [[probePairs]], [[probeCandidates]],
+  * [[readIndex]], [[compact]] and [[deleteIds]]: its keys would
+  * silently never collide with new ones, or its rows would not read.
+  * Rebuild it with [[write]].
   *
   * Caller contract: batch ids are NEW (not already indexed) — a
   * re-appended id would pair with itself across deltas. Single-writer,
@@ -63,7 +68,8 @@ object DedupIndex {
 
   /** Index geometry + lineage. `kind`: "char" (k-shingles) or "word"
     * (k-grams). `deltas`: append-only list of signature dirs, oldest
-    * first. `docs`: total indexed documents (advisory, for sizing).
+    * first. `docs`: total indexed documents — the stored rows, one per
+    * document; it sizes the files of a rewrite ([[compact]]).
     * `scheme`: the signature scheme the band keys were computed with
     * (null in metas written before the stamp existed).
     * `runIds`: ids of appended batches — the replay-idempotence guard
@@ -78,9 +84,12 @@ object DedupIndex {
       copy(docs = docs, deltas = deltas, runIds = runIds)
   }
 
-  /** Stamp of the signature scheme this build computes: one-permutation
-    * MinHash with optimal densification, banded by splitmix folds. */
-  val SigScheme = "oph-densified-v1"
+  /** Stamp of the band keys this build computes and of the delta layout
+    * that stores them: one-permutation MinHash with optimal
+    * densification, banded by splitmix folds, one `(id, bands)` row per
+    * document. `oph-densified-v1` stored the same keys as one
+    * `(id, bandHash)` row per key. */
+  val SigScheme = "oph-densified-v2"
 
   private[graft] val chain = new StateFiles.DeltaChain[IndexMeta](
     "index-meta.json", "sig/", "index", "write()")
@@ -147,11 +156,15 @@ object DedupIndex {
     append(docs, idCol, textCol, dir)
   }
 
-  /** Append one batch's signatures as a new delta dir. O(batch) CPU —
-    * settled documents are never re-shingled. Files are written
-    * repartitioned + SORTED by bandHash so parquet row-group min/max
-    * stats stay tight (the shuffle-join fallback's runtime bloom
-    * filter prunes row groups against them).
+  /** Append one batch's signatures as a new delta dir: one `(id, bands)`
+    * row per document with a non-null text — 8 bytes × (bands + 1)
+    * before compression — computed in the batch's own partitions. One
+    * exchange of those rows, keyed on id, sizes the files: adaptive
+    * execution coalesces its partitions to the bytes they hold, so a
+    * small batch lands as one file written by one task (a parquet-write
+    * task pays a fixed ~20–40 ms to deserialize its Hadoop conf). No
+    * count, no sort. O(batch) CPU — settled documents are never
+    * re-shingled.
     *
     * A non-empty `runId` makes the append IDEMPOTENT, and a crash
     * before the meta swap leaves only an orphan delta the replay
@@ -160,57 +173,53 @@ object DedupIndex {
       dir: String, runId: String = ""): IndexMeta = {
     val m = currentMeta(dir)
     chain.append(dir, m, runId) { delta =>
-      val spark = docs.sparkSession
-      val n = docs.count()
-      // partition count scales with batch size (~4M sig rows each, a
-      // few tens of MB of parquet) and never below the session's
-      // parallelism floor for small batches
-      val parts = math.max(
-        math.max(1, spark.sessionState.conf.numShufflePartitions / 4),
-        math.ceil(n.toDouble * m.bands / 4e6).toInt)
-      // exploded in the UDF's own projection: a generator over a
-      // projected column makes the optimizer infer `isnotnull`/`size > 0`
-      // filters on it, pushed below the projection as two more UDF calls
       writeSigs(docs.filter(col(textCol).isNotNull)
-        .select(col(idCol).as("id"),
-          explode(bandKeys(textCol, m)).as("bandHash")),
-        parts, dir, delta, m)
+        .select(col(idCol).as("id"), bandKeys(textCol, m).as("bands"))
+        .repartition(col("id")), dir, delta)
     }
   }
 
-  /** Land one signature delta, repartitioned + sorted by bandHash, and
-    * return the docs it indexes: written rows / bands (every indexed
-    * doc has `bands` keys; null texts have none), counted by the write
-    * itself — a filtered count would read the batch's text column once
-    * more. The counter sits above the exchange, in the writing stage:
-    * adaptive execution replaces an empty shuffle stage (and any
-    * counter inside it) by an empty relation, so a counter below the
-    * exchange would report nothing for exactly the empty case. */
-  private def writeSigs(sigs: DataFrame, parts: Int, dir: String,
-      delta: String, m: IndexMeta): Long = {
+  /** Land one signature delta and return the documents it holds: the
+    * rows written, counted by the write itself — a separate count would
+    * read the batch's text column once more. The counter sits above any
+    * exchange in `sigs`, in the writing stage: adaptive execution
+    * replaces an empty shuffle stage (and any counter inside it) by an
+    * empty relation, so a counter below the exchange would report
+    * nothing for exactly the empty case. */
+  private def writeSigs(sigs: DataFrame, dir: String, delta: String): Long = {
     val rows = new Observation()
-    sigs.repartition(parts, col("bandHash"))
-      .sortWithinPartitions("bandHash")
-      .observe(rows, count(lit(1)).as("n"))
+    sigs.observe(rows, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
-    rows.get("n").asInstanceOf[Long] / m.bands
+    rows.get("n").asInstanceOf[Long]
   }
 
-  /** Read the full signature index (union of delta dirs). */
+  /** The full signature index as (id, bandHash) rows, `bands` per
+    * indexed document (union of the delta dirs). */
   def readIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val m = chain.current(dir)
+    val m = currentMeta(dir)
     if (m.deltas.isEmpty)
       spark.createDataFrame(spark.sparkContext
           .emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Nil))
-    else spark.read.schema(SigSchema)
-      .parquet(m.deltas.map(d => s"$dir/$d"): _*)
+    else bandRows(spark, dir, m)
   }
+
+  /** The stored rows of `m`'s deltas: (id, bands), one per document. */
+  private def docRows(spark: org.apache.spark.sql.SparkSession, dir: String,
+      m: IndexMeta): DataFrame =
+    spark.read.schema(SigSchema).parquet(m.deltas.map(d => s"$dir/$d"): _*)
+
+  /** [[docRows]] exploded to (id, bandHash) in the scan's own
+    * projection. */
+  private def bandRows(spark: org.apache.spark.sql.SparkSession, dir: String,
+      m: IndexMeta): DataFrame =
+    docRows(spark, dir, m)
+      .select(col("id"), explode(col("bands")).as("bandHash"))
 
   /** Columns of every signature delta; passing them to the reader
     * spares a footer-reading schema-inference job per read. */
-  private val SigSchema = "id BIGINT, bandHash BIGINT"
+  private val SigSchema = "id BIGINT, bands ARRAY<BIGINT>"
 
   /** Compact the delta chain into ONE signature dir (a long-lived
     * stream appends one delta per micro-batch; without compaction
@@ -227,25 +236,27 @@ object DedupIndex {
     * [[graft.table.TableIO.invalidatePeriods]] re-opens a period, and
     * its documents must stop pairing — a stale signature row would
     * emit phantom pairs against deleted docs on every future probe).
-    * Rewrites the signature rows anti-joined on id — O(index bytes),
-    * which is ~0.3% of the corpus (16 B × bands per doc), not a
-    * corpus rewrite — and recounts the indexed docs. Compacts as a
-    * side effect. */
+    * Rewrites the document rows anti-joined on id — O(index bytes),
+    * which is ~1.3% of a corpus of 10 KB documents (8 B × (bands + 1)
+    * per doc), not a corpus rewrite — and recounts the indexed docs.
+    * Compacts as a side effect. */
   def deleteIds(ids: DataFrame, dir: String): IndexMeta = {
     val del = ids.toDF("del_id")
-    rewrite(dir, chain.current(dir),
+    rewrite(dir, currentMeta(dir),
       _.join(del, col("id") === col("del_id"), "left_anti"))
   }
 
-  /** [[StateFiles.DeltaChain.rewrite]] of the signature rows through
-    * `f` into one delta. */
+  /** [[StateFiles.DeltaChain.rewrite]] of the document rows through `f`
+    * into one delta of at most one file per ~4M band keys (250k
+    * documents at 16 bands), sized from `m.docs`: the scan's partitions
+    * are coalesced, so the rewrite moves no row across an exchange and
+    * sorts nothing. */
   private def rewrite(dir: String, m: IndexMeta,
       f: DataFrame => DataFrame): IndexMeta =
     chain.rewrite(dir, m) { delta =>
       val spark = org.apache.spark.sql.SparkSession.active
-      writeSigs(f(readIndex(spark, dir)),
-        math.max(1, spark.sessionState.conf.numShufflePartitions / 4),
-        dir, delta, m)
+      val files = math.max(1, math.ceil(m.docs.toDouble * m.bands / 4e6).toInt)
+      writeSigs(f(docRows(spark, dir, m)).coalesce(files), dir, delta)
     }
 
   /** Near-dup pairs a NEW batch introduces: (batch ↔ indexed corpus)
@@ -280,10 +291,15 @@ object DedupIndex {
 
   /** Candidate pairs of [[probePairs]] WITHOUT the exact verify —
     * (id_a, id_b) sharing ≥1 band bucket, cross ∪ within-batch,
-    * distinct. Public for callers that run their own verification (or
-    * want bucket-collision stats) and for the plan-audit spec, which
-    * asserts the index side streams into the probe join with no
-    * exchange. */
+    * distinct. ONE join finds both kinds: the index's band rows and the
+    * batch's own stream, as one union, against the batch's band rows;
+    * a row pairs with every batch row of its bucket but itself, each
+    * pair is emitted as (least, greatest) and `distinct` folds the
+    * repeats (a within-batch pair meets from both sides, and a pair
+    * sharing several buckets meets once per bucket). Public for callers
+    * that run their own verification (or want bucket-collision stats)
+    * and for the plan-audit spec, which asserts the index side streams
+    * into the probe join with no exchange. */
   def probeCandidates(newDocs: DataFrame, idCol: String, textCol: String,
       dir: String, maxBroadcastRows: Long = 4000000L): DataFrame = {
     val m = currentMeta(dir)
@@ -302,47 +318,41 @@ object DedupIndex {
     val newBanded =
       newSigs.select($"id", explode_outer($"bands").as("bandHash"))
     val nb = newBanded.select($"id".as("n_id"), $"bandHash")
-    val l = newBanded.as("l")
-    val r = newBanded.as("r")
-    val within = l.join(r, col("l.bandHash") === col("r.bandHash") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-    val cross =
-      if (m.deltas.isEmpty) within.limit(0)
+    val index = if (m.deltas.isEmpty) None else Some(bandRows(spark, dir, m))
+    def withBatch(ix: Option[DataFrame]) =
+      ix.fold(newBanded)(_.union(newBanded))
+    val joined =
+      if (batchSigRows <= maxBroadcastRows)
+        withBatch(index).join(broadcast(nb), Seq("bandHash"))
       else {
-        val index = readIndex(spark, dir)
-        val joined =
-          if (batchSigRows <= maxBroadcastRows)
-            index.join(broadcast(nb), Seq("bandHash"))
-          else {
-            // pathological batch (> broadcast cap): shuffle merge join.
-            // Prune the index EXPLICITLY before the exchange with a
-            // bloom built over the batch's band hashes — Spark's own
-            // InjectRuntimeFilter cannot help here (the creation side
-            // is materialized, so the selective filter it requires is
-            // no longer visible in the plan), and without pruning the
-            // whole 10^11-row index streams through the shuffle to
-            // match a batch that touches a sliver of its buckets. The
-            // bloom costs one cheap pass over the ALREADY-materialized
-            // signatures; sizing is measured (batchSigRows).
-            // Capped: past ~2^27 distinct hashes the filter itself is
-            // driver-heavy (~200 MB); such a "batch" is a backfill —
-            // run the batch dataflow instead. A 3% false positive only
-            // forwards an index row the join drops.
-            val pruned =
-              if (batchSigRows <= (1L << 27)) {
-                val bloom = spark.sparkContext.broadcast(
-                  nb.stat.bloomFilter("bandHash", batchSigRows, 0.03))
-                index.filter(udf((h: Long) => bloom.value.mightContainLong(h))
-                  .withName("graft_bloom_prune")($"bandHash"))
-              } else index
-            pruned.hint("merge").join(nb.hint("merge"), Seq("bandHash"))
+        // pathological batch (> broadcast cap): shuffle merge join.
+        // Prune the index EXPLICITLY before the exchange with a
+        // bloom built over the batch's band hashes — Spark's own
+        // InjectRuntimeFilter cannot help here (the creation side
+        // is materialized, so the selective filter it requires is
+        // no longer visible in the plan), and without pruning the
+        // whole index (10^11 band rows) streams through the shuffle
+        // to match a batch that touches a sliver of its buckets. The
+        // bloom costs one cheap pass over the ALREADY-materialized
+        // signatures; sizing is measured (batchSigRows).
+        // Capped: past ~2^27 distinct hashes the filter itself is
+        // driver-heavy (~200 MB); such a "batch" is a backfill —
+        // run the batch dataflow instead. A 3% false positive only
+        // forwards an index row the join drops.
+        val pruned =
+          if (batchSigRows > (1L << 27)) index
+          else index.map { ix =>
+            val bloom = spark.sparkContext.broadcast(
+              nb.stat.bloomFilter("bandHash", batchSigRows, 0.03))
+            ix.filter(udf((h: Long) => bloom.value.mightContainLong(h))
+              .withName("graft_bloom_prune")($"bandHash"))
           }
-        joined
-          .filter($"id" =!= $"n_id")
-          .select(least($"id", $"n_id").as("id_a"),
-            greatest($"id", $"n_id").as("id_b"))
+        withBatch(pruned).hint("merge").join(nb.hint("merge"), Seq("bandHash"))
       }
-    cross.union(within).distinct()
+    joined
+      .filter($"id" =!= $"n_id")
+      .select(least($"id", $"n_id").as("id_a"),
+        greatest($"id", $"n_id").as("id_b"))
+      .distinct()
   }
 }

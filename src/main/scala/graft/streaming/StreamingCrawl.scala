@@ -251,8 +251,9 @@ object StreamingCrawl {
     *      read (the TableIO sink's compactEvery, mirrored).
     *
     * The INDEX is the stream's dedup state: bounded by signature
-    * bytes (16 B × bands per doc, ~0.3% of the text), shared with
-    * batch jobs, and never re-derived from settled documents — the
+    * bytes (one row per doc, 8 B × (bands + 1) before compression,
+    * ~1.3% of a 10 KB text), shared with batch jobs, and never
+    * re-derived from settled documents — the
     * streaming complement of [[dedupWithinWatermark]] (which bounds
     * state by TIME and catches only intra-horizon duplicates; this
     * catches a duplicate of ANY earlier document, ever). Use as

@@ -364,4 +364,63 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(found.map(p => (p._1, p._2)) ===
       (40L until 45L).map(i => (i, i + 9000000L)).toSet)
   }
+
+  test("stored rows: readIndex is the exploded band keys of exactly the indexed docs after write, append, compact and deleteIds; docs = stored rows") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-idx-rows").toString
+    val texts = docs.filter(col("doc_id") < 100).as[(Long, String)]
+      .collect().toMap
+    def ids(lo: Long, hi: Long) = docs.filter(col("doc_id") >= lo &&
+      col("doc_id") < hi)
+    // a null text is not indexed
+    val withNull = ids(0, 40).unionByName(
+      Seq((1000000L, null: String)).toDF("doc_id", "text"))
+    def expected(indexed: Set[Long]) = indexed.toSeq.flatMap(i =>
+      DedupOps.bandKeys(texts(i), DedupOps.shinglesRaw(_, 5), 64, 16)
+        .map(h => (i, h))).groupBy(identity).map { case (k, v) => k -> v.size }
+    def check(step: String, indexed: Set[Long]): Unit = {
+      val got = DedupIndex.readIndex(spark, dir).as[(Long, Long)].collect()
+        .toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+      assert(got === expected(indexed), step)
+      val m = DedupIndex.readMeta(dir).get
+      val stored = spark.read.parquet(m.deltas.map(d => s"$dir/$d"): _*)
+      assert(stored.columns.toSeq === Seq("id", "bands"), step)
+      assert(m.docs === stored.count() && m.docs === indexed.size, step)
+    }
+    DedupIndex.write(withNull, "doc_id", "text", dir)
+    check("write", (0L until 40L).toSet)
+    DedupIndex.append(ids(40, 70), "doc_id", "text", dir)
+    DedupIndex.append(ids(70, 100), "doc_id", "text", dir)
+    check("append", (0L until 100L).toSet)
+    assert(DedupIndex.compact(dir).deltas.size === 1)
+    check("compact", (0L until 100L).toSet)
+    DedupIndex.deleteIds(Seq(3L, 50L, 99L, 12345L).toDF("id"), dir)
+    check("deleteIds", (0L until 100L).toSet -- Set(3L, 50L, 99L))
+  }
+
+  test("appending an empty batch, or one whose texts are all null, returns promptly and leaves docs unchanged") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val dir = Files.createTempDirectory("graft-idx-empty").toString
+    val m0 = DedupIndex.write(docs.limit(20), "doc_id", "text", dir)
+    assert(m0.docs === 20)
+    val batches = Seq(
+      "limit 0" -> docs.limit(0),
+      "no row passes a filter" -> docs.filter(col("doc_id") < 0),
+      "null texts" -> docs.limit(5)
+        .withColumn("doc_id", col("doc_id") + lit(700000L))
+        .withColumn("text", lit(null).cast("string")),
+      "null texts at run time" -> docs.limit(5)
+        .withColumn("doc_id", col("doc_id") + lit(800000L))
+        .withColumn("text", udf((_: String) => null: String)
+          .apply(col("text"))))
+    for ((name, b) <- batches) {
+      val m = Await.result(
+        Future(DedupIndex.append(b, "doc_id", "text", dir)), 2.minutes)
+      assert(m.docs === 20, name)
+      assert(DedupIndex.readIndex(spark, dir).count() === 20 * 16, name)
+    }
+    assert(DedupIndex.compact(dir).docs === 20)
+  }
 }

@@ -2,27 +2,45 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.ImageRecord
 import graft.ops.{AnnIndex, ContainmentIndex, DedupIndex, SketchIndex}
 import graft.seen.CuckooSeen
-import graft.table.TableIO
+import graft.table.{StateFiles, TableIO}
 
 /** Pins the on-disk form of every persisted meta: the four index metas,
   * the cuckoo sketch meta and the table's snapshot, `runids.json` and
   * `version-hint.txt`. The strings below were written by the build
   * before the persisted-state code moved into `graft.table.StateFiles`;
   * they must read back to the same values (legacy shapes included), and
-  * the same small inputs must write them byte for byte. */
+  * the same small inputs must write them byte for byte. The dedup index
+  * pins are those of the `oph-densified-v2` layout, with the parquet
+  * footer schema of its signature delta; the `oph-densified-v1` metas
+  * are kept as legacy shapes that read back and are refused. */
 class PersistedFormatSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private val pinned: Map[String, String] = Map(
     "dedup-init.json" ->
-      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":0,"deltas":[],"scheme":"oph-densified-v1","runIds":[]}""",
+      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":0,"deltas":[],"scheme":"oph-densified-v2","runIds":[]}""",
     "dedup-append.json" ->
-      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":2,"deltas":["sig/v00001"],"scheme":"oph-densified-v1","runIds":["r1"]}""",
+      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":2,"deltas":["sig/v00001"],"scheme":"oph-densified-v2","runIds":["r1"]}""",
+    // the footer schema of each file of that append's signature delta:
+    // one row per document, its band keys in one list
+    "dedup-sig-schema.txt" ->
+      """message spark_schema {
+      |  required int64 id;
+      |  optional group bands (LIST) {
+      |    repeated group list {
+      |      required int64 element;
+      |    }
+      |  }
+      |}
+      |""".stripMargin,
     "sketch-init.json" ->
       """{"maxDist":4,"docs":0,"deltas":[],"runIds":[]}""",
     "sketch-append.json" ->
@@ -131,6 +149,14 @@ class PersistedFormatSpec extends AnyFunSuite {
       """3"""
   )
 
+  /** Metas of the previous signature layout (one `(id, bandHash)` row
+    * per band key), written by the build before `oph-densified-v2`. */
+  private val legacyV1: Map[String, String] = Map(
+    "dedup-init.json" ->
+      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":0,"deltas":[],"scheme":"oph-densified-v1","runIds":[]}""",
+    "dedup-append.json" ->
+      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":2,"deltas":["sig/v00001"],"scheme":"oph-densified-v1","runIds":["r1"]}""")
+
   private def tmp(): Path = Files.createTempDirectory("graft-format")
 
   private def put(dir: Path, rel: String, content: String): Unit = {
@@ -198,6 +224,32 @@ class PersistedFormatSpec extends AnyFunSuite {
     }
   }
 
+  test("oph-densified-v1 index metas read back; append, probePairs and compact refuse them with the rebuild message") {
+    import spark.implicits._
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("id", "text")
+    assert(DedupIndex.SigScheme !== "oph-densified-v1")
+    for ((name, json) <- legacyV1) {
+      val dir = metaDir("index-meta.json", json)
+      val m = DedupIndex.readMeta(dir).get
+      assert(m.scheme === "oph-densified-v1", name)
+      assert((m.docs, m.deltas.size, m.committedRunIds) === (
+        if (name == "dedup-init.json") (0L, 0, Set.empty[String])
+        else (2L, 1, Set("r1"))), name)
+      val refusals = Seq[(String, () => Any)](
+        "append" -> (() => DedupIndex.append(docs, "id", "text", dir, "r2")),
+        "probePairs" -> (() =>
+          DedupIndex.probePairs(docs, docs, "id", "text", dir)),
+        "compact" -> (() => DedupIndex.compact(dir)))
+      refusals.foreach { case (call, f) =>
+        val e = intercept[IllegalStateException](f())
+        assert(e.getMessage.contains("oph-densified-v1") &&
+          e.getMessage.contains("rebuild it with write()"), s"$name $call")
+      }
+      assert(Files.readString(Paths.get(dir, "index-meta.json")) === json)
+    }
+  }
+
   test("pinned table files read back, legacy embedded runIds included") {
     val t = tmp()
     put(t, "snapshots/v00001.json", pinned("table-v1.json"))
@@ -244,6 +296,17 @@ class PersistedFormatSpec extends AnyFunSuite {
     same("dedup-init.json", Paths.get(d, "index-meta.json"))
     DedupIndex.append(docs, "id", "text", d, "r1")
     same("dedup-append.json", Paths.get(d, "index-meta.json"))
+    val footers = StateFiles.list(Paths.get(d, "sig", "v00001"))
+      .filter(_.getFileName.toString.endsWith(".parquet")).map { p =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new HadoopPath(p.toString), spark.sparkContext.hadoopConfiguration))
+        try (r.getFooter.getFileMetaData.getSchema.toString, r.getRecordCount)
+        finally r.close()
+      }
+    assert(footers.map(_._2).sum === 2L, "one row per document")
+    footers.foreach { case (schema, _) =>
+      assert(schema === pinned("dedup-sig-schema.txt"), "dedup-sig-schema.txt")
+    }
 
     val s = root.resolve("sketch").toString
     SketchIndex.init(s, 4)

@@ -26,7 +26,10 @@ Usage:
                     with "-" as their execution. Stages that adaptive
                     execution submits carry no library frame in their
                     names, so only this grouping attributes them.
-                    minWallSec does not apply.
+                    Under each row, one "stage" line per stage the
+                    execution ran, by stage id: tasks, CPU, deserialize
+                    CPU, shuffle read and shuffle write, and the stage
+                    name. minWallSec does not apply.
 
 `cpu_s` is executor CPU plus executor deserialize CPU — the task CPU
 perfbench's LayerListener counts. `deser_s` is the deserialize CPU part
@@ -159,7 +162,8 @@ if args.by == "exec":
         for sid in j[3]:
             first_job_exec.setdefault(sid, j[5])
     groups = collections.defaultdict(lambda: dict(jobs=0, n=0, cpu=0.0,
-                                                  deserCpu=0.0, shWrite=0))
+                                                  deserCpu=0.0, shWrite=0,
+                                                  stages=[]))
     for j in jobs:
         groups[j[5]]["jobs"] += 1
     for key, st in stages.items():
@@ -172,6 +176,7 @@ if args.by == "exec":
         g["cpu"] += t.get("cpu", 0) / 1e3
         g["deserCpu"] += t.get("deserCpu", 0) / 1e3
         g["shWrite"] += t.get("shWrite", 0)
+        g["stages"].append((key, st, t))
     where = " ".join(f"{k}={v}" for k, v in props.items())
     print(f"SQL executions{' with ' + where if where else ''} "
           f"(n {len(groups)}, jobs {sum(g['jobs'] for g in groups.values())}"
@@ -188,6 +193,13 @@ if args.by == "exec":
         print(f"{ex:>6} {g['jobs']:>4} "
               f"{g['n']:>5} {g['cpu']:8.3f} {g['deserCpu']:8.3f} "
               f"{g['shWrite']/1e6:7.3f}  {site}")
+        for key, st, t in sorted(g["stages"], key=lambda s: s[0]):
+            sid = f"{key[0]}" + (f".{key[1]}" if key[1] else "")
+            print(f"{'':>6} stage {sid}: {t.get('n', 0)} tasks, cpu "
+                  f"{t.get('cpu', 0)/1e3:.3f}s, deser "
+                  f"{t.get('deserCpu', 0)/1e3:.3f}s, shR "
+                  f"{t.get('shRead', 0)/1e6:.3f}MB, shW "
+                  f"{t.get('shWrite', 0)/1e6:.3f}MB  {st['name'][:60]}")
     raise SystemExit(0)
 
 rows = []
