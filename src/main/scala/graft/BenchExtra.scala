@@ -75,8 +75,9 @@ object BenchExtra {
         }
         s.sparkContext.setJobDescription("schedule+fetch log")
         timed("..+schedule+fetch(noop)") {
-          noop(CrawlJob.scheduleAndFetch(s,
-            CrawlJob.buildFrontier(s, CrawlJob.harvest(s, cfg, seeds)),
+          noop(CrawlJob.scheduleAndFetchFlagged(
+            CrawlJob.buildFrontier(s, CrawlJob.harvest(s, cfg, seeds))
+              .map(e => (e, false)),
             cfg.budget).toDF())
         }
         s.sparkContext.setJobDescription("full crawl + payloads")
@@ -110,7 +111,7 @@ object BenchExtra {
         timed("bandKeys pass(noop)") {
           val bandsUdf = udf((t: String) =>
             graft.ops.DedupOps.bandKeys(t,
-              graft.ops.DedupOps.shingles(_, 5), 64, 16))
+              graft.ops.DedupOps.shinglesRaw(_, 5), 64, 16))
           noop(docs.select(col("id"),
             explode(bandsUdf(col("text"))).as("bandHash")))
         }
@@ -141,14 +142,14 @@ object BenchExtra {
         var w = 0
         while (w < 2000) {
           sink ^= graft.ops.DedupOps.bandKeys(texts(w % n),
-            graft.ops.DedupOps.shingles(_, 5), 64, 16)(0)
+            graft.ops.DedupOps.shinglesRaw(_, 5), 64, 16)(0)
           w += 1
         }
         val t0 = System.nanoTime()
         var i = 0
         while (i < n) {
           sink ^= graft.ops.DedupOps.bandKeys(texts(i),
-            graft.ops.DedupOps.shingles(_, 5), 64, 16)(0)
+            graft.ops.DedupOps.shinglesRaw(_, 5), 64, 16)(0)
           i += 1
         }
         val sec = (System.nanoTime() - t0) / 1e9
@@ -158,12 +159,12 @@ object BenchExtra {
         val t1 = System.nanoTime()
         i = 0
         while (i < n) {
-          sink ^= graft.ops.DedupOps.shingles(texts(i), 5)(0)
+          sink ^= graft.ops.DedupOps.shinglesRaw(texts(i), 5)(0)
           i += 1
         }
         val shSec = (System.nanoTime() - t1) / 1e9
         val sets = texts.take(2000)
-          .map(t => graft.ops.DedupOps.shingles(t, 5))
+          .map(t => graft.ops.DedupOps.shinglesRaw(t, 5))
         val t2 = System.nanoTime()
         i = 0
         while (i < n) {

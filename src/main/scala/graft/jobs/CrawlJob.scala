@@ -159,7 +159,7 @@ object CrawlJob {
     import spark.implicits._
     val statusUdf = udf((h: Long, host: String) =>
       HostScheduler.terminalStatus(h,
-        hostBudgets.getOrElse(host, budget).maxRetries, host))
+        HostScheduler.budgetFor(budget, hostBudgets, host).maxRetries, host))
     frontier
       .groupBy($"site", $"year", $"month")
       .agg(count(when(statusUdf($"urlHash", $"host") === CrawlStatus.Success,
@@ -169,35 +169,16 @@ object CrawlJob {
       .toMap
   }
 
-  /** [[scheduleAndFetchFlagged]] with the skip-if-exists flags taken
-    * from `seen`, a broadcast in-memory set — DEMO/TEST ONLY (capped at
-    * 10^6 keys). The production resume path is [[runResumable]]: a
-    * sketch-prefiltered exact join ([[flagSeen]]) feeding
-    * [[scheduleAndFetchFlagged]]. */
-  def scheduleAndFetch(spark: SparkSession, frontier: Dataset[ScheduledEntry],
-      budget: PolitenessBudget,
-      seen: Set[Long] = Set.empty,
-      strictPerHost: Boolean = false,
-      hostBudgets: Map[String, PolitenessBudget] = Map.empty)
-      : Dataset[CrawlLogEntry] = {
-    import spark.implicits._
-    require(seen.size <= 1000000,
-      "broadcast seen-set path is demo/test-only; use runResumable's " +
-        "Bloom-prefiltered exact join at scale")
-    val seenBc = spark.sparkContext.broadcast(seen)
-    scheduleAndFetchFlagged(
-      frontier.map(e => (e, seenBc.value.contains(e.urlHash))),
-      budget, strictPerHost, hostBudgets)
-  }
-
   /** Payload materialization over the crawl log (see PayloadStage). */
   def materializeImages(log: Dataset[CrawlLogEntry]): Dataset[ImageRecord] = {
     import log.sparkSession.implicits._
     log.flatMap(graft.fetch.PayloadStage.imageFor(_))
   }
 
-  /** Skip-if-exists flags (D2), exact by construction. `probe` appends
-    * a seen sketch's `maybeSeen` column to the frontier (the persisted
+  /** Skip-if-exists flags (D2), exact by construction: the one flag
+    * rule of every crawl path ([[run]], [[runResumable]] and
+    * [[graft.streaming.StreamingCrawl.outcomes]]). `probe` appends a
+    * seen sketch's `maybeSeen` column to the frontier (the persisted
     * partition-aligned filters, [[graft.seen.BloomSeen.probeAligned]] or
     * [[graft.seen.CuckooSeen.probeAligned]]): sketch "no" rows are exact
     * (no false negatives) and skip the exact join, so only "maybe" rows
@@ -247,8 +228,9 @@ object CrawlJob {
     flagSeen(frontier, seenTable,
       Some(graft.seen.BloomSeen.probeAligned(_, "urlHash", bloomDir, meta)))
 
-  /** Politeness-scheduled fetch over (site, host) domains, with the
-    * skip-if-exists flag precomputed per entry. Secondary-sort pattern:
+  /** Politeness-scheduled fetch over the domains of
+    * [[HostScheduler.domainOf]], with the skip-if-exists flag
+    * precomputed per entry. Secondary-sort pattern:
     * hash-repartition on the domain key, sort within partitions, then
     * stream domain runs — constant memory per task regardless of domain
     * size. Emits byte-free log rows; payloads materialize in
@@ -262,10 +244,8 @@ object CrawlJob {
     val spark = flagged.sparkSession
     import spark.implicits._
     val numPartitions = spark.sessionState.conf.numShufflePartitions
-    // domain key: (site, host) in reference-compat mode, host alone in
-    // strict web-polite mode (sites sharing a host share one budget)
-    def domainOf(e: ScheduledEntry): (String, String) =
-      (if (strictPerHost) "" else e.site, e.host)
+    // the columns of HostScheduler.domainOf: every domain lands in one
+    // partition, its entries consecutive and in frontier order
     val partKeys =
       if (strictPerHost) Seq(col("_1.host"))
       else Seq(col("_1.site"), col("_1.host"))
@@ -275,20 +255,17 @@ object CrawlJob {
         (partKeys :+ col("_1.seedSeq")) :+ col("_1.discoverySeq"): _*)
       .mapPartitions { it =>
         // consecutive runs of one domain key = one politeness timeline
-        new Iterator[Iterator[CrawlLogEntry]] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Iterator[CrawlLogEntry] = {
-            val key = domainOf(buf.head._1)
-            val domain = new Iterator[(ScheduledEntry, Boolean)] {
-              def hasNext: Boolean =
-                buf.hasNext && domainOf(buf.head._1) == key
-              def next(): (ScheduledEntry, Boolean) = buf.next()
-            }
-            HostScheduler.runFlagged(domain,
-              hostBudgets.getOrElse(key._2, budget))
+        var key: (String, String) = null
+        var timeline: HostScheduler.Timeline = null
+        it.map { case (e, seen) =>
+          val k = HostScheduler.domainOf(strictPerHost)(e)
+          if (k != key) {
+            key = k
+            timeline = new HostScheduler.Timeline(
+              HostScheduler.budgetFor(budget, hostBudgets, e.host))
           }
-        }.flatten
+          timeline.step(e, seen)
+        }
       }
   }
 
@@ -419,7 +396,9 @@ object CrawlJob {
   }
 
   /** Full batch crawl. `seen` carries the committed URL-seen set for
-    * resume (skip-if-exists, D2).
+    * resume (skip-if-exists, D2): it is flagged by [[flagSeen]]'s exact
+    * join, like every other crawl path (an empty `seen` folds the join
+    * away).
     *
     * `cacheLog = true` persists the (byte-free) crawl log so `log`
     * and `images` consumers share one scheduled fetch. Payload bytes
@@ -433,7 +412,8 @@ object CrawlJob {
     val raw = harvest(spark, cfg, seeds)
     val frontier = buildFrontier(spark, raw).cache()
     val (pruned, surviving) = pruneIfActive(spark, cfg, seeds, frontier)
-    val log0 = scheduleAndFetch(spark, surviving, cfg.budget, seen,
+    val flagged = flagSeen(surviving, seen.toSeq.toDS(), None)
+    val log0 = scheduleAndFetchFlagged(flagged, cfg.budget,
       cfg.strictPerHost, cfg.hostBudgets)
     val log = if (cacheLog) log0.cache() else log0
     CrawlResult(seeds, pruned, surviving, log, materializeImages(log),

@@ -172,5 +172,5 @@ final case class CrawlConfig(
       * refuses any other value. */
     seenSketch: String = "bloom") {
   def budgetFor(host: String): PolitenessBudget =
-    hostBudgets.getOrElse(host, budget)
+    graft.politeness.HostScheduler.budgetFor(budget, hostBudgets, host)
 }

@@ -9,18 +9,21 @@ import graft.politeness.HostScheduler
 import graft.table.StateFiles
 
 /** Structured-Streaming fetch loop (north rule): frontier entries
-  * arrive as a stream, `flatMapGroupsWithState` keyed by the
-  * politeness domain (site, host) carries the virtual-time token
-  * bucket across micro-batches, and the sink is idempotent so
-  * checkpointed restart replays only the uncommitted batch
-  * (SURVEY §2.10 "resume" row).
+  * arrive as a stream, are flagged by the batch job's one seen-flag
+  * rule ([[graft.jobs.CrawlJob.flagSeen]]), and `flatMapGroupsWithState`
+  * keyed by the batch job's politeness domain
+  * ([[HostScheduler.domainOf]]) carries each domain's
+  * [[HostScheduler.Timeline]] state across micro-batches. The sink is
+  * idempotent so checkpointed restart replays only the uncommitted
+  * batch (SURVEY §2.10 "resume" row).
   *
   * Within a batch, a group's entries are sorted by
   * (seedSeq, discoverySeq) before scheduling; as long as batch
   * boundaries respect per-domain frontier order (they do for a
   * file-source frontier written in wave order), the concatenated
   * per-domain timeline is identical to the batch job's — asserted in
-  * StreamingCrawlSpec.
+  * StreamingCrawlSpec, and for the timeline alone in
+  * PolitenessInvariantSpec.
   */
 object StreamingCrawl {
 
@@ -51,22 +54,24 @@ object StreamingCrawl {
       key: (String, String), entries: Iterator[(ScheduledEntry, Boolean)],
       state: GroupState[HostScheduler.DomainState])
       : Iterator[StreamedOutcome] = {
-    val s0 = state.getOption.getOrElse(HostScheduler.DomainState.initial)
-    val sorted = entries.toSeq.sortBy(t => (t._1.seedSeq, t._1.discoverySeq))
-    val (outcomes, s1) = HostScheduler.runBufferedFlagged(sorted,
-      hostBudgets.getOrElse(key._2, budget), s0)
-    state.update(s1)
-    outcomes.iterator.map(flatten)
+    val timeline = new HostScheduler.Timeline(
+      HostScheduler.budgetFor(budget, hostBudgets, key._2),
+      state.getOption.getOrElse(HostScheduler.DomainState.initial))
+    val log = entries.toSeq.sortBy(t => (t._1.seedSeq, t._1.discoverySeq))
+      .map { case (e, seen) => timeline.step(e, seen) }
+    state.update(timeline.state)
+    log.iterator.map(flatten)
   }
 
   /** Wire a streaming frontier through the politeness scheduler.
     *
-    * `seenTable` (the committed URL-seen hashes) joins stream-static
-    * against the frontier BEFORE the stateful scheduling, so a
-    * restarted stream re-reading committed URLs skips them instead of
-    * re-spending politeness budget. `strictPerHost` keys scheduler
-    * state by host alone — sites sharing a physical host share ONE
-    * budget, mirroring the batch path's domain key. */
+    * `seenTable` (the committed URL-seen hashes) flags the frontier
+    * through [[graft.jobs.CrawlJob.flagSeen]]'s stream-static join
+    * BEFORE the stateful scheduling, so a restarted stream re-reading
+    * committed URLs skips them instead of re-spending politeness
+    * budget. `strictPerHost` keys scheduler state by host alone
+    * ([[HostScheduler.domainOf]], the batch path's domain key) — sites
+    * sharing a physical host share ONE budget. */
   def outcomes(frontier: Dataset[ScheduledEntry],
       budget: PolitenessBudget,
       seenTable: Option[Dataset[Long]] = None,
@@ -82,8 +87,7 @@ object StreamingCrawl {
       case Some(st) => graft.jobs.CrawlJob.flagSeen(frontier, st, None)
     }
     flagged
-      .groupByKey(t =>
-        (if (strictPerHost) "" else t._1.site, t._1.host))
+      .groupByKey(t => HostScheduler.domainOf(strictPerHost)(t._1))
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(handleDomain(budget, hostBudgets))
   }
@@ -137,6 +141,16 @@ object StreamingCrawl {
     }
   }
 
+  /** The frontier parquet waves under `frontierDir` as a stream, one
+    * wave per micro-batch. */
+  private def readFrontier(spark: SparkSession,
+      frontierDir: String): Dataset[ScheduledEntry] =
+    spark.readStream
+      .schema(Encoders.product[ScheduledEntry].schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(frontierDir)
+      .as(Encoders.product[ScheduledEntry])
+
   /** The streaming fetch loop with a TABLE sink: frontier waves →
     * politeness scheduling → one snapshot commit per micro-batch. */
   def startToTable(spark: SparkSession, frontierDir: String,
@@ -146,14 +160,8 @@ object StreamingCrawl {
       strictPerHost: Boolean = false,
       hostBudgets: Map[String, PolitenessBudget] = Map.empty,
       compactEvery: Int = 0) = {
-    import spark.implicits._
-    val schema = Encoders.product[ScheduledEntry].schema
-    val frontier = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(frontierDir)
-      .as[ScheduledEntry]
-    outcomes(frontier, budget, seenTable, strictPerHost, hostBudgets)
+    outcomes(readFrontier(spark, frontierDir), budget, seenTable,
+        strictPerHost, hostBudgets)
       .writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch(commitOutcomesBatch(tableDir, runTag, compactEvery) _)
@@ -168,14 +176,8 @@ object StreamingCrawl {
       checkpointDir: String, budget: PolitenessBudget,
       seenTable: Option[Dataset[Long]] = None,
       strictPerHost: Boolean = false) = {
-    import spark.implicits._
-    val schema = Encoders.product[ScheduledEntry].schema
-    val frontier = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1) // one frontier wave per batch
-      .parquet(frontierDir)
-      .as[ScheduledEntry]
-    outcomes(frontier, budget, seenTable, strictPerHost).writeStream
+    outcomes(readFrontier(spark, frontierDir), budget, seenTable,
+        strictPerHost).writeStream
       .outputMode(OutputMode.Append)
       .format("parquet")
       .option("path", outDir)

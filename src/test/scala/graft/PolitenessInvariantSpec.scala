@@ -17,7 +17,9 @@ import graft.politeness.HostScheduler
   *    logged starts (log starts are a subset of attempt starts, so
   *    this is a necessary condition of the sliding-window limiter);
   *  - skipped entries consume zero attempts and zero virtual time;
-  *  - attempts never exceed `maxRetries`, and errors use ALL retries.
+  *  - attempts never exceed `maxRetries`, and errors use ALL retries;
+  *  - a timeline resumed from another's state at any split point logs
+  *    what one unbroken timeline logs (the streaming hand-off).
   */
 class PolitenessInvariantSpec extends AnyFunSuite {
 
@@ -39,8 +41,8 @@ class PolitenessInvariantSpec extends AnyFunSuite {
         else (0 until n).filter(_ => rnd.nextInt(4) == 0)
           .map(i => Hashing(i, trial)).toSet
       val entries = (0 until n).map(i => entry(i, Hashing(i, trial)))
-      val log = HostScheduler.run(entries.iterator, budget,
-        seen.contains).toSeq
+      val timeline = new HostScheduler.Timeline(budget)
+      val log = entries.map(e => timeline.step(e, seen.contains(e.urlHash)))
       assert(log.size === n)
 
       val fetched = log.filter(_.status != CrawlStatus.Skipped)
@@ -80,6 +82,43 @@ class PolitenessInvariantSpec extends AnyFunSuite {
       assert(fetched.filter(_.status == CrawlStatus.Error)
         .forall(_.attempts == budget.maxRetries))
     }
+  }
+
+  test("a timeline resumed from another's state continues it exactly (40 random splits)") {
+    // the micro-batch contract of StreamingCrawl: a domain's entries
+    // [0, k) on one timeline, then [k, n) on a timeline started from
+    // its state, log exactly what one timeline over [0, n) logs
+    val rnd = new scala.util.Random(0xC0FFEE)
+    var quarantined = 0
+    for (trial <- 1 to 40) {
+      val budget = PolitenessBudget(
+        crawlDelayMs = 100 + rnd.nextInt(1900),
+        requestsPerMinute = 2 + rnd.nextInt(20),
+        burst = 1 + rnd.nextInt(4),
+        maxRetries = 1 + rnd.nextInt(3),
+        backoffPerAttemptMs = 500 + rnd.nextInt(1500),
+        quarantineAfter =
+          if (rnd.nextBoolean()) 1 + rnd.nextInt(2) else Int.MaxValue,
+        quarantineMs = 1000 + rnd.nextInt(60000))
+      val n = 20 + rnd.nextInt(40)
+      val seen = if (rnd.nextBoolean()) Set.empty[Long]
+        else (0 until n).filter(_ => rnd.nextInt(4) == 0)
+          .map(i => Hashing(i, trial)).toSet
+      val entries = (0 until n).map(i => entry(i, Hashing(i, trial)))
+      val k = rnd.nextInt(n + 1)
+      def steps(t: HostScheduler.Timeline, from: Int, until: Int) =
+        entries.slice(from, until).map(e => t.step(e, seen.contains(e.urlHash)))
+      val whole = new HostScheduler.Timeline(budget)
+      val one = steps(whole, 0, n)
+      val first = new HostScheduler.Timeline(budget)
+      val head = steps(first, 0, k)
+      val second = new HostScheduler.Timeline(budget, first.state)
+      val tail = steps(second, k, n)
+      assert(head ++ tail === one, s"trial $trial: split at $k of $n ($budget)")
+      assert(second.state === whole.state, s"trial $trial: end state")
+      if (whole.state.quarantines > 0) quarantined += 1
+    }
+    assert(quarantined > 0, "no trial exercised the quarantine rule")
   }
 
   /** Deterministic per-trial url hash. */

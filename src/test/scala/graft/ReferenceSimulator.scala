@@ -115,12 +115,12 @@ object ReferenceSimulator {
     }
     domains.foreach { case ((_, host), entries) =>
       val ordered = entries.sortBy(e => (e.seedSeq, e.discoverySeq))
-      HostScheduler.run(ordered.iterator, cfg.budgetFor(host),
-          seen.contains)
-        .foreach { l =>
-          log += l
-          graft.fetch.PayloadStage.imageFor(l).foreach(images += _)
-        }
+      val timeline = new HostScheduler.Timeline(cfg.budgetFor(host))
+      ordered.foreach { e =>
+        val l = timeline.step(e, seen.contains(e.urlHash))
+        log += l
+        graft.fetch.PayloadStage.imageFor(l).foreach(images += _)
+      }
     }
     SimResult(log.toSeq, images.toSeq, crawled.toSeq)
   }

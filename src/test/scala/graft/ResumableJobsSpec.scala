@@ -11,11 +11,14 @@ import graft.model._
 
 /** The Spark jobs one `runResumable` call runs, pinned per seen-set
   * path: a Bloom first run into an empty table (exact join only), a
-  * Bloom resumed run (filter rebuild, aligned probe, confirm join) and a
+  * Bloom resumed run (filter rebuild, aligned probe, confirm join), a
   * cuckoo resumed run (sketch build from the committed table, aligned
-  * probe, confirm join); and the jobs of one `TableIO.compact`. A
-  * change that adds or drops a job in the resumable crawl or the table
-  * compaction fails here and must restate the count. */
+  * probe, confirm join) and a Bloom resumed run under an `All` month
+  * selector (early-stop count over a pinned frontier); the jobs of
+  * `CrawlJob.run` and a count of its log, with an empty and a non-empty
+  * seen set; and the jobs of one `TableIO.compact`. A change that adds
+  * or drops a job in the crawl or the table compaction fails here and
+  * must restate the count. */
 class ResumableJobsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -43,26 +46,74 @@ class ResumableJobsSpec extends AnyFunSuite {
     months = MonthSelector.Multiple(Seq(1, 2, 3)),
     nowYear = 2024, nowMonth = 6, maxPages = 2)
 
+  /** Jobs of one `runResumable` call into `dir`; releases its result. */
+  private def resumableJobs(c: CrawlConfig, dir: String, runId: String): Int = {
+    var result: CrawlJob.CrawlResult = null
+    val n = jobCount { result = CrawlJob.runResumable(spark, c, dir, runId)._1 }
+    result.unpersist()
+    n
+  }
+
   test("runResumable: Spark jobs of a first run and of Bloom and cuckoo resumed runs") {
     val dir = Files.createTempDirectory("graft-jobs").toString
-    def jobsOf(c: CrawlConfig, runId: String): Int = {
-      var result: CrawlJob.CrawlResult = null
-      val n = jobCount { result = CrawlJob.runResumable(spark, c, dir, runId)._1 }
-      result.unpersist()
-      n
-    }
     def exists(rel: String) = Files.exists(Paths.get(dir, rel))
-    val first = jobsOf(cfg, "run-1")
+    val first = resumableJobs(cfg, dir, "run-1")
     assert(graft.table.TableIO.readSeen(spark, dir).count() > 0,
       "the first run must commit seen keys for the resumed runs to probe")
-    val bloom = jobsOf(cfg, "run-2")
+    val bloom = resumableJobs(cfg, dir, "run-2")
     assert(exists("_bloom/run-2/part-00000.bloom"), "no Bloom sketch written")
-    val cuckoo = jobsOf(cfg.copy(seenSketch = "cuckoo"), "run-3")
+    val cuckoo = resumableJobs(cfg.copy(seenSketch = "cuckoo"), dir, "run-3")
     assert(exists("_cuckoo/meta.json"), "no cuckoo sketch written")
     val counts = Seq("bloom, empty table" -> first,
       "bloom, resumed" -> bloom, "cuckoo, resumed" -> cuckoo)
     assert(counts === Seq("bloom, empty table" -> 10,
       "bloom, resumed" -> 14, "cuckoo, resumed" -> 15))
+  }
+
+  test("runResumable: Spark jobs of a Bloom resumed run under an All month selector") {
+    val dir = Files.createTempDirectory("graft-jobs-all").toString
+    val allCfg = cfg.copy(months = MonthSelector.All)
+    resumableJobs(allCfg, dir, "run-1")
+    assert(graft.table.TableIO.readSeen(spark, dir).count() > 0,
+      "the first run must commit seen keys for the resumed run to probe")
+    val resumed = resumableJobs(allCfg, dir, "run-2")
+    assert(resumed === 18)
+  }
+
+  test("CrawlJob.run: Spark jobs with an empty and a non-empty seen set; an empty one plans no join") {
+    import spark.implicits._
+    val runCfg = cfg.copy(maxPages = 3)
+    def jobsOf(seen: Set[Long]): Int = {
+      var result: CrawlJob.CrawlResult = null
+      val n = jobCount {
+        result = CrawlJob.run(spark, runCfg, seen)
+        result.log.count()
+      }
+      result.unpersist()
+      n
+    }
+    def joinsOf(seen: Set[Long]): Int = {
+      val r = CrawlJob.run(spark, runCfg, seen, cacheLog = false)
+      try r.log.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }.size
+      finally r.unpersist()
+    }
+    val seen = {
+      val r = CrawlJob.run(spark, runCfg)
+      try r.log.filter(_.status == CrawlStatus.Success).map(_.urlHash)
+        .collect().toSet
+      finally r.unpersist()
+    }
+    assert(seen.nonEmpty)
+    val counts = Seq("empty seen" -> jobsOf(Set.empty),
+      "non-empty seen" -> jobsOf(seen))
+    assert(joinsOf(Set.empty) === 0,
+      "an empty seen set must fold flagSeen's join away")
+    assert(joinsOf(seen) === 1)
+    // a non-empty set costs one job more: the broadcast of its local
+    // relation into the exact join
+    assert(counts === Seq("empty seen" -> 7, "non-empty seen" -> 8))
   }
 
   test("TableIO.compact: Spark jobs of compacting a two-commit table") {
