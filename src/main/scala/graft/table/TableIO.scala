@@ -4,8 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode,
-  SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation,
+  SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.AccumulatorV2
 
@@ -27,6 +27,15 @@ import graft.seen.CuckooSeen
   * <dir>/snapshots/runids.json              (cumulative runId sidecar)
   * <dir>/version-hint.txt                            (current version)
   * }}}
+  *
+  * Data files are zstd Parquet (level 3, Parquet's default): the table
+  * owns its codec, as an Iceberg table does through
+  * `write.parquet.compression-codec` (zstd by default since Iceberg
+  * 1.4). Payload pages are ~99% of a commit's bytes, and a third of the
+  * payloads are raw BMP gradients that snappy's LZ pass barely shrinks
+  * while zstd's entropy stage does. Parquet records the codec per
+  * column chunk, so files written with the earlier snappy default read
+  * through the same reader, and [[compact]] rewrites them as zstd.
   *
   * A snapshot's `dataDirs` entries are either whole commit dirs
   * (`data/v00001`) or — after [[invalidatePeriods]] — partition
@@ -282,13 +291,16 @@ object TableIO {
   }
 
   /** Write `images` as `dir/rel`, `PARTITIONED BY (site, year, month)`,
-    * and return the per-partition meta of what was written. The rows
+    * as zstd Parquet (the table's codec, see the object doc), and
+    * return the per-partition meta of what was written. The rows
     * are counted on their way into the writer, inside the write's
     * result stage: Spark applies a result task's accumulator updates
     * once per partition and only on success, so the count is exact and
     * no job reads the files back. An empty write's directory is
     * deleted again, so no snapshot references it (a schema-less
-    * parquet dir would poison later reads). */
+    * parquet dir would poison later reads). This is the one writer of
+    * data files: `commit`, `compact` and the streaming per-batch
+    * commits all write through it. */
   private def writeImages(images: Dataset[ImageRecord], dir: String,
       rel: String): Seq[PartitionMeta] = {
     val spark = images.sparkSession
@@ -296,11 +308,24 @@ object TableIO {
     val counts = new PartitionCounts
     spark.sparkContext.register(counts)
     images.mapPartitions(_.map { r => counts.add(r); r })
-      .write.mode(SaveMode.Overwrite)
+      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
       .partitionBy("site", "year", "month").parquet(s"$dir/$rel")
     val parts = counts.value
     if (parts.isEmpty) StateFiles.delete(Paths.get(dir, rel))
     parts
+  }
+
+  /** Write a seen delta as `dir/rel`, counting its rows with an
+    * `Observation` on the way; an empty write's directory is deleted
+    * again. Whether any row was written. */
+  private def writeSeen(seen: DataFrame, dir: String, rel: String)
+      : Boolean = {
+    val rows = new Observation()
+    seen.observe(rows, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$rel")
+    val wrote = rows.get("n") != 0L
+    if (!wrote) StateFiles.delete(Paths.get(dir, rel))
+    wrote
   }
 
   /** Reject a delta-commit runId in the reserved maintenance namespace:
@@ -337,11 +362,7 @@ object TableIO {
 
     val parts = writeImages(images, dir, dataDirName)
     val hasImages = parts.nonEmpty
-    val seenRows = new Observation()
-    seenDelta.toDF("urlHash").observe(seenRows, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$seenDirName")
-    val hasSeen = seenRows.get("n") != 0L
-    if (!hasSeen) StateFiles.delete(Paths.get(dir, seenDirName))
+    val hasSeen = writeSeen(seenDelta.toDF("urlHash"), dir, seenDirName)
 
     val snap = Snapshot(
       version,
@@ -421,9 +442,10 @@ object TableIO {
     * design point the previous full-table rewrite turned "re-crawl one
     * month" into a full-corpus copy). Only the seen set — 8-byte
     * hashes — is rewritten, and its eviction scan reads ONLY the
-    * dropped partitions' files. The next resumable run refetches
-    * exactly those periods and skips everything else. No-op (None) on
-    * an empty table. */
+    * dropped partitions' files; the rewrite counts its rows as it
+    * writes them, so the anti-join runs once. The next resumable run
+    * refetches exactly those periods and skips everything else. No-op
+    * (None) on an empty table. */
   def invalidatePeriods(spark: SparkSession, dir: String,
       periods: Set[(String, Int, Int)]): Option[Snapshot] =
     currentSnapshot(dir).map { parent =>
@@ -448,18 +470,14 @@ object TableIO {
         if (droppedLeaves.isEmpty || parent.seenDirs.isEmpty)
           (parent.seenDirs, None)
         else {
-          val droppedHashes = spark.read
+          val droppedHashes = spark.read.schema(SeenSchema)
             .parquet(droppedLeaves.map(l => s"$dir/${l._1}"): _*)
-            .select($"urlHash").toDF("dh")
+            .toDF("dh")
           val newSeen = readSeen(spark, dir).toDF("urlHash")
             .join(droppedHashes, col("urlHash") === col("dh"), "left_anti")
           val dirs =
-            if (newSeen.isEmpty) Nil
-            else {
-              newSeen.write.mode(SaveMode.Overwrite)
-                .parquet(s"$dir/$seenDirName")
-              Seq(seenDirName)
-            }
+            if (writeSeen(newSeen, dir, seenDirName)) Seq(seenDirName)
+            else Nil
           // distinct: a URL may appear in several dropped image rows,
           // but its hash is committed once
           (dirs, Some(droppedHashes.as[Long].distinct()))
@@ -581,12 +599,15 @@ object TableIO {
 
   /** Read a set of dataDirs entries (whole commit dirs or partition
     * subpaths): one scan per commit root with `basePath` pinned to the
-    * root so partition columns survive subpath reads. */
+    * root so partition columns survive subpath reads. Each scan is
+    * given the table's fixed schema ([[ImageSchema]]), so no job reads
+    * file footers to infer it; the columns come out as the data columns
+    * followed by `site, year, month`, as an inferred read orders them. */
   private def readFrom(spark: SparkSession, dir: String,
       entries: Seq[String]): DataFrame =
     entries.groupBy(dataRoot).toSeq.sortBy(_._1)
       .map { case (root, es) =>
-        spark.read.option("basePath", s"$dir/$root")
+        spark.read.schema(ImageSchema).option("basePath", s"$dir/$root")
           .parquet(es.map(e => s"$dir/$e"): _*)
       }
       .reduce(_.unionByName(_))
@@ -650,7 +671,12 @@ object TableIO {
     }
   }
 
-  /** The one column of every seen delta; passing it to the reader
-    * spares a footer-reading schema-inference job per read. */
+  /** The one column of every seen delta, and the one column
+    * [[invalidatePeriods]] reads of the dropped image files; passing it
+    * to the reader spares a footer-reading schema-inference job per
+    * read. */
   private val SeenSchema = "urlHash BIGINT"
+
+  /** The image table's columns, partition columns included. */
+  private val ImageSchema = Encoders.product[ImageRecord].schema
 }

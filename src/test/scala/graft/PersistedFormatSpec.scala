@@ -20,7 +20,9 @@ import graft.table.{StateFiles, TableIO}
   * the same small inputs must write them byte for byte. The dedup index
   * pins are those of the `oph-densified-v2` layout, with the parquet
   * footer schema of its signature delta; the `oph-densified-v1` metas
-  * are kept as legacy shapes that read back and are refused. */
+  * are kept as legacy shapes that read back and are refused. The image
+  * table's data files are pinned to zstd column chunks, whichever path
+  * wrote them: a commit, a compaction or a streaming micro-batch. */
 class PersistedFormatSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -355,5 +357,34 @@ class PersistedFormatSpec extends AnyFunSuite {
     same("table-v3.json", Paths.get(t, "snapshots", "v00003.json"))
     same("table-runids-3.json", Paths.get(t, "snapshots", "runids.json"))
     same("table-hint-3.txt", Paths.get(t, "version-hint.txt"))
+  }
+
+  test("image data files are zstd: a commit's, a compaction's and a streaming micro-batch commit's") {
+    import spark.implicits._
+    import graft.streaming.StreamingCrawl
+    def zstdOnly(dir: String, rel: String): Unit = {
+      val files = ParquetFooters.codecs(Paths.get(dir, rel))
+      assert(files.nonEmpty, s"no data file under $rel")
+      files.foreach { case (f, codecs) =>
+        assert(codecs === Set("ZSTD"), s"$rel: $f")
+      }
+    }
+    val t = tmp().toString
+    TableIO.commit(spark, t, Seq(
+      ImageRecord("i1", Array.tabulate[Byte](64)(_.toByte), 8, 8, "bmp",
+        "cap", 77L, "s", 2024, 1, "http://x/1", 11L, 100L, 1)).toDS(),
+      Seq(11L).toDS(), "run-1", Seq("s/2024/1"))
+    zstdOnly(t, "data/v00001")
+    TableIO.compact(spark, t)
+    zstdOnly(t, "data/v00002")
+
+    val s = tmp().toString
+    StreamingCrawl.commitOutcomesBatch(s, "stream")(Seq(
+      StreamingCrawl.StreamedOutcome("s", 2024, 2, 0, "i2", "http://x/2",
+        22L, "x", 200L, 1, graft.model.CrawlStatus.Success,
+        Array[Byte](4, 5), 6, 7, "png", "cap", 78L)).toDS(), 0L)
+    assert(TableIO.currentSnapshot(s).get.lineage.runId ===
+      "stream-batch-0")
+    zstdOnly(s, "data/v00001")
   }
 }

@@ -16,9 +16,10 @@ import graft.model._
   * probe, confirm join) and a Bloom resumed run under an `All` month
   * selector (early-stop count over a pinned frontier); the jobs of
   * `CrawlJob.run` and a count of its log, with an empty and a non-empty
-  * seen set; and the jobs of one `TableIO.compact`. A change that adds
-  * or drops a job in the crawl or the table compaction fails here and
-  * must restate the count. */
+  * seen set; and the jobs of one `TableIO.compact`, of one
+  * `TableIO.invalidatePeriods` and of building a `TableIO.readImages`
+  * frame. A change that adds or drops a job in the crawl or the table
+  * maintenance fails here and must restate the count. */
 class ResumableJobsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -116,9 +117,11 @@ class ResumableJobsSpec extends AnyFunSuite {
     assert(counts === Seq("empty seen" -> 7, "non-empty seen" -> 8))
   }
 
-  test("TableIO.compact: Spark jobs of compacting a two-commit table") {
+  /** A table of two commits, 20 image rows and their seen keys each,
+    * one month per commit. */
+  private def twoCommitTable(prefix: String): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-jobs-compact").toString
+    val dir = Files.createTempDirectory(prefix).toString
     def image(month: Int, i: Int) = ImageRecord(s"img-$month-$i",
       Array.fill[Byte](i)(1), 1, 1, "png", "cap", i.toLong, "site", 2024,
       month, s"http://h/$month/$i", month * 100L + i, 0L, 1)
@@ -126,6 +129,43 @@ class ResumableJobsSpec extends AnyFunSuite {
       graft.table.TableIO.commit(spark, dir,
         (1 to 20).map(image(m, _)).toDS(),
         (1 to 20).map(m * 100L + _).toDS(), s"c-$m", Nil)
-    assert(jobCount { graft.table.TableIO.compact(spark, dir) } === 5)
+    dir
+  }
+
+  test("TableIO.compact: Spark jobs of compacting a two-commit table") {
+    val dir = twoCommitTable("graft-jobs-compact")
+    // 5 while the image scan inferred its schema from the footers, one
+    // job per commit root
+    assert(jobCount { graft.table.TableIO.compact(spark, dir) } === 3)
+  }
+
+  test("TableIO.readImages: building the frame of a two-commit table runs no job") {
+    val dir = twoCommitTable("graft-jobs-read")
+    var df: org.apache.spark.sql.DataFrame = null
+    // 2 while each commit root's scan inferred its schema
+    assert(jobCount { df = graft.table.TableIO.readImages(spark, dir) } === 0)
+    assert(df.columns.toSeq === Seq("image_id", "bytes", "w", "h", "fmt",
+      "caption", "phash", "url", "urlHash", "vtimeMs", "attempts", "site",
+      "year", "month"))
+    assert(df.count() === 40)
+  }
+
+  test("TableIO.invalidatePeriods: Spark jobs of dropping one month, then the other") {
+    val dir = twoCommitTable("graft-jobs-invalidate")
+    val first = jobCount {
+      graft.table.TableIO.invalidatePeriods(spark, dir, Set(("site", 2024, 1)))
+    }
+    assert(graft.table.TableIO.readSeen(spark, dir).collect().toSet ===
+      (1 to 20).map(200L + _).toSet)
+    // the second drop evicts every key: no seen dir is referenced or left
+    val second = jobCount {
+      graft.table.TableIO.invalidatePeriods(spark, dir, Set(("site", 2024, 2)))
+    }
+    val snap = graft.table.TableIO.currentSnapshot(dir).get
+    assert(snap.seenDirs.isEmpty && snap.totalRows === 0L)
+    assert(!Files.exists(Paths.get(dir, f"seen/v${snap.version}%05d")))
+    // (5, 3) while an `isEmpty` job ran the anti-join before the write
+    // ran it again, and the dropped-leaf scan inferred its schema
+    assert(Seq(first, second) === Seq(2, 2))
   }
 }

@@ -437,4 +437,57 @@ class TableIOSpec extends AnyFunSuite {
     assert(!onDisk("data/v00003") && !onDisk("seen/v00003"))
     assert(TableIO.readImages(spark, dir).count() === images.size.toLong)
   }
+
+  test("mixed codecs: commit 1 rewritten as snappy reads, time-travels and compacts to the same rows; compaction writes zstd") {
+    import java.nio.file.{Paths, StandardCopyOption}
+    import spark.implicits._
+    val dir = tmpDir()
+    val rA = CrawlJob.run(spark, cfgA)
+    val s1 = TableIO.commit(spark, dir, rA.images, CrawlJob.seenFrom(rA.log),
+      "mix-1", Nil)
+    val rB = CrawlJob.run(spark, cfgFull,
+      TableIO.readSeen(spark, dir).collect().toSet)
+    val s2 = TableIO.commit(spark, dir, rB.images,
+      CrawlJob.newSeenFrom(rB.log), "mix-2", Nil)
+    // whole rows, payload bytes included, in a stable order
+    def rows(df: org.apache.spark.sql.DataFrame) = df.as[ImageRecord]
+      .collect().map(r => (r.copy(bytes = null), r.bytes.toSeq))
+      .sortBy(_._1.image_id).toSeq
+    val current = rows(TableIO.readImages(spark, dir))
+    val at1 = rows(TableIO.readImagesAt(spark, dir, 1))
+    val columns = TableIO.readImages(spark, dir).columns.toSeq
+    assert(current.nonEmpty && at1.nonEmpty && at1.size < current.size)
+
+    // rewrite every data file of commit 1 in place as snappy, same rows
+    val v1 = Paths.get(dir, "data", "v00001")
+    ParquetFooters.codecs(v1).map(_._1).foreach { f =>
+      val stage = Files.createTempDirectory("graft-snappy")
+      spark.read.parquet(f.toString).coalesce(1).write.mode("overwrite")
+        .option("compression", "snappy").parquet(stage.toString)
+      val written = stage.toFile.listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      Files.move(written, f, StandardCopyOption.REPLACE_EXISTING)
+      Files.move(stage.resolve(s".${written.getFileName}.crc"),
+        f.resolveSibling(s".${f.getFileName}.crc"),
+        StandardCopyOption.REPLACE_EXISTING)
+    }
+    val rewritten = ParquetFooters.codecs(v1)
+    assert(rewritten.nonEmpty &&
+      rewritten.forall(_._2 == Set("SNAPPY")), rewritten)
+
+    assert(rows(TableIO.readImages(spark, dir)) === current)
+    assert(TableIO.readImages(spark, dir).columns.toSeq === columns)
+    assert(rows(TableIO.readImagesAt(spark, dir, 1)) === at1)
+    val c = TableIO.compact(spark, dir).get
+    // the cumulative manifest: both commits' deltas summed per partition
+    assert(c.partitions === (s1.partitions ++ s2.partitions)
+      .groupBy(p => (p.site, p.year, p.month)).toSeq.sortBy(_._1)
+      .map { case ((site, y, m), ps) => TableIO.PartitionMeta(site, y, m,
+        ps.map(_.rows).sum, ps.map(_.bytes).sum) })
+    assert(c.totalRows === current.size.toLong)
+    assert(rows(TableIO.readImages(spark, dir)) === current)
+    val compacted = ParquetFooters.codecs(Paths.get(dir, c.dataDirs.head))
+    assert(compacted.nonEmpty &&
+      compacted.forall(_._2 == Set("ZSTD")), compacted)
+  }
 }
