@@ -6,14 +6,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** What parquet footers record about the files a spec wrote. */
 object ParquetFooters {
 
-  /** Every parquet file under `root` (recursively, sorted), with the
-    * codec names of its column chunks, e.g. `Set("ZSTD")`. */
-  def codecs(root: Path): Seq[(Path, Set[String])] = {
+  /** Every parquet file under `root` (recursively, sorted), with `f` of
+    * its footer. */
+  def footers[A](root: Path)(f: ParquetMetadata => A): Seq[(Path, A)] = {
     val conf = SparkTestSession.spark.sparkContext.hadoopConfiguration
     val walk = Files.walk(root)
     val files =
@@ -23,9 +24,13 @@ object ParquetFooters {
     files.map { p =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(
         new HadoopPath(p.toString), conf))
-      try p -> r.getFooter.getBlocks.asScala
-        .flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+      try p -> f(r.getFooter)
       finally r.close()
     }
   }
+
+  /** The codec names of each file's column chunks, e.g. `Set("ZSTD")`. */
+  def codecs(root: Path): Seq[(Path, Set[String])] =
+    footers(root)(_.getBlocks.asScala
+      .flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet)
 }

@@ -2,15 +2,14 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.ImageRecord
 import graft.ops.{AnnIndex, ContainmentIndex, DedupIndex, SketchIndex}
 import graft.seen.CuckooSeen
-import graft.table.{StateFiles, TableIO}
+import graft.table.TableIO
 
 /** Pins the on-disk form of every persisted meta: the four index metas,
   * the cuckoo sketch meta and the table's snapshot, `runids.json` and
@@ -298,13 +297,10 @@ class PersistedFormatSpec extends AnyFunSuite {
     same("dedup-init.json", Paths.get(d, "index-meta.json"))
     DedupIndex.append(docs, "id", "text", d, "r1")
     same("dedup-append.json", Paths.get(d, "index-meta.json"))
-    val footers = StateFiles.list(Paths.get(d, "sig", "v00001"))
-      .filter(_.getFileName.toString.endsWith(".parquet")).map { p =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new HadoopPath(p.toString), spark.sparkContext.hadoopConfiguration))
-        try (r.getFooter.getFileMetaData.getSchema.toString, r.getRecordCount)
-        finally r.close()
-      }
+    val footers = ParquetFooters.footers(Paths.get(d, "sig", "v00001")) { m =>
+      (m.getFileMetaData.getSchema.toString,
+        m.getBlocks.asScala.map(_.getRowCount).sum)
+    }.map(_._2)
     assert(footers.map(_._2).sum === 2L, "one row per document")
     footers.foreach { case (schema, _) =>
       assert(schema === pinned("dedup-sig-schema.txt"), "dedup-sig-schema.txt")

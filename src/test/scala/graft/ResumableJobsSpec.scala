@@ -134,15 +134,12 @@ class ResumableJobsSpec extends AnyFunSuite {
 
   test("TableIO.compact: Spark jobs of compacting a two-commit table") {
     val dir = twoCommitTable("graft-jobs-compact")
-    // 5 while the image scan inferred its schema from the footers, one
-    // job per commit root
     assert(jobCount { graft.table.TableIO.compact(spark, dir) } === 3)
   }
 
   test("TableIO.readImages: building the frame of a two-commit table runs no job") {
     val dir = twoCommitTable("graft-jobs-read")
     var df: org.apache.spark.sql.DataFrame = null
-    // 2 while each commit root's scan inferred its schema
     assert(jobCount { df = graft.table.TableIO.readImages(spark, dir) } === 0)
     assert(df.columns.toSeq === Seq("image_id", "bytes", "w", "h", "fmt",
       "caption", "phash", "url", "urlHash", "vtimeMs", "attempts", "site",
@@ -164,8 +161,6 @@ class ResumableJobsSpec extends AnyFunSuite {
     val snap = graft.table.TableIO.currentSnapshot(dir).get
     assert(snap.seenDirs.isEmpty && snap.totalRows === 0L)
     assert(!Files.exists(Paths.get(dir, f"seen/v${snap.version}%05d")))
-    // (5, 3) while an `isEmpty` job ran the anti-join before the write
-    // ran it again, and the dropped-leaf scan inferred its schema
     assert(Seq(first, second) === Seq(2, 2))
   }
 }

@@ -12,7 +12,7 @@ Areas, by path under the table dir:
   other      anything else
 
 Usage:
-  python3 tools/table_bytes.py TABLEDIR [--since VERSION] [--no-files]
+  python3 tools/table_bytes.py TABLEDIR [--since VERSION]
 
   --since VERSION  count only what came after snapshot VERSION: the
                    versioned dirs and snapshot files numbered above it
@@ -23,8 +23,6 @@ Usage:
                    counts the growth of the whole tree instead, so a
                    file rewritten in place (runids.json) counts here by
                    its size and there by what it grew.
-  --no-files       print the per-codec summary without one line per
-                   data file
 
 The codec is read from each data file's footer with pyarrow (one name
 per file, or "A+B" when its column chunks differ).
@@ -38,8 +36,6 @@ ap = argparse.ArgumentParser(
 ap.add_argument("table", help="table directory (holds version-hint.txt)")
 ap.add_argument("--since", type=int, metavar="VERSION",
                 help="count only what was added after this snapshot")
-ap.add_argument("--no-files", action="store_true",
-                help="no per-data-file lines")
 args = ap.parse_args()
 
 AREAS = ["data", "data .crc", "seen", "snapshots", "_bloom", "_cuckoo",
@@ -128,7 +124,7 @@ print(f"{'codec':<10} {'files':>6} {'bytes':>14} {'rows':>8}")
 for c in sorted(per_codec):
     f, b, r = per_codec[c]
     print(f"{c:<10} {f:>6} {b:>14,} {r:>8}")
-if lines and not args.no_files:
+if lines:
     print()
     print(f"{'bytes':>12} {'rows':>8} {'codec':<8} data file")
     print("\n".join(lines))
