@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.ops.DedupOps.{BandKeyBits, BandKeyMask}
 import graft.table.StateFiles
 
 /** Persisted MinHash-LSH signature index — INCREMENTAL near-duplicate
@@ -16,9 +17,9 @@ import graft.table.StateFiles
   * day's 10^7 is the dominant waste). This index is the document-level
   * analog of the persisted cuckoo URL-seen sketch: signatures are
   * computed ONCE per document, persist in table storage as one
-  * (id, bands) row per document — 8 bytes × (bands + 1) per document
-  * before compression (~132 B on disk at 16 bands), ~1.3% of a 10 KB
-  * document — and each new batch
+  * (id, bands) row per document — 6 B × bands + 8 per document before
+  * compression, the 48-bit band keys packed into 64-bit words (~100 B
+  * on disk at 16 bands), ~1% of a 10 KB document — and each new batch
   *
   *   1. computes signatures for ITS documents only (O(batch) CPU),
   *   2. probes the index with a BROADCAST hash join on bandHash —
@@ -46,6 +47,14 @@ import graft.table.StateFiles
   * partitionings and cluster sizes, and probe results equal the batch
   * recompute exactly (spec-pinned: probe ∪ within-batch pairs ==
   * full-recompute pairs touching a batch id, jaccard values included).
+  *
+  * Band keys are 48 bits ([[DedupOps.bandKeys]]): a key is only a
+  * bucket id, and every candidate is exact-verified. Accidental
+  * collisions stay negligible at the design point: the probe join
+  * keys on the band key across 16 bands, so each batch document meets
+  * 256·N/2^48 extra index rows (9×10⁻³ at N = 10^10 indexed
+  * documents), and the batch pass over M documents adds 128·M²/2^48
+  * candidate pairs (4.5×10³ at M = 10^8), each dropped by the verify.
   *
   * Persisted band keys are only comparable with keys computed by the
   * same signature scheme, so the meta carries a scheme stamp
@@ -86,10 +95,12 @@ object DedupIndex {
 
   /** Stamp of the band keys this build computes and of the delta layout
     * that stores them: one-permutation MinHash with optimal
-    * densification, banded by splitmix folds, one `(id, bands)` row per
-    * document. `oph-densified-v1` stored the same keys as one
-    * `(id, bandHash)` row per key. */
-  val SigScheme = "oph-densified-v2"
+    * densification, banded by splitmix folds kept to 48 bits, one
+    * `(id, bands)` row per document with the keys packed six bytes
+    * each ([[pack]]). `oph-densified-v2` stored 64-bit keys, one per
+    * list element; `oph-densified-v1` one `(id, bandHash)` row per
+    * key. */
+  val SigScheme = "oph-densified-v3"
 
   private[graft] val chain = new StateFiles.DeltaChain[IndexMeta](
     "index-meta.json", "sig/", "index", "write()")
@@ -126,12 +137,53 @@ object DedupIndex {
     * shingle→minhash→band pass as one map-side UDF. A null text has no
     * shingles: callers drop it first, so it pairs with nothing and is
     * not indexed. */
-  private def bandKeys(textCol: String, m: IndexMeta): Column = {
+  private def bandKeys(textCol: String, m: IndexMeta): Column =
+    signatureUdf(textCol, m, "graft_band_keys")(identity)
+
+  /** [[bandKeys]] in the stored layout ([[pack]]), in the same UDF. */
+  private def packedBandKeys(textCol: String, m: IndexMeta): Column =
+    signatureUdf(textCol, m, "graft_band_keys_packed")(pack)
+
+  private def signatureUdf(textCol: String, m: IndexMeta, name: String)(
+      f: Array[Long] => Array[Long]): Column = {
     val sh = sigShinglerOf(m)
     val nh = m.numHashes
     val nb = m.bands
-    udf((t: String) => DedupOps.bandKeys(t, sh, nh, nb))
-      .withName("graft_band_keys").apply(col(textCol))
+    udf((t: String) => f(DedupOps.bandKeys(t, sh, nh, nb)))
+      .withName(name).apply(col(textCol))
+  }
+
+  /** The stored layout of one document's band keys: key `i` takes bits
+    * [48i, 48i + 48) of a little-endian bit string held in
+    * `ceil(keys × 48 / 64)` longs (12 at 16 bands), so a key may
+    * straddle two longs and the last long may end mid-key. Keys must
+    * lie in [0, 2^48) ([[DedupOps.bandKeys]]). */
+  private[graft] def pack(keys: Array[Long]): Array[Long] = {
+    val out = new Array[Long]((keys.length * BandKeyBits + 63) / 64)
+    var i = 0
+    while (i < keys.length) {
+      val w = i * BandKeyBits >>> 6
+      val off = i * BandKeyBits & 63
+      out(w) |= keys(i) << off
+      if (off + BandKeyBits > 64) out(w + 1) |= keys(i) >>> (64 - off)
+      i += 1
+    }
+    out
+  }
+
+  /** The `bands` keys [[pack]] stored in `packed`. */
+  private[graft] def unpack(packed: Array[Long], bands: Int): Array[Long] = {
+    val out = new Array[Long](bands)
+    var i = 0
+    while (i < bands) {
+      val w = i * BandKeyBits >>> 6
+      val off = i * BandKeyBits & 63
+      var v = packed(w) >>> off
+      if (off + BandKeyBits > 64) v |= packed(w + 1) << (64 - off)
+      out(i) = v & BandKeyMask
+      i += 1
+    }
+    out
   }
 
   /** Initialize an EMPTY index (geometry only, no deltas) — the
@@ -157,8 +209,8 @@ object DedupIndex {
   }
 
   /** Append one batch's signatures as a new delta dir: one `(id, bands)`
-    * row per document with a non-null text — 8 bytes × (bands + 1)
-    * before compression — computed in the batch's own partitions. One
+    * row per document with a non-null text — 6 B × bands + 8 before
+    * compression — computed in the batch's own partitions. One
     * exchange of those rows, keyed on id, sizes the files: adaptive
     * execution coalesces its partitions to the bytes they hold, so a
     * small batch lands as one file written by one task (a parquet-write
@@ -174,7 +226,7 @@ object DedupIndex {
     val m = currentMeta(dir)
     chain.append(dir, m, runId) { delta =>
       writeSigs(docs.filter(col(textCol).isNotNull)
-        .select(col(idCol).as("id"), bandKeys(textCol, m).as("bands"))
+        .select(col(idCol).as("id"), packedBandKeys(textCol, m).as("bands"))
         .repartition(col("id")), dir, delta)
     }
   }
@@ -185,11 +237,16 @@ object DedupIndex {
     * exchange in `sigs`, in the writing stage: adaptive execution
     * replaces an empty shuffle stage (and any counter inside it) by an
     * empty relation, so a counter below the exchange would report
-    * nothing for exactly the empty case. */
+    * nothing for exactly the empty case. Every stored value is a random
+    * key or a unique id, so the write skips Parquet's dictionary
+    * attempt: the writer would build one per column chunk and fall
+    * back to plain encoding. */
   private def writeSigs(sigs: DataFrame, dir: String, delta: String): Long = {
     val rows = new Observation()
     sigs.observe(rows, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
+      .write.mode(SaveMode.Overwrite)
+      .option("parquet.enable.dictionary", "false")
+      .parquet(s"$dir/$delta")
     rows.get("n").asInstanceOf[Long]
   }
 
@@ -205,17 +262,25 @@ object DedupIndex {
     else bandRows(spark, dir, m)
   }
 
-  /** The stored rows of `m`'s deltas: (id, bands), one per document. */
+  /** The stored rows of `m`'s deltas: (id, bands), one per document,
+    * `bands` in the [[pack]]ed layout. */
   private def docRows(spark: org.apache.spark.sql.SparkSession, dir: String,
       m: IndexMeta): DataFrame =
     spark.read.schema(SigSchema).parquet(m.deltas.map(d => s"$dir/$d"): _*)
 
-  /** [[docRows]] exploded to (id, bandHash) in the scan's own
-    * projection. */
+  /** [[docRows]] unpacked and exploded to (id, bandHash) in the scan's
+    * own projection, one unpack per stored row: `explode_outer` emits
+    * the same rows as `explode` (a stored row holds `m.bands` keys)
+    * without the optimizer-inferred generator filter that could
+    * evaluate its input again. */
   private def bandRows(spark: org.apache.spark.sql.SparkSession, dir: String,
-      m: IndexMeta): DataFrame =
+      m: IndexMeta): DataFrame = {
+    val nb = m.bands
+    val unpacked = udf((p: Seq[Long]) => unpack(p.toArray, nb))
+      .withName("graft_band_unpack")
     docRows(spark, dir, m)
-      .select(col("id"), explode(col("bands")).as("bandHash"))
+      .select(col("id"), explode_outer(unpacked(col("bands"))).as("bandHash"))
+  }
 
   /** Columns of every signature delta; passing them to the reader
     * spares a footer-reading schema-inference job per read. */
@@ -236,10 +301,10 @@ object DedupIndex {
     * [[graft.table.TableIO.invalidatePeriods]] re-opens a period, and
     * its documents must stop pairing — a stale signature row would
     * emit phantom pairs against deleted docs on every future probe).
-    * Rewrites the document rows anti-joined on id — O(index bytes),
-    * which is ~1.3% of a corpus of 10 KB documents (8 B × (bands + 1)
-    * per doc), not a corpus rewrite — and recounts the indexed docs.
-    * Compacts as a side effect. */
+    * Rewrites the document rows anti-joined on id, copying their packed
+    * keys as stored — O(index bytes), which is ~1% of a corpus of 10 KB
+    * documents (6 B × bands + 8 per doc), not a corpus rewrite — and
+    * recounts the indexed docs. Compacts as a side effect. */
   def deleteIds(ids: DataFrame, dir: String): IndexMeta = {
     val del = ids.toDF("del_id")
     rewrite(dir, currentMeta(dir),
@@ -249,8 +314,8 @@ object DedupIndex {
   /** [[StateFiles.DeltaChain.rewrite]] of the document rows through `f`
     * into one delta of at most one file per ~4M band keys (250k
     * documents at 16 bands), sized from `m.docs`: the scan's partitions
-    * are coalesced, so the rewrite moves no row across an exchange and
-    * sorts nothing. */
+    * are coalesced, so the rewrite moves no row across an exchange,
+    * sorts nothing and never unpacks a key. */
   private def rewrite(dir: String, m: IndexMeta,
       f: DataFrame => DataFrame): IndexMeta =
     chain.rewrite(dir, m) { delta =>

@@ -221,7 +221,13 @@ object DedupOps {
     * array conversions per document (boxing 1k+ longs per crossing)
     * plus a string build per band. Band key = splitmix fold of the
     * band's `numHashes / bands` adjacent signature components — a run
-    * of adjacent [[minhash]] bins — salted by band index. */
+    * of adjacent [[minhash]] bins — salted by band index, kept to its
+    * low [[BandKeyBits]] bits. A key is only a bucket id and every
+    * candidate it yields is exact-verified, so the truncation changes
+    * no emitted pair: equal keys stay equal, and the few accidental
+    * collisions it adds are dropped by the verify (bound in
+    * [[DedupIndex]], which stores each key in 6 bytes). The batch pass
+    * and the index both bucket on these keys. */
   def bandKeys(text: String, shingler: String => Array[Long],
       numHashes: Int, bands: Int): Array[Long] = {
     val sig = minhash(shingler(text), numHashes)
@@ -232,11 +238,15 @@ object DedupOps {
       var h = Hashing.mix(0xBAD5EEDL + b)
       var j = b * rowsPer
       while (j < (b + 1) * rowsPer) { h = Hashing.mix(h ^ sig(j)); j += 1 }
-      out(b) = h
+      out(b) = h & BandKeyMask
       b += 1
     }
     out
   }
+
+  /** Width of a [[bandKeys]] key. */
+  private[graft] final val BandKeyBits = 48
+  private[graft] val BandKeyMask = (1L << BandKeyBits) - 1
 
   /** MinHash signature of a shingle (multi)set by one-permutation
     * hashing (Li, Owen & Zhang, NIPS 2012) with optimal densification

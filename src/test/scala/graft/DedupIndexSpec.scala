@@ -23,6 +23,24 @@ class DedupIndexSpec extends AnyFunSuite {
   private def pairSet(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
+  test("packed band keys round-trip: random keys, 0 and 2^48 - 1, keys straddling a long, layouts ending mid-long") {
+    val rnd = new scala.util.Random(48)
+    val max = (1L << 48) - 1
+    for (bands <- Seq(1, 3, 5, 16, 20); trial <- 0 until 50) {
+      val keys = Array.fill(bands)(trial match {
+        case 0 => 0L
+        case 1 => max
+        case _ => rnd.nextLong() & max
+      })
+      if (trial > 1) keys(rnd.nextInt(bands)) = if (rnd.nextBoolean()) 0L else max
+      val packed = DedupIndex.pack(keys)
+      assert(packed.length === (bands * 48 + 63) / 64, s"bands=$bands")
+      assert(DedupIndex.unpack(packed, bands).toSeq === keys.toSeq,
+        s"bands=$bands trial=$trial")
+    }
+    assert(DedupIndex.pack(Array.fill(16)(1L)).length === 12)
+  }
+
   test("incremental probe == batch recompute over two sequential appends") {
     val dir = Files.createTempDirectory("graft-dedup-idx").toString
     // corpus = ids % 3 != 0; batch1 = % 3 == 0 originals; batch2 =

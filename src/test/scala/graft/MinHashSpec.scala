@@ -32,6 +32,17 @@ class MinHashSpec extends AnyFunSuite {
     }
   }
 
+  test("every band key lies in [0, 2^48)") {
+    val texts = docs.select("text").collect().map(_.getString(0)) ++ Seq(
+      "", "abc", "ação revisão ção ção ção ção")
+    for ((nh, nb) <- Seq((64, 16), (48, 12), (64, 64))) texts.foreach { t =>
+      val keys = DedupOps.bandKeys(t, DedupOps.shinglesRaw(_, 5), nh, nb)
+      assert(keys.length === nb)
+      assert(keys.forall(h => h >= 0L && h < (1L << 48)),
+        s"k=$nh bands=$nb text='$t': ${keys.mkString(",")}")
+    }
+  }
+
   test("sparse sets densify fully; identical sets give identical signatures") {
     val rnd = new scala.util.Random(11)
     // a single shingle: every component is that shingle's mixed value

@@ -17,9 +17,10 @@ import graft.table.TableIO
   * before the persisted-state code moved into `graft.table.StateFiles`;
   * they must read back to the same values (legacy shapes included), and
   * the same small inputs must write them byte for byte. The dedup index
-  * pins are those of the `oph-densified-v2` layout, with the parquet
-  * footer schema of its signature delta; the `oph-densified-v1` metas
-  * are kept as legacy shapes that read back and are refused. The image
+  * pins are those of the `oph-densified-v3` layout, with the parquet
+  * footer schema of its signature delta, its packed list length and no
+  * dictionary page; the `oph-densified-v1` and `-v2` metas are kept as
+  * legacy shapes that read back and are refused. The image
   * table's data files are pinned to zstd column chunks, whichever path
   * wrote them: a commit, a compaction or a streaming micro-batch. */
 class PersistedFormatSpec extends AnyFunSuite {
@@ -27,11 +28,11 @@ class PersistedFormatSpec extends AnyFunSuite {
 
   private val pinned: Map[String, String] = Map(
     "dedup-init.json" ->
-      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":0,"deltas":[],"scheme":"oph-densified-v2","runIds":[]}""",
+      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":0,"deltas":[],"scheme":"oph-densified-v3","runIds":[]}""",
     "dedup-append.json" ->
-      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":2,"deltas":["sig/v00001"],"scheme":"oph-densified-v2","runIds":["r1"]}""",
+      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":2,"deltas":["sig/v00001"],"scheme":"oph-densified-v3","runIds":["r1"]}""",
     // the footer schema of each file of that append's signature delta:
-    // one row per document, its band keys in one list
+    // one row per document, its 16 packed band keys in one list of 12
     "dedup-sig-schema.txt" ->
       """message spark_schema {
       |  required int64 id;
@@ -150,13 +151,16 @@ class PersistedFormatSpec extends AnyFunSuite {
       """3"""
   )
 
-  /** Metas of the previous signature layout (one `(id, bandHash)` row
-    * per band key), written by the build before `oph-densified-v2`. */
-  private val legacyV1: Map[String, String] = Map(
-    "dedup-init.json" ->
-      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":0,"deltas":[],"scheme":"oph-densified-v1","runIds":[]}""",
-    "dedup-append.json" ->
-      """{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":2,"deltas":["sig/v00001"],"scheme":"oph-densified-v1","runIds":["r1"]}""")
+  /** Metas of the previous signature layouts, by scheme:
+    * `oph-densified-v1` stored one `(id, bandHash)` row per band key,
+    * `oph-densified-v2` one `(id, bands)` row per document with 64-bit
+    * keys. */
+  private val legacy: Map[String, Map[String, String]] =
+    Seq("oph-densified-v1", "oph-densified-v2").map(scheme => scheme -> Map(
+      "dedup-init.json" ->
+        s"""{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":0,"deltas":[],"scheme":"$scheme","runIds":[]}""",
+      "dedup-append.json" ->
+        s"""{"kind":"char","k":5,"numHashes":64,"bands":16,"docs":2,"deltas":["sig/v00001"],"scheme":"$scheme","runIds":["r1"]}""")).toMap
 
   private def tmp(): Path = Files.createTempDirectory("graft-format")
 
@@ -225,15 +229,16 @@ class PersistedFormatSpec extends AnyFunSuite {
     }
   }
 
-  test("oph-densified-v1 index metas read back; append, probePairs and compact refuse them with the rebuild message") {
+  for ((scheme, metas) <- legacy.toSeq.sortBy(_._1))
+  test(s"$scheme index metas read back; append, probePairs and compact refuse them with the rebuild message") {
     import spark.implicits._
     val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"))
       .toDF("id", "text")
-    assert(DedupIndex.SigScheme !== "oph-densified-v1")
-    for ((name, json) <- legacyV1) {
+    assert(DedupIndex.SigScheme !== scheme)
+    for ((name, json) <- metas) {
       val dir = metaDir("index-meta.json", json)
       val m = DedupIndex.readMeta(dir).get
-      assert(m.scheme === "oph-densified-v1", name)
+      assert(m.scheme === scheme, name)
       assert((m.docs, m.deltas.size, m.committedRunIds) === (
         if (name == "dedup-init.json") (0L, 0, Set.empty[String])
         else (2L, 1, Set("r1"))), name)
@@ -244,11 +249,39 @@ class PersistedFormatSpec extends AnyFunSuite {
         "compact" -> (() => DedupIndex.compact(dir)))
       refusals.foreach { case (call, f) =>
         val e = intercept[IllegalStateException](f())
-        assert(e.getMessage.contains("oph-densified-v1") &&
+        assert(e.getMessage.contains(scheme) &&
           e.getMessage.contains("rebuild it with write()"), s"$name $call")
       }
       assert(Files.readString(Paths.get(dir, "index-meta.json")) === json)
     }
+  }
+
+  test("dedup signature deltas carry no dictionary page: append, compact and deleteIds, repeated keys included") {
+    import spark.implicits._
+    // 40 documents over two texts: the stored keys repeat, which a
+    // dictionary would encode
+    val docs = (1L to 40L).map(i => (i, "the quick brown fox jumps over " +
+      (if (i % 2 == 0) "the lazy dog" else "a sleeping cat"))).toDF("id", "text")
+    val d = tmp().resolve("dedup").toString
+    def dictionaryFree(step: String): Unit = {
+      val m = DedupIndex.readMeta(d).get
+      val files = m.deltas.flatMap(delta =>
+        ParquetFooters.footers(Paths.get(d, delta))(_.getBlocks.asScala
+          .flatMap(_.getColumns.asScala).map(c => c.getPath.toDotString ->
+            (c.hasDictionaryPage || c.getEncodings.asScala.exists(_.usesDictionary)))))
+      assert(files.nonEmpty, step)
+      files.foreach { case (f, chunks) =>
+        assert(chunks.nonEmpty && !chunks.exists(_._2), s"$step: $f $chunks")
+      }
+    }
+    DedupIndex.write(docs.filter($"id" <= 20), "id", "text", d)
+    DedupIndex.append(docs.filter($"id" > 20), "id", "text", d)
+    dictionaryFree("append")
+    DedupIndex.compact(d)
+    dictionaryFree("compact")
+    DedupIndex.deleteIds(Seq(3L).toDF("id"), d)
+    dictionaryFree("deleteIds")
+    assert(DedupIndex.readMeta(d).get.docs === 39L)
   }
 
   test("pinned table files read back, legacy embedded runIds included") {
@@ -298,11 +331,16 @@ class PersistedFormatSpec extends AnyFunSuite {
     DedupIndex.append(docs, "id", "text", d, "r1")
     same("dedup-append.json", Paths.get(d, "index-meta.json"))
     val footers = ParquetFooters.footers(Paths.get(d, "sig", "v00001")) { m =>
+      val chunks = m.getBlocks.asScala.flatMap(_.getColumns.asScala)
       (m.getFileMetaData.getSchema.toString,
-        m.getBlocks.asScala.map(_.getRowCount).sum)
+        m.getBlocks.asScala.map(_.getRowCount).sum,
+        chunks.filter(_.getPath.toDotString == "bands.list.element")
+          .map(_.getValueCount).sum)
     }.map(_._2)
     assert(footers.map(_._2).sum === 2L, "one row per document")
-    footers.foreach { case (schema, _) =>
+    assert(footers.map(_._3).sum === 2L * 12,
+      "16 band keys of 48 bits in 12 longs per document")
+    footers.foreach { case (schema, _, _) =>
       assert(schema === pinned("dedup-sig-schema.txt"), "dedup-sig-schema.txt")
     }
 

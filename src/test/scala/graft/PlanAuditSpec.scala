@@ -598,4 +598,36 @@ class PlanAuditSpec extends AnyFunSuite {
         s"$name: band-key UDF evaluated inside a filter: $filtered\n$p")
     } finally spark.conf.unset("spark.graft.dedup.materialize")
   }
+
+  test("index scan: the band-key unpack runs once per stored row, in the scan's own generator") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}
+    import org.apache.spark.sql.functions._
+    import graft.ops.DedupIndex
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-unpack")
+    DedupIndex.write(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
+      dir.toString)
+    def unpacks(e: Expression): Seq[Expression] = e.collect {
+      case u: ScalaUDF if u.udfName.contains("graft_band_unpack") => u
+    }
+    spark.conf.set("spark.graft.dedup.materialize", "none")
+    try for ((name, df) <- Seq(
+        "readIndex" -> DedupIndex.readIndex(spark, dir.toString),
+        "probeCandidates" -> DedupIndex.probeCandidates(
+          docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text",
+          dir.toString))) {
+      val p = df.queryExecution.optimizedPlan
+      val calls = p.collect { case n => n.expressions.flatMap(unpacks) }.flatten
+      assert(calls.size === 1, s"$name: unpack evaluated ${calls.size} times:\n$p")
+      val gens = p.collect {
+        case g: Generate if unpacks(g.generator).nonEmpty => g
+      }
+      assert(gens.size === 1 && gens.head.outer,
+        s"$name: the unpack is not the input of one outer generator:\n$p")
+      assert(p.collect { case f: Filter if unpacks(f.condition).nonEmpty => f }
+        .isEmpty, s"$name: unpack evaluated inside a filter:\n$p")
+    } finally spark.conf.unset("spark.graft.dedup.materialize")
+  }
 }
