@@ -8,10 +8,10 @@ import scala.reflect.ClassTag
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
-/** Every persisted-state file operation that is not a Spark write: the
-  * JSON codec, atomic replace, recursive delete and listing — and the
-  * delta-chain lifecycle the persisted ops indexes share
-  * ([[DeltaChain]]).
+/** Every persisted-state file operation that is not a write inside a
+  * task: the JSON codec, atomic replace, move, recursive delete and
+  * listing — and the delta-chain lifecycle the persisted ops indexes
+  * share ([[DeltaChain]]).
   *
   * One commit rule underlies all of it, the reference's tmp+rename
   * (portal_saude_mg.py:777-791): land the data under a name no reader
@@ -111,6 +111,14 @@ object StateFiles {
     val attempt = Option(org.apache.spark.TaskContext.get())
       .map(_.taskAttemptId()).getOrElse(0L)
     replace(target, bytes, s".${target.getFileName}.$attempt.tmp")
+  }
+
+  /** Move the file `src` to `dst`, a rename on one file system;
+    * `dst`'s parent dirs are created first. */
+  def move(src: Path, dst: Path): Unit = {
+    Files.createDirectories(dst.getParent)
+    mutation(s"move $src to $dst")
+    Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Depth-first delete of `p` and everything below it; a missing path

@@ -2,12 +2,8 @@ package graft.table
 
 import java.nio.file.{Files, Path, Paths}
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation,
-  SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.AccumulatorV2
 
 import graft.model.ImageRecord
 import graft.seen.CuckooSeen
@@ -17,7 +13,7 @@ import graft.seen.CuckooSeen
   * lineage, committed via the reference's own atomic tmp+rename
   * pattern (portal_saude_mg.py:777-791) — write snapshot vN+1, then
   * atomically swap `version-hint.txt`. Every file operation here that
-  * is not a Spark write goes through [[StateFiles]].
+  * is not a write inside a task goes through [[StateFiles]].
   *
   * Layout:
   * {{{
@@ -26,7 +22,22 @@ import graft.seen.CuckooSeen
   * <dir>/snapshots/v<N>.json                         (manifest + lineage)
   * <dir>/snapshots/runids.json              (cumulative runId sidecar)
   * <dir>/version-hint.txt                            (current version)
+  * <dir>/_staging/...                 (files of a write not yet landed)
   * }}}
+  *
+  * How a write lands ([[TableFiles]]): the tasks write their Parquet
+  * files themselves, under `_staging/<data or seen dir>/a<attempt>/`,
+  * and return one (file, site, year, month, rows, payload bytes) row
+  * per file. The driver clears the target `data/vN` or `seen/vN`,
+  * moves the returned files (those of the successful attempts) into
+  * it and deletes `_staging`, each step a [[StateFiles]] mutation; the
+  * snapshot's manifest is built from the returned rows. No Spark
+  * `FileFormatWriter`, no Hadoop output committer and no session Hadoop
+  * conf take part, and a commit's dirs hold only the data files (no
+  * `_SUCCESS`, `.crc` or `_temporary` entry). The snapshot write and
+  * the hint swap stay the commit point. For the Hadoop `FileSystem`
+  * port, the task side swaps parquet's `LocalOutputFile` for a Hadoop
+  * `OutputFile` built with a task-local conf.
   *
   * Data files are zstd Parquet (level 3, Parquet's default): the table
   * owns its codec, as an Iceberg table does through
@@ -261,72 +272,30 @@ object TableIO {
       .toSeq
   }
 
-  /** Rows and payload bytes per (site, year, month), summed by the
-    * tasks that write the rows. A null `bytes` counts as a row of 0
-    * bytes, as `sum(length(bytes))` does. */
-  private final class PartitionCounts
-      extends AccumulatorV2[ImageRecord, Seq[PartitionMeta]] {
-    private val acc = mutable.HashMap.empty[(String, Int, Int), (Long, Long)]
-    private def plus(k: (String, Int, Int), rows: Long, bytes: Long) = {
-      val (r, b) = acc.getOrElse(k, (0L, 0L))
-      acc(k) = (r + rows, b + bytes)
-    }
-    def isZero: Boolean = acc.isEmpty
-    def copy(): PartitionCounts = {
-      val c = new PartitionCounts
-      c.merge(this)
-      c
-    }
-    def reset(): Unit = acc.clear()
-    def add(r: ImageRecord): Unit = plus((r.site, r.year, r.month), 1,
-      if (r.bytes == null) 0 else r.bytes.length)
-    def merge(other: AccumulatorV2[ImageRecord, Seq[PartitionMeta]])
-        : Unit = other match {
-      case o: PartitionCounts =>
-        o.acc.foreach { case (k, (r, b)) => plus(k, r, b) }
-    }
-    def value: Seq[PartitionMeta] = acc.toSeq
-      .map { case ((s, y, m), (r, b)) => PartitionMeta(s, y, m, r, b) }
-      .sortBy(p => (p.site, p.year, p.month))
-  }
-
   /** Write `images` as `dir/rel`, `PARTITIONED BY (site, year, month)`,
     * as zstd Parquet (the table's codec, see the object doc), and
-    * return the per-partition meta of what was written. The rows
-    * are counted on their way into the writer, inside the write's
-    * result stage: Spark applies a result task's accumulator updates
-    * once per partition and only on success, so the count is exact and
-    * no job reads the files back. An empty write's directory is
-    * deleted again, so no snapshot references it (a schema-less
-    * parquet dir would poison later reads). This is the one writer of
-    * data files: `commit`, `compact` and the streaming per-batch
-    * commits all write through it. */
+    * return the per-partition meta of what was written, summed from the
+    * rows and payload bytes each write task reports per file: no job
+    * reads the files back, and only the successful attempts' files
+    * count. An empty write leaves no directory, so no snapshot
+    * references one (a schema-less parquet dir would poison later
+    * reads). This is the one writer of data files: `commit`, `compact`
+    * and the streaming per-batch commits all write through it. */
   private def writeImages(images: Dataset[ImageRecord], dir: String,
-      rel: String): Seq[PartitionMeta] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    val counts = new PartitionCounts
-    spark.sparkContext.register(counts)
-    images.mapPartitions(_.map { r => counts.add(r); r })
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("site", "year", "month").parquet(s"$dir/$rel")
-    val parts = counts.value
-    if (parts.isEmpty) StateFiles.delete(Paths.get(dir, rel))
-    parts
-  }
+      rel: String): Seq[PartitionMeta] =
+    TableFiles.writeImages(images, dir, rel)
+      .groupBy(f => (f.site, f.year, f.month)).toSeq
+      .map { case ((s, y, m), fs) =>
+        PartitionMeta(s, y, m, fs.map(_.rows).sum, fs.map(_.bytes).sum)
+      }
+      .sortBy(p => (p.site, p.year, p.month))
 
-  /** Write a seen delta as `dir/rel`, counting its rows with an
-    * `Observation` on the way; an empty write's directory is deleted
-    * again. Whether any row was written. */
-  private def writeSeen(seen: DataFrame, dir: String, rel: String)
-      : Boolean = {
-    val rows = new Observation()
-    seen.observe(rows, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$rel")
-    val wrote = rows.get("n") != 0L
-    if (!wrote) StateFiles.delete(Paths.get(dir, rel))
-    wrote
-  }
+  /** Write a seen delta as `dir/rel` (zstd Parquet, one `urlHash`
+    * column); an empty write leaves no directory. Whether any row was
+    * written. */
+  private def writeSeen(seen: Dataset[Long], dir: String, rel: String)
+      : Boolean =
+    TableFiles.writeSeen(seen, dir, rel).nonEmpty
 
   /** Reject a delta-commit runId in the reserved maintenance namespace:
     * partitionMeta's legacy fallback treats these prefixes as
@@ -346,9 +315,9 @@ object TableIO {
     * portal_saude_mg.py:206-219). Each delta is written once: the image
     * write counts its own rows and bytes per partition
     * ([[writeImages]]), and that count is the snapshot's manifest — no
-    * job reads the new data back. The seen delta counts its rows with
-    * an `Observation` on the way. An empty delta leaves no directory
-    * and no snapshot reference. The seen delta MUST be disjoint from
+    * job reads the new data back. The seen delta's tasks count its rows
+    * the same way. An empty delta leaves no directory and no snapshot
+    * reference. The seen delta MUST be disjoint from
     * the committed seen set (CrawlJob.newSeenFrom guarantees it) so
     * [[readSeen]] needs no dedup shuffle. */
   def commit(spark: SparkSession, dir: String, images: Dataset[ImageRecord],
@@ -362,7 +331,7 @@ object TableIO {
 
     val parts = writeImages(images, dir, dataDirName)
     val hasImages = parts.nonEmpty
-    val hasSeen = writeSeen(seenDelta.toDF("urlHash"), dir, seenDirName)
+    val hasSeen = writeSeen(seenDelta, dir, seenDirName)
 
     val snap = Snapshot(
       version,
@@ -402,16 +371,12 @@ object TableIO {
         else writeImages(readImages(spark, dir).as[ImageRecord], dir,
           dataDirName)
       val hasImages = parts.nonEmpty
-      val hasSeen = parent.seenDirs.nonEmpty
-      if (hasSeen)
-        // distinct here (NOT in readSeen): new-format deltas are
-        // disjoint by construction, but tables whose streaming commits
-        // predate the Success-only delta may hold overlapping deltas —
-        // one compaction migrates them; the hot read path stays
-        // shuffle-free
-        readSeen(spark, dir).distinct().toDF("urlHash")
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$dir/$seenDirName")
+      // distinct here (NOT in readSeen): new-format deltas are disjoint
+      // by construction, but tables whose streaming commits predate the
+      // Success-only delta may hold overlapping deltas — one compaction
+      // migrates them; the hot read path stays shuffle-free
+      val hasSeen = parent.seenDirs.nonEmpty &&
+        writeSeen(readSeen(spark, dir).distinct(), dir, seenDirName)
       val runId = f"compact-v$version%05d"
       val snap = Snapshot(
         version,
@@ -476,7 +441,7 @@ object TableIO {
           val newSeen = readSeen(spark, dir).toDF("urlHash")
             .join(droppedHashes, col("urlHash") === col("dh"), "left_anti")
           val dirs =
-            if (writeSeen(newSeen, dir, seenDirName)) Seq(seenDirName)
+            if (writeSeen(newSeen.as[Long], dir, seenDirName)) Seq(seenDirName)
             else Nil
           // distinct: a URL may appear in several dropped image rows,
           // but its hash is committed once
@@ -567,12 +532,14 @@ object TableIO {
   /** Expire everything the CURRENT snapshot does not reference: data/
     * seen dirs of superseded versions (reclaimable after [[compact]]
     * rewrote them), partition dirs dropped by [[invalidatePeriods]],
-    * orphaned dirs of crashed uncommitted writes, and old snapshot
-    * files. The Iceberg `expire_snapshots` analog — time travel to
-    * expired versions is gone, but replay idempotence survives in the
-    * runids.json sidecar. Reference-aware down the tree: a commit dir
-    * referenced only through partition subpaths keeps exactly those
-    * subpaths. Single-writer contract, like commit/compact. */
+    * orphaned dirs of crashed uncommitted writes, the `_staging` tree
+    * (files a crashed commit or a zombie task attempt left there; no
+    * snapshot ever names it), and old snapshot files. The Iceberg
+    * `expire_snapshots` analog — time travel to expired versions is
+    * gone, but replay idempotence survives in the runids.json sidecar.
+    * Reference-aware down the tree: a commit dir referenced only through
+    * partition subpaths keeps exactly those subpaths. Single-writer
+    * contract, like commit/compact. */
   def expire(dir: String): Unit =
     currentSnapshot(dir).foreach { cur =>
       val keep = (cur.dataDirs ++ cur.seenDirs).toSet
@@ -593,6 +560,7 @@ object TableIO {
       for (root <- Seq("data", "seen"))
         StateFiles.list(Paths.get(dir, root))
           .foreach(child => sweep(child, s"$root/${child.getFileName}"))
+      StateFiles.delete(Paths.get(dir, TableFiles.StagingDir))
       for (v <- 1 until cur.version)
         StateFiles.delete(snapshotPath(dir, v))
     }

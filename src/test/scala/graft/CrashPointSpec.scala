@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,9 +26,12 @@ import graft.table.{StateFiles, TableIO}
   *    store's callers guard it — converges on the state the uncrashed
   *    run left.
   *
-  * Unreferenced debris (an orphan delta, a tmp file) is allowed: no
-  * reader resolves it. An index's next rewrite reaps the orphan deltas
-  * under its delta roots. */
+  * Unreferenced debris (an orphan delta, a tmp file, a staged table
+  * file) is allowed: no reader resolves it. An index's next rewrite
+  * reaps the orphan deltas under its delta roots; the table's next
+  * write or `expire` reaps its `_staging` tree. A table write's
+  * driver-side steps are each a mutation: clearing the target dir,
+  * every staged-file move and the staging delete. */
 class CrashPointSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -208,6 +213,67 @@ class CrashPointSpec extends AnyFunSuite {
           s"replay after a crash at mutation $n of $mutations diverged")
       }
     }
+
+  /** The parquet files under `dir/rel`, relative to it. */
+  private def parquetFiles(dir: String, rel: String): Seq[String] = {
+    val root = Paths.get(dir, rel)
+    if (!Files.exists(root)) Nil
+    else {
+      val walk = Files.walk(root)
+      try walk.iterator.asScala.filter(_.toString.endsWith(".parquet"))
+        .map(root.relativize(_).toString).toList.sorted
+      finally walk.close()
+    }
+  }
+
+  test("TableIO.commit: a crash after some data files moved; the replay holds exactly its own rows and files, and expire reaps the staging tree") {
+    // three months in one commit: three data files, three moves
+    def commit3(d: String): Unit =
+      if (!TableIO.committedRunIds(d).contains("run-3"))
+        commit(d, "run-3", 4, 5, 6)
+    val template = tmpDir("moves-template")
+    tableSetup(template)
+    val clean = tmpDir("moves-clean")
+    copyTree(template, clean)
+    StateFiles.crashAt(0)
+    commit3(clean)
+    val mutations = StateFiles.mutationCount
+    val fresh = tableView(clean)
+    val files = parquetFiles(clean, "data/v00003")
+    assert(files.size === 3)
+    assert(!Files.exists(Paths.get(clean, "_staging")))
+    var midMove = 0
+    for (n <- 1 to mutations) {
+      val dir = tmpDir("moves")
+      copyTree(template, dir)
+      StateFiles.crashAt(n)
+      val crash =
+        try intercept[StateFiles.InjectedCrash](commit3(dir))
+        finally StateFiles.crashAt(0)
+      val moved = parquetFiles(dir, "data/v00003").size
+      if (crash.getMessage.contains(": move ") && moved > 0) midMove += 1
+      commit3(dir)
+      assert(tableView(dir) == fresh,
+        s"replay after a crash at mutation $n of $mutations diverged")
+      // the files differ by name between attempts: a file the crashed
+      // attempt moved in and the replay kept would show here
+      val landed = parquetFiles(dir, "data/v00003")
+      assert(landed.size === files.size,
+        s"crash at mutation $n of $mutations left a data file behind")
+      // a zombie task attempt of the crashed write staging a file after
+      // the replay's staging delete: no reader sees it, expire reaps it
+      val zombie = Paths.get(dir, "_staging", "data", "v00003", "a99999",
+        landed.head)
+      Files.createDirectories(zombie.getParent)
+      Files.copy(Paths.get(dir, "data", "v00003", landed.head), zombie)
+      assert(tableView(dir) == fresh)
+      TableIO.expire(dir)
+      assert(!Files.exists(Paths.get(dir, "_staging")),
+        s"expire after a crash at mutation $n left a staging entry")
+    }
+    // crashes at the second and third data-file moves follow moved files
+    assert(midMove >= 2)
+  }
 
   /** The `vNNNNN` dirs under `s`'s delta roots that its meta at `dir`
     * does not name. */

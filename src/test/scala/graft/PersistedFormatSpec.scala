@@ -22,7 +22,9 @@ import graft.table.TableIO
   * dictionary page; the `oph-densified-v1` and `-v2` metas are kept as
   * legacy shapes that read back and are refused. The image
   * table's data files are pinned to zstd column chunks, whichever path
-  * wrote them: a commit, a compaction or a streaming micro-batch. */
+  * wrote them: a commit, a compaction or a streaming micro-batch; a
+  * commit's data file and seen delta to their footer schemas, and to
+  * the columns a schema-less read of their dirs infers. */
 class PersistedFormatSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -145,6 +147,36 @@ class PersistedFormatSpec extends AnyFunSuite {
       """["run-1","run-2"]""",
     "table-runids-3.json" ->
       """["run-1","run-2","compact-v00003"]""",
+    // the footer schemas of a commit's image data file (the partition
+    // columns live in the path) and of its seen delta
+    "table-data-schema.txt" ->
+      """message spark_schema {
+      |  optional binary image_id (STRING);
+      |  optional binary bytes;
+      |  required int32 w;
+      |  required int32 h;
+      |  optional binary fmt (STRING);
+      |  optional binary caption (STRING);
+      |  required int64 phash;
+      |  optional binary url (STRING);
+      |  required int64 urlHash;
+      |  required int64 vtimeMs;
+      |  required int32 attempts;
+      |}
+      |""".stripMargin,
+    "table-seen-schema.txt" ->
+      """message spark_schema {
+      |  required int64 urlHash;
+      |}
+      |""".stripMargin,
+    // what a schema-less `spark.read.parquet` of a data dir and of a seen
+    // dir infers: the columns of the files Spark's own writer wrote
+    "table-data-read.txt" ->
+      ("image_id string, bytes binary, w int, h int, fmt string, " +
+        "caption string, phash bigint, url string, urlHash bigint, " +
+        "vtimeMs bigint, attempts int, site string, year int, month int"),
+    "table-seen-read.txt" ->
+      "urlHash bigint",
     "table-hint-1.txt" ->
       """1""",
     "table-hint-3.txt" ->
@@ -420,5 +452,49 @@ class PersistedFormatSpec extends AnyFunSuite {
     assert(TableIO.currentSnapshot(s).get.lineage.runId ===
       "stream-batch-0")
     zstdOnly(s, "data/v00001")
+  }
+
+  test("a commit's data file and seen delta: footer schemas, zstd chunks, no _SUCCESS, .crc or _temporary entry, and the columns a schema-less read infers") {
+    import spark.implicits._
+    val t = tmp().toString
+    val imgs = Seq(
+      ImageRecord("i1", Array[Byte](1, 2, 3), 4, 5, "png", "cap", 77L, "s",
+        2024, 1, "http://x/1", 11L, 100L, 1),
+      ImageRecord("i2", null, 6, 7, "jpeg", null, 78L, "s",
+        2024, 2, "http://x/2", 22L, 200L, 2))
+    TableIO.commit(spark, t, imgs.toDS(), Seq(11L, 22L).toDS(), "run-1", Nil)
+    TableIO.compact(spark, t)
+    for (rel <- Seq("data/v00001", "seen/v00001", "data/v00002",
+        "seen/v00002")) {
+      val pin = pinned(if (rel.startsWith("data")) "table-data-schema.txt"
+        else "table-seen-schema.txt")
+      val files = ParquetFooters.footers(Paths.get(t, rel))(m =>
+        (m.getFileMetaData.getSchema.toString, m.getBlocks.asScala
+          .flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet))
+      assert(files.nonEmpty, rel)
+      files.foreach { case (f, (schema, codecs)) =>
+        assert(schema === pin, s"$rel: $f")
+        assert(codecs === Set("ZSTD"), s"$rel: $f")
+      }
+      val walk = Files.walk(Paths.get(t, rel))
+      val names =
+        try walk.iterator.asScala.map(_.getFileName.toString).toList
+        finally walk.close()
+      assert(!names.exists(n => n == "_SUCCESS" || n.endsWith(".crc") ||
+        n == "_temporary"), s"$rel: $names")
+    }
+    assert(!Files.exists(Paths.get(t, "_staging")))
+
+    def inferred(path: String): String = spark.read.parquet(path).schema
+      .fields.map(f => s"${f.name} ${f.dataType.simpleString}").mkString(", ")
+    assert(inferred(s"$t/data/v00001") === pinned("table-data-read.txt"))
+    assert(inferred(s"$t/seen/v00001") === pinned("table-seen-read.txt"))
+    // the same rows through Spark's own writer read back the same way
+    val spark1 = tmp().toString
+    imgs.toDS().write.partitionBy("site", "year", "month")
+      .parquet(s"$spark1/data")
+    Seq(11L, 22L).toDS().toDF("urlHash").write.parquet(s"$spark1/seen")
+    assert(inferred(s"$spark1/data") === pinned("table-data-read.txt"))
+    assert(inferred(s"$spark1/seen") === pinned("table-seen-read.txt"))
   }
 }

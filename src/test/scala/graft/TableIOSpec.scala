@@ -282,6 +282,45 @@ class TableIOSpec extends AnyFunSuite {
     assert(snap.version === 2)
   }
 
+  test("a write task that fails after writing some rows: the commit throws and publishes nothing; the next commit at that version lands exactly its own rows") {
+    import java.nio.file.Paths
+    import org.apache.spark.sql.functions.{col, lit, when}
+    import spark.implicits._
+    val dir = tmpDir()
+    def image(month: Int, i: Int) = ImageRecord(s"f-$month-$i",
+      Array.fill[Byte](i)(1), 1, 1, "png", "cap", i.toLong, "s", 2024, month,
+      s"http://f/$month/$i", month * 100L + i, 0L, 1)
+    TableIO.commit(spark, dir, (1 to 5).map(image(1, _)).toDS(),
+      (1 to 5).map(100L + _).toDS(), "ok-1", Nil)
+    // one task holds months 2, 3 and 4; the month-4 row has a null `w`,
+    // which the row decoder refuses only after the sorted month-2 rows
+    // went into a closed file and the month-3 rows into an open one
+    val rows = (1 to 4).map(image(2, _)) ++ (1 to 2).map(image(3, _)) :+
+      image(4, 1)
+    val failing = rows.toDF().coalesce(1)
+      .withColumn("w", when(col("month") === 4, lit(null)).otherwise(col("w")))
+      .as[ImageRecord]
+    intercept[Exception](TableIO.commit(spark, dir, failing,
+      Seq(999L).toDS(), "bad-2", Nil))
+    assert(TableIO.currentVersion(dir) === Some(1))
+    assert(!Files.exists(Paths.get(dir, "snapshots", "v00002.json")))
+    assert(!TableIO.committedRunIds(dir).contains("bad-2"))
+    assert(TableIO.readImages(spark, dir).count() === 5L)
+    assert(TableIO.readSeen(spark, dir).collect().toSet ===
+      (1 to 5).map(100L + _).toSet)
+
+    val s2 = TableIO.commit(spark, dir, (6 to 8).map(image(2, _)).toDS(),
+      (6 to 8).map(200L + _).toDS(), "ok-2", Nil)
+    assert(s2.version === 2)
+    assert(s2.partitions === Seq(TableIO.PartitionMeta("s", 2024, 2, 3L, 21L)))
+    assert(spark.read.parquet(s"$dir/data/v00002").select("image_id")
+      .as[String].collect().toSet === (6 to 8).map(i => s"f-2-$i").toSet)
+    assert(TableIO.readImages(spark, dir).count() === 8L)
+    assert(TableIO.readSeen(spark, dir).collect().toSet ===
+      ((1 to 5).map(100L + _) ++ (6 to 8).map(200L + _)).toSet)
+    assert(!Files.exists(Paths.get(dir, "_staging")))
+  }
+
   test("maintenance runId prefixes are reserved: delta commits reject them") {
     import spark.implicits._
     val dir = tmpDir()

@@ -6,13 +6,20 @@ Parquet codec of every data file and whether it holds a dictionary page.
 A table dir holds version-hint.txt; an index dir holds index-meta.json.
 
 Table areas, by path under the table dir:
-  data       data/**      data files (parquet, _SUCCESS), no checksums
+  data       data/**      data files (parquet), no checksums
   data .crc  data/**/.*.crc   Hadoop checksum files of the data files
-  seen       seen/**      URL-seen deltas, checksums included
+  seen       seen/**      URL-seen deltas
   snapshots  snapshots/**, version-hint.txt
   _bloom     _bloom/**    persisted Bloom seen filters
   _cuckoo    _cuckoo/**   persisted cuckoo seen sketch
+  _staging   _staging/**  files of a write not yet landed: the leftovers
+                          of a crashed commit or of a zombie task attempt
+                          (TableIO.expire and the next write delete it)
   other      anything else
+TableIO writes its data files and seen deltas itself, so a data or seen
+dir holds only parquet files. Tables written by Spark's writer (before
+that) also hold a `_SUCCESS` marker per dir, counted in `data`/`seen`,
+and a `.crc` checksum per file, counted in `data .crc` (data) or `seen`.
 
 Index areas, by path under the index dir:
   sig        sig/**       signature deltas (parquet, _SUCCESS), no checksums
@@ -66,7 +73,7 @@ def table_area(rel):
     name = os.path.basename(rel)
     if top == "data":
         return "data .crc" if crc(name) else "data"
-    if top in ("seen", "_bloom", "_cuckoo"):
+    if top in ("seen", "_bloom", "_cuckoo", "_staging"):
         return top
     if top == "snapshots" or rel == "version-hint.txt":
         return "snapshots"
@@ -106,7 +113,7 @@ root = os.path.abspath(args.table)
 meta = os.path.join(root, "index-meta.json")
 if os.path.exists(os.path.join(root, "version-hint.txt")):
     AREAS = ["data", "data .crc", "seen", "snapshots", "_bloom", "_cuckoo",
-             "other"]
+             "_staging", "other"]
     area, data_area, docs = table_area, "data", None
 elif os.path.exists(meta):
     if args.since is not None:
